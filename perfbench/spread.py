@@ -3,7 +3,7 @@
 
 Usage, from the repository root:
 
-    python3 perfbench/spread.py --workload batch --seeds 1-10 --seconds 20 \
+    python3 perfbench/spread.py --workload batch --seeds 1-10 --seconds 5 \
         [--trace 0] [--out perfbench/baseline/set1-batch.json]
 
 For every metric it prints the median and the interquartile range as a

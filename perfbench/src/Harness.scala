@@ -15,50 +15,42 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** One benchmark run in one JVM: set up the session repeatedly, then
-  * run passes over the workload's keys until the time budget is spent.
+/** One benchmark run in one JVM: set up the session once, then run
+  * passes over the workload's keys until the time budget is spent.
   *
   * Every key is built (`SparkEntry.queries(key)`) and executed into the
   * `noop` sink. Pass 0 is the cold pass; its outputs are also written as
-  * parquet, outside the timed windows, for the oracle check. Pass 1 is a
-  * warm-up; later passes are measured. With `--trace 1`, measured passes
-  * alternate between untraced and traced; a
-  * traced pass attaches Spark's public listeners and records per-key
-  * layer counters. Records go to `<out>/records.jsonl`, one JSON object
-  * per line; `run.py` turns them into metrics.
+  * parquet, outside the timed windows, for the oracle check. The next
+  * `--warmup` passes warm the JIT up; later passes are measured. Each key
+  * records its wall time and the CPU time the JVM spent while it ran,
+  * split into JIT compilation and everything else.
+  * With `--trace 1`, measured passes alternate between untraced and
+  * traced; a traced pass attaches Spark's public listeners and records
+  * per-key layer counters. Records go to `<out>/records.jsonl`, one JSON
+  * object per line; `run.py` turns them into metrics.
   */
 object Harness {
   final case class Opts(data: String, out: String, keys: Seq[String],
                         seconds: Double, trace: Boolean, seed: Long,
-                        setups: Int, cpus: Int, minWarm: Int, spawnEpochNs: Long)
+                        cpus: Int, warmup: Int, minWarm: Int, spawnEpochNs: Long)
 
   def parse(args: Array[String]): Opts = {
     val m = args.grouped(2).map { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     Opts(m("data"), m("out"), m("keys").split(",").toSeq, m("seconds").toDouble,
-      m("trace") == "1", m("seed").toLong, m("setups").toInt, m("cpus").toInt,
-      m("min-warm").toInt, m("spawn-epoch-ns").toLong)
+      m("trace") == "1", m("seed").toLong, m("cpus").toInt,
+      m("warmup").toInt, m("min-warm").toInt, m("spawn-epoch-ns").toLong)
   }
 
   def main(args: Array[String]): Unit = {
     val o = parse(args)
     val rec = new Records(Paths.get(o.out, "records.jsonl"))
-    var spark: SparkSession = null
-    // set-up: session + Tables.tune + the g1_entry warm-up, repeated; the
-    // first one counts from the moment the launcher spawned this JVM
-    for (i <- 0 until o.setups) {
-      if (spark != null) {
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-      }
-      val t0 = System.nanoTime()
-      spark = session(o)
-      runKey(spark, o.data, "g1_entry")
-      val s =
-        if (i == 0) (epochNs() - o.spawnEpochNs) / 1e9
-        else (System.nanoTime() - t0) / 1e9
-      rec.write(Map("type" -> "setup", "index" -> i, "seconds" -> s))
-    }
+    // set-up: session + Tables.tune + the g1_entry warm-up, counted from
+    // the moment the launcher spawned this JVM
+    val spark = session(o)
+    runKey(spark, o.data, "g1_entry")
+    val setupJit = jitCpuNs()
+    rec.write(Map("type" -> "setup", "seconds" -> (epochNs() - o.spawnEpochNs) / 1e9,
+      "cpu_s" -> (processCpuNs() - setupJit) / 1e9, "jit_s" -> setupJit / 1e9))
     val sc = spark.sparkContext
     val stageRoot = graft.SparkEntry.stageDir(o.data)
     val oracle = graft.SparkEntry.oracleSql
@@ -72,28 +64,38 @@ object Harness {
         _.replace("__GRAFT_STAGE__", stageRoot))).toMap))
 
     val verifyDir = Paths.get(o.out, "verify")
-    val window0 = System.nanoTime()
-    // pass 0 is cold, pass 1 an unmeasured warm-up for the JIT; measured
-    // passes alternate untraced/traced under --trace 1, so each kind gets
-    // at least minWarm passes and the tracing overhead shows
-    val minPasses = 2 + o.minWarm * (if (o.trace) 2 else 1)
+    // pass 0 is cold and the next `warmup` passes warm the JIT up; the
+    // measured passes follow until --seconds have passed and at least
+    // minWarm ran (of each kind under --trace 1, where they alternate
+    // untraced/traced so the tracing overhead shows)
+    val measured0 = 1 + o.warmup
+    val minPasses = measured0 + o.minWarm * (if (o.trace) 2 else 1)
     val rng = new scala.util.Random(o.seed)
     var pass = 0
-    def elapsed = (System.nanoTime() - window0) / 1e9
+    var window0 = 0L
+    def elapsed = if (pass <= measured0) 0.0 else (System.nanoTime() - window0) / 1e9
     while (pass < minPasses || elapsed < o.seconds) {
-      val traced = o.trace && pass > 1 && pass % 2 == 1
+      if (pass == measured0) window0 = System.nanoTime()
+      val traced = o.trace && pass >= measured0 && (pass - measured0) % 2 == 1
       // the cold pass keeps the listed order, so the JIT profiles every run
       // starts from are the same; the seed permutes every warm pass
       val order = if (pass == 0) o.keys else rng.shuffle(o.keys)
       val tracer = if (traced) Some(new Tracer(spark, stageRoot)) else None
       val gcBefore = gcMillis()
-      var gcPaused = 0L
       heapPools.foreach(_.resetPeakUsage())
       var wall = 0.0
+      var cpu = 0.0
+      var jit = 0.0
       for (k <- order) {
         val persistedBefore = sc.getPersistentRDDs.keySet
         tracer.foreach(_.beginKey())
+        val cpu0 = processCpuNs()
+        val jit0 = jitCpuNs()
         val r = timeKey(spark, o.data, k)
+        val keyJit = (jitCpuNs() - jit0) / 1e9
+        val keyCpu = (processCpuNs() - cpu0) / 1e9 - keyJit
+        cpu += keyCpu
+        jit += keyJit
         if (traced) SparkBridge.drainListeners(sc)
         wall += r.build + r.action
         val left = sc.getPersistentRDDs.keySet -- persistedBefore
@@ -102,15 +104,18 @@ object Harness {
         if (pass == 0 && r.df.isDefined) verify(r.df.get, verifyDir.resolve(k))
         rec.write(Map("type" -> "key", "pass" -> pass, "key" -> k, "traced" -> traced,
           "ok" -> r.error.isEmpty, "error" -> r.error.getOrElse(""),
-          "build_s" -> r.build, "action_s" -> r.action,
+          "build_s" -> r.build, "action_s" -> r.action, "cpu_s" -> keyCpu, "jit_s" -> keyJit,
           "rdds_left" -> left.size, "mb_left" -> leftBytes / 1048576.0)
           ++ tracer.map(_.keyCounters(r.build + r.action)).getOrElse(Map.empty))
-        gcPaused += isolate(spark)
       }
-      val gcS = (gcMillis() - gcBefore - gcPaused) / 1e3
+      val gcS = (gcMillis() - gcBefore) / 1e3
       val heapPeakMb = heapPools.map(_.getPeakUsage.getUsed).sum / 1048576.0
       tracer.foreach(_.detach())
+      val iso0 = System.nanoTime()
+      isolate(spark)
+      val isolateS = (System.nanoTime() - iso0) / 1e9
       rec.write(Map("type" -> "pass", "pass" -> pass, "traced" -> traced, "wall_s" -> wall,
+        "cpu_s" -> cpu, "jit_s" -> jit, "isolate_s" -> isolateS,
         "order" -> order.mkString(","), "gc_s" -> gcS, "heap_peak_mb" -> heapPeakMb))
       pass += 1
     }
@@ -165,12 +170,11 @@ object Harness {
     try df.coalesce(1).write.mode("overwrite").parquet(dir.toString)
     catch { case e: Throwable => System.err.println(s"[perfbench] verify write failed: $e") }
 
-  /** Between keys, outside the timed windows: release what the key left
-    * staged, collect, and wait until the ContextCleaner stops deleting
-    * shuffle files, so one key's cleanup does not land in the next key's
-    * time. Returns the GC milliseconds spent here. */
-  def isolate(spark: SparkSession): Long = {
-    val gc0 = gcMillis()
+  /** Between passes, outside the timed windows: release what the keys
+    * left staged, collect, and wait until the ContextCleaner stops
+    * deleting shuffle files, so one pass's cleanup does not land in the
+    * next pass's time. */
+  def isolate(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
@@ -185,13 +189,31 @@ object Harness {
       val n = countFiles(local)
       if (n == prev) stable += 1 else { stable = 0; prev = n }
     }
-    gcMillis() - gc0
   }
 
   private def countFiles(f: File): Long = {
     val kids = f.listFiles()
     if (kids == null) 0L else kids.map(k => if (k.isDirectory) countFiles(k) else 1L).sum
   }
+
+  /** CPU time of every thread of this JVM: tasks, driver, JIT and GC. */
+  private def processCpuNs(): Long =
+    ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime
+
+  /** CPU time of the JIT compiler threads, from Linux's per-thread
+    * schedstat. The launcher fixes their number
+    * (-XX:-UseDynamicNumberOfCompilerThreads), so none of their time
+    * leaves with a thread that exits; other threads may exit while the
+    * list is read, and are skipped. */
+  private def jitCpuNs(): Long =
+    new File("/proc/self/task").listFiles().iterator.map(_.toPath).map { t =>
+      try {
+        val name = new String(Files.readAllBytes(t.resolve("comm"))).trim
+        if (!name.startsWith("C1 CompilerThre") && !name.startsWith("C2 CompilerThre")) 0L
+        else new String(Files.readAllBytes(t.resolve("schedstat"))).trim.split(" ")(0).toLong
+      } catch { case _: java.io.IOException => 0L }
+    }.sum
 
   private def gcMillis(): Long =
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime.max(0L)).sum
