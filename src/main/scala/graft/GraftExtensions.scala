@@ -19,6 +19,12 @@ import graft.functions.{BloomContains, BpeSegment, CdcChunksExpr, CharWindowHash
   * calling `graft_dot` from SQL. Builders are arity-guarded like the
   * GraftFunctions copies: wrong-arity SQL calls get WRONG_NUM_ARGS, not
   * IndexOutOfBoundsException.)
+  *
+  * Such sessions should also size the generated-code cache at build
+  * time, `.config("spark.sql.codegen.cache.maxEntries", "1000")` as
+  * `Tables.tune` does: it is a static conf that Spark reads once, at the
+  * JVM's first compile, and at its default of 100 entries re-running
+  * graft's plans recompiles them (see `Tables.tune`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Loads the star-schema test tables from a scale-factor directory.
   *
@@ -22,10 +23,38 @@ object Tables {
       .getOrElse(df)
   }
 
-  /** Session defaults tuned for the local[32] harness; on a real
-    * cluster only shuffle.partitions changes (AQE coalesces anyway).
+  /** Capacity of Spark's generated-code cache (`CodeGenerator`), an LRU
+    * keyed by (class loader, source) that holds 100 entries by default.
+    * A whole-stage stage takes two entries: planning compiles it once as
+    * a size check under the app loader, and its tasks compile it again
+    * under the session's executor loader. An evicted entry is compiled
+    * again on its next use, into a new class that starts interpreted and
+    * has to be JIT-compiled again.
+    *
+    * Working sets, counted as compiles with an unbounded cache:
+    *  - perfbench `batch` (9 keys, sf0.1): 132 entries. At 100, every
+    *    re-run of the nine keys in listed order recompiled 115 of them.
+    *  - perfbench `commit_loop` (2 keys, sf0.1): 51 entries, which fit.
+    *  - the 347-key Verify sweep (sf0.001): 4925 entries. It compiles
+    *    9374 classes at 100 and 6032 at 1000. Metaspace in use after the
+    *    sweep and a full GC is 210 MB at 100, 218 MB at 1000 and 250 MB
+    *    unbounded.
+    * 1000 holds the re-run working sets several times over for 8 MB of
+    * metaspace.
+    */
+  private val CodegenCacheEntries = 1000
+
+  /** Session defaults graft's operators assume: AQE, UTC, the timestamp
+    * reading rules of the test tables, graft's native functions and
+    * planner rules, and the generated-code cache capacity.
+    *
+    * Call it right after `getOrCreate` and before the session runs
+    * anything. The cache capacity is a static conf that `CodeGenerator`
+    * reads once, when the JVM's first query compiles; set after that,
+    * it has no effect.
     */
   def tune(spark: SparkSession): SparkSession = {
+    spark.sessionState.conf.setConf(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES, CodegenCacheEntries)
     val c = spark.conf
     c.set("spark.sql.adaptive.enabled", "true")
     c.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
