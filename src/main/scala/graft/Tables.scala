@@ -1,26 +1,80 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.internal.StaticSQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Loads the star-schema test tables from a scale-factor directory.
   *
   * All operators in graft take DataFrames; this is the only place that
   * knows about paths. At cluster scale the same operators run against
   * catalog tables — nothing else changes.
+  *
+  * A catalog table stores its schema; a bare Parquet path does not, and
+  * reading one without a schema makes Spark infer it from the footer in a
+  * one-task Spark job, on every read. `load` therefore memoizes each
+  * file's inferred schema for the JVM and reads with it, so a table costs
+  * one inference job per JVM instead of one per load. The memo is keyed
+  * on everything the inferred schema depends on:
+  *  - the file's qualified path, length and modification time, from one
+  *    `getFileStatus` call (no Spark job), so a file rewritten in place
+  *    is inferred again;
+  *  - the session's Parquet type-mapping confs that `tune` pins,
+  *    `spark.sql.legacy.parquet.nanosAsLong` and
+  *    `spark.sql.parquet.inferTimestampNTZ.enabled`.
+  * A directory (a Spark-written dataset) can change under any of its
+  * files without changing its own status, so it is inferred on every
+  * load. A miss infers outside any lock; two loads racing on
+  * one miss both infer the same schema. The memo holds the schema, not
+  * the `DataFrame`: every load builds a fresh relation with fresh
+  * attribute ids, so a table joined with itself still resolves.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** What an inferred schema was read under: file length, modification
+    * time and the two Parquet type-mapping confs. */
+  private type Stamp = (Long, Long, Boolean, Boolean)
+  private val schemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = read(spark, s"$sfDir/$name.parquet")
     // Parquet TIMESTAMP(NANOS) isn't a Spark type: with nanosAsLong (set in
     // tune) it arrives as raw nanos — normalize to a microsecond timestamp.
     df.schema.fields.find(f => f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType)
       .map(_ => df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)")))
       .getOrElse(df)
+  }
+
+  /** `spark.read.parquet(path)`, with the schema from the memo when the
+    * file and the confs are those it was inferred under. A path that is
+    * missing or not a plain file is read without a schema, so Spark
+    * reports its errors. */
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    Try(p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p))
+      .toOption.filter(_.isFile) match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val conf = spark.sessionState.conf
+        val stamp: Stamp = (st.getLen, st.getModificationTime,
+          conf.legacyParquetNanosAsLong, conf.parquetInferTimestampNTZEnabled)
+        val key = st.getPath.toString
+        Option(schemas.get(key)).collect { case (`stamp`, schema) => schema } match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemas.put(key, (stamp, df.schema))
+            df
+        }
+    }
   }
 
   /** Capacity of Spark's generated-code cache (`CodeGenerator`), an LRU
