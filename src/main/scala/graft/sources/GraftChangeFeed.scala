@@ -99,14 +99,11 @@ private[sources] object GraftChangeFeed {
     * output schema. Runs at stream DEFINITION — every refusal here
     * fires before a query starts, not at batch N. */
   def outputSchema(root: String): StructType = {
-    val (declared, cdcOn, _, _) = TxTable.feedMeta(root)
+    val (ts, cdcOn, _, _) = TxTable.feedMeta(root)
     require(cdcOn,
       s"graft change-feed source: the table at $root is not cdc-enabled " +
         "— create it with cdc = true (materialized change files are " +
         "what the source's partition readers open)")
-    val ts = declared.getOrElse(throw new IllegalArgumentException(
-      s"graft change-feed source: the table at $root carries no declared " +
-        "schema (legacy log) — the source cannot type its partitions"))
     val unsupported = ts.fields.filterNot(f => supported(f.dataType))
     require(unsupported.isEmpty,
       "graft change-feed source: unsupported column type(s) " +
@@ -195,7 +192,7 @@ private[sources] class GraftFeedStream(root: String, outSchema: StructType,
           c.adds.map(f =>
             GraftFeedPartition(TxTable.resolveData(root, f.name), v,
               ctypeInFile = false))
-        case None if c.op.contains("RESTORE") =>
+        case None if c.op == "RESTORE" =>
           throw new IllegalStateException(
             s"graft change-feed source: commit v$v at $root is a RESTORE " +
               "— its diff is not materialized; consume it via the batch " +

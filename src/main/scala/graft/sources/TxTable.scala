@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Minimal log-structured transactional table — the Delta-protocol
@@ -18,14 +19,24 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * compaction as just another commit.
   *
   * Commit protocol: data files are written (and fsync'd by the
-  * filesystem) BEFORE the log record; the log record is created with an
-  * atomic create-if-absent, so two concurrent committers race on the
+  * filesystem) BEFORE the log record; the log record is published with
+  * an atomic create-if-absent, so two concurrent committers race on the
   * version number and exactly one wins (the loser re-reads the snapshot
   * and retries — optimistic concurrency, the paper's §3.2). On a POSIX
-  * filesystem `Files.createFile` provides the put-if-absent primitive;
-  * an object store deployment substitutes its conditional-put (the
-  * paper's LogStore discussion). Readers list the log directory and
-  * replay — no lock, no coordination.
+  * filesystem a hard link from a fully written temp file provides the
+  * put-if-absent primitive (see [[publish]]); an object store deployment
+  * substitutes its conditional-put (the paper's LogStore discussion).
+  * Readers list the log directory and replay — no lock, no
+  * coordination, and never a partially written record.
+  *
+  * Log protocol (Delta's reader/writer version): the v1 record that
+  * [[create]] and [[cloneShallow]] write, and every checkpoint, carry
+  * `protocol` = [[Protocol]]. Replay checks it once, on its base (the
+  * checkpoint it starts from, else v1), before it uses any other field,
+  * and refuses a log without it loudly, naming the root. In a
+  * protocol-1 log every table has a declared schema and every record
+  * carries its operation kind and commit time, so no read path carries
+  * a schema-less or unstamped fallback.
   *
   * Log checkpointing (the paper's §3.3, added r14): every
   * [[CheckpointInterval]] commits the committer also writes a snapshot
@@ -79,8 +90,8 @@ object TxTable {
     * range can only prove "every row matches the predicate" for rows
     * the min/max SAW; a NULL row matches no range predicate and must
     * survive the delete, so a file is droppable-without-reading only
-    * when its logged null count is exactly zero. Absent in pre-r18
-    * entries → never metadata-dropped, always safe. */
+    * when its logged null count is exactly zero. Absent → never
+    * metadata-dropped, always safe. */
   case class ColStat(lo: Option[String] = None, hi: Option[String] = None,
                      nlo: Option[Long] = None, nhi: Option[Long] = None,
                      nn: Option[Long] = None)
@@ -105,9 +116,10 @@ object TxTable {
     * stale range is conservative — reads a file it could skip, never
     * skips one it must read). `knn` (r18) is the file's null count for
     * the KEY column — [[deleteWhere]]'s metadata-only drop eligibility
-    * on key predicates, mirroring [[ColStat.nn]]. Option fields are
-    * absent from older log records and deserialize to None, so old
-    * tables keep the degrade-never-miss posture. */
+    * on key predicates, mirroring [[ColStat.nn]]. An absent Option
+    * field means the stat is unknown for that file (an all-null key
+    * has no string range), and every reader then keeps the
+    * degrade-never-miss posture. */
   case class FileEntry(name: String, rows: Long, kmin: Long, kmax: Long,
                        smin: Option[String] = None, smax: Option[String] = None,
                        cols: Option[Map[String, ColStat]] = None,
@@ -122,30 +134,28 @@ object TxTable {
     * already recorded, and the merge no-ops — at-least-once delivery ×
     * idempotent commit = exactly-once table state. */
   case class TxnAction(appId: String, version: Long)
-  /** One log record. `op` (r15) names the operation kind for the
-    * history/audit surface (None in pre-r15 logs → reported UNKNOWN);
-    * `dataChange = Some(false)` marks commits that REARRANGE bytes
-    * without changing table rows (compact/cluster — Delta's dataChange
-    * flag), which the change feed then skips without reading a file;
-    * `ts` (r18) is the committer's wall-clock millis — what
-    * [[vacuumOlderThan]]/[[cleanupLogOlderThan]] prune against, since
-    * compliance contracts speak hours ("keep 7 days of time travel"),
-    * not version counts (absent in pre-r18 records → those versions
-    * read as too-new to reclaim, the conservative degrade). */
+  /** One log record. `op` names the operation kind for the
+    * history/audit surface; `dataChange = Some(false)` marks commits
+    * that REARRANGE bytes without changing table rows (compact/cluster
+    * — Delta's dataChange flag), which the change feed then skips
+    * without reading a file; `ts` is the committer's wall-clock millis
+    * — what [[vacuumOlderThan]]/[[cleanupLogOlderThan]] prune against,
+    * since compliance contracts speak hours ("keep 7 days of time
+    * travel"), not version counts. `schema` is set only by commits
+    * that change it (always by v1); `protocol` only by v1. */
   case class Commit(version: Long, key: String,
                     adds: Seq[FileEntry], removes: Seq[String],
+                    op: String, ts: Long,
                     schema: Option[String] = None,
                     txn: Option[TxnAction] = None,
-                    op: Option[String] = None,
                     dataChange: Option[Boolean] = None,
                     statsCols: Option[Seq[String]] = None,
-                    clearSchema: Option[Boolean] = None,
                     invariants: Option[Map[String, String]] = None,
                     cdc: Option[Seq[String]] = None,
                     cdcOn: Option[Boolean] = None,
-                    ts: Option[Long] = None,
                     colMap: Option[Map[String, String]] = None,
-                    retired: Option[Seq[String]] = None)
+                    retired: Option[Seq[String]] = None,
+                    protocol: Option[Int] = None)
   /** A materialized snapshot of the replay state at `version` — live
     * file entries in replay order, the schema then in force, and the
     * per-app last-transaction watermarks (txns must survive the
@@ -153,23 +163,24 @@ object TxTable {
     * in pre-checkpoint commit records would silently vanish and a
     * replayed batch would double-apply). */
   private case class Checkpoint(version: Long, key: String,
-                                schema: Option[String], live: Seq[FileEntry],
+                                schema: String, live: Seq[FileEntry],
                                 txns: Option[Map[String, Long]] = None,
                                 statsCols: Option[Seq[String]] = None,
                                 invariants: Option[Map[String, String]] = None,
                                 cdcOn: Option[Boolean] = None,
                                 colMap: Option[Map[String, String]] = None,
-                                retired: Option[Seq[String]] = None)
+                                retired: Option[Seq[String]] = None,
+                                protocol: Option[Int] = None)
   /** Replay result: live files in insertion order, schema in force,
     * per-appId max recorded transaction version, the table's key
     * column, and its declared secondary statistics columns. */
-  private case class State(live: Seq[FileEntry], schema: Option[String],
-                           txns: Map[String, Long], key: String = "",
-                           statsCols: Seq[String] = Seq.empty,
-                           invariants: Map[String, String] = Map.empty,
-                           cdcOn: Boolean = false,
-                           colMap: Map[String, String] = Map.empty,
-                           retired: Seq[String] = Seq.empty) {
+  private case class State(live: Seq[FileEntry], schema: StructType,
+                           txns: Map[String, Long], key: String,
+                           statsCols: Seq[String],
+                           invariants: Map[String, String],
+                           cdcOn: Boolean,
+                           colMap: Map[String, String],
+                           retired: Seq[String]) {
     /** COLUMN MAPPING (r18 — Delta's column mapping in name mode):
       * `colMap` maps LOGICAL column names (what the declared schema,
       * every API frame and every query speak) to PHYSICAL names (what
@@ -184,6 +195,9 @@ object TxTable {
     def physOf(logical: String): String = colMap.getOrElse(logical, logical)
   }
 
+  /** The log protocol this build writes and reads: a v1 record or
+    * checkpoint declaring anything else (or nothing) is refused. */
+  private val Protocol = 1
   /** Commits between checkpoints; replay reads ≤ this many records. */
   private val CheckpointInterval = 10
   /** vacuum's default age guard: an unreferenced data file younger than
@@ -247,16 +261,32 @@ object TxTable {
   private def replayState(root: String, asOf: Option[Long]): State = {
     val bound = asOf.getOrElse(Long.MaxValue)
     val ck = checkpointAtOrBelow(root, bound)
+    val versions = logVersions(root)
     // truncated-history guard (r17, cleanupLog's contract): without a
     // checkpoint at-or-below the bound, a sound replay needs the log
     // to start at v1 — if cleanupLog removed that prefix, replaying
     // would silently return a PARTIAL state; refuse loudly instead
     // (the same posture as a time-travel read past vacuumed files)
     if (ck.isEmpty) {
-      val minLog = logVersions(root).headOption
+      val minLog = versions.headOption
       require(minLog.forall(_ == 1L),
         s"TxTable at $root: cannot replay to v$bound — the log below " +
           s"v${minLog.getOrElse(0L)} was cleaned past the retention horizon")
+    }
+    val from = ck.map(_.version).getOrElse(0L)
+    val records = versions.filter(v => v > from && v <= bound).map(v =>
+      JsonMethods.parse(new String(Files.readAllBytes(
+        logDir(root).resolve(logName(v))), StandardCharsets.UTF_8)))
+    // the protocol gate, on the replay base and before any other field
+    // is read (an empty log has no base and replays to nothing)
+    if (ck.isDefined || records.nonEmpty) {
+      val found = ck.map(_.protocol)
+        .getOrElse((records.head \ "protocol").extractOpt[Int])
+      require(found.contains(Protocol),
+        s"TxTable at $root: the log's replay base " +
+          s"(${ck.fold(logName(1L))(c => ckptName(c.version))}) declares " +
+          s"protocol ${found.getOrElse("none")} — this build reads only " +
+          s"protocol $Protocol logs; recreate the table with create")
     }
     val live = scala.collection.mutable.LinkedHashMap.empty[String, FileEntry]
     val txns = scala.collection.mutable.HashMap.empty[String, Long]
@@ -269,7 +299,7 @@ object TxTable {
     var retired: Seq[String] = Seq.empty
     ck.foreach { c =>
       c.live.foreach(a => live.update(a.name, a))
-      schema = c.schema
+      schema = Some(c.schema)
       key = c.key
       c.statsCols.foreach(statsCols = _)
       c.invariants.foreach(invariants = _)
@@ -278,13 +308,11 @@ object TxTable {
       c.retired.foreach(retired = _)
       c.txns.foreach(_.foreach { case (app, v) => txns.update(app, v) })
     }
-    val from = ck.map(_.version).getOrElse(0L)
-    logVersions(root).filter(v => v > from && v <= bound).foreach { v =>
-      val c = readJson[Commit](logDir(root).resolve(logName(v)))
+    records.foreach { j =>
+      val c = j.extract[Commit]
       c.removes.foreach(live.remove)
       c.adds.foreach(a => live.update(a.name, a))
-      if (c.clearSchema.contains(true)) schema = None
-      else if (c.schema.isDefined) schema = c.schema
+      if (c.schema.isDefined) schema = c.schema
       key = c.key
       c.statsCols.foreach(statsCols = _)
       c.invariants.foreach(invariants = _)
@@ -294,8 +322,9 @@ object TxTable {
       c.txn.foreach(t => txns.update(t.appId,
         math.max(t.version, txns.getOrElse(t.appId, Long.MinValue))))
     }
-    State(live.values.toSeq, schema, txns.toMap, key, statsCols, invariants,
-      cdcOn, colMap, retired)
+    State(live.values.toSeq,
+      schema.fold(new StructType())(DataType.fromJson(_).asInstanceOf[StructType]),
+      txns.toMap, key, statsCols, invariants, cdcOn, colMap, retired)
   }
 
   /** Live file entries as of `asOf` (inclusive; None = latest). */
@@ -312,28 +341,56 @@ object TxTable {
   def currentVersion(root: String): Long =
     logVersions(root).lastOption.getOrElse(0L)
 
+  /** Publish `bytes` under `dest` only if nothing is there yet, all or
+    * nothing: the bytes go to a temp file in the same directory (its
+    * `.tmp-*.part` name matches no record or checkpoint pattern, so no
+    * listing ever sees it), are forced to disk, and appear under `dest`
+    * through one link(2) — atomic, and it never replaces an existing
+    * name, so exactly one of N racing publishers wins and no reader
+    * ever parses a partial record. A writer that crashes before the
+    * link leaves only the temp file: the version stays free for the
+    * next committer. The directory is synced after the link so the new
+    * name is durable. False when `dest` already existed. */
+  private def publish(dest: Path, bytes: Array[Byte]): Boolean = {
+    import java.nio.channels.FileChannel
+    import java.nio.file.StandardOpenOption.{READ, WRITE}
+    val dir = dest.getParent
+    val tmp = Files.createTempFile(dir, ".tmp-", ".part")
+    try {
+      val ch = FileChannel.open(tmp, WRITE)
+      try {
+        val buf = java.nio.ByteBuffer.wrap(bytes)
+        while (buf.hasRemaining) ch.write(buf)
+        ch.force(true)
+      } finally ch.close()
+      try Files.createLink(dest, tmp)
+      catch { case _: java.nio.file.FileAlreadyExistsException => return false }
+      val d = FileChannel.open(dir, READ)
+      try d.force(true) finally d.close()
+      true
+    } finally Files.deleteIfExists(tmp)
+  }
+
   /** Best-effort checkpoint at `v` (called after the commit record for
-    * `v` exists). CREATE_NEW makes concurrent checkpointers of the same
+    * `v` exists). [[publish]] makes concurrent checkpointers of the same
     * version harmless; the pointer flips via atomic rename; any failure
     * is swallowed — a checkpoint is an accelerator, never correctness. */
   private def maybeCheckpoint(root: String, v: Long, key: String): Unit = {
     if (v % CheckpointInterval != 0) return
     try {
       val st = replayState(root, Some(v))
-      val rec = Serialization.write(Checkpoint(v, key, st.schema, st.live,
+      val rec = Serialization.write(Checkpoint(v, key, st.schema.json, st.live,
         if (st.txns.isEmpty) None else Some(st.txns),
         if (st.statsCols.isEmpty) None else Some(st.statsCols),
         if (st.invariants.isEmpty) None else Some(st.invariants),
         if (st.cdcOn) Some(true) else None,
         if (st.colMap.isEmpty) None else Some(st.colMap),
-        if (st.retired.isEmpty) None else Some(st.retired)))
+        if (st.retired.isEmpty) None else Some(st.retired),
+        Some(Protocol)))
       val d = logDir(root)
-      try Files.write(d.resolve(ckptName(v)),
-        rec.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      publish(d.resolve(ckptName(v)), rec.getBytes(StandardCharsets.UTF_8))
       val tmp = Files.createTempFile(d, "_last_checkpoint", ".tmp")
-      Files.write(tmp, v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Files.write(tmp, v.toString.getBytes(StandardCharsets.UTF_8))
       Files.move(tmp, d.resolve("_last_checkpoint"),
         StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     } catch { case scala.util.control.NonFatal(_) => () }
@@ -671,8 +728,8 @@ object TxTable {
     // the full CDC plan (for a merge, the full_outer pre/post diff
     // join) and the parquet write then ran it AGAIN — localCheckpoint
     // executes the plan a single time and both the probe and the write
-    // read the checkpointed blocks (same pattern as touchedFileNames;
-    // the blocks are ∝ changed rows, never data)
+    // read the checkpointed blocks (the blocks are ∝ changed rows,
+    // never data)
     val mat = physDf.localCheckpoint()
     if (mat.isEmpty) return None
     val tmp = Files.createTempDirectory(Paths.get(root), "stage-cdc-")
@@ -693,34 +750,6 @@ object TxTable {
     }
   }
 
-  /** The change rows an upsert produces, computed AT WRITE TIME from
-    * the same (pre, post) struct comparison the diff-based [[changes]]
-    * replay uses — parity is spec-pinned: carried rows are silent,
-    * no-op updates (pre <=> post) are silent, source-only keys are
-    * inserts, value changes emit pre+post. Both sides project through
-    * the FINAL column set so widening merges compare in one type
-    * domain. */
-  private def cdcOfUpsert(base: DataFrame, updates: DataFrame, key: String,
-                          fields: Seq[org.apache.spark.sql.types.StructField])
-      : DataFrame = {
-    def norm(df: DataFrame) = df.select(fields.map(f =>
-      col(f.name).cast(f.dataType).as(f.name)): _*)
-    val cols = fields.map(_.name)
-    val p = norm(base).select(col(key).as("_k"),
-      struct(cols.map(col): _*).as("_pre"))
-    val u = norm(updates).select(col(key).as("_k"),
-      struct(cols.map(col): _*).as("_post"))
-    val j = p.join(u, p("_k") <=> u("_k"), "full_outer")
-    val diff = col("_pre").isNotNull && col("_post").isNotNull &&
-      !(col("_pre") <=> col("_post"))
-    j.filter(col("_pre").isNull && col("_post").isNotNull)
-      .select(col("_post.*")).withColumn("_change_type", lit("insert"))
-      .unionByName(j.filter(diff).select(col("_pre.*"))
-        .withColumn("_change_type", lit("update_preimage")))
-      .unionByName(j.filter(diff).select(col("_post.*"))
-        .withColumn("_change_type", lit("update_postimage")))
-  }
-
   /** Atomic create-if-absent commit AT a specific version; false when
     * another committer won that version. The caller (the OCC loop in
     * [[occRetry]]) must then RE-DERIVE its diff from the new snapshot —
@@ -732,7 +761,7 @@ object TxTable {
     *
     * OBJECT-STORE CONTRACT (r17, documentation of the deployment
     * boundary): the table's entire atomicity and isolation story rests
-    * on this ONE primitive — `Files.write(..., CREATE_NEW)` as an
+    * on this ONE primitive — [[publish]]'s no-replace link as an
     * atomic put-if-absent on the versioned log record name. POSIX
     * filesystems (and HDFS create-no-overwrite) provide it natively.
     * An S3-class object store does NOT get this from a bare PUT
@@ -744,48 +773,10 @@ object TxTable {
     * and immutable-file writes, which eventually-consistent stores
     * serve as-is; ONLY the log-record create needs the stronger
     * primitive, which is exactly Delta's LogStore plug-in boundary. */
-  /** In-process marker an occRetry attempt returns in the schema slot
-    * to mean "commit an EXPLICIT schema clear" (the Commit.clearSchema
-    * action, r16) — never serialized: tryCommit translates it. Closes
-    * the r14 legacy-log exception: a restore to a pre-r14 schema-less
-    * version now records the clear instead of silently keeping the
-    * head's declared schema (None in the commit field means
-    * "unchanged", so absent this marker the clear was inexpressible).
-    * Any string that can never be a real `StructType.json` rendering
-    * (those always start with '{') is a safe sentinel; r17 swapped the
-    * original NUL-prefixed form for this printable one so the source
-    * file stops registering as binary to grep-family tools. */
-  private val ClearSchemaMarker = "!GRAFT_CLEAR_SCHEMA!"
-
-  private def tryCommit(root: String, key: String, v: Long,
-                        adds: Seq[FileEntry], removes: Seq[String],
-                        schema: Option[String] = None,
-                        txn: Option[TxnAction] = None,
-                        op: Option[String] = None,
-                        dataChange: Option[Boolean] = None,
-                        statsCols: Option[Seq[String]] = None,
-                        invariants: Option[Map[String, String]] = None,
-                        cdc: Option[Seq[String]] = None,
-                        cdcOn: Option[Boolean] = None,
-                        colMap: Option[Map[String, String]] = None,
-                        retired: Option[Seq[String]] = None): Boolean = {
+  private def tryCommit(root: String, c: Commit): Boolean = {
     Files.createDirectories(logDir(root))
-    val (schemaField, clearFlag) =
-      if (schema.contains(ClearSchemaMarker)) (None, Some(true))
-      else (schema, None)
-    val rec = Serialization.write(
-      Commit(v, key, adds, removes, schemaField, txn, op, dataChange,
-        statsCols, clearFlag, invariants, cdc, cdcOn,
-        ts = Some(System.currentTimeMillis()), colMap = colMap,
-        retired = retired))
-    try {
-      Files.write(logDir(root).resolve(logName(v)),
-        rec.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-    }
+    publish(logDir(root).resolve(logName(c.version)),
+      Serialization.write(c).getBytes(StandardCharsets.UTF_8))
   }
 
   /** Telemetry/test instrumentation for the OCC loop:
@@ -808,11 +799,8 @@ object TxTable {
     * posture (VLDB'20 §3.2: concurrent transactions commit without
     * re-execution when their read/write sets are disjoint). Conditions,
     * each conservative (any doubt → re-derive):
-    *  - `r` changes no schema — neither a declared schema nor an
-    *    explicit clearSchema action (r17: a racing RESTORE to a legacy
-    *    schema-less version is a schema change too — a re-derive would
-    *    see the cleared schema and behave differently, so it must force
-    *    one);
+    *  - `r` changes no schema (a re-derive would see the new schema
+    *    and behave differently, so it must force one);
     *  - `r` carries no txn stamp for OUR appId (the idempotence
     *    watermark must be re-evaluated against r's commit);
     *  - `r` removed none of the files we read-and-removed (overlapping
@@ -833,7 +821,7 @@ object TxTable {
       val numDisjoint = a.kmax < b.kmin || b.kmax < a.kmin
       !(strDisjoint || numDisjoint)
     }
-    r.schema.isEmpty && !r.clearSchema.contains(true) &&
+    r.schema.isEmpty &&
       !txn.exists(t => r.txn.exists(_.appId == t.appId)) &&
       !r.removes.exists(removes.contains) &&
       !r.adds.exists(ra => adds.exists(a => overlap(a, ra)))
@@ -862,6 +850,7 @@ object TxTable {
     var tries = 0
     while (tries < maxAttempts) {
       val v = currentVersion(root) + 1
+      require(v > 1L, s"TxTable at $root: no table to $op — create it first")
       attemptInvocations.incrementAndGet()
       attempt(v) match {
         case None => return currentVersion(root)
@@ -871,9 +860,9 @@ object TxTable {
           var rebases = 0
           var rebasing = true
           while (rebasing) {
-            if (tryCommit(root, key, tv, adds, removes, schema, txn,
-                Some(op), if (dataChange) None else Some(false),
-                cdc = cdc)) {
+            if (tryCommit(root, Commit(tv, key, adds, removes, op,
+                System.currentTimeMillis(), schema, txn,
+                if (dataChange) None else Some(false), cdc = cdc))) {
               maybeCheckpoint(root, tv, key)
               return tv
             }
@@ -953,11 +942,11 @@ object TxTable {
     }
     Files.createDirectories(dataDir(root))
     val adds = writeFiles(spark, df, root, key, "base", statsCols)
-    require(tryCommit(root, key, 1L, adds, Seq.empty, Some(df.schema.json),
-        None, Some("CREATE"), None,
-        if (statsCols.isEmpty) None else Some(statsCols),
-        if (invariants.isEmpty) None else Some(invariants.toMap),
-        None, if (cdc) Some(true) else None),
+    require(tryCommit(root, Commit(1L, key, adds, Seq.empty, "CREATE",
+        System.currentTimeMillis(), Some(df.schema.json),
+        statsCols = if (statsCols.isEmpty) None else Some(statsCols),
+        invariants = if (invariants.isEmpty) None else Some(invariants.toMap),
+        cdcOn = if (cdc) Some(true) else None, protocol = Some(Protocol))),
       s"TxTable at $root: concurrent create detected")
     1L
   }
@@ -1001,22 +990,21 @@ object TxTable {
       name = srcData.resolve(f.name).toString,
       dv = f.dv.map(n => srcData.resolve(n).toString)))
     Files.createDirectories(dataDir(dest))
-    require(tryCommit(dest, st.key, 1L, entries, Seq.empty, st.schema,
-        None, Some("CLONE"), None,
-        if (st.statsCols.isEmpty) None else Some(st.statsCols),
-        if (st.invariants.isEmpty) None else Some(st.invariants),
-        None, if (st.cdcOn) Some(true) else None,
-        if (st.colMap.isEmpty) None else Some(st.colMap),
-        if (st.retired.isEmpty) None else Some(st.retired)),
+    require(tryCommit(dest, Commit(1L, st.key, entries, Seq.empty, "CLONE",
+        System.currentTimeMillis(), Some(st.schema.json),
+        statsCols = if (st.statsCols.isEmpty) None else Some(st.statsCols),
+        invariants = if (st.invariants.isEmpty) None else Some(st.invariants),
+        cdcOn = if (st.cdcOn) Some(true) else None,
+        colMap = if (st.colMap.isEmpty) None else Some(st.colMap),
+        retired = if (st.retired.isEmpty) None else Some(st.retired),
+        protocol = Some(Protocol))),
       s"TxTable cloneShallow: concurrent create at $dest")
     1L
   }
 
-  /** The table schema in force at `asOf` (None = latest); None only for
-    * pre-r14 logs that never recorded one. */
-  def schemaOf(root: String, asOf: Option[Long] = None): Option[StructType] =
+  /** The table schema in force at `asOf` (None = latest). */
+  def schemaOf(root: String, asOf: Option[Long] = None): StructType =
     replayState(root, asOf).schema
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** Snapshot read (optionally time-traveled to `asOf`). Reads ONLY the
     * live files — uncommitted or removed files are invisible. The read
@@ -1027,9 +1015,7 @@ object TxTable {
            asOf: Option[Long] = None): DataFrame = {
     val st = replayState(root, asOf)
     require(st.live.nonEmpty, s"TxTable at $root has no live files")
-    readEntries(spark, root, st.live,
-      st.schema.map(DataType.fromJson(_).asInstanceOf[StructType]), st.key,
-      st.colMap)
+    readEntries(spark, root, st.live, st.schema, st.key, st.colMap)
   }
 
   /** Read a set of live entries, applying per-file DELETION VECTORS
@@ -1048,7 +1034,7 @@ object TxTable {
     * (read-by-name, same widening rules as data files). */
   private def readEntries(spark: SparkSession, root: String,
                           entries: Seq[FileEntry],
-                          declared: Option[StructType],
+                          declared: StructType,
                           key: String,
                           colMap: Map[String, String] = Map.empty)
       : DataFrame = {
@@ -1058,17 +1044,10 @@ object TxTable {
     // names mapped, and the final select aliases back to logical — so
     // a renamed column reads every era's files by its one physical
     // name, and an empty map (no renames ever) is the identity
-    require(colMap.isEmpty || declared.isDefined,
-      "TxTable readEntries: a column-mapped table always has a schema")
-    val physDeclared = declared.map(ts => StructType(ts.fields.map(f =>
-      f.copy(name = colMap.getOrElse(f.name, f.name)))))
-    def rd(names: Seq[String]): DataFrame = {
-      val paths = names.map(n => dataDir(root).resolve(n).toString)
-      physDeclared match {
-        case Some(ts) => spark.read.schema(ts).parquet(paths: _*)
-        case None => spark.read.parquet(paths: _*)
-      }
-    }
+    val physDeclared = StructType(declared.fields.map(f =>
+      f.copy(name = colMap.getOrElse(f.name, f.name))))
+    def rd(names: Seq[String]): DataFrame = spark.read.schema(physDeclared)
+      .parquet(names.map(n => dataDir(root).resolve(n).toString): _*)
     val (dvd, plain) = entries.partition(_.dv.isDefined)
     val plainDf = if (plain.isEmpty) None else Some(rd(plain.map(_.name)))
     val dvdDf = if (dvd.isEmpty) None else {
@@ -1086,11 +1065,8 @@ object TxTable {
         element_at(split(input_file_name(), "/"), -1))
       val outCols = base.columns.filterNot(_ == "_graft_file").toSeq.map(col)
       val dvPaths = dvd.map(e => dataDir(root).resolve(e.dv.get).toString)
-      val dvRaw = declared match {
-        case Some(ts) =>
-          spark.read.schema(StructType(Seq(ts(key)))).parquet(dvPaths: _*)
-        case None => spark.read.parquet(dvPaths: _*)
-      }
+      val dvRaw =
+        spark.read.schema(StructType(Seq(declared(key)))).parquet(dvPaths: _*)
       val sidecarToFile = dvd.map(e => (baseName(e.dv.get), baseName(e.name)))
         .toDF("_graft_dv", "_graft_file")
       val pairs = dvRaw
@@ -1109,7 +1085,7 @@ object TxTable {
     }
     // alias physical → logical (key never maps: rename/drop refuse it)
     if (colMap.isEmpty) phys
-    else phys.select(declared.get.fields.map(f =>
+    else phys.select(declared.fields.map(f =>
       col(colMap.getOrElse(f.name, f.name)).as(f.name)).toSeq: _*)
   }
 
@@ -1213,79 +1189,13 @@ object TxTable {
     val st = replayState(root, pinned)
     require(st.live.nonEmpty, s"TxTable at $root has no live files")
     val (kept, _) = liveFilesWhereAll(root, preds, pinned)
-    val declared = st.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
-    if (kept.isEmpty) declared match {
-      case Some(ts) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ts)
-      case None =>
-        // legacy schema-less log: one file read gives the zero-row
-        // shape — but the pruned-files contract ("physically delete
-        // them and the range read still answers") means live.head may
-        // itself be deleted, so pick a file that still EXISTS (r17,
-        // ADVICE); if none does, the shape is unknowable — fail loudly
-        // naming the degrade instead of a bare FileNotFoundException.
-        val present = st.live.find(f =>
-          Files.exists(dataDir(root).resolve(f.name)))
-        require(present.isDefined,
-          s"TxTable at $root: provably-empty range read on a legacy " +
-            "schema-less table whose live files are all physically " +
-            "absent — the zero-row shape needs a schema-bearing log or " +
-            "one readable file footer")
-        spark.read.parquet(
-          dataDir(root).resolve(present.get.name).toString).limit(0)
-    } else {
-      val df = readEntries(spark, root, kept, declared, st.key, st.colMap)
+    if (kept.isEmpty) spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st.schema)
+    else {
+      val df = readEntries(spark, root, kept, st.schema, st.key, st.colMap)
       preds.foldLeft(df) { case (d, (c, lo, hi)) =>
         d.filter(col(c) >= lit(lo) && col(c) <= lit(hi))
       }
-    }
-  }
-
-  /** Names of the live files whose key range intersects the update/
-    * delete key set — a broadcast range join over the (small) file-range
-    * table. STRING-typed keys (r15) prune on the lexicographic smin/smax
-    * stats when every live file carries them (a pre-r15 file without
-    * string stats forces the degrade for safety); probe-side nulls can
-    * never equal-match a key in upsert/delete, so null probes are
-    * dropped, not escalated. Non-string, non-integral keys cast to null
-    * on the BIGINT probe side, where a range test can never match — any
-    * such null probe degrades to touch-ALL-files (a full rewrite is
-    * correct, a missed file is not), matching the writer side's
-    * full-range stats for those keys. */
-  /** `preDistinct = true` (r18 optimization round) tells the pruning
-    * pass the caller ALREADY distinct'ed and materialized the key set —
-    * skip the internal distinct + localCheckpoint (one Spark job + one
-    * block write per commit) and read the caller's blocks directly. */
-  private def touchedFileNames(spark: SparkSession, files: Seq[FileEntry],
-                               updates: DataFrame, key: String,
-                               preDistinct: Boolean = false): Set[String] = {
-    import spark.implicits._
-    val keyIsString =
-      updates.schema(key).dataType == org.apache.spark.sql.types.StringType
-    if (keyIsString && files.forall(f => f.smin.isDefined && f.smax.isDefined)) {
-      val ks0 = updates.select(col(key).as("k")).filter(col("k").isNotNull)
-      val ks = if (preDistinct) ks0 else ks0.distinct().localCheckpoint()
-      val ranges = files.map(f => (f.name, f.smin.get, f.smax.get))
-        .toDF("name", "smin", "smax")
-      ks.join(broadcast(ranges), col("k").between(col("smin"), col("smax")))
-        .select(col("name")).distinct().as[String].collect().toSet
-    } else {
-      val ks0 = updates.select(expr(s"try_cast(`$key` AS BIGINT)").as("k"))
-      val ks = if (preDistinct) ks0 else ks0.distinct().localCheckpoint()
-      // ONE action (r19, guide §1.2): the BIGINT-cast null probe rides
-      // the range join — a LEFT join keeps null/uncastable keys as
-      // unmatched rows, so one aggregate returns both the degrade flag
-      // and the touched set, where the r18 shape ran a limit(1).count()
-      // probe job plus a join-collect job per commit
-      val ranges = files.map(f => (f.name, f.kmin, f.kmax))
-        .toDF("name", "kmin", "kmax")
-      val r = ks.join(broadcast(ranges),
-          col("k").between(col("kmin"), col("kmax")), "left")
-        .agg(max(when(col("k").isNull, 1).otherwise(0)).as("nocast"),
-          collect_set(col("name")).as("touched"))
-        .collect().head
-      if (!r.isNullAt(0) && r.getInt(0) == 1) files.map(_.name).toSet
-      else r.getSeq[String](1).toSet
     }
   }
 
@@ -1299,35 +1209,35 @@ object TxTable {
       (FloatType, DoubleType))
   }
 
-  /** MERGE's one-row-per-key contract AND its file pruning in ONE
-    * distributed action (r19, guide §1.2 — the r18 shape still ran
-    * three tiny jobs per commit: the keyCnt checkpoint, the dup-limit
-    * collect and touchedFileNames' probe+join; at q69/q93's commit
-    * cadence that job-count overhead dominated). The per-key counts
-    * feed the broadcast range join directly and one collect returns
-    * (any duplicated key, the cast-degrade flag, the touched names).
+  /** File pruning for merges and deletes, and MERGE's one-row-per-key
+    * contract, in ONE distributed action (r19, guide §1.2). `keyCnt` is
+    * the caller's key frame `(_k, _c)`: a merge passes its per-key
+    * source counts, a delete its distinct key set with `_c = 1` (no
+    * extra groupBy). The frame feeds a broadcast range join over the
+    * (small) file-range table and one collect returns (any duplicated
+    * key, the cast-degrade flag, the touched names).
     *
-    * The uniqueness guard exists because Sources.upsert joins
-    * full_outer on the key, so duplicate update keys would FAN OUT
-    * into duplicate table rows — silent corruption of the
-    * one-row-per-key invariant. Fail loudly instead (Delta's MERGE
-    * throws on multiple source matches for the same reason).
+    * The uniqueness guard exists because the merge joins full_outer on
+    * the key, so duplicate update keys would FAN OUT into duplicate
+    * table rows — silent corruption of the one-row-per-key invariant.
+    * Fail loudly instead (Delta's MERGE throws on multiple source
+    * matches for the same reason).
     *
-    * Pruning semantics are IDENTICAL to [[touchedFileNames]]:
-    * string-keyed tables with full string stats prune on the
-    * lexicographic ranges (null keys match nothing); everything else
-    * prunes on the BIGINT cast, where ANY null/uncastable key degrades
-    * to touch-every-file (never-miss). Runs inside the OCC body, so a
+    * Pruning: string-keyed tables whose live files all carry string
+    * stats (r15) prune on the lexicographic ranges (null keys match
+    * nothing — they can never equal-match in an upsert or delete);
+    * everything else prunes on the BIGINT cast, where ANY
+    * null/uncastable key degrades to touch-every-file (a full rewrite
+    * is correct, a missed file is not), matching the writer side's
+    * full-range stats for such keys. Runs inside the OCC body, so a
     * rebase re-runs the guard too — idempotent, and the contended-
     * writer path is never the bench shape. */
-  private def uniqueKeysTouched(spark: SparkSession, files: Seq[FileEntry],
-                                updates: DataFrame, key: String)
-      : Set[String] = {
+  private def touchedFiles(spark: SparkSession, files: Seq[FileEntry],
+                           keyCnt: DataFrame): Set[String] = {
     import spark.implicits._
     val strPath =
-      updates.schema(key).dataType == org.apache.spark.sql.types.StringType &&
+      keyCnt.schema("_k").dataType == org.apache.spark.sql.types.StringType &&
         files.forall(f => f.smin.isDefined && f.smax.isDefined)
-    val keyCnt = updates.groupBy(col(key).as("_k")).agg(count(lit(1)).as("_c"))
     val withCast =
       if (strPath) keyCnt.withColumn("_kc", col("_k"))
       else keyCnt.withColumn("_kc", expr("try_cast(`_k` AS BIGINT)"))
@@ -1351,24 +1261,6 @@ object TxTable {
     else r.getSeq[String](3).toSet
   }
 
-  /** Storage-level MERGE (upsert by `key`): only files whose key range
-    * intersects the update keys are read and rewritten; every other
-    * file carries over untouched — the file-level pruning that makes a
-    * merge on a 100 TB state table proportional to the touched keys,
-    * not the table. One atomic commit swaps removed-for-rewritten.
-    *
-    * Schema evolution: updates may ADD columns (the widened schema is
-    * committed; carried-over files read through it with nulls) but must
-    * carry EVERY existing table column — a missing column fails loudly
-    * rather than silently nulling matched rows.
-    *
-    * Idempotent writes (`txn`, the Delta txn action): when the caller
-    * passes (appId, version), the merge applies ONLY IF `version` is
-    * strictly greater than the last version recorded for that appId —
-    * otherwise it no-ops and returns the current table version. The
-    * guard re-evaluates inside the OCC loop against each fresh
-    * snapshot, so two racing re-deliveries of the same micro-batch
-    * linearize to exactly one application. */
   /** [[merge]]/[[mergeConditional]]'s source materialization (r18),
     * minus the redundant copy (r19): when the caller already hands a
     * MATERIALIZED frame — a `localCheckpoint`ed delta (every streaming
@@ -1383,120 +1275,73 @@ object TxTable {
       case _ => df.localCheckpoint()
     }
 
+  /** Storage-level MERGE (upsert by `key`): [[mergeConditional]]'s
+    * default clauses (update on match, insert when unmatched, keep
+    * target-only rows) plus schema evolution. Only files whose key
+    * range intersects the update keys are read and rewritten; every
+    * other file carries over untouched — the file-level pruning that
+    * makes a merge on a 100 TB state table proportional to the touched
+    * keys, not the table. One atomic commit swaps removed-for-rewritten.
+    *
+    * Schema evolution, worked out inside each OCC attempt against that
+    * attempt's snapshot: updates may ADD columns (the widened schema is
+    * committed; carried-over files read through it with nulls) but must
+    * carry EVERY existing table column — a missing column fails loudly
+    * rather than silently nulling matched rows. A same-name column
+    * arriving with a DIFFERENT type is accepted only as a SAFE widening
+    * (short→int, int→long, float→double — the promotions the parquet
+    * reader performs under a declared wider schema, verified
+    * empirically): the commit widens the declared schema and every old
+    * narrow file upcasts on read; anything else fails loudly AT THE
+    * MERGE (r15: it used to explode at a later read, far from the
+    * cause). An added column may not take a dropped or renamed column's
+    * physical name (r18 column mapping: old files still hold a dropped
+    * column's bytes, and by-name reads would resurrect its stale values
+    * — which is why drop REFUSES reuse rather than silently remapping).
+    *
+    * Idempotent writes (`txn`, the Delta txn action): when the caller
+    * passes (appId, version), the merge applies ONLY IF `version` is
+    * strictly greater than the last version recorded for that appId —
+    * otherwise it no-ops and returns the current table version. The
+    * guard re-evaluates inside the OCC loop against each fresh
+    * snapshot, so two racing re-deliveries of the same micro-batch
+    * linearize to exactly one application. */
   def merge(spark: SparkSession, root: String, updates0: DataFrame,
-            key: String, txn: Option[(String, Long)] = None): Long = {
-    // r18 (optimization round, guide §1.2/§5): materialize the updates
-    // ONCE — Delta materializes its merge source for the same reason.
-    // The merge used to re-execute the updates PLAN up to four times
-    // (uniqueness check, key-range pruning, the rewrite join, the CDC
-    // diff when enabled); now every consumer reads the checkpointed
-    // blocks (∝ the batch, never the table), and an OCC re-derivation
-    // re-reads blocks instead of re-running the plan.
-    val updates = materializedOnce(updates0)
-    occRetry(root, "MERGE", allowRebase = true) { v =>
-      val st = replayState(root, None)
-      if (txn.exists { case (app, tv) => st.txns.get(app).exists(_ >= tv) })
-        None   // already applied: idempotent no-op (the occRetry sentinel)
+            key: String, txn: Option[(String, Long)] = None): Long =
+    mergeBody(spark, root, updates0, key, txn, "merge") { (st, updates) =>
+      val ts = st.schema
+      val tblCols = ts.fieldNames.toSeq
+      val missing = tblCols.filterNot(updates.columns.contains)
+      require(missing.isEmpty,
+        s"TxTable merge: updates missing table column(s) ${missing.mkString(", ")} — " +
+          "a merge must carry every existing column (schema can widen, never shrink)")
+      val widened = ts.fields.filter(f =>
+          updates.schema(f.name).dataType != f.dataType)
+        .map { f =>
+          val up = updates.schema(f.name).dataType
+          require(safeWidening.contains((f.dataType, up)),
+            s"TxTable merge: column '${f.name}' arrives as $up but the table " +
+              s"declares ${f.dataType} — only lossless widenings " +
+              "(short→int, int→long, float→double) are applied; cast the " +
+              "updates explicitly for anything else")
+          f.name -> up
+        }.toMap
+      val added = updates.columns.toSeq.filterNot(tblCols.contains)
+      val usedPhys = tblCols.map(st.physOf).toSet ++ st.retired
+      val clash = added.filter(usedPhys.contains)
+      require(clash.isEmpty,
+        s"TxTable merge: column(s) ${clash.mkString(", ")} collide " +
+          "with a dropped or renamed column's physical storage name " +
+          "— dropped names are never reusable (old files still hold " +
+          "their bytes); pick a different name")
+      if (added.isEmpty && widened.isEmpty) (ts, None)
       else {
-        val files = st.live
-        val tableSchema = st.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
-        val tblCols = tableSchema.map(_.fieldNames.toSeq).getOrElse(Seq.empty)
-        val missing = tblCols.filterNot(updates.columns.contains)
-        require(missing.isEmpty,
-          s"TxTable merge: updates missing table column(s) ${missing.mkString(", ")} — " +
-            "a merge must carry every existing column (schema can widen, never shrink)")
-        // TYPE contract (r15): a same-name column arriving with a
-        // DIFFERENT type used to slip through — upsert's when/otherwise
-        // coerced to a common type, the commit kept the OLD declared
-        // schema, and the contradiction exploded at a LATER
-        // declared-schema read, far from the cause. Now: a SAFE
-        // widening (short→int, int→long, float→double — the promotions
-        // the parquet reader performs under a declared wider schema,
-        // verified empirically) WIDENS the declared schema in this
-        // commit, untouched narrow files upcast on read; anything else
-        // fails loudly AT THE MERGE.
-        val widened = tableSchema.map(_.fields.toSeq).getOrElse(Seq.empty)
-          .filter(f => updates.columns.contains(f.name) &&
-            updates.schema(f.name).dataType != f.dataType)
-          .map { f =>
-            val up = updates.schema(f.name).dataType
-            require(safeWidening.contains((f.dataType, up)),
-              s"TxTable merge: column '${f.name}' arrives as $up but the table " +
-                s"declares ${f.dataType} — only lossless widenings " +
-                "(short→int, int→long, float→double) are applied; cast the " +
-                "updates explicitly for anything else")
-            f.name -> up
-          }.toMap
-        val added = updates.columns.toSeq.filterNot(c => tblCols.contains(c))
-          .filter(_ => tblCols.nonEmpty) // legacy no-schema logs: no evolution
-        // COLUMN MAPPING guard (r18): the physical namespace is
-        // write-once — an added column may not collide with a RETIRED
-        // physical (a dropped column's bytes are still in old files;
-        // by-name reads would resurrect its stale values — the r14
-        // corruption class, which is why drop REFUSES reuse rather
-        // than silently remapping) nor with a renamed column's
-        // physical slot
-        if (added.nonEmpty) {
-          val usedPhys = tblCols.map(st.physOf).toSet ++ st.retired
-          val clash = added.filter(usedPhys.contains)
-          require(clash.isEmpty,
-            s"TxTable merge: column(s) ${clash.mkString(", ")} collide " +
-              "with a dropped or renamed column's physical storage name " +
-              "— dropped names are never reusable (old files still hold " +
-              "their bytes); pick a different name")
-        }
-        val touchedSet = uniqueKeysTouched(spark, files, updates, key)
-        val touched = files.filter(f => touchedSet.contains(f.name))
-        // touched files are read THROUGH the declared table schema
-        // (read-by-name, like read()): a bare inferred read after a
-        // widening commit takes its schema from whichever touched file
-        // it samples — a pre-widening file yields a narrow frame and
-        // Sources.upsert would then silently DROP the widened column's
-        // values from the updates (caught by the r14 review; spec:
-        // "second merge into pre-widening files keeps the column")
-        // DV-aware (r17): a touched file's deletion vector applies to
-        // the rewrite's base read, and the rewrite then MATERIALIZES it
-        // away — the new files carry no dv, the old sidecar becomes
-        // vacuum garbage with its data file
-        val base0 =
-          if (touched.isEmpty) updates.limit(0)
-          else readEntries(spark, root, touched, tableSchema, key, st.colMap)
-        // widen the rewrite side with the added columns (null for rows
-        // whose key the updates don't touch — by-name parquet reads of
-        // carried-over files do the same, so the widened schema is total)
-        val base1 = added.foldLeft(base0)((b, c) =>
-          b.withColumn(c, lit(null).cast(updates.schema(c).dataType)))
-        // a CDC-enabled merge consumes the touched-files read TWICE
-        // (the rewrite join and the pre/post diff): checkpoint it so
-        // the touched files' pages are read once (r18 optimization
-        // round); without cdc the read executes once anyway — no
-        // checkpoint, no extra pass
-        val base = if (st.cdcOn && touched.nonEmpty) base1.localCheckpoint()
-          else base1
-        // ALL updates enter the rewrite: matched keys replace rows read
-        // from the touched files, unmatched keys are pure inserts
-        val merged = Sources.upsert(base, updates, key)
-        enforceInvariants(merged, st.invariants, "merge")
-        val newSchema =
-          if (added.isEmpty && widened.isEmpty) None
-          else Some(StructType(tableSchema.get.fields.map(f =>
-            widened.get(f.name).map(t => f.copy(dataType = t)).getOrElse(f)) ++
-            added.map(c => updates.schema(c))).json)
-        val cdc = if (!st.cdcOn) None else {
-          val finalFields = newSchema
-            .map(DataType.fromJson(_).asInstanceOf[StructType].fields.toSeq)
-            .orElse(tableSchema.map(_.fields.toSeq))
-            .getOrElse(merged.schema.fields.toSeq)
-          writeCdcFiles(spark, cdcOfUpsert(base, updates, key, finalFields),
-            root, v, st.colMap)
-        }
-        Some((writeFiles(spark, merged, root, key, f"$v%010d-merge",
-            st.statsCols, st.colMap),
-          touched.map(_.name), key, newSchema,
-          txn.map { case (app, tv) => TxnAction(app, tv) }, cdc))
+        val evolved = StructType(ts.fields.map(f =>
+          widened.get(f.name).map(t => f.copy(dataType = t)).getOrElse(f)) ++
+          added.map(c => updates.schema(c)))
+        (evolved, Some(evolved.json))
       }
     }
-  }
 
   /** Clause-predicate shape for [[mergeConditional]]: a function of the
     * SOURCE and TARGET column accessors returning a boolean Column —
@@ -1560,21 +1405,11 @@ object TxTable {
                        matchedUpdate: Option[MergeCond] = None,
                        matchedUpdateSet: Option[Map[String, MergeCond]] = None,
                        notMatchedInsert: Option[MergeCond] = None,
-                       txn: Option[(String, Long)] = None): Long = {
-    // same source materialization as [[merge]] (r18 optimization
-    // round): one execution of the updates plan, every consumer below
-    // reads the checkpointed blocks (or the caller's own, r19)
-    val updates = materializedOnce(updates0)
-    occRetry(root, "MERGE", allowRebase = true) { v =>
-      val st = replayState(root, None)
-      if (txn.exists { case (app, tv) => st.txns.get(app).exists(_ >= tv) })
-        None   // already applied: idempotent no-op
-      else {
-        val files = st.live
-        val tableSchema = st.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
-        require(tableSchema.isDefined,
-          "TxTable mergeConditional: requires a schema-bearing log")
-        val ts = tableSchema.get
+                       txn: Option[(String, Long)] = None): Long =
+    mergeBody(spark, root, updates0, key, txn, "mergeConditional",
+        matchedDelete, matchedUpdate, matchedUpdateSet, notMatchedInsert) {
+      (st, updates) =>
+        val ts = st.schema
         val tblCols = ts.fieldNames.toSeq
         val missing = tblCols.filterNot(updates.columns.contains)
         require(missing.isEmpty,
@@ -1595,12 +1430,54 @@ object TxTable {
             s"TxTable mergeConditional: SET names unknown column(s) " +
               s"${unknown.mkString(", ")}")
         }
-        val touchedSet = uniqueKeysTouched(spark, files, updates, key)
-        val touched = files.filter(f => touchedSet.contains(f.name))
+        (ts, None)
+    }
+
+  /** The one MERGE body behind [[merge]] and [[mergeConditional]].
+    * `target` runs inside each OCC attempt, after the txn guard: it
+    * validates the source against that attempt's snapshot and returns
+    * the schema the merged rows take, plus the commit's new schema JSON
+    * when that schema evolved (None: unchanged). Everything else
+    * happens here once: the source materializes once, the uniqueness
+    * guard and file pruning share one aggregate, the touched files are
+    * read through the target schema (read-by-name, like read(): a bare
+    * inferred read after a widening commit would take its schema from
+    * whichever touched file it samples; DV-aware since r17, so the
+    * rewrite MATERIALIZES a touched file's vector away), one full_outer
+    * clause join yields both the rewrite and the change rows, invariants
+    * are enforced on the rewrite, and one atomic commit swaps the
+    * touched files for the rewritten ones. A commit that changes
+    * nothing (no rows written, no file touched, no txn stamp, no schema
+    * change) is not made. `name` prefixes the entry point's errors. */
+  private def mergeBody(spark: SparkSession, root: String, updates0: DataFrame,
+                        key: String, txn: Option[(String, Long)], name: String,
+                        matchedDelete: Option[MergeCond] = None,
+                        matchedUpdate: Option[MergeCond] = None,
+                        matchedUpdateSet: Option[Map[String, MergeCond]] = None,
+                        notMatchedInsert: Option[MergeCond] = None)(
+      target: (State, DataFrame) => (StructType, Option[String])): Long = {
+    // r18 (optimization round, guide §1.2/§5): materialize the updates
+    // ONCE — Delta materializes its merge source for the same reason.
+    // The guard, the pruning, the clause join and the CDC rows all read
+    // the checkpointed blocks (∝ the batch, never the table), and an
+    // OCC re-derivation re-reads blocks instead of re-running the plan.
+    val updates = materializedOnce(updates0)
+    occRetry(root, "MERGE", allowRebase = true) { v =>
+      val st = replayState(root, None)
+      if (txn.exists { case (app, tv) => st.txns.get(app).exists(_ >= tv) })
+        None   // already applied: idempotent no-op (the occRetry sentinel)
+      else {
+        val (ts, newSchema) = target(st, updates)
+        val tblCols = ts.fieldNames.toSeq
+        val touchedSet = touchedFiles(spark, st.live,
+          updates.groupBy(col(key).as("_k")).agg(count(lit(1)).as("_c")))
+        val touched = st.live.filter(f => touchedSet.contains(f.name))
+        // an empty LOCAL relation, so the optimizer folds the join of a
+        // pure-insert merge into a projection of the source
         val base =
           if (touched.isEmpty) spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ts)
-          else readEntries(spark, root, touched, Some(ts), key, st.colMap)
+            java.util.Collections.emptyList[org.apache.spark.sql.Row](), ts)
+          else readEntries(spark, root, touched, ts, key, st.colMap)
         val src = updates.select(
           (col(key).as("_mk") +: lit(true).as("_sp") +:
             updates.columns.filterNot(_ == key).toSeq
@@ -1609,11 +1486,11 @@ object TxTable {
           (col(key).as("_mk") +: lit(true).as("_tp") +:
             tblCols.filterNot(_ == key).map(c => col(c).as(s"_t_$c"))): _*)
         val j0 = tgt.join(src, Seq("_mk"), "full_outer")
-        // a CDC-enabled conditional merge derives FIVE frames from this
-        // join (the rewrite + four change-row branches): checkpoint it
-        // so the full_outer executes once and every branch reads the
-        // blocks (r18 optimization round); without cdc the join runs
-        // once anyway — no checkpoint, no extra pass
+        // a CDC-enabled merge derives FIVE frames from this join (the
+        // rewrite + four change-row branches): checkpoint it so the
+        // full_outer executes once and every branch reads the blocks
+        // (r18 optimization round); without cdc the join runs once
+        // anyway — no checkpoint, no extra pass
         val j = if (st.cdcOn) j0.localCheckpoint() else j0
         val srcAcc: String => org.apache.spark.sql.Column =
           c => if (c == key) col("_mk") else col(s"_s_$c")
@@ -1633,9 +1510,7 @@ object TxTable {
         // a matched-and-updated row's value per column: the SET
         // expression when one is declared for the column, the TARGET's
         // value for unnamed columns under a SET map (partial update),
-        // and the source's value in replace mode (no SET map) — which
-        // keeps the pre-r18 semantics bit-identical when
-        // matchedUpdateSet is None
+        // and the source's value in replace mode (no SET map)
         val updAcc: String => org.apache.spark.sql.Column = c =>
           matchedUpdateSet match {
             case Some(m) => m.get(c)
@@ -1649,7 +1524,7 @@ object TxTable {
             .when(srcOnly, srcAcc(c))
             .otherwise(tgtAcc(c)).as(c)
         }: _*)
-        enforceInvariants(merged, st.invariants, "mergeConditional")
+        enforceInvariants(merged, st.invariants, name)
         val cdc = if (!st.cdcOn) None else {
           // change rows straight from the clause join: the same
           // outcomes the rewrite materializes, emitted as the feed —
@@ -1677,8 +1552,9 @@ object TxTable {
         }
         val adds = writeFiles(spark, merged, root, key,
           f"$v%010d-merge", st.statsCols, st.colMap)
-        if (adds.isEmpty && touched.isEmpty && txn.isEmpty) None
-        else Some((adds, touched.map(_.name), key, None,
+        if (adds.isEmpty && touched.isEmpty && txn.isEmpty && newSchema.isEmpty)
+          None
+        else Some((adds, touched.map(_.name), key, newSchema,
           txn.map { case (app, tv) => TxnAction(app, tv) }, cdc))
       }
     }
@@ -1711,31 +1587,29 @@ object TxTable {
       if (txn.exists { case (app, tv) => st.txns.get(app).exists(_ >= tv) })
         None   // already applied: idempotent no-op
       else {
-        st.schema.map(DataType.fromJson(_).asInstanceOf[StructType]).foreach {
-          ts =>
-            val missing = ts.fieldNames.filterNot(df.columns.contains)
-            require(missing.isEmpty,
-              s"TxTable append: frame missing table column(s) " +
-                s"${missing.mkString(", ")}")
-            // EXTRA columns are refused too (r18, ADVICE): writeFiles
-            // persists the frame verbatim, so an undeclared column would
-            // land in the parquet bytes invisibly — and if a later merge
-            // legitimately ADDS a column of that name via schema
-            // evolution, by-name reads of the appended files would
-            // surface the stale smuggled values instead of nulls (the
-            // r14 silent-corruption class; Delta rejects extra columns
-            // on append without mergeSchema for the same reason).
-            val extra = df.columns.filterNot(ts.fieldNames.contains)
-            require(extra.isEmpty,
-              s"TxTable append: frame carries undeclared column(s) " +
-                s"${extra.mkString(", ")} — append never evolves the " +
-                "schema; widen through merge first or drop them")
-            ts.fields.filter(f => df.columns.contains(f.name)).foreach { f =>
-              require(df.schema(f.name).dataType == f.dataType,
-                s"TxTable append: column '${f.name}' arrives as " +
-                  s"${df.schema(f.name).dataType} but the table declares " +
-                  s"${f.dataType} — no schema evolution on append")
-            }
+        val ts = st.schema
+        val missing = ts.fieldNames.filterNot(df.columns.contains)
+        require(missing.isEmpty,
+          s"TxTable append: frame missing table column(s) " +
+            s"${missing.mkString(", ")}")
+        // EXTRA columns are refused too (r18, ADVICE): writeFiles
+        // persists the frame verbatim, so an undeclared column would
+        // land in the parquet bytes invisibly — and if a later merge
+        // legitimately ADDS a column of that name via schema
+        // evolution, by-name reads of the appended files would
+        // surface the stale smuggled values instead of nulls (the
+        // r14 silent-corruption class; Delta rejects extra columns
+        // on append without mergeSchema for the same reason).
+        val extra = df.columns.filterNot(ts.fieldNames.contains)
+        require(extra.isEmpty,
+          s"TxTable append: frame carries undeclared column(s) " +
+            s"${extra.mkString(", ")} — append never evolves the " +
+            "schema; widen through merge first or drop them")
+        ts.fields.foreach { f =>
+          require(df.schema(f.name).dataType == f.dataType,
+            s"TxTable append: column '${f.name}' arrives as " +
+              s"${df.schema(f.name).dataType} but the table declares " +
+              s"${f.dataType} — no schema evolution on append")
         }
         enforceInvariants(df, st.invariants, "append")
         val cdc = if (!st.cdcOn) None else
@@ -1771,8 +1645,8 @@ object TxTable {
     occRetry(root, "DELETE", allowRebase = true) { v =>
       val st = replayState(root, None)
       val files = st.live
-      val touchedSet = touchedFileNames(spark, files, ks, key,
-        preDistinct = true)
+      val touchedSet = touchedFiles(spark, files,
+        ks.select(col(key).as("_k"), lit(1L).as("_c")))
       val touched = files.filter(f => touchedSet.contains(f.name))
       if (touched.isEmpty) None     // raced to a no-op: commit nothing
       else {
@@ -1781,8 +1655,7 @@ object TxTable {
         // narrow file and silently erase the widened column from every
         // surviving row the delete never mentioned; DV-aware (r17) so a
         // rewrite-delete after a DV delete materializes both
-        val base0 = readEntries(spark, root, touched,
-          st.schema.map(DataType.fromJson(_).asInstanceOf[StructType]), key,
+        val base0 = readEntries(spark, root, touched, st.schema, key,
           st.colMap)
         // cdc consumes the touched-files read twice: one pass (r18)
         val base = if (st.cdcOn) base0.localCheckpoint() else base0
@@ -1885,7 +1758,7 @@ object TxTable {
     *    rewrite's base read and materialize it away, as in
     *    [[deleteKeys]]).
     *
-    * Missing stats/null counts (pre-r18 files) degrade the file to
+    * Missing stats/null counts degrade the file to
     * PARTIAL — a wasted rewrite, never a wrong drop. On cdc-enabled
     * tables the deleted rows are materialized to the change feed,
     * which makes covered files no longer zero-READ (the documented
@@ -1914,14 +1787,12 @@ object TxTable {
           else Some((Seq.empty, Seq.empty, st.key, None,
             txn.map { case (app, tv) => TxnAction(app, tv) }, None))
         } else {
-          val declared =
-            st.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
           val delCond = preds.map { case (c, lo, hi) =>
             col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _)
           val adds =
             if (partial.isEmpty) Seq.empty
             else {
-              val base = readEntries(spark, root, partial, declared, st.key,
+              val base = readEntries(spark, root, partial, st.schema, st.key,
                 st.colMap)
               // NULL predicate results KEEP the row (SQL DELETE)
               writeFiles(spark, base.filter(!coalesce(delCond, lit(false))),
@@ -1930,11 +1801,11 @@ object TxTable {
           val cdc = if (!st.cdcOn) None else {
             val doomedCovered =
               if (covered.isEmpty) None
-              else Some(readEntries(spark, root, covered, declared, st.key,
+              else Some(readEntries(spark, root, covered, st.schema, st.key,
                 st.colMap))
             val doomedPartial =
               if (partial.isEmpty) None
-              else Some(readEntries(spark, root, partial, declared, st.key,
+              else Some(readEntries(spark, root, partial, st.schema, st.key,
                 st.colMap).filter(coalesce(delCond, lit(false))))
             val doomed = (doomedCovered ++ doomedPartial)
               .reduceOption(_.unionByName(_))
@@ -1989,16 +1860,15 @@ object TxTable {
         None   // already applied: idempotent no-op
       else {
         val files = st.live
-        val touchedSet = touchedFileNames(spark, files, ks, key,
-          preDistinct = true)
+        val touchedSet = touchedFiles(spark, files,
+          ks.select(col(key).as("_k"), lit(1L).as("_c")))
         val touched = files.filter(f => touchedSet.contains(f.name))
         if (touched.isEmpty) {
           if (txn.isEmpty) None // raced to a no-op
           else Some((Seq.empty, Seq.empty, key, None, // empty watermark commit
             txn.map { case (app, tv) => TxnAction(app, tv) }, None))
         } else {
-        val declared = st.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
-        val keyOnly = declared.map(ts => StructType(Seq(ts(key))))
+        val keyOnly = StructType(Seq(st.schema(key)))
         // ONE distributed pass over ALL touched files (r18, the r17
         // verdict's item 2 — the old form looped per file on the
         // driver, 2-4 blocking Spark jobs each; a SCATTERED delete
@@ -2015,10 +1885,8 @@ object TxTable {
           "TxTable deleteKeysDV: touched entries with colliding basenames")
         def tagged(df: DataFrame): DataFrame =
           df.withColumn("_gf", element_at(split(input_file_name(), "/"), -1))
-        def keyScan(paths: Seq[String]): DataFrame = tagged(keyOnly match {
-          case Some(sch) => spark.read.schema(sch).parquet(paths: _*)
-          case None => spark.read.parquet(paths: _*).select(col(key))
-        })
+        def keyScan(paths: Seq[String]): DataFrame =
+          tagged(spark.read.schema(keyOnly).parquet(paths: _*))
         // (file, key) pairs physically present — the scan every count
         // below derives from; column-pruned to the key (`ks`, the
         // materialized delete-key set, is hoisted above occRetry — r18)
@@ -2036,13 +1904,8 @@ object TxTable {
               withDv.map(f => (baseName(f.dv.get), baseName(f.name)))
                 .toDF("_gdv", "_gf")
             }
-            val raw = keyOnly match {
-              case Some(sch) => spark.read.schema(sch).parquet(
-                withDv.map(f => dataDir(root).resolve(f.dv.get).toString): _*)
-              case None => spark.read.parquet(
-                withDv.map(f => dataDir(root).resolve(f.dv.get).toString): _*)
-                .select(col(key))
-            }
+            val raw = spark.read.schema(keyOnly).parquet(
+              withDv.map(f => dataDir(root).resolve(f.dv.get).toString): _*)
             raw.withColumn("_gdv",
                 element_at(split(input_file_name(), "/"), -1))
               .join(broadcast(sidecarToFile), Seq("_gdv"))
@@ -2126,21 +1989,14 @@ object TxTable {
             val changedEntries = changedBase.map(byBase)
             // files store PHYSICAL names (column mapping): scan through
             // the mapped schema, alias back to logical for the feed
-            val fullPhys = tagged(declared match {
-              case Some(ts) =>
-                val physTs = StructType(ts.fields.map(f =>
-                  f.copy(name = st.physOf(f.name))))
-                spark.read.schema(physTs).parquet(changedEntries
-                  .map(f => dataDir(root).resolve(f.name).toString): _*)
-              case None => spark.read.parquet(changedEntries
-                .map(f => dataDir(root).resolve(f.name).toString): _*)
-            })
-            val full = declared match {
-              case Some(ts) if st.colMap.nonEmpty =>
-                fullPhys.select((ts.fields.map(f =>
-                  col(st.physOf(f.name)).as(f.name)) :+ col("_gf")).toSeq: _*)
-              case _ => fullPhys
-            }
+            val fullPhys = tagged(spark.read.schema(StructType(
+                st.schema.fields.map(f => f.copy(name = st.physOf(f.name)))))
+              .parquet(changedEntries
+                .map(f => dataDir(root).resolve(f.name).toString): _*))
+            val full =
+              if (st.colMap.isEmpty) fullPhys
+              else fullPhys.select((st.schema.fields.map(f =>
+                col(st.physOf(f.name)).as(f.name)) :+ col("_gf")).toSeq: _*)
             writeCdcFiles(spark,
               full.join(broadcast(fresh), Seq("_gf", key), "left_semi")
                 .drop("_gf").withColumn("_change_type", lit("delete")),
@@ -2186,10 +2042,9 @@ object TxTable {
   /** (declared schema, cdcOn, key, logical→physical map) at head — the
     * stream-open metadata. */
   private[sources] def feedMeta(root: String)
-      : (Option[StructType], Boolean, String, Map[String, String]) = {
+      : (StructType, Boolean, String, Map[String, String]) = {
     val st = replayState(root, None)
-    (st.schema.map(DataType.fromJson(_).asInstanceOf[StructType]),
-      st.cdcOn, st.key, st.colMap)
+    (st.schema, st.cdcOn, st.key, st.colMap)
   }
 
   /** Absolute path of a logged file name under this table's data dir
@@ -2268,26 +2123,20 @@ object TxTable {
     doomed.map(_.getFileName.toString)
   }
 
-  /** Newest version whose logged commit wall-clock is at or before
-    * `cutoffMs` — the version in force AT the cutoff instant, i.e. the
-    * retention horizon for "keep everything younger than X". Commits
-    * without a timestamp (pre-r18 records) are skipped: they read as
-    * too-new to reclaim, so an old table degrades to keeping
-    * everything rather than guessing an age. No qualifying version →
-    * 1 (retain the whole history). */
   /** Wall-clock millis a version committed at, from its log record
-    * (None for pre-r18 records and cleaned versions) — the audit
-    * surface behind the time-based retention pair below. */
+    * (None for cleaned versions) — the audit surface behind the
+    * time-based retention pair below. */
   def commitTimestamp(root: String, v: Long): Option[Long] =
-    try readJson[Commit](logDir(root).resolve(logName(v))).ts
+    try Some(readJson[Commit](logDir(root).resolve(logName(v))).ts)
     catch { case scala.util.control.NonFatal(_) => None }
 
+  /** Newest version whose logged commit wall-clock is at or before
+    * `cutoffMs` — the version in force AT the cutoff instant, i.e. the
+    * retention horizon for "keep everything younger than X". No
+    * qualifying version → 1 (retain the whole history). */
   def versionAtOrBefore(root: String, cutoffMs: Long): Long =
-    logVersions(root).flatMap { v =>
-      try readJson[Commit](logDir(root).resolve(logName(v)))
-        .ts.filter(_ <= cutoffMs).map(_ => v)
-      catch { case scala.util.control.NonFatal(_) => None }
-    }.lastOption.getOrElse(1L)
+    logVersions(root).filter(v => commitTimestamp(root, v).exists(_ <= cutoffMs))
+      .lastOption.getOrElse(1L)
 
   /** TIME-based [[vacuum]] (r18, the r17 verdict's item 7 — Delta's
     * retention horizon in hours): keep every version committed within
@@ -2355,10 +2204,7 @@ object TxTable {
     while (tries < 20) {
       val v = currentVersion(root) + 1
       val st = replayState(root, None)
-      val ts = st.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(throw new IllegalArgumentException(
-          s"TxTable renameColumn: the table at $root has no declared " +
-            "schema (legacy log) — column mapping needs one"))
+      val ts = st.schema
       require(from != st.key,
         s"TxTable renameColumn: '$from' is the key column — the merge " +
           "identity cannot be renamed")
@@ -2377,9 +2223,10 @@ object TxTable {
       val newStats =
         if (!st.statsCols.contains(from)) None
         else Some(st.statsCols.map(c => if (c == from) to else c))
-      if (tryCommit(root, st.key, v, Seq.empty, Seq.empty, Some(newTs.json),
-          None, Some("RENAME_COLUMN"), Some(false), newStats, None, None,
-          None, Some(newMap), None)) {
+      if (tryCommit(root, Commit(v, st.key, Seq.empty, Seq.empty,
+          "RENAME_COLUMN", System.currentTimeMillis(), Some(newTs.json),
+          dataChange = Some(false), statsCols = newStats,
+          colMap = Some(newMap)))) {
         maybeCheckpoint(root, v, st.key)
         return v
       }
@@ -2406,10 +2253,7 @@ object TxTable {
     while (tries < 20) {
       val v = currentVersion(root) + 1
       val st = replayState(root, None)
-      val ts = st.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(throw new IllegalArgumentException(
-          s"TxTable dropColumn: the table at $root has no declared " +
-            "schema (legacy log) — column mapping needs one"))
+      val ts = st.schema
       require(name != st.key,
         s"TxTable dropColumn: '$name' is the key column")
       require(ts.fieldNames.contains(name),
@@ -2421,10 +2265,11 @@ object TxTable {
       val newStats =
         if (!st.statsCols.contains(name)) None
         else Some(st.statsCols.filterNot(_ == name))
-      if (tryCommit(root, st.key, v, Seq.empty, Seq.empty, Some(newTs.json),
-          None, Some("DROP_COLUMN"), Some(false), newStats, None, None,
-          None, Some(st.colMap - name),
-          Some(st.retired :+ st.physOf(name)))) {
+      if (tryCommit(root, Commit(v, st.key, Seq.empty, Seq.empty,
+          "DROP_COLUMN", System.currentTimeMillis(), Some(newTs.json),
+          dataChange = Some(false), statsCols = newStats,
+          colMap = Some(st.colMap - name),
+          retired = Some(st.retired :+ st.physOf(name))))) {
         maybeCheckpoint(root, v, st.key)
         return v
       }
@@ -2446,14 +2291,7 @@ object TxTable {
     * time-travel read past vacuumed files fails loudly, same contract
     * as read). Restoring to the current state is a no-op. The target
     * version's SCHEMA is re-committed when it differs, so a
-    * post-widening restore also narrows the declared schema back —
-    * including to a pre-r14 legacy version that never recorded one:
-    * since r16 the restore commits an EXPLICIT clearSchema action
-    * (None in the commit field means "unchanged", so the clear was
-    * previously inexpressible and the head's schema silently
-    * survived — the r14 ADVICE #4 exception, now closed), and the
-    * restored table reads schema-less (inferred) exactly as the
-    * target version did.
+    * post-widening restore also narrows the declared schema back.
     *
     * Restore VALIDATES that every target file still physically exists
     * (r15): after `vacuum` has reclaimed the target's bytes, a restore
@@ -2495,13 +2333,8 @@ object TxTable {
         .filterNot(f => targetByName.get(f.name).contains(f)).map(_.name)
       if (adds.isEmpty && removes.isEmpty) None
       else Some((adds, removes, key,
-        if (target.schema != head.schema)
-          // a schema-less target under a schema-bearing head commits an
-          // EXPLICIT clear (r16 — the marker closes the r14 legacy-log
-          // exception where None meant "unchanged" and the clear was
-          // inexpressible)
-          target.schema.orElse(Some(ClearSchemaMarker))
-        else None, None, None))
+        if (target.schema != head.schema) Some(target.schema.json) else None,
+        None, None))
     }
 
   /** Compaction as a commit: rewrite the current live set into
@@ -2511,13 +2344,24 @@ object TxTable {
     * DE-REFERENCED, never deleted (vacuum is a separate policy). */
   def compact(spark: SparkSession, root: String, key: String,
               numFiles: Int = 4): Long =
-    occRetry(root, "COMPACT", dataChange = false) { v =>
-    val st = replayState(root, None)
-    val df = read(spark, root).repartition(numFiles)
-    Some((writeFiles(spark, df, root, key, f"$v%010d-compact", st.statsCols,
-      st.colMap),
-      st.live.map(_.name), key, None, None, None))
-  }
+    rewriteAll(spark, root, key, "COMPACT", "compact")(_.repartition(numFiles))
+
+  /** The one body of the whole-table rewrites ([[compact]],
+    * [[compactClustered]], [[compactZOrdered]]): read the attempt's
+    * replayed live set, lay it out with `layout`, write it under `tag`
+    * and commit it as `op` in place of every live file, dataChange =
+    * false so the change feed skips it. */
+  private def rewriteAll(spark: SparkSession, root: String, key: String,
+                         op: String, tag: String)(
+      layout: DataFrame => DataFrame): Long =
+    occRetry(root, op, dataChange = false) { v =>
+      val st = replayState(root, None)
+      require(st.live.nonEmpty, s"TxTable at $root has no live files")
+      val df = layout(readEntries(spark, root, st.live, st.schema, st.key,
+        st.colMap))
+      Some((writeFiles(spark, df, root, key, f"$v%010d-$tag", st.statsCols,
+        st.colMap), st.live.map(_.name), key, None, None, None))
+    }
 
   /** CLUSTERED compaction — the pruning-preserving variant (Delta's
     * OPTIMIZE ZORDER, one dimension): plain [[compact]]'s round-robin
@@ -2533,15 +2377,8 @@ object TxTable {
     * [[compact]]: rows identical, old files de-referenced. */
   def compactClustered(spark: SparkSession, root: String, key: String,
                        numFiles: Int = 4): Long =
-    occRetry(root, "CLUSTER", dataChange = false) { v =>
-    val st = replayState(root, None)
-    val df = read(spark, root)
-      .repartitionByRange(numFiles, org.apache.spark.sql.functions.col(key))
-      .sortWithinPartitions(key)
-    Some((writeFiles(spark, df, root, key, f"$v%010d-cluster", st.statsCols,
-      st.colMap),
-      st.live.map(_.name), key, None, None, None))
-  }
+    rewriteAll(spark, root, key, "CLUSTER", "cluster")(
+      _.repartitionByRange(numFiles, col(key)).sortWithinPartitions(key))
 
   /** INCREMENTAL bin-packing compaction (r17 — Delta OPTIMIZE's real
     * form): [[compact]]/[[compactClustered]] rewrite the WHOLE live
@@ -2578,10 +2415,9 @@ object TxTable {
       val packable = bins.filter(_.size >= 2).toSeq
       if (packable.isEmpty) None
       else {
-        val declared = st.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
         val adds = packable.zipWithIndex.flatMap { case (b, i) =>
           writeFiles(spark,
-            readEntries(spark, root, b, declared, key, st.colMap).coalesce(1),
+            readEntries(spark, root, b, st.schema, key, st.colMap).coalesce(1),
             root, key, f"$v%010d-optimize$i", st.statsCols, st.colMap)
         }
         Some((adds, packable.flatten.map(_.name), key, None, None, None))
@@ -2640,18 +2476,12 @@ object TxTable {
     * The z column is computed, used for layout, and NEVER stored. */
   def compactZOrdered(spark: SparkSession, root: String, key: String,
                       zCol: String, numFiles: Int = 4, bits: Int = 6): Long =
-    occRetry(root, "ZORDER", dataChange = false) { v =>
-    val st = replayState(root, None)
-    val df = read(spark, root)
-    val z = Sources.zOrderCol(df, key, zCol, bits)
-    val laid = df.withColumn("_graft_z", z)
-      .repartitionByRange(numFiles, org.apache.spark.sql.functions.col("_graft_z"))
-      .sortWithinPartitions("_graft_z")
-      .drop("_graft_z")
-    Some((writeFiles(spark, laid, root, key, f"$v%010d-zorder", st.statsCols,
-      st.colMap),
-      st.live.map(_.name), key, None, None, None))
-  }
+    rewriteAll(spark, root, key, "ZORDER", "zorder") { df =>
+      df.withColumn("_graft_z", Sources.zOrderCol(df, key, zCol, bits))
+        .repartitionByRange(numFiles, col("_graft_z"))
+        .sortWithinPartitions("_graft_z")
+        .drop("_graft_z")
+    }
 
   /** DESCRIBE HISTORY — the commit log surfaced as a DataFrame, one row
     * per version: operation kind, files added/removed, exact rows
@@ -2661,14 +2491,14 @@ object TxTable {
     * only), and the idempotence stamp if any. This is the audit
     * surface c66's erasure receipt and q79's restore story point at:
     * "what happened to this table and when" answered from the log
-    * alone. Pre-r15 records carry no op kind → 'UNKNOWN'. */
+    * alone. */
   def history(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     logVersions(root).map { v =>
       val c = readJson[Commit](logDir(root).resolve(logName(v)))
-      (c.version, c.op.getOrElse("UNKNOWN"),
+      (c.version, c.op,
         c.adds.size, c.removes.size, c.adds.map(_.rows).sum,
-        c.schema.isDefined || c.clearSchema.contains(true),
+        c.schema.isDefined,
         c.dataChange.getOrElse(true),
         c.txn.map(_.appId), c.txn.map(_.version))
     }.toDF("version", "op", "n_added_files", "n_removed_files",
@@ -2700,31 +2530,12 @@ object TxTable {
     * covers the whole range. Requires the range's data files to still
     * exist — a feed past vacuumed files fails loudly, same contract as
     * time travel. */
-  /** CHANGE-FEED TAIL (r17, the r16 verdict's item 3) — the
-    * streaming-source read of [[changes]]: everything committed past
-    * `fromVersion`, plus the version the read advanced to; None when
-    * the log has nothing new (a poll, not a busy read — answered from
-    * log FILENAMES alone). A subscriber loop persists the returned
-    * version as its watermark — durably, by stamping it into its OWN
-    * sink table's txn action (the st37 posture), so recovery needs no
-    * side checkpoint: `lastTxn(sink, appId)` IS the resume point, and
-    * a replayed window no-ops on the sink's idempotence guard. The
-    * window is a consistent log range: commits racing the poll land
-    * past `head` and belong to the next window. */
-  def changesSince(spark: SparkSession, root: String, fromVersion: Long)
-      : Option[(Long, DataFrame)] = {
-    val head = currentVersion(root)
-    if (head <= fromVersion) None
-    else Some((head, changes(spark, root, fromVersion, head)))
-  }
-
   def changes(spark: SparkSession, root: String,
               fromVersion: Long, toVersion: Long): DataFrame = {
     require(toVersion > fromVersion,
       s"TxTable changes: need fromVersion < toVersion, got $fromVersion, $toVersion")
     val stTo = replayState(root, Some(toVersion))
     val outSchema = stTo.schema
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
     // one incremental walk: the live map at fromVersion, advanced per
     // commit, resolves remove NAMES to the file ENTRIES they replace —
     // entries, not names, so each side reads with ITS OWN deletion
@@ -2757,21 +2568,18 @@ object TxTable {
       cdc match {
         case Some(names) =>
           val paths = names.map(n => dataDir(root).resolve(n).toString)
-          val df = outSchema match {
-            case Some(ts) =>
-              // change files store PHYSICAL names (column mapping):
-              // scan mapped, alias back to the toVersion logical names
-              val physFields = ts.fields.map(f =>
-                f.copy(name = stTo.physOf(f.name)))
-              val raw = spark.read.schema(StructType(physFields :+
-                  org.apache.spark.sql.types.StructField("_change_type",
-                    org.apache.spark.sql.types.StringType))).parquet(paths: _*)
-              if (stTo.colMap.isEmpty) raw
-              else raw.select((ts.fields.map(f =>
-                col(stTo.physOf(f.name)).as(f.name)) :+
-                col("_change_type")).toSeq: _*)
-            case None => spark.read.parquet(paths: _*)
-          }
+          // change files store PHYSICAL names (column mapping): scan
+          // mapped, alias back to the toVersion logical names
+          val physFields = outSchema.fields.map(f =>
+            f.copy(name = stTo.physOf(f.name)))
+          val raw = spark.read.schema(StructType(physFields :+
+              org.apache.spark.sql.types.StructField("_change_type",
+                org.apache.spark.sql.types.StringType))).parquet(paths: _*)
+          val df =
+            if (stTo.colMap.isEmpty) raw
+            else raw.select((outSchema.fields.map(f =>
+              col(stTo.physOf(f.name)).as(f.name)) :+
+              col("_change_type")).toSeq: _*)
           Seq(df.withColumn("_commit_version", lit(v)))
         case None => (pre.nonEmpty, post.nonEmpty) match {
         case (false, false) => Seq.empty
@@ -2801,8 +2609,7 @@ object TxTable {
       }
     }
     frames.reduceOption(_.unionByName(_)).getOrElse {
-      val base = outSchema.getOrElse(StructType(Nil))
-      val full = StructType(base.fields ++ Seq(
+      val full = StructType(outSchema.fields ++ Seq(
         org.apache.spark.sql.types.StructField("_change_type",
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("_commit_version",

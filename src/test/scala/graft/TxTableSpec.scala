@@ -480,7 +480,7 @@ class TxTableSpec extends AnyFunSuite with SharedSpark {
     // untouched narrow files upcast on read
     val wide = Seq((5L, 1234567890123L, "widened")).toDF("k", "n", "v")
     TxTable.merge(spark, root, wide, "k")
-    val sch = TxTable.schemaOf(root).get
+    val sch = TxTable.schemaOf(root)
     assert(sch("n").dataType === org.apache.spark.sql.types.LongType)
     val out = TxTable.read(spark, root).collect()
       .map(r => (r.getAs[Long]("k"), r.getAs[Long]("n"))).toMap
@@ -576,7 +576,8 @@ class TxTableSpec extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     val (root, _) = mkTable("txt-occ")
     // another committer wins version 2 first (valid empty commit)
-    val rec = """{"version":2,"key":"k","adds":[],"removes":[]}"""
+    val rec =
+      """{"version":2,"key":"k","adds":[],"removes":[],"op":"MERGE","ts":0}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get(root, "_graft_log", "v0000000002.json"),
       rec.getBytes("UTF-8"),
@@ -674,68 +675,83 @@ class TxTableSpec extends AnyFunSuite with SharedSpark {
     assert(prunedNone.isEmpty && keptAll.size === TxTable.snapshot(root).size)
   }
 
-  // ---- r16: restore's explicit schema clear --------------------------
+  // ---- log protocol and crash-safe publication -----------------------
 
-  test("restore to a schema-less legacy version commits an explicit clear") {
+  test("protocol: a log whose v1 lacks the protocol is refused by read, snapshot and merge") {
     import spark.implicits._
-    val (root, _) = mkTable("txt-clear")
-    // widen at v2 so the head carries a declared 3-column schema
-    TxTable.merge(spark, root,
-      Seq((0L, "w0", 7)).toDF("k", "v", "extra"), "k")
-    assert(TxTable.schemaOf(root).exists(_.fieldNames.contains("extra")))
-    // simulate a pre-r14 legacy target: strip v1's schema field
+    val (root, _) = mkTable("txt-proto")
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     val p = java.nio.file.Paths.get(root, "_graft_log", "v0000000001.json")
     val j = JsonMethods.parse(new String(java.nio.file.Files.readAllBytes(p),
       java.nio.charset.StandardCharsets.UTF_8))
-    val stripped = j.removeField { case (n, _) => n == "schema" }
-    java.nio.file.Files.write(p,
-      JsonMethods.compact(JsonMethods.render(stripped))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // restore to the (now schema-less) v1: the head's widened schema
-    // must NOT silently survive — the restore commits an explicit clear
-    val v3 = TxTable.restore(root, "k", 1L)
-    assert(TxTable.schemaOf(root).isEmpty,
-      "restore to a schema-less target must clear the declared schema")
-    assert(TxTable.read(spark, root).columns.toSeq === Seq("k", "v"))
-    // the clear is an audited schema change; the widened version is
-    // still travelable with its schema intact
-    val h = TxTable.history(spark, root).collect()
-      .map(r => r.getLong(0) -> r.getBoolean(5)).toMap
-    assert(h(v3) === true, "clearSchema must report as schema_changed")
-    assert(TxTable.schemaOf(root, Some(2L)).exists(_.fieldNames.contains("extra")))
-  }
-
-  test("OCC rebase: a racing clearSchema RESTORE forces a re-derive (r17 ADVICE)") {
-    import spark.implicits._
-    val (root, _) = mkTable("txt-clear-race")
-    // widen at v2 so the head carries a schema, then make v1 legacy
-    TxTable.merge(spark, root, Seq((0L, "w0", 7)).toDF("k", "v", "extra"), "k")
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val p = java.nio.file.Paths.get(root, "_graft_log", "v0000000001.json")
-    val j = JsonMethods.parse(new String(java.nio.file.Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8))
+    assert((j \ "protocol") === JInt(1))
     java.nio.file.Files.write(p,
       JsonMethods.compact(JsonMethods.render(
-        j.removeField { case (n, _) => n == "schema" }))
+        j.removeField { case (n, _) => n == "protocol" }))
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // loser: a delete whose files/ranges are provably disjoint from the
-    // racing restore's diff — WITHOUT the clearSchema check it would
-    // take the rebase fast path across an explicit schema clear,
-    // violating the "racer changes no schema" rebase precondition
-    val a0 = TxTable.attemptInvocations.get()
-    val r0 = TxTable.rebasedCommits.get()
-    TxTable.testRaceInjector.set(new Runnable {
-      def run(): Unit = TxTable.restore(root, "k", 1L) // commits clearSchema
-    })
-    TxTable.deleteKeys(spark, root, (900L until 930L).toDF("k"), "k")
-    assert(TxTable.attemptInvocations.get() - a0 === 3L,
-      "a schema-CLEARING racer must force a re-derive, exactly like a widening one")
-    assert(TxTable.rebasedCommits.get() - r0 === 0L)
-    assert(TxTable.schemaOf(root).isEmpty)
-    assert(TxTable.read(spark, root).count() === 970)
+    val refusals = Seq(
+      intercept[IllegalArgumentException](TxTable.read(spark, root)),
+      intercept[IllegalArgumentException](TxTable.snapshot(root)),
+      intercept[IllegalArgumentException](
+        TxTable.merge(spark, root, Seq((1L, "x")).toDF("k", "v"), "k")))
+    refusals.foreach(e => assert(e.getMessage.contains(root) &&
+      e.getMessage.contains("protocol none"), e.getMessage))
+    assert(TxTable.currentVersion(root) === 1L, "a refused merge commits nothing")
+    // a merge into a root with no log creates none (create writes v1)
+    val missing = tempDir("txt-proto-missing").toString + "/tbl"
+    val e = intercept[IllegalArgumentException](
+      TxTable.merge(spark, missing, Seq((1L, "x")).toDF("k", "v"), "k"))
+    assert(e.getMessage.contains(missing) && e.getMessage.contains("create it first"))
+    assert(TxTable.currentVersion(missing) === 0L)
+  }
+
+  test("torn records: a crashed writer's temp file keeps the table at v(N-1); the next commit lands at vN") {
+    import spark.implicits._
+    val (root, base) = mkTable("txt-torn")
+    TxTable.merge(spark, root, Seq((0L, "m0")).toDF("k", "v"), "k")    // v2
+    val log = java.nio.file.Paths.get(root, "_graft_log")
+    // what a writer that dies between its temp write and the publishing
+    // link leaves behind: part of its v3 record under a temp name
+    val rec = java.nio.file.Files.readAllBytes(log.resolve("v0000000002.json"))
+    java.nio.file.Files.write(log.resolve(".tmp-crashed.part"),
+      rec.take(rec.length / 2))
+    assert(TxTable.currentVersion(root) === 2L)
+    assert(rows(TxTable.read(spark, root)) ===
+      rows(base).filterNot(_._1 == 0L) + ((0L, "m0")))
+    assert(TxTable.merge(spark, root, Seq((1L, "m1")).toDF("k", "v"), "k") === 3L)
+    assert(rows(TxTable.read(spark, root)).contains((1L, "m1")))
+    import scala.jdk.CollectionConverters._
+    val l = java.nio.file.Files.list(log)
+    val names = try l.iterator().asScala.map(_.getFileName.toString).toSet
+      finally l.close()
+    assert(names.filter(_.matches("v\\d{10}\\.json")) ===
+      Set("v0000000001.json", "v0000000002.json", "v0000000003.json"))
+    assert(names.filter(_.endsWith(".part")) === Set(".tmp-crashed.part"),
+      "a published commit leaves no temp file behind")
+  }
+
+  test("torn records: a reader replaying through 200 concurrent metadata-only commits never throws") {
+    import spark.implicits._
+    val root = tempDir("txt-torn-race").toString + "/tbl"
+    TxTable.create(spark, Seq((1L, "x", 2L)).toDF("k", "a", "c"), root, "k")
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
+    val reads = new java.util.concurrent.atomic.AtomicLong
+    val reader = new Thread(() =>
+      while (!stop.get()) {
+        try { TxTable.snapshot(root); reads.incrementAndGet() }
+        catch { case t: Throwable => failure.compareAndSet(null, t) }
+      })
+    reader.start()
+    try (1 to 200).foreach { i =>
+      if (i % 2 == 1) TxTable.renameColumn(root, "a", "b")
+      else TxTable.renameColumn(root, "b", "a")
+    } finally { stop.set(true); reader.join() }
+    assert(failure.get() === null, s"a concurrent replay threw: ${failure.get()}")
+    assert(reads.get() > 0)
+    assert(TxTable.currentVersion(root) === 201L)
+    assert(TxTable.schemaOf(root).fieldNames.toSeq === Seq("k", "a", "c"))
   }
 
   // ---- r16: conditional MERGE clauses --------------------------------
@@ -1262,16 +1278,33 @@ class TxTableSpec extends AnyFunSuite with SharedSpark {
       TxTable.deleteKeysDV(spark, root, Seq(30L, 31L).toDF("k"), "k")
       root
     }
+    // a widening merge: an added column plus int→long, with a real
+    // update, a no-op update (equal once widened) and an insert
+    def buildWide(prefix: String, cdc: Boolean): String = {
+      val root = tempDir(prefix).toString + "/tbl"
+      TxTable.create(spark, (0L until 200L).map(k => (k, s"v$k", k.toInt))
+        .toDF("k", "v", "n").repartitionByRange(2, col("k")), root, "k",
+        cdc = cdc)
+      TxTable.merge(spark, root, Seq[(Long, String, Long, String)](
+          (5L, "upd", 5L, "x"), (6L, "v6", 6L, null), (500L, "ins", 1L, "y"))
+        .toDF("k", "v", "n", "extra"), "k")
+      root
+    }
     val plain = build("txt-cdc-plain", cdc = false)
     val withCdc = build("txt-cdc-on", cdc = true)
-    def feed(root: String): Set[(Long, String, Long, String, Long)] =
+    def feed(root: String): Set[Seq[Any]] =
       TxTable.changes(spark, root, 1L, TxTable.currentVersion(root))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getAs[String]("_change_type"), r.getAs[Long]("_commit_version")))
-        .toSet
+        .collect().map(_.toSeq).toSet
     val expected = feed(plain)
     assert(feed(withCdc) === expected,
       "materialized change files must equal the diff replay exactly")
+    val wide = feed(buildWide("txt-cdc-wide-on", cdc = true))
+    assert(wide === feed(buildWide("txt-cdc-wide-plain", cdc = false)),
+      "a widening merge's change files must equal the diff replay exactly")
+    assert(wide === Set[Seq[Any]](
+      Seq(5L, "v5", 5L, null, "update_preimage", 2L),
+      Seq(5L, "upd", 5L, "x", "update_postimage", 2L),
+      Seq(500L, "ins", 1L, "y", "insert", 2L)))
     // the materialized feed needs NO data files: physically delete
     // every non-cdc file and ask again
     import scala.jdk.CollectionConverters._
