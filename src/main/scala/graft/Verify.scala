@@ -22,6 +22,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
       val t0 = System.nanoTime()
       val outcome =
         try { fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); "ok" }
@@ -29,9 +30,12 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           e.getClass.getName
         }
-      // one line per key, so a red key names itself: wall seconds, then
-      // "ok" or the class of what it threw
-      System.err.println(f"[verify-key] $name ${(System.nanoTime() - t0) / 1e9}%.3f $outcome")
+      // one line per key, so a red key names itself: wall seconds, "ok"
+      // or the class of what it threw, then the persistent RDDs the key
+      // left behind (staged blocks it never released)
+      val secs = (System.nanoTime() - t0) / 1e9
+      val left = (spark.sparkContext.getPersistentRDDs.keySet -- persisted).size
+      System.err.println(f"[verify-key] $name $secs%.3f $outcome $left")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -350,7 +350,9 @@ object TxTable {
     * ever parses a partial record. A writer that crashes before the
     * link leaves only the temp file: the version stays free for the
     * next committer. The directory is synced after the link so the new
-    * name is durable. False when `dest` already existed. */
+    * name is durable. False when `dest` already existed, or when
+    * [[cleanupLog]] reclaimed the temp file before the link (it does so
+    * only once a version at or above this one exists). */
   private def publish(dest: Path, bytes: Array[Byte]): Boolean = {
     import java.nio.channels.FileChannel
     import java.nio.file.StandardOpenOption.{READ, WRITE}
@@ -364,7 +366,10 @@ object TxTable {
         ch.force(true)
       } finally ch.close()
       try Files.createLink(dest, tmp)
-      catch { case _: java.nio.file.FileAlreadyExistsException => return false }
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException |
+             _: java.nio.file.NoSuchFileException => return false
+      }
       val d = FileChannel.open(dir, READ)
       try d.force(true) finally d.close()
       true
@@ -388,11 +393,15 @@ object TxTable {
         if (st.retired.isEmpty) None else Some(st.retired),
         Some(Protocol)))
       val d = logDir(root)
-      publish(d.resolve(ckptName(v)), rec.getBytes(StandardCharsets.UTF_8))
-      val tmp = Files.createTempFile(d, "_last_checkpoint", ".tmp")
-      Files.write(tmp, v.toString.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, d.resolve("_last_checkpoint"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      val ckpt = d.resolve(ckptName(v))
+      // the pointer moves only to a checkpoint that exists: publish is
+      // also false when cleanupLog reclaimed a late temp file
+      if (publish(ckpt, rec.getBytes(StandardCharsets.UTF_8)) || Files.exists(ckpt)) {
+        val tmp = Files.createTempFile(d, "_last_checkpoint", ".tmp")
+        Files.write(tmp, v.toString.getBytes(StandardCharsets.UTF_8))
+        Files.move(tmp, d.resolve("_last_checkpoint"),
+          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      }
     } catch { case scala.util.control.NonFatal(_) => () }
   }
 
@@ -731,23 +740,25 @@ object TxTable {
     // read the checkpointed blocks (the blocks are ∝ changed rows,
     // never data)
     val mat = physDf.localCheckpoint()
-    if (mat.isEmpty) return None
-    val tmp = Files.createTempDirectory(Paths.get(root), "stage-cdc-")
     try {
-      mat.write.mode("overwrite").parquet(tmp.toString)
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
-      val moved = listDir(tmp)
-        .filter(_.getFileName.toString.startsWith("part-"))
-        .sortBy(_.getFileName.toString).zipWithIndex.map { case (p, i) =>
-          val dest = dataDir(root).resolve(f"cdc-$v%010d-$nonce-$i.parquet")
-          Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-          dest.getFileName.toString
-        }
-      if (moved.isEmpty) None else Some(moved)
-    } finally {
-      listDir(tmp).foreach(Files.deleteIfExists(_))
-      Files.deleteIfExists(tmp)
-    }
+      if (mat.isEmpty) return None
+      val tmp = Files.createTempDirectory(Paths.get(root), "stage-cdc-")
+      try {
+        mat.write.mode("overwrite").parquet(tmp.toString)
+        val nonce = java.util.UUID.randomUUID().toString.take(8)
+        val moved = listDir(tmp)
+          .filter(_.getFileName.toString.startsWith("part-"))
+          .sortBy(_.getFileName.toString).zipWithIndex.map { case (p, i) =>
+            val dest = dataDir(root).resolve(f"cdc-$v%010d-$nonce-$i.parquet")
+            Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
+            dest.getFileName.toString
+          }
+        if (moved.isEmpty) None else Some(moved)
+      } finally {
+        listDir(tmp).foreach(Files.deleteIfExists(_))
+        Files.deleteIfExists(tmp)
+      }
+    } finally release(mat)
   }
 
   /** Atomic create-if-absent commit AT a specific version; false when
@@ -1275,6 +1286,16 @@ object TxTable {
       case _ => df.localCheckpoint()
     }
 
+  /** Drops the blocks of a frame staged with `localCheckpoint` by the
+    * same operation, once nothing reads them again: a session that runs
+    * many commits would otherwise keep every commit's staging. */
+  private def release(staged: DataFrame): Unit =
+    staged.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false); ()
+      case _ =>
+    }
+
   /** Storage-level MERGE (upsert by `key`): [[mergeConditional]]'s
     * default clauses (update on match, insert when unmatched, keep
     * target-only rows) plus schema evolution. Only files whose key
@@ -1462,7 +1483,7 @@ object TxTable {
     // the checkpointed blocks (∝ the batch, never the table), and an
     // OCC re-derivation re-reads blocks instead of re-running the plan.
     val updates = materializedOnce(updates0)
-    occRetry(root, "MERGE", allowRebase = true) { v =>
+    try occRetry(root, "MERGE", allowRebase = true) { v =>
       val st = replayState(root, None)
       if (txn.exists { case (app, tv) => st.txns.get(app).exists(_ >= tv) })
         None   // already applied: idempotent no-op (the occRetry sentinel)
@@ -1492,72 +1513,74 @@ object TxTable {
         // (r18 optimization round); without cdc the join runs once
         // anyway — no checkpoint, no extra pass
         val j = if (st.cdcOn) j0.localCheckpoint() else j0
-        val srcAcc: String => org.apache.spark.sql.Column =
-          c => if (c == key) col("_mk") else col(s"_s_$c")
-        val tgtAcc: String => org.apache.spark.sql.Column =
-          c => if (c == key) col("_mk") else col(s"_t_$c")
-        val matched = col("_tp").isNotNull && col("_sp").isNotNull
-        val tgtOnly = col("_tp").isNotNull && col("_sp").isNull
-        val srcOnly = col("_tp").isNull && col("_sp").isNotNull
-        val delC = coalesce(
-          matchedDelete.map(_(srcAcc, tgtAcc)).getOrElse(lit(false)), lit(false))
-        val updC = coalesce(
-          matchedUpdate.map(_(srcAcc, tgtAcc)).getOrElse(lit(true)), lit(false))
-        val insC = coalesce(
-          notMatchedInsert.map(_(srcAcc, tgtAcc)).getOrElse(lit(true)), lit(false))
-        val keep = tgtOnly || (matched && !delC) || (srcOnly && insC)
-        val matchedUpd = matched && !delC && updC
-        // a matched-and-updated row's value per column: the SET
-        // expression when one is declared for the column, the TARGET's
-        // value for unnamed columns under a SET map (partial update),
-        // and the source's value in replace mode (no SET map)
-        val updAcc: String => org.apache.spark.sql.Column = c =>
-          matchedUpdateSet match {
-            case Some(m) => m.get(c)
-              .map(f => f(srcAcc, tgtAcc).cast(ts(c).dataType))
-              .getOrElse(tgtAcc(c))
-            case None => srcAcc(c)
-          }
-        val merged = j.filter(keep).select(tblCols.map { c =>
-          if (c == key) col("_mk").as(key)
-          else when(matchedUpd, updAcc(c))
-            .when(srcOnly, srcAcc(c))
-            .otherwise(tgtAcc(c)).as(c)
-        }: _*)
-        enforceInvariants(merged, st.invariants, name)
-        val cdc = if (!st.cdcOn) None else {
-          // change rows straight from the clause join: the same
-          // outcomes the rewrite materializes, emitted as the feed —
-          // deletes carry the target row, updates pre+post (no-op
-          // updates where the source equals the target stay silent),
-          // clause-admitted source-only keys insert
-          def side(acc: String => org.apache.spark.sql.Column) =
-            struct(tblCols.map(c =>
-              (if (c == key) col("_mk") else acc(c)).as(c)): _*)
-          def rows(cond: org.apache.spark.sql.Column,
-                   acc: String => org.apache.spark.sql.Column,
-                   tpe: String) =
-            j.filter(cond).select(tblCols.map(c =>
+        try {
+          val srcAcc: String => org.apache.spark.sql.Column =
+            c => if (c == key) col("_mk") else col(s"_s_$c")
+          val tgtAcc: String => org.apache.spark.sql.Column =
+            c => if (c == key) col("_mk") else col(s"_t_$c")
+          val matched = col("_tp").isNotNull && col("_sp").isNotNull
+          val tgtOnly = col("_tp").isNotNull && col("_sp").isNull
+          val srcOnly = col("_tp").isNull && col("_sp").isNotNull
+          val delC = coalesce(
+            matchedDelete.map(_(srcAcc, tgtAcc)).getOrElse(lit(false)), lit(false))
+          val updC = coalesce(
+            matchedUpdate.map(_(srcAcc, tgtAcc)).getOrElse(lit(true)), lit(false))
+          val insC = coalesce(
+            notMatchedInsert.map(_(srcAcc, tgtAcc)).getOrElse(lit(true)), lit(false))
+          val keep = tgtOnly || (matched && !delC) || (srcOnly && insC)
+          val matchedUpd = matched && !delC && updC
+          // a matched-and-updated row's value per column: the SET
+          // expression when one is declared for the column, the TARGET's
+          // value for unnamed columns under a SET map (partial update),
+          // and the source's value in replace mode (no SET map)
+          val updAcc: String => org.apache.spark.sql.Column = c =>
+            matchedUpdateSet match {
+              case Some(m) => m.get(c)
+                .map(f => f(srcAcc, tgtAcc).cast(ts(c).dataType))
+                .getOrElse(tgtAcc(c))
+              case None => srcAcc(c)
+            }
+          val merged = j.filter(keep).select(tblCols.map { c =>
+            if (c == key) col("_mk").as(key)
+            else when(matchedUpd, updAcc(c))
+              .when(srcOnly, srcAcc(c))
+              .otherwise(tgtAcc(c)).as(c)
+          }: _*)
+          enforceInvariants(merged, st.invariants, name)
+          val cdc = if (!st.cdcOn) None else {
+            // change rows straight from the clause join: the same
+            // outcomes the rewrite materializes, emitted as the feed —
+            // deletes carry the target row, updates pre+post (no-op
+            // updates where the source equals the target stay silent),
+            // clause-admitted source-only keys insert
+            def side(acc: String => org.apache.spark.sql.Column) =
+              struct(tblCols.map(c =>
                 (if (c == key) col("_mk") else acc(c)).as(c)): _*)
-              .withColumn("_change_type", lit(tpe))
-          // the post side is the SET result when a SET map is declared
-          // (the feed must carry what the rewrite WRITES, not the raw
-          // source); no-op detection compares the same value
-          val updDiff = matchedUpd && !(side(updAcc) <=> side(tgtAcc))
-          val cdcDf = rows(matched && delC, tgtAcc, "delete")
-            .unionByName(rows(updDiff, tgtAcc, "update_preimage"))
-            .unionByName(rows(updDiff, updAcc, "update_postimage"))
-            .unionByName(rows(srcOnly && insC, srcAcc, "insert"))
-          writeCdcFiles(spark, cdcDf, root, v, st.colMap)
-        }
-        val adds = writeFiles(spark, merged, root, key,
-          f"$v%010d-merge", st.statsCols, st.colMap)
-        if (adds.isEmpty && touched.isEmpty && txn.isEmpty && newSchema.isEmpty)
-          None
-        else Some((adds, touched.map(_.name), key, newSchema,
-          txn.map { case (app, tv) => TxnAction(app, tv) }, cdc))
+            def rows(cond: org.apache.spark.sql.Column,
+                     acc: String => org.apache.spark.sql.Column,
+                     tpe: String) =
+              j.filter(cond).select(tblCols.map(c =>
+                  (if (c == key) col("_mk") else acc(c)).as(c)): _*)
+                .withColumn("_change_type", lit(tpe))
+            // the post side is the SET result when a SET map is declared
+            // (the feed must carry what the rewrite WRITES, not the raw
+            // source); no-op detection compares the same value
+            val updDiff = matchedUpd && !(side(updAcc) <=> side(tgtAcc))
+            val cdcDf = rows(matched && delC, tgtAcc, "delete")
+              .unionByName(rows(updDiff, tgtAcc, "update_preimage"))
+              .unionByName(rows(updDiff, updAcc, "update_postimage"))
+              .unionByName(rows(srcOnly && insC, srcAcc, "insert"))
+            writeCdcFiles(spark, cdcDf, root, v, st.colMap)
+          }
+          val adds = writeFiles(spark, merged, root, key,
+            f"$v%010d-merge", st.statsCols, st.colMap)
+          if (adds.isEmpty && touched.isEmpty && txn.isEmpty && newSchema.isEmpty)
+            None
+          else Some((adds, touched.map(_.name), key, newSchema,
+            txn.map { case (app, tv) => TxnAction(app, tv) }, cdc))
+        } finally if (j ne j0) release(j)
       }
-    }
+    } finally if (updates ne updates0) release(updates)
   }
 
   /** Blind APPEND (r17 — Delta's append mode): write `df` as new data
@@ -2438,15 +2461,33 @@ object TxTable {
     * refuses a truncated-history replay rather than returning a
     * silently partial state); head reads, history() and the change
     * feed over the retained suffix are untouched. Returns deleted
-    * file names. No-ops (returns empty) until a checkpoint ≤ horizon
-    * exists — cleanup never sacrifices replayability. */
+    * file names. Deletes no record or checkpoint until a checkpoint
+    * ≤ horizon exists — cleanup never sacrifices replayability.
+    *
+    * Also reclaims the `.tmp-*.part` files of dead [[publish]] writers:
+    * those last modified before the head record was written. Such a
+    * writer created its temp file before the head version existed, so
+    * it was racing for a version at or below the head and its link can
+    * only fail; a late checkpoint writer loses only a best-effort
+    * checkpoint. */
   def cleanupLog(root: String, keepVersions: Int): Seq[String] = {
     val head = currentVersion(root)
+    val d = logDir(root)
+    val deadTemps = if (head == 0L) Seq.empty else {
+      val headMtime = Files.getLastModifiedTime(d.resolve(logName(head)))
+      // a live writer deletes its own temp file once it links or loses
+      listDir(d).filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith(".tmp-") && n.endsWith(".part") &&
+          (try Files.getLastModifiedTime(p).compareTo(headMtime) < 0
+           catch { case _: java.nio.file.NoSuchFileException => false })
+      }.map(_.getFileName.toString)
+    }
+    deadTemps.foreach(n => Files.deleteIfExists(d.resolve(n)))
     val horizon = head - keepVersions
     val base = checkpointAtOrBelow(root, horizon).map(_.version).getOrElse {
-      return Seq.empty
+      return deadTemps
     }
-    val d = logDir(root)
     val doomedRecords = logVersions(root).filter(_ <= base)
       .map(logName)
     val doomedCkpts = listDir(d).map(_.getFileName.toString)
@@ -2454,7 +2495,7 @@ object TxTable {
       .filter(_.stripPrefix("ckpt-v").stripSuffix(".json").toLong < base)
     val doomed = doomedRecords ++ doomedCkpts
     doomed.foreach(n => Files.deleteIfExists(d.resolve(n)))
-    doomed
+    deadTemps ++ doomed
   }
 
   /** Z-ORDERED compaction — [[compactClustered]]'s TWO-dimension form

@@ -106,9 +106,32 @@ class ExplainSourcesSpec extends AnyFunSuite with SharedSpark {
       assert(!p.contains("rangepartitioning"),
         s"terminal global sort in library operator plan:\n$p")
     }
-    // and the gate DOES sort: the gated form of the same operator plans one
-    val gated = SparkEntry.queries("d1_dedup_exact")(spark, "/root/testdata/sf0.001")
-    assert(plan(gated).contains("rangepartitioning"))
+  }
+
+  test("the gate returns each key's rows in its gateSort order") {
+    import scala.jdk.CollectionConverters._
+    Seq("d1_dedup_exact", "q5_nation_revenue").foreach { k =>
+      val gated = SparkEntry.queries(k)(spark, SharedSpark.sfDir)
+      val rows = gated.collect().toSeq
+      val cs = SparkEntry.gateSort(k)
+      val sorted = spark.createDataFrame(rows.asJava, gated.schema)
+        .orderBy(cs.map(col): _*).collect().toSeq
+      def keys(rs: Seq[org.apache.spark.sql.Row]) = rs.map(r => cs.map(r.getAs[Any](_)))
+      assert(rows.size > 1, s"$k: too few rows to show an order")
+      assert(keys(rows) === keys(sorted), s"$k: rows are not in ${cs.mkString(", ")} order")
+    }
+  }
+
+  test("the gate's sort starts no Spark job over the bare operator") {
+    // fresh frames per count: a re-collected frame reuses its shuffle
+    // stages; the warm-up infers the documents schema outside the counts
+    def bare = graft.operators.Dedup.exact(table("documents"))
+    bare.collect()
+    val gatedJobs = jobsStartedBy(
+      SparkEntry.queries("d1_dedup_exact")(spark, SharedSpark.sfDir).collect())
+    val bareJobs = jobsStartedBy(bare.collect())
+    assert(gatedJobs === bareJobs,
+      s"the gated d1 ran $gatedJobs Spark jobs, the bare operator $bareJobs")
   }
 
   test("lang scores are evaluated once: stacked projections stay stacked") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graftx.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
@@ -50,4 +52,21 @@ trait SharedSpark extends BeforeAndAfterAll { self: Suite =>
   lazy val spark: SparkSession = SharedSpark.spark
   def table(name: String): DataFrame = SharedSpark.table(name)
   def tempDir(prefix: String): java.nio.file.Path = SharedSpark.tempDir(prefix)
+
+  /** Spark jobs that `body` starts on this thread. */
+  def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-started-by-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, suiteName)
+    try { body; ListenerBridge.drain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    jobs.get
+  }
 }

@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.{Files, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.graftx.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{expr, lit}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -15,23 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * under another type-mapping conf is inferred again, and the memoized
   * read equals an inferring one. */
 class TablesSpec extends AnyFunSuite with SharedSpark {
-
-  /** Spark jobs that `body` starts on this thread. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "TablesSpec")
-    try { body; ListenerBridge.drain(sc) }
-    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-    jobs.get
-  }
 
   /** Writes `df` as the single Parquet file `<dir>/<name>.parquet`,
     * replacing any file already there. */

@@ -729,6 +729,36 @@ class TxTableSpec extends AnyFunSuite with SharedSpark {
       Set("v0000000001.json", "v0000000002.json", "v0000000003.json"))
     assert(names.filter(_.endsWith(".part")) === Set(".tmp-crashed.part"),
       "a published commit leaves no temp file behind")
+    // cleanup reclaims a temp file older than the head record (its writer
+    // raced for a version that exists) and keeps one a live writer may own
+    java.nio.file.Files.write(log.resolve(".tmp-fresh.part"), rec)
+    assert(TxTable.cleanupLog(root, keepVersions = 10) === Seq(".tmp-crashed.part"))
+    assert(!java.nio.file.Files.exists(log.resolve(".tmp-crashed.part")))
+    assert(java.nio.file.Files.exists(log.resolve(".tmp-fresh.part")))
+    assert(TxTable.currentVersion(root) === 3L)
+  }
+
+  test("merge releases the blocks it staged, with and without cdc, and keeps the caller's") {
+    val sc = spark.sparkContext
+    def src(tag: String, n: Long) =
+      spark.range(0, n).select(col("id").as("k"), lit(tag).as("v"))
+    Seq(false, true).foreach { cdc =>
+      val root = tempDir(s"txt-release-$cdc").toString + "/tbl"
+      TxTable.create(spark, src("v", 100), root, "k", cdc = cdc)
+      val before = sc.getPersistentRDDs.keySet
+      TxTable.merge(spark, root, src("u", 150), "k")
+      assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+        s"cdc=$cdc: the merge left persisted RDDs behind")
+      // a source the caller materialized is the caller's to release
+      val staged = src("w", 10).localCheckpoint()
+      val mine = sc.getPersistentRDDs.keySet -- before
+      assert(mine.nonEmpty)
+      TxTable.merge(spark, root, staged, "k")
+      assert(sc.getPersistentRDDs.keySet -- before === mine)
+      assert(staged.count() === 10L)
+      assert(rows(TxTable.read(spark, root)).count(_._2 == "w") === 10)
+      mine.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
+    }
   }
 
   test("torn records: a reader replaying through 200 concurrent metadata-only commits never throws") {
