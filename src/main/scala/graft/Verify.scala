@@ -19,10 +19,23 @@ object Verify {
     // dev-only subset filter (the driver never sets this): run just the
     // named keys for fast local iteration with tools/check_oracle.py
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    // jobs per key: each key's jobs carry its name in a local property.
+    // Not the job group itself: a streaming query's execution thread
+    // inherits the driver thread's local properties but sets its own job
+    // group, and its micro-batch jobs belong to the key that started it
+    val sc = spark.sparkContext
+    val keyProp = "graft.verify.key"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(keyProp)))
+          .foreach(k => jobs.merge(k, 1, (a, b) => a + b))
+    })
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      val persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val persisted = sc.getPersistentRDDs.keySet
+      sc.setLocalProperty(keyProp, name)
       val t0 = System.nanoTime()
       val outcome =
         try { fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); "ok" }
@@ -31,11 +44,15 @@ object Verify {
           e.getClass.getName
         }
       // one line per key, so a red key names itself: wall seconds, "ok"
-      // or the class of what it threw, then the persistent RDDs the key
-      // left behind (staged blocks it never released)
+      // or the class of what it threw, the persistent RDDs the key left
+      // behind (staged blocks it never released), then the Spark jobs it
+      // started
       val secs = (System.nanoTime() - t0) / 1e9
-      val left = (spark.sparkContext.getPersistentRDDs.keySet -- persisted).size
-      System.err.println(f"[verify-key] $name $secs%.3f $outcome $left")
+      sc.setLocalProperty(keyProp, null)
+      val left = (sc.getPersistentRDDs.keySet -- persisted).size
+      org.apache.spark.graftx.ListenerBridge.drain(sc)
+      val started = Option(jobs.get(name)).map(_.intValue).getOrElse(0)
+      System.err.println(f"[verify-key] $name $secs%.3f $outcome $left $started")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /** Arity guard for the graft function builders: the registry hands the
   * builder whatever argument list the SQL call produced, and a bare
   * `args(2)` turns a user typo into IndexOutOfBoundsException instead of
-  * an analysis error. Shared by GraftFunctions (temp-function registry)
-  * and GraftExtensions (injectFunction) so both surfaces fail alike. */
+  * an analysis error. Every builder in [[NativeFunctions]] is wrapped, so
+  * both registries (GraftFunctions' temp functions and GraftExtensions'
+  * injectFunction) fail alike. */
 object FnArity {
   def check(name: String, expected: Int, args: Seq[Expression]): Unit =
     if (args.length != expected)

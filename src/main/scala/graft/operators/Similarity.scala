@@ -76,102 +76,107 @@ object Similarity {
     topK(pairs, k)
   }
 
-  /** IVF-style approximate top-k: deterministic pivot set (the nPivots
+  /** IVF-style approximate top-k: a deterministic pivot set (the nPivots
     * smallest xxhash64(vec_id) — a seedless uniform sample), every vector
     * assigned to its nearest pivot cell, queries probe the `nProbe`
-    * nearest cells. The candidate join shuffles on cell id, touching
+    * nearest cells. The candidate join keys on cell id, touching
     * ~nProbe/nPivots of the corpus per query — the classic IVF-flat
     * trade-off, here with centroids that need no iterative training so
     * results are exactly reproducible at any scale/partitioning.
     *
-    * Cell assignment is a PURE PROJECTION: the pivot table collapses to a
-    * one-row array (tiny — nPivots structs), broadcast-cross-joined onto
-    * every vector, and the nearest cell is an array argmin over that
-    * in-row array. No shuffle, no window — the earlier formulation
-    * (crossJoin each vector with all pivots, then a row_number window
-    * partitioned by vec_id) range-shuffled and sorted 32× the corpus just
-    * to pick a per-row argmax, which is exactly the plan you cannot run
-    * at 100 TB. The only corpus-wide shuffle left is the cell-keyed
-    * candidate join itself. */
+    * Cell assignment is a PURE PROJECTION: one TakeOrdered collects the
+    * pivots (id, vector, norm) to the driver ([[ivfPivots]]), they enter
+    * the plan as a constant, and the native `graft_ivf_cells` kernel
+    * scores every pivot in one compiled pass per row. The constant holds
+    * nPivots × dim doubles (32 × 64 here) — a bounded model artifact, the
+    * same posture as the PQ codebooks `graft_pq_codes` takes. No join, no
+    * shuffle, no window feeds the assignment; the only corpus-wide join
+    * left is the cell-keyed candidate join itself. */
   /** Deterministic IVF pivot ID set: the `nPivots` smallest
-    * `xxhash64(vec_id)` — a seedless uniform sample needing no iterative
-    * training. The TakeOrdered runs over (vec_id, hash) pairs only (not
-    * the 64-dim vectors), and the staged-table gate persists exactly this
+    * `(xxhash64(vec_id), vec_id)` — a seedless uniform sample needing no
+    * iterative training. The staged-table gates persist exactly this
     * frame so the DuckDB oracle can replay everything downstream of the
-    * (non-ANSI) hash ordering relationally. */
+    * (non-ANSI) hash ordering relationally; [[ivfPivots]] takes its rows
+    * by the same ordering, so gate and operator can never pick different
+    * pivots. */
   def ivfPivotIds(embeddings: DataFrame, nPivots: Int = 32): DataFrame =
     embeddings.select(col("vec_id"))
       .withColumn("hk", xxhash64(col("vec_id")))
       .orderBy(col("hk"), col("vec_id")).limit(nPivots)
       .select(col("vec_id").as("pivot_id"))
 
-  /** One-row table carrying ALL pivots as an array<struct> — the
-    * broadcast unit for the projection-side cell argmin (pivot vectors
-    * rejoined from the shared id derivation, so the gate's staged table
-    * and the plans built on this can never pick different pivots).
-    * `v` must carry (vec_id, v, nrm). Shared by s3's [[ivfTopK]] and
-    * s12's [[ivfPqTopK]]. */
-  private def ivfPivotArr(v: DataFrame, embeddings: DataFrame,
-                          nPivots: Int): DataFrame =
-    v.join(broadcast(ivfPivotIds(embeddings, nPivots)),
-        col("vec_id") === col("pivot_id"))
-      .agg(collect_list(struct(col("pivot_id"), col("v").as("pv"),
-        col("nrm").as("pnrm"))).as("pvs"))
+  /** One IVF pivot: its id, vector and norm (the `graft_ivf_cells`
+    * constant's struct). */
+  private[graft] final case class IvfPivot(pivot_id: Long, pv: Seq[Double],
+                                           pnrm: java.lang.Double)
 
-  /** Nearest-cell assignment as a PURE PROJECTION over the broadcast
-    * pivot array. Per-row scored pivot array: struct(-cos6, pivot_id),
-    * so the NATURAL struct ordering (ascending lexicographic) ranks
-    * best-cosine first with ties to the smallest pivot id — array_min
-    * IS the argmax. The score is decimal-6-rounded (the repo's standard
-    * boundary) BEFORE the argmin: raw-double cell assignment would hinge
-    * on the engines' dot-product summation shapes agreeing to the last
-    * ulp, while rounded scores make the assignment engine-independent
-    * (the same discipline topK applies to the final ranking).
-    * `v`/`nrm` are materialized attributes, so the lambda re-evaluates
-    * nothing upstream (see SURVEY §5 on HOF materialization). */
-  private def ivfNearestCells(side: DataFrame, parr: DataFrame,
-                              n: Int): DataFrame = {
-    def scored: Column = transform(col("pvs"), p =>
+  /** The pivot set as a plan constant: one TakeOrdered over
+    * `(xxhash64(vec_id), vec_id)` that carries `v` and `nrm` (so `v`
+    * must hold vec_id, v, nrm), collected once per call. */
+  private def ivfPivots(v: DataFrame, nPivots: Int): Seq[IvfPivot] =
+    v.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(nPivots)
+      .select(col("vec_id"), col("v"), col("nrm")).collect().toSeq
+      .map(r => IvfPivot(r.getLong(0), r.getSeq[Double](1),
+        r.getAs[java.lang.Double](2)))
+
+  /** The ids of the `n` nearest pivots of the frame's `v`/`nrm`, best
+    * first: the native kernel over the pivot constant. */
+  private[graft] def ivfCells(pivots: Seq[IvfPivot], n: Int): Column =
+    call_function("graft_ivf_cells", col("v"), col("nrm"), typedLit(pivots), lit(n))
+
+  /** The nearest cell alone (null when there are no pivots). */
+  private def ivfCell(pivots: Seq[IvfPivot]): Column =
+    try_element_at(ivfCells(pivots, 1), lit(1))
+
+  /** The relational cell ranking `graft_ivf_cells` replaced, kept as the
+    * executable parity SPEC (IvfCellsParitySpec; not on any hot path).
+    * Per row, a scored pivot array struct(-cos6, pivot_id), so the
+    * NATURAL struct ordering (ascending lexicographic) ranks best-cosine
+    * first with ties to the smallest pivot id. The score is
+    * decimal-6-rounded (the repo's standard boundary) BEFORE ranking:
+    * raw-double cell assignment would hinge on the engines' dot-product
+    * summation shapes agreeing to the last ulp, while rounded scores make
+    * the assignment engine-independent (the same discipline topK applies
+    * to the final ranking). `n = 1` takes the array_min, as the operators
+    * did. */
+  private[graft] def ivfCellsAlgebra(pivots: Seq[IvfPivot], n: Int): Column = {
+    val scored = transform(typedLit(pivots), p =>
       struct(decRound(dot(col("v"), p.getField("pv")) * -1.0 /
         (col("nrm") * p.getField("pnrm")), 6).as("negcos"),
         p.getField("pivot_id").as("pivot_id")))
-    val base = side.crossJoin(broadcast(parr))
-    val cell =
-      if (n == 1) array_min(scored).getField("pivot_id")
-      else explode(transform(slice(array_sort(scored), 1, n),
-        s => s.getField("pivot_id")))
-    base.select(col("vec_id"), col("v"), col("nrm"), cell.as("cell"))
+    if (n == 1) array(array_min(scored).getField("pivot_id"))
+    else transform(slice(array_sort(scored), 1, n), s => s.getField("pivot_id"))
   }
 
   /** IVF cell ASSIGNMENT of `vectors` under pivots fit on `fitCorpus`
     * (r16, the st41 incremental-index surface): assignment is a pure
-    * broadcast projection over the FROZEN pivot set — no refit — so a
-    * streaming ingest batch can index itself with the same per-row
-    * cost the build paid (the s20/s23 frozen-fit posture; drift
-    * monitoring decides when the fit itself rots). Returns
-    * (vec_id, cell); cell ids are pivot vec_ids, decimal-6 argmax
-    * with the smallest-id tie-break — identical to [[ivfTopK]]'s
-    * corpus assignment by construction (same private machinery). */
+    * projection over the FROZEN pivot set — no refit — so a streaming
+    * ingest batch can index itself with the same per-row cost the build
+    * paid (the s20/s23 frozen-fit posture; drift monitoring decides when
+    * the fit itself rots). Returns (vec_id, cell); cell ids are pivot
+    * vec_ids, decimal-6 argmax with the smallest-id tie-break — identical
+    * to [[ivfTopK]]'s corpus assignment by construction (same kernel,
+    * same pivot collect). */
   def ivfAssign(vectors: DataFrame, fitCorpus: DataFrame,
                 nPivots: Int = 32): DataFrame = {
     val fv = fitCorpus.select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
-    val parr = ivfPivotArr(fv, fitCorpus, nPivots)
-    val v = vectors.select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
+    val pivots = ivfPivots(fv, nPivots)
+    vectors.select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
-    ivfNearestCells(v, parr, 1).select(col("vec_id"), col("cell"))
+      .select(col("vec_id"), ivfCell(pivots).as("cell"))
   }
 
   def ivfTopK(embeddings: DataFrame, numQueries: Int = 10, k: Int = 5,
               nPivots: Int = 32, nProbe: Int = 8): DataFrame = {
     val v = embeddings.select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
-    val parr = ivfPivotArr(v, embeddings, nPivots)
-    val corpus = ivfNearestCells(v, parr, 1)
-      .select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"), col("cell"))
-    val q = ivfNearestCells(v.filter(col("vec_id") < numQueries), parr, nProbe)
+    val pivots = ivfPivots(v, nPivots)
+    val corpus = v.select(col("vec_id").as("id_b"), col("v").as("vb"),
+      col("nrm").as("nb"), ivfCell(pivots).as("cell"))
+    val q = v.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq"),
-        col("cell").as("qcell"))
+        explode(ivfCells(pivots, nProbe)).as("qcell"))
     val pairs = corpus
       .join(q, col("cell") === col("qcell") && col("id_b") =!= col("q_id"))
       .withColumn("cos", dot(col("vq"), col("vb")) / (col("nq") * col("nb")))
@@ -1281,8 +1286,7 @@ object Similarity {
 
   /** One-row nested codebook literal — array over subspaces (ascending),
     * each an array over cid (ascending) of centroids: the broadcast
-    * unit both assignment and reconstruction key off (the ivfTopK
-    * one-row-pivot-table idiom). Carries each centroid twice: raw `c`
+    * unit the reconstruction keys off. Carries each centroid twice: raw `c`
     * (reconstruction) and `qc` = round(c·4096) (the integer-domain
     * assignment — see [[withPqCodes]]). */
   private def cbNested(codebooks: DataFrame): DataFrame =
@@ -1416,23 +1420,15 @@ object Similarity {
   }
 
   /** Nearest-cell assignment that ALSO carries the winning pivot's
-    * vector — the n=1 [[ivfNearestCells]] with `pv` kept, so residual
-    * encoding ([[ivfResiduals]], [[ivfPqTopK]]) needs no join back to
-    * the pivot table: the struct argmin (same (negcos, pivot_id)
-    * ordering, so the same cell choice) just carries the vector along.
-    * One array_min pass per row, still a pure broadcast projection. */
-  private def ivfNearestCellWithPivot(side: DataFrame, parr: DataFrame): DataFrame = {
-    val best = array_min(transform(col("pvs"), p =>
-      struct(decRound(dot(col("v"), p.getField("pv")) * -1.0 /
-        (col("nrm") * p.getField("pnrm")), 6).as("negcos"),
-        p.getField("pivot_id").as("pivot_id"),
-        p.getField("pv").as("pv"))))
-    side.crossJoin(broadcast(parr))
-      .withColumn("_best", best)
-      .select(col("vec_id"), col("v"), col("nrm"),
-        col("_best").getField("pivot_id").as("cell"),
-        col("_best").getField("pv").as("pv"))
-  }
+    * vector `pv` — looked up by cell id in a constant map built from the
+    * same collected pivots, so residual encoding ([[ivfResiduals]],
+    * [[ivfPqTopK]]) needs no join back to the pivot table. Still a pure
+    * projection over `side` (vec_id, v, nrm). */
+  private def ivfNearestCellWithPivot(side: DataFrame,
+                                      pivots: Seq[IvfPivot]): DataFrame =
+    side.withColumn("cell", ivfCell(pivots))
+      .withColumn("pv", element_at(typedLit(pivots.map(p => p.pivot_id -> p.pv).toMap),
+        col("cell")))
 
   /** Per-vector IVF residuals, `(vec_id, embedding = v − pivot(cell))`
     * — the frame IVFADC codebooks are FIT on: within a cell the
@@ -1446,8 +1442,7 @@ object Similarity {
   def ivfResiduals(embeddings: DataFrame, nPivots: Int = 32): DataFrame = {
     val v = embeddings.select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
-    val parr = ivfPivotArr(v, embeddings, nPivots)
-    ivfNearestCellWithPivot(v, parr)
+    ivfNearestCellWithPivot(v, ivfPivots(v, nPivots))
       .select(col("vec_id"),
         zip_with(col("v"), col("pv"), (a, b) => a - b).as("embedding"))
   }
@@ -1483,9 +1478,9 @@ object Similarity {
     * a bet on cluster structure, not a free win.
     *
     * Cell assignment, (optional) residual computation and code
-    * assignment share ONE corpus scan (all are projections against
-    * broadcast literals — no self-join rejoining two corpus
-    * derivations); the only corpus-wide shuffle is the cell-keyed
+    * assignment share ONE corpus scan (all are projections against plan
+    * constants or broadcast codebooks — no self-join rejoining two
+    * corpus derivations); the only corpus-wide join is the cell-keyed
     * candidate join, exactly s3's plan. Full oracle either way: staged
     * pivot ids + staged codebooks replay cell choice, residual, code
     * choice, reconstruction and ranking relationally. */
@@ -1495,9 +1490,9 @@ object Similarity {
                 residual: Boolean = false): DataFrame = {
     val v = embeddings.select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
-    val parr = ivfPivotArr(v, embeddings, nPivots)
+    val pivots = ivfPivots(v, nPivots)
     val corpus = (if (residual) {
-      val cells = ivfNearestCellWithPivot(v, parr)
+      val cells = ivfNearestCellWithPivot(v, pivots)
         .withColumn("vres", zip_with(col("v"), col("pv"), (a, b) => a - b))
       withPqCodes(cells.drop("v").withColumnRenamed("vres", "v"), codebooks)
         .crossJoin(broadcast(cbNested(codebooks)))
@@ -1507,11 +1502,12 @@ object Similarity {
         .withColumn("rn", norm(col("rv")))
         .filter(col("rn") > 0)
     } else
-      withPqRecon(withPqCodes(ivfNearestCells(v, parr, 1), codebooks), codebooks))
+      withPqRecon(withPqCodes(v.withColumn("cell", ivfCell(pivots)), codebooks),
+        codebooks))
       .select(col("vec_id").as("id_b"), col("cell"), col("rv"), col("rn"))
-    val q = ivfNearestCells(v.filter(col("vec_id") < numQueries), parr, nProbe)
+    val q = v.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq"),
-        col("cell").as("qcell"))
+        explode(ivfCells(pivots, nProbe)).as("qcell"))
     val pairs = corpus
       .join(q, col("cell") === col("qcell") && col("id_b") =!= col("q_id"))
       .withColumn("cos", dot(col("vq"), col("rv")) / (col("nq") * col("rn")))

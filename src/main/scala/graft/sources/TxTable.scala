@@ -1665,7 +1665,7 @@ object TxTable {
     // them up front changes nothing downstream.)
     val ks = keys.select(col(key)).filter(col(key).isNotNull)
       .distinct().localCheckpoint()
-    occRetry(root, "DELETE", allowRebase = true) { v =>
+    try occRetry(root, "DELETE", allowRebase = true) { v =>
       val st = replayState(root, None)
       val files = st.live
       val touchedSet = touchedFiles(spark, files,
@@ -1682,15 +1682,17 @@ object TxTable {
           st.colMap)
         // cdc consumes the touched-files read twice: one pass (r18)
         val base = if (st.cdcOn) base0.localCheckpoint() else base0
-        val remaining = base.join(ks, Seq(key), "left_anti")
-        val cdc = if (!st.cdcOn) None else
-          writeCdcFiles(spark,
-            base.join(ks, Seq(key), "left_semi")
-              .withColumn("_change_type", lit("delete")), root, v, st.colMap)
-        Some((writeFiles(spark, remaining, root, key, f"$v%010d-delete",
-          st.statsCols, st.colMap), touched.map(_.name), key, None, None, cdc))
+        try {
+          val remaining = base.join(ks, Seq(key), "left_anti")
+          val cdc = if (!st.cdcOn) None else
+            writeCdcFiles(spark,
+              base.join(ks, Seq(key), "left_semi")
+                .withColumn("_change_type", lit("delete")), root, v, st.colMap)
+          Some((writeFiles(spark, remaining, root, key, f"$v%010d-delete",
+            st.statsCols, st.colMap), touched.map(_.name), key, None, None, cdc))
+        } finally if (base ne base0) release(base)
       }
-    }
+    } finally release(ks)
   }
 
   /** Per-file relation of a closed-range predicate to a file's logged
@@ -1877,7 +1879,7 @@ object TxTable {
     // raw keys plan used to execute for each)
     val ks = keys.select(col(key)).filter(col(key).isNotNull)
       .distinct().localCheckpoint()
-    occRetry(root, "DELETE_DV", allowRebase = true) { v =>
+    try occRetry(root, "DELETE_DV", allowRebase = true) { v =>
       val st = replayState(root, None)
       if (txn.exists { case (app, tv) => st.txns.get(app).exists(_ >= tv) })
         None   // already applied: idempotent no-op
@@ -1940,103 +1942,107 @@ object TxTable {
           .select(col("_gf"), col(key)).distinct()
         val fresh = hit.join(old, Seq("_gf", key), "left_anti")
           .localCheckpoint()
-        val freshCnt = fresh.groupBy(col("_gf")).count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (freshCnt.isEmpty && txn.isEmpty) None // raced to a no-op
-        else if (freshCnt.isEmpty)
-          Some((Seq.empty, Seq.empty, key, None,
-            txn.map { case (app, tv) => TxnAction(app, tv) }, None))
-        else {
-          // union sidecar contents for every CHANGED file (old keys +
-          // fresh keys — an entry always references exactly one
-          // sidecar), and exact live counts by anti-join (robust to
-          // duplicate keys inside a created-not-merged file, where
-          // per-key arithmetic would drift)
-          val changedBase = freshCnt.keySet.toSeq
-          val changedDf = {
-            import spark.implicits._
-            changedBase.toDF("_gf")
-          }
-          val combined = old.unionByName(fresh)
-            .join(broadcast(changedDf), Seq("_gf")).localCheckpoint()
-          val liveCnt = phys.join(broadcast(changedDf), Seq("_gf"))
-            .join(broadcast(combined), Seq("_gf", key), "left_anti")
-            .groupBy(col("_gf")).count().collect()
+        try {
+          val freshCnt = fresh.groupBy(col("_gf")).count().collect()
             .map(r => r.getString(0) -> r.getLong(1)).toMap
-          // all new sidecars in ONE partitioned write: integer indices
-          // as the partition column (no partition-value escaping
-          // concerns), one output file per index by construction
-          // (repartition on the partition column puts all of an
-          // index's rows in one task)
-          val needSidecar = changedBase
-            .filter(b => liveCnt.getOrElse(b, 0L) > 0L).zipWithIndex
-          val nonce = java.util.UUID.randomUUID().toString.take(8)
-          val dvNames = needSidecar.map { case (b, i) =>
-            b -> f"dv-$v%010d-$nonce-$i.parquet"
-          }.toMap
-          if (needSidecar.nonEmpty) {
-            val idxDf = {
+          if (freshCnt.isEmpty && txn.isEmpty) None // raced to a no-op
+          else if (freshCnt.isEmpty)
+            Some((Seq.empty, Seq.empty, key, None,
+              txn.map { case (app, tv) => TxnAction(app, tv) }, None))
+          else {
+            // union sidecar contents for every CHANGED file (old keys +
+            // fresh keys — an entry always references exactly one
+            // sidecar), and exact live counts by anti-join (robust to
+            // duplicate keys inside a created-not-merged file, where
+            // per-key arithmetic would drift)
+            val changedBase = freshCnt.keySet.toSeq
+            val changedDf = {
               import spark.implicits._
-              needSidecar.toDF("_gf", "_gi")
+              changedBase.toDF("_gf")
             }
-            val tmp = Files.createTempDirectory(Paths.get(root), "stage-dv-")
+            val combined = old.unionByName(fresh)
+              .join(broadcast(changedDf), Seq("_gf")).localCheckpoint()
             try {
-              combined.join(broadcast(idxDf), Seq("_gf"))
-                .select(col(key), col("_gi"))
-                .repartition(col("_gi"))
-                .write.partitionBy("_gi").mode("overwrite")
-                .parquet(tmp.toString)
-              needSidecar.foreach { case (b, i) =>
-                val dir = tmp.resolve(s"_gi=$i")
-                val part = listDir(dir)
-                  .find(_.getFileName.toString.startsWith("part-"))
-                  .getOrElse(throw new IllegalStateException(
-                    s"TxTable deleteKeysDV: no sidecar part file for $b"))
-                Files.move(part, dataDir(root).resolve(dvNames(b)),
-                  StandardCopyOption.ATOMIC_MOVE)
+              val liveCnt = phys.join(broadcast(changedDf), Seq("_gf"))
+                .join(broadcast(combined), Seq("_gf", key), "left_anti")
+                .groupBy(col("_gf")).count().collect()
+                .map(r => r.getString(0) -> r.getLong(1)).toMap
+              // all new sidecars in ONE partitioned write: integer indices
+              // as the partition column (no partition-value escaping
+              // concerns), one output file per index by construction
+              // (repartition on the partition column puts all of an
+              // index's rows in one task)
+              val needSidecar = changedBase
+                .filter(b => liveCnt.getOrElse(b, 0L) > 0L).zipWithIndex
+              val nonce = java.util.UUID.randomUUID().toString.take(8)
+              val dvNames = needSidecar.map { case (b, i) =>
+                b -> f"dv-$v%010d-$nonce-$i.parquet"
+              }.toMap
+              if (needSidecar.nonEmpty) {
+                val idxDf = {
+                  import spark.implicits._
+                  needSidecar.toDF("_gf", "_gi")
+                }
+                val tmp = Files.createTempDirectory(Paths.get(root), "stage-dv-")
+                try {
+                  combined.join(broadcast(idxDf), Seq("_gf"))
+                    .select(col(key), col("_gi"))
+                    .repartition(col("_gi"))
+                    .write.partitionBy("_gi").mode("overwrite")
+                    .parquet(tmp.toString)
+                  needSidecar.foreach { case (b, i) =>
+                    val dir = tmp.resolve(s"_gi=$i")
+                    val part = listDir(dir)
+                      .find(_.getFileName.toString.startsWith("part-"))
+                      .getOrElse(throw new IllegalStateException(
+                        s"TxTable deleteKeysDV: no sidecar part file for $b"))
+                    Files.move(part, dataDir(root).resolve(dvNames(b)),
+                      StandardCopyOption.ATOMIC_MOVE)
+                  }
+                } finally {
+                  import scala.jdk.CollectionConverters._
+                  val walk = Files.walk(tmp)
+                  val rest = try walk.iterator().asScala.toSeq.reverse
+                    finally walk.close()
+                  rest.foreach(Files.deleteIfExists(_))
+                }
               }
-            } finally {
-              import scala.jdk.CollectionConverters._
-              val walk = Files.walk(tmp)
-              val rest = try walk.iterator().asScala.toSeq.reverse
-                finally walk.close()
-              rest.foreach(Files.deleteIfExists(_))
-            }
+              // change-feed materialization (cdc-enabled tables only): the
+              // newly-dead FULL rows — the one case where a DV delete
+              // reads more than the key column, the documented CDF write
+              // cost (Delta pays the same); one multi-file read, one
+              // broadcast semi-join on the (file, key) pairs
+              val cdc = if (!st.cdcOn) None else {
+                val changedEntries = changedBase.map(byBase)
+                // files store PHYSICAL names (column mapping): scan through
+                // the mapped schema, alias back to logical for the feed
+                val fullPhys = tagged(spark.read.schema(StructType(
+                    st.schema.fields.map(f => f.copy(name = st.physOf(f.name)))))
+                  .parquet(changedEntries
+                    .map(f => dataDir(root).resolve(f.name).toString): _*))
+                val full =
+                  if (st.colMap.isEmpty) fullPhys
+                  else fullPhys.select((st.schema.fields.map(f =>
+                    col(st.physOf(f.name)).as(f.name)) :+ col("_gf")).toSeq: _*)
+                writeCdcFiles(spark,
+                  full.join(broadcast(fresh), Seq("_gf", key), "left_semi")
+                    .drop("_gf").withColumn("_change_type", lit("delete")),
+                  root, v, st.colMap)
+              }
+              val adds = changedBase.flatMap { b =>
+                val f = byBase(b)
+                val live = liveCnt.getOrElse(b, 0L)
+                if (live == 0L) None // whole file dead: pure remove
+                else Some(f.copy(rows = live, dv = Some(dvNames(b))))
+              }
+              Some((adds, changedBase.map(byBase(_).name), key, None,
+                txn.map { case (app, tv) => TxnAction(app, tv) }, cdc))
+            } finally release(combined)
           }
-          // change-feed materialization (cdc-enabled tables only): the
-          // newly-dead FULL rows — the one case where a DV delete
-          // reads more than the key column, the documented CDF write
-          // cost (Delta pays the same); one multi-file read, one
-          // broadcast semi-join on the (file, key) pairs
-          val cdc = if (!st.cdcOn) None else {
-            val changedEntries = changedBase.map(byBase)
-            // files store PHYSICAL names (column mapping): scan through
-            // the mapped schema, alias back to logical for the feed
-            val fullPhys = tagged(spark.read.schema(StructType(
-                st.schema.fields.map(f => f.copy(name = st.physOf(f.name)))))
-              .parquet(changedEntries
-                .map(f => dataDir(root).resolve(f.name).toString): _*))
-            val full =
-              if (st.colMap.isEmpty) fullPhys
-              else fullPhys.select((st.schema.fields.map(f =>
-                col(st.physOf(f.name)).as(f.name)) :+ col("_gf")).toSeq: _*)
-            writeCdcFiles(spark,
-              full.join(broadcast(fresh), Seq("_gf", key), "left_semi")
-                .drop("_gf").withColumn("_change_type", lit("delete")),
-              root, v, st.colMap)
-          }
-          val adds = changedBase.flatMap { b =>
-            val f = byBase(b)
-            val live = liveCnt.getOrElse(b, 0L)
-            if (live == 0L) None // whole file dead: pure remove
-            else Some(f.copy(rows = live, dv = Some(dvNames(b))))
-          }
-          Some((adds, changedBase.map(byBase(_).name), key, None,
-            txn.map { case (app, tv) => TxnAction(app, tv) }, cdc))
-        }
+        } finally release(fresh)
         }
       }
-    }
+    } finally release(ks)
   }
 
   // ---- change-feed source seams (r18) --------------------------------

@@ -1600,7 +1600,7 @@ object StreamDrivers {
     * probe-and-append posture at the INDEX layer (the r15 verdict's
     * item 7): the cell-assignment state (vec_id → cell under the
     * FROZEN corpus-fit pivots) lives in a TxTable; each embedding
-    * micro-batch assigns ITSELF through the pure broadcast projection
+    * micro-batch assigns ITSELF through the pure projection
     * ([[graft.operators.Similarity.ivfAssign]] — no refit, the s20/s23
     * frozen-fit posture) and MERGEs in as one txn-stamped commit
     * (exactly-once under at-least-once delivery, the st37 guard). The

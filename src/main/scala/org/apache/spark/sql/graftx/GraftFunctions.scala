@@ -2,7 +2,7 @@ package org.apache.spark.sql.graftx
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
-import graft.functions.{BpeSegment, CdcChunksExpr, CharWindowHashesExpr, DeflateLen, DotProduct, FnArity, KllMergeAgg, KllQuantiles, KllSketchAgg, LongDot, LuhnValid, MinHashSignature, NfkcNormalize, NgramScore, PorterStem, PqCodesExpr, RollingFingerprint, SignDotsExpr, SimHash, SortedIntersectCount, TermBucketCounts, TokenWindowHashesExpr, TokenizeText, UnigramSegment, WordpieceSegment}
+import graft.functions.NativeFunctions
 
 /** Session-registry bridge (lives under org.apache.spark.sql to reach the
   * private[sql] session internals — the standard library-extension
@@ -10,134 +10,14 @@ import graft.functions.{BpeSegment, CdcChunksExpr, CharWindowHashesExpr, Deflate
   */
 object GraftFunctions {
 
-  /** Idempotently registers graft's native expressions as temp functions
-    * so Column code can reach them via `functions.call_function`. All
-    * builders are arity-guarded (FnArity): a wrong-arity SQL call gets a
+  /** Idempotently registers graft's native expressions
+    * ([[graft.functions.NativeFunctions]]) as temp functions so Column
+    * code can reach them via `functions.call_function`. All builders are
+    * arity-guarded (FnArity): a wrong-arity SQL call gets a
     * WRONG_NUM_ARGS analysis error, not IndexOutOfBoundsException. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.asInstanceOf[ClassicSession].sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("graft_dot",
-      FnArity.checked("graft_dot", 2)(args => DotProduct(args(0), args(1))),
-      "built-in")
-    registry.createOrReplaceTempFunction("graft_intersect_n",
-      FnArity.checked("graft_intersect_n", 2)(args =>
-        SortedIntersectCount(args(0), args(1))),
-      "built-in")
-    registry.createOrReplaceTempFunction("graft_minhash64",
-      FnArity.checked("graft_minhash64", 1)(args => MinHashSignature(args(0))),
-      "built-in")
-    registry.createOrReplaceTempFunction("graft_simhash64",
-      FnArity.checked("graft_simhash64", 1)(args => SimHash(args(0))),
-      "built-in")
-    registry.createOrReplaceTempFunction("graft_fingerprint",
-      FnArity.checked("graft_fingerprint", 1)(args => RollingFingerprint(args(0))),
-      "built-in")
-    registry.createOrReplaceTempFunction("graft_nfkc",
-      FnArity.checked("graft_nfkc", 1)(args => NfkcNormalize(args(0))),
-      "built-in")
-    // single-pass script-aware tokenization (the t-family's hot loop —
-    // fuses segmentScripts+trim+lower+split+filter into one scan)
-    registry.createOrReplaceTempFunction("graft_char_window_hashes",
-      FnArity.checked("graft_char_window_hashes", 2)(args =>
-        CharWindowHashesExpr(args(0), args(1))),
-      "built-in")
-    registry.createOrReplaceTempFunction("graft_sign_dots",
-      FnArity.checked("graft_sign_dots", 2)(args =>
-        SignDotsExpr(args(0), args(1))),
-      "built-in")
-    registry.createOrReplaceTempFunction("graft_rep_signals",
-      FnArity.checked("graft_rep_signals", 1)(args =>
-        graft.functions.RepSignalsExpr(args(0))),
-      "built-in")
-    registry.createOrReplaceTempFunction("graft_exif_gps",
-      FnArity.checked("graft_exif_gps", 3)(args =>
-        graft.functions.ExifGpsExpr(args(0), args(1), args(2))),
-      "built-in")
-    registry.createOrReplaceTempFunction("graft_pq_codes",
-      FnArity.checked("graft_pq_codes", 3)(args =>
-        PqCodesExpr(args(0), args(1), args(2))),
-      "built-in")
-    registry.createOrReplaceTempFunction("graft_dot_long",
-      FnArity.checked("graft_dot_long", 2)(args => LongDot(args(0), args(1))),
-      "built-in")
-    registry.createOrReplaceTempFunction("graft_cdc_chunks",
-      FnArity.checked("graft_cdc_chunks", 2)(args =>
-        CdcChunksExpr(args(0), args(1))),
-      "built-in")
-    registry.createOrReplaceTempFunction("graft_token_window_hashes",
-      FnArity.checked("graft_token_window_hashes", 2)(args =>
-        TokenWindowHashesExpr(args(0), args(1))),
-      "built-in")
-    registry.createOrReplaceTempFunction("graft_term_buckets",
-      FnArity.checked("graft_term_buckets", 2)(args =>
-        TermBucketCounts(args(0), args(1))),
-      "built-in")
-    registry.createOrReplaceTempFunction("graft_tokens",
-      FnArity.checked("graft_tokens", 1)(args => TokenizeText(args(0))),
-      "built-in")
-    // classic Porter 1980 stemming (t26's per-token hot loop)
-    registry.createOrReplaceTempFunction("graft_porter",
-      FnArity.checked("graft_porter", 1)(args => PorterStem(args(0))),
-      "built-in")
-    // Luhn checksum validity (payment-card PII verification — see Luhn)
-    registry.createOrReplaceTempFunction("graft_luhn",
-      FnArity.checked("graft_luhn", 1)(args => LuhnValid(args(0))),
-      "built-in")
-    // compressed-size quality signal (DEFLATE byte count — see Compress)
-    registry.createOrReplaceTempFunction("graft_deflate_len",
-      FnArity.checked("graft_deflate_len", 1)(args => DeflateLen(args(0))),
-      "built-in")
-    // rank-weighted char-n-gram profile scoring (t14's hot loop);
-    // args: (text, array<string> profile table — see NgramScores.parse)
-    registry.createOrReplaceTempFunction("graft_ngram_score",
-      FnArity.checked("graft_ngram_score", 2)(args => NgramScore(args(0), args(1))),
-      "built-in")
-    // BPE subword segmentation against a literal learned merge table
-    // (rank order); args: (text, array<string> of "a b" merge pairs)
-    registry.createOrReplaceTempFunction("graft_bpe_segment",
-      FnArity.checked("graft_bpe_segment", 2)(args => BpeSegment(args(0), args(1))),
-      "built-in")
-    // unigram-LM (SentencePiece-family) Viterbi segmentation against a
-    // literal fitted piece table; args: (text, array<string> of
-    // "<piece> <logp-bits>" rows)
-    registry.createOrReplaceTempFunction("graft_unigram_segment",
-      FnArity.checked("graft_unigram_segment", 2)(args =>
-        UnigramSegment(args(0), args(1))),
-      "built-in")
-    // WordPiece greedy longest-match segmentation against a literal
-    // fitted vocabulary; args: (text, array<string> of pieces with
-    // ##-prefixed continuations)
-    registry.createOrReplaceTempFunction("graft_wordpiece_segment",
-      FnArity.checked("graft_wordpiece_segment", 2)(args =>
-        WordpieceSegment(args(0), args(1))),
-      "built-in")
-    // Spark's own bloom-probe expression (the one InjectRuntimeFilter
-    // plants): not SQL-registered upstream because runtime filtering
-    // inserts it directly — graft exposes it for explicit
-    // build-once/probe-many membership gates (Curation.bloomGate).
-    // args: (bloom filter binary — constant/foldable, probed long hash)
-    registry.createOrReplaceTempFunction("graft_bloom_contains",
-      FnArity.checked("graft_bloom_contains", 2)(args =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(args(0), args(1))),
-      "built-in")
-    // build side of the same pair (TypedImperativeAggregate, mergeable):
-    // upstream keeps it on the internal-only registry, same reason as the
-    // probe. args: (long hash column, estimatedNumItems, numBits)
-    registry.createOrReplaceTempFunction("graft_bloom_agg",
-      FnArity.checked("graft_bloom_agg", 3)(args =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          args(0), args(1), args(2))),
-      "built-in")
-    // mergeable KLL quantile sketches (graft-native TypedImperativeAggregate
-    // pair + estimator — Spark has no re-mergeable quantile state)
-    registry.createOrReplaceTempFunction("graft_kll_agg",
-      FnArity.checked("graft_kll_agg", 2)(args => KllSketchAgg(args(0), args(1))),
-      "built-in")
-    registry.createOrReplaceTempFunction("graft_kll_merge",
-      FnArity.checked("graft_kll_merge", 2)(args => KllMergeAgg(args(0), args(1))),
-      "built-in")
-    registry.createOrReplaceTempFunction("graft_kll_quantiles",
-      FnArity.checked("graft_kll_quantiles", 2)(args => KllQuantiles(args(0), args(1))),
-      "built-in")
+    NativeFunctions.all.foreach(f =>
+      registry.createOrReplaceTempFunction(f.name, f.builder, "built-in"))
   }
 }

@@ -1240,6 +1240,19 @@ class CurationSpec extends AnyFunSuite with SharedSpark {
       .collect()(0)
     assert(r3.getBoolean(0))
     assert(!r3.getBoolean(1))
+    // both registries expose the same graft_* set. Every session of this
+    // context carries the extension's functions, so the tune-registered
+    // set is read as the entries Tables.tune replaced: they no longer
+    // name the extension's expression class
+    def graftFns(s: org.apache.spark.sql.SparkSession): Map[String, String] =
+      s.catalog.listFunctions().collect().filter(_.name.startsWith("graft_"))
+        .map(f => f.name -> String.valueOf(f.className)).toMap
+    val ext = graftFns(s2)
+    val tuned = graftFns(Tables.tune(spark.newSession()))
+    assert(ext.keySet === tuned.keySet)
+    assert(ext.keySet.filter(n => tuned(n) != ext(n)) === ext.keySet)
+    assert(ext.keySet === graft.functions.NativeFunctions.all.map(_.name).toSet)
+    assert(ext.keySet.contains("graft_ivf_cells"))
   }
 
   test("pmi phrases: collocations beat frequent-but-independent pairs") {

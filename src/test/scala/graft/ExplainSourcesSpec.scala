@@ -341,10 +341,11 @@ class ExplainSourcesSpec extends AnyFunSuite with SharedSpark {
       graft.operators.Similarity.pqCodebooks(emb))
     df.collect()
     val p = plan(df).split("== Initial Plan ==")(0)
-    // pivot array, codebooks and the query set all broadcast; the only
-    // shuffle-eligible join is the cell-keyed candidate join, and at
-    // this scale AQE broadcasts that too — a SortMergeJoin anywhere
-    // means a corpus derivation got self-joined
+    // the pivots and codebooks are plan constants (no join at all) and
+    // the query set broadcasts; the only shuffle-eligible join is the
+    // cell-keyed candidate join, and at this scale AQE broadcasts that
+    // too — a SortMergeJoin anywhere means a corpus derivation got
+    // self-joined
     assert(!p.contains("SortMergeJoin"),
       s"a corpus derivation reached a shuffle join in:\n$p")
   }

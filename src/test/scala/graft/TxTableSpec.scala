@@ -761,6 +761,34 @@ class TxTableSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("deleteKeys and deleteKeysDV release the blocks they staged, with and without cdc") {
+    val sc = spark.sparkContext
+    def src(tag: String, n: Long) =
+      spark.range(0, n).select(col("id").as("k"), lit(tag).as("v"))
+    def keys(from: Long, to: Long) = spark.range(from, to).select(col("id").as("k"))
+    Seq(false, true).foreach { cdc =>
+      val root = tempDir(s"txt-del-release-$cdc").toString + "/tbl"
+      TxTable.create(spark, src("v", 100), root, "k", cdc = cdc)
+      val before = sc.getPersistentRDDs.keySet
+      def clean(what: String): Unit =
+        assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+          s"cdc=$cdc: $what left persisted RDDs behind")
+      TxTable.deleteKeys(spark, root, keys(0, 10), "k")
+      clean("deleteKeys")
+      TxTable.deleteKeys(spark, root, keys(500, 510), "k") // touches nothing
+      clean("a no-op deleteKeys")
+      TxTable.deleteKeysDV(spark, root, keys(20, 30), "k")
+      clean("deleteKeysDV")
+      // a second DV delete on the same files merges with the old vectors
+      TxTable.deleteKeysDV(spark, root, keys(25, 40), "k", txn = Some(("del", 1L)))
+      clean("deleteKeysDV over existing vectors")
+      TxTable.deleteKeysDV(spark, root, keys(500, 510), "k", txn = Some(("del", 2L)))
+      clean("a no-op deleteKeysDV")
+      assert(rows(TxTable.read(spark, root)).toSeq.map(_._1).sorted ===
+        ((10L until 20L) ++ (40L until 100L)))
+    }
+  }
+
   test("torn records: a reader replaying through 200 concurrent metadata-only commits never throws") {
     import spark.implicits._
     val root = tempDir("txt-torn-race").toString + "/tbl"
