@@ -110,9 +110,11 @@ object Bpe {
     * ColumnFns.tokens contract), each word greedily merged. Called from
     * generated code — one pass, no boxing beyond the symbol strings. */
   def segment(text: UTF8String, ranks: java.util.HashMap[String, Integer]): ArrayData = {
-    // Locale.ROOT, not the JVM default: Spark's lower() (the tokens()
-    // contract this mirrors) is locale-independent — a tr-locale driver
-    // must not produce dotless-ı tokens the learn side never saw
+    // Locale.ROOT, not the JVM default, so a word segments the same on
+    // every host. Spark's lower() (the tokens() contract the learn side
+    // uses) is NOT locale-independent: under its ICU case mappings a
+    // non-ASCII string follows the JVM default locale (with
+    // -Duser.language=tr, lower('Iñ') is 'ıñ'). On ASCII the two agree
     val words = text.toString.toLowerCase(java.util.Locale.ROOT).trim.split("\\s+")
     val out = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
     var i = 0

@@ -81,6 +81,13 @@ object ColumnFns {
   /** Epoch seconds (floor), matching DuckDB CAST(floor(epoch(ts)) AS BIGINT). */
   def epochSec(c: Column): Column = unix_timestamp(c)
 
+  /** `lower(c)`/`upper(c)` through the `graft_lower`/`graft_upper`
+    * kernels ([[graft.functions.CaseMap]]): the same values, without the
+    * ~1 s class initializer Spark's own case mapping runs on its first
+    * call in a JVM. Every operator case-maps through these. */
+  def lowerCase(c: Column): Column = call_function("graft_lower", c)
+  def upperCase(c: Column): Column = call_function("graft_upper", c)
+
   /** Script-aware pre-segmentation: Han / Hiragana / Katakana / Hangul
     * text carries no whitespace word boundaries, so a whitespace split
     * collapses a whole CJK line into ONE degenerate token — poisoning

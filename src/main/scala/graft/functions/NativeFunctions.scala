@@ -24,6 +24,9 @@ object NativeFunctions {
     fn("graft_simhash64", 1, classOf[SimHash])(a => SimHash(a(0))),
     fn("graft_fingerprint", 1, classOf[RollingFingerprint])(a => RollingFingerprint(a(0))),
     fn("graft_nfkc", 1, classOf[NfkcNormalize])(a => NfkcNormalize(a(0))),
+    // lower()/upper() without Spark's whole-Unicode title-case table
+    fn("graft_lower", 1, classOf[GraftLower])(a => GraftLower(a(0))),
+    fn("graft_upper", 1, classOf[GraftUpper])(a => GraftUpper(a(0))),
     // single-pass script-aware tokenization (the t-family's hot loop)
     fn("graft_tokens", 1, classOf[TokenizeText])(a => TokenizeText(a(0))),
     // classic Porter 1980 stemming (t26's per-token hot loop)

@@ -27,13 +27,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `\p{IsHan}` classes consult) is its OWN token — the algebra's
   *    `segmentScripts` space-padding followed by the split;
   *  - all other codepoints accumulate into maximal runs;
-  *  - each token is lowercased with `UTF8String.toLowerCase` — the very
-  *    function `lower()` evaluates, so per-token equals the algebra's
-  *    whole-string lowering: token boundaries are separators or CJK
-  *    codepoints, none of which are cased or case-ignorable, and Java's
-  *    only context-sensitive lowercase rule (Final_Sigma) looks exactly
-  *    at adjacent cased/case-ignorable runs, which never cross such a
-  *    boundary;
+  *  - each token is lowercased with [[CaseMap.lower]], the body of
+  *    `lower()` under Spark's default ICU case mappings (ICU's Unicode
+  *    tables, not the JDK's: they differ on cased letters added after
+  *    Unicode 13, e.g. U+2C2F and U+A7C0). Per-token equals the
+  *    algebra's whole-string lowering: token boundaries are separators
+  *    or CJK codepoints, none of which are cased, case-ignorable or
+  *    combining, and ICU's context-sensitive rules (Final_Sigma, and
+  *    the tr/az/lt locales' dot-above rules) look only at adjacent runs
+  *    of such characters, which never cross such a boundary;
   *  - empty runs never materialize (the algebra's `filter(_ =!= "")`;
   *    its `trim` was already subsumed by that filter).
   *
@@ -69,22 +71,22 @@ object Tokenize {
       val w = Character.charCount(cp)
       if (isSeparator(cp)) {
         if (start >= 0) {
-          out.add(UTF8String.fromString(s.substring(start, i)).toLowerCase)
+          out.add(CaseMap.lower(UTF8String.fromString(s.substring(start, i))))
           start = -1
         }
       } else if (isCjk(cp)) {
         if (start >= 0) {
-          out.add(UTF8String.fromString(s.substring(start, i)).toLowerCase)
+          out.add(CaseMap.lower(UTF8String.fromString(s.substring(start, i))))
           start = -1
         }
-        out.add(UTF8String.fromString(s.substring(i, i + w)).toLowerCase)
+        out.add(CaseMap.lower(UTF8String.fromString(s.substring(i, i + w))))
       } else if (start < 0) {
         start = i
       }
       i += w
     }
     if (start >= 0)
-      out.add(UTF8String.fromString(s.substring(start, n)).toLowerCase)
+      out.add(CaseMap.lower(UTF8String.fromString(s.substring(start, n))))
     // Object[] and Array[Any] share erasure — the cast is free and
     // avoids an element-by-element copy
     new GenericArrayData(out.toArray().asInstanceOf[Array[Any]])

@@ -147,6 +147,8 @@ object Unigram {
 
   /** Whole-document segmentation: the [[Bpe.segment]] word contract
     * (Locale.ROOT lower, trim, \s+ split), each word Viterbi-segmented.
+    * Locale.ROOT is host-independent; Spark's lower() is not (see
+    * [[Bpe.segment]]).
     * Called from generated code. */
   def segment(text: UTF8String, lp: java.util.HashMap[String, java.lang.Double],
               maxPieceLen: Int): ArrayData = {

@@ -136,6 +136,8 @@ object Wordpiece {
 
   /** Whole-document segmentation: the shared word contract
     * (Locale.ROOT lower, trim, \s+ split), each word greedily matched.
+    * Locale.ROOT is host-independent; Spark's lower() is not (see
+    * [[Bpe.segment]]).
     * Called from generated code. */
   def segment(text: UTF8String, vocab: java.util.HashSet[String],
               maxPieceLen: Int): ArrayData = {

@@ -894,8 +894,8 @@ object Curation {
                     maxPerDomain: Long = 100, seed: Long = 104729L): DataFrame = {
     def parse(df: DataFrame): DataFrame = {
       val url = col(urlCol)
-      val scheme = lower(regexp_extract(url, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-      val rawHost = lower(regexp_extract(url, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1))
+      val scheme = lowerCase(regexp_extract(url, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
+      val rawHost = lowerCase(regexp_extract(url, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1))
       val host = regexp_replace(rawHost, "^www\\.", "")
       df.select(col("doc_id"), scheme.as("scheme"), host.as("host"))
         .withColumn("_labels", split(col("host"), "\\."))
@@ -2261,7 +2261,7 @@ object Curation {
       lit("(?i)x-robots-tag: ([^\r\n]*)"), lit(1))
     val dirs = array_sort(array_distinct(filter(
       transform(flatten(transform(concat(mcs, hcs),
-        m => split(lower(m), ",\\s*"))), x => trim(x)), x => x =!= "")))
+        m => split(lowerCase(m), ",\\s*"))), x => trim(x)), x => x =!= "")))
     def has(d: String) = array_contains(dirs, d)
     documents.select(col("doc_id"),
       array_join(dirs, ",").as("directives"),

@@ -42,8 +42,8 @@ object Dedup {
     * the cheapest possible 100 TB plan. */
   def urlDedup(documents: DataFrame, urlCol: String = "url"): DataFrame = {
     val url = col(urlCol)
-    val scheme = lower(regexp_extract(url, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-    val rawHost = lower(regexp_extract(url, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1))
+    val scheme = lowerCase(regexp_extract(url, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
+    val rawHost = lowerCase(regexp_extract(url, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1))
     val host = regexp_replace(
       regexp_replace(rawHost, ":(80|443)$", ""), "^www\\.", "")
     val path = regexp_replace(

@@ -2560,7 +2560,7 @@ object Multimodal {
     df.select(
         col("doc_id"),
         len.as("byte_len"),
-        upper(hex(p.substr(lit(1), lit(2)))).as("magic_hex"),
+        hex(p.substr(lit(1), lit(2))).as("magic_hex"),
         when(col("_png") || col("_jpg"), lit("image"))
           .otherwise(element_at(array(lit("image"), lit("audio"), lit("video")),
             pmod(len, lit(3)) + 1)).as("media_type"),

@@ -284,7 +284,7 @@ object Relational {
   def stringFuncs(part: DataFrame): DataFrame =
     part.select(
         col("p_partkey"),
-        upper(col("p_name")).as("name_u"),
+        upperCase(col("p_name")).as("name_u"),
         expr("split_part(p_type, ' ', 1)").as("type_head"),
         regexp_replace(col("p_brand"), "[0-9]+", "#").as("brand_n"),
         length(col("p_name")).as("name_len"),

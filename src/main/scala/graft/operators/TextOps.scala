@@ -129,7 +129,7 @@ object TextOps {
     * the model artifact. Deterministic: count-desc, gram-asc tie-break. */
   def charNgramProfiles(documents: DataFrame, n: Int = 3,
                         topK: Int = 40): Map[String, Seq[String]] = {
-    val t = lower(col("text"))
+    val t = lowerCase(col("text"))
     val grams = documents
       .select(col("lang"), t.as("_t"))
       // guard: sequence(1, len-n+1) with len < n would COUNT DOWN
@@ -179,7 +179,7 @@ object TextOps {
     // measured 17.8 s for the key at sf0.1 vs < 1 s native
     val scored = documents
       .withColumn("_ng", call_function("graft_ngram_score",
-        lower(col("text")), lit(entries.toArray)))
+        lowerCase(col("text")), lit(entries.toArray)))
       .select(
         col("doc_id") +:
           langOrder.zipWithIndex.map { case (l, li) =>
@@ -247,7 +247,8 @@ object TextOps {
     documents.select(
         col("doc_id"),
         size(tokens(col("text"))).as("ws_tokens"),
-        size(expr("regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\\\\s]', 0)"))
+        size(regexp_extract_all(lowerCase(col("text")),
+          lit("[a-z]+|[0-9]|[^a-z0-9\\s]"), lit(0)))
           .as("re_tokens"),
         ceil(length(col("text")).cast("double") / 4).cast("long").as("approx_bpe"))
 
@@ -324,7 +325,7 @@ object TextOps {
     * cases (ﬁ, ＡＢＣ, ²) are spec-gated in EdgeCaseSpec. */
   def normalize(documents: DataFrame): DataFrame = {
     val norm = regexp_replace(
-      regexp_replace(lower(trim(call_function("graft_nfkc", col("text")))),
+      regexp_replace(lowerCase(trim(call_function("graft_nfkc", col("text")))),
         "[.,!?;:]", ""), "\\s+", " ")
     documents.select(col("doc_id"), norm.as("norm_text"),
         length(col("text")).as("n_chars_raw"), length(norm).as("n_chars_norm"))
@@ -1328,7 +1329,7 @@ object TextOps {
       x => concat(regexp_extract(x, monDatePat, 3), lit("-"),
         lpad(monthNames.zipWithIndex.foldLeft(lit("00")) {
           case (acc, (m, i)) =>
-            when(lower(regexp_extract(x, monDatePat, 1)) === m,
+            when(lowerCase(regexp_extract(x, monDatePat, 1)) === m,
               lit(f"${i + 1}%02d")).otherwise(acc)
         }, 2, "0"), lit("-"),
         lpad(regexp_extract(x, monDatePat, 2), 2, "0")))

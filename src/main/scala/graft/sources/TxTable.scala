@@ -1289,7 +1289,7 @@ object TxTable {
   /** Drops the blocks of a frame staged with `localCheckpoint` by the
     * same operation, once nothing reads them again: a session that runs
     * many commits would otherwise keep every commit's staging. */
-  private def release(staged: DataFrame): Unit =
+  private[graft] def release(staged: DataFrame): Unit =
     staged.queryExecution.analyzed match {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
         r.rdd.unpersist(blocking = false); ()

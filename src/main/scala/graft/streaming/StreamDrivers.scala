@@ -1106,12 +1106,17 @@ object StreamDrivers {
       require(scala.util.Try(
           TxTable.read(spark, root, Some(1L)).count()).isFailure,
         "a post-vacuum time travel to the revoked rows must fail loudly")
-      before.join(after, Seq("source"), "left")
+      val out = before.join(after, Seq("source"), "left")
         .select(col("source"), col("n_before"),
           (col("n_before") - coalesce(col("n_after"), lit(0L))).as("n_revoked"),
           coalesce(col("n_after"), lit(0L)).as("n_after"),
           coalesce(col("chars_after"), lit(0L)).as("chars_after"))
         .localCheckpoint()
+      // the eager checkpoint above has copied the result's blocks:
+      // nothing reads the staged aggregates again
+      TxTable.release(before)
+      TxTable.release(after)
+      out
     } finally deleteRecursively(dir)
   }
 

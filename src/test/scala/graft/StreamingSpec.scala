@@ -350,6 +350,17 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       .load(spark, SharedSpark.sfDir, "documents").count())
   }
 
+  test("st44 driver releases the aggregates it staged: only its result stays persisted") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = graft.streaming.StreamDrivers.erasureDvFileStream(spark, SharedSpark.sfDir)
+    val added = sc.getPersistentRDDs.keySet -- before
+    try {
+      assert(added.size <= 1, s"st44 left ${added.size} persisted RDDs")
+      assert(out.count() > 0)
+    } finally added.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
+  }
+
   test("st15 driver: streamed contamination gate equals the batch c12 result") {
     val streamed = SparkEntry.queries("st15_contamination_stream")(spark, SharedSpark.sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet

@@ -78,7 +78,8 @@ class UnicodeTokensSpec extends AnyFunSuite with SharedSpark {
       "ﬁﬂ ＡＢＣ",                          // compat chars pass through (no NFKC here)
       "𠀀𠀁 plain",     // CJK Ext-B (supplementary Han)
       "mixed日本語and한국어text",            // three scripts fused in one run
-      "ab\fc\rd"                      // VT / FF / CR separators
+      "ab\fc\rd",                     // VT / FF / CR separators
+      "\u2C2F \uA7C0x"                 // cased after Unicode 13: ICU lowers, JDK 17 does not
     ).zipWithIndex.map { case (t, i) => (i.toLong, t) }
     val df = nasty.toDF("id", "text")
     val both = df.select(
