@@ -488,10 +488,17 @@ object Dedup {
     * is evaluated on UNION bucket sizes, matching the full recompute
     * bit-for-bit (DedupSimilaritySpec asserts the equality). */
   def minhashIncremental(batch: DataFrame, corpusSigs: DataFrame,
-                         threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
+                         threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame =
     // batch staging mirrors minhashPairs: the signature table feeds the
     // banding AND both verify join-backs
-    val bs = minhashSignatures(batch).localCheckpoint()
+    minhashIncrementalFromSigs(minhashSignatures(batch).localCheckpoint(), corpusSigs,
+      threshold, maxBucket)
+
+  /** [[minhashIncremental]] over the batch's staged signature table `bs`,
+    * for a caller that keeps those signatures: the streaming ingest
+    * appends them to its corpus state and releases them after the round. */
+  private[graft] def minhashIncrementalFromSigs(bs: DataFrame, corpusSigs: DataFrame,
+      threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
     val batchBanded = bandedSigs(bs)
     val corpusBanded = bandedSigs(corpusSigs)
     val unionBanded = corpusBanded.union(batchBanded)

@@ -1,17 +1,21 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import graft.sources.TxTable
 import java.nio.file.{Files, Path}
 import java.sql.Timestamp
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
-/** End-to-end drivers for the STATEFUL streaming operators: file source →
-  * stateful transform → foreachBatch sink, returning the accumulated
-  * result as a batch DataFrame in the exact column shape of the batch
-  * twin — so the DuckDB oracle that gates the batch operator gates the
-  * streaming path too (keys st3/st4).
+/** End-to-end drivers for the streaming operators: file (or memory)
+  * source → stateful or per-batch transform → foreachBatch sink,
+  * returning the accumulated result as a batch DataFrame in the exact
+  * column shape of the batch twin — so the DuckDB oracle that gates the
+  * batch operator gates the streaming path too (keys st3–st44).
   *
   * These are the harness half of a production pipeline: in production the
   * foreachBatch body upserts each micro-batch into a table; here it
@@ -22,15 +26,32 @@ import java.sql.Timestamp
   * and a far-future sentinel file that advances the watermark to seal the
   * final sessions (the live-pipeline equivalent is simply the next day's
   * data arriving).
+  *
+  * Every driver runs inside ONE harness, [[withRun]] and its
+  * [[StreamRun]]. The harness owns the run's temp directory and its
+  * deletion; the state-partition cap ([[withStatePartitions]]); one
+  * [[MtimeStamper]], which writes each named source's staged frames in
+  * order — one coalesce(1) file per frame, stamped after each write —
+  * and stages files into a running query through `stageLive`; the
+  * maxFilesPerTrigger=1 file source, read with the first staged frame's
+  * schema; writeStream with its own checkpoint, output mode and
+  * foreachBatch; the drain (processAllAvailable, or a checked wait for
+  * an AvailableNow window); and stopping every query it started, in
+  * `finally`, before the directory under the queries is deleted — a
+  * failed micro-batch never leaves a query running over deleted files.
+  * A driver states only what it stages and in which order, what each
+  * micro-batch does, and how the result is assembled.
   */
 object StreamDrivers {
 
-  private val evSchema = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType)))
-
   private val SentinelUser = -999999L
+
+  /** Watermark delay (2 h) + session gap (30 min) + slack: a sentinel
+    * this far past the last event seals every real session. */
+  private val SessionSealSec = 7200L + 1800L + 60L
+
+  /** How long an AvailableNow window may take before the drain fails. */
+  private val DrainTimeoutMs = 120000L
 
   /** FileStreamSource orders newly-seen files by MODIFICATION TIME (path
     * string as the tie-break) — not write order. Two staged files landing
@@ -61,7 +82,6 @@ object StreamDrivers {
       n += 1; t
     }
     def stamp(dir: String): Unit = {
-      import scala.jdk.CollectionConverters._
       val d = java.nio.file.Paths.get(dir)
       val listing = Files.list(d)
       val files = try listing.iterator().asScala.toSeq finally listing.close()
@@ -73,7 +93,6 @@ object StreamDrivers {
     /** Stage `df` into the live-watched `dir` race-free (see class doc):
       * temp-sibling write → stamp → atomic move of the part files. */
     def stageLive(df: DataFrame, dir: String): Unit = {
-      import scala.jdk.CollectionConverters._
       val target = java.nio.file.Paths.get(dir)
       // sibling of the watched dir ⇒ same filesystem ⇒ ATOMIC_MOVE holds
       val tmp = Files.createTempDirectory(target.getParent, "stage-")
@@ -113,10 +132,133 @@ object StreamDrivers {
     try body finally spark.conf.set(key, prev)
   }
 
-  /** Stage the events table as a multi-file parquet directory (so
-    * maxFilesPerTrigger=1 yields real multi-batch execution), run the
-    * stateful stream over it, optionally append a sentinel file, drain,
-    * clean up.
+  private def deleteRecursively(p: Path): Unit = {
+    // Files.walk holds directory handles open until the stream is closed
+    // — materialize the listing under try/finally or every driver run
+    // leaks a handle
+    val walk = Files.walk(p)
+    val files = try walk.iterator().asScala.toSeq.reverse finally walk.close()
+    files.foreach(f => Files.deleteIfExists(f))
+  }
+
+  /** One streaming run: its directory, its staged sources and the
+    * queries it started (see the object doc). Only [[withRun]] builds
+    * one, and it stops the queries and deletes the directory. */
+  private[graft] final class StreamRun private[StreamDrivers] (
+      val spark: SparkSession, val dir: Path) {
+    private val stamper = new MtimeStamper
+    private val schemas = scala.collection.mutable.Map.empty[String, StructType]
+    private val queries = ArrayBuffer.empty[StreamingQuery]
+
+    /** A path inside the run's directory (a table root, a state dir). */
+    def path(name: String): String = dir.resolve(name).toString
+
+    /** Write `frames` as the next files of source `name`, in this order:
+      * one coalesce(1) file per frame, each stamped before the next is
+      * written, so the source serves one frame per micro-batch. */
+    def stage(name: String, frames: DataFrame*): Unit = frames.foreach { f =>
+      f.coalesce(1).write.mode(if (schemas.contains(name)) "append" else "overwrite")
+        .parquet(path(name))
+      schemas.getOrElseUpdate(name, f.schema)
+      stamper.stamp(path(name))
+    }
+
+    /** Stage `df` into source `name` while its query runs
+      * ([[MtimeStamper.stageLive]]). */
+    def stageLive(name: String, df: DataFrame): Unit = stamper.stageLive(df, path(name))
+
+    /** The file stream over source `name`: one staged file per
+      * micro-batch, read with the first staged frame's schema. */
+    def source(name: String): DataFrame =
+      spark.readStream.schema(schemas(name))
+        .option("maxFilesPerTrigger", "1").parquet(path(name))
+
+    /** Start `out` into `onBatch` under a fresh checkpoint, or under
+      * `checkpoint` when the caller resumes one across queries. */
+    def start[T](out: Dataset[T], mode: String = "append", checkpoint: String = "",
+                 trigger: Trigger = Trigger.ProcessingTime(0L))(
+        onBatch: (Dataset[T], Long) => Unit): StreamingQuery = {
+      val chk = if (checkpoint.nonEmpty) checkpoint else s"chk${queries.size}"
+      val q = out.writeStream
+        .outputMode(mode)
+        .option("checkpointLocation", path(chk))
+        .trigger(trigger)
+        .foreachBatch(onBatch)
+        .start()
+      queries += q
+      q
+    }
+
+    /** [[start]] with a sink that keeps every emitted row in arrival
+      * order; the buffer is complete once the run has drained. */
+    def collecting[T](out: Dataset[T], mode: String = "append"): ArrayBuffer[T] = {
+      val buf = ArrayBuffer.empty[T]
+      start(out, mode) { (b, _) =>
+        val rows = b.collect()
+        buf.synchronized { buf ++= rows }
+      }
+      buf
+    }
+
+    /** Return once every query has processed all its available input,
+      * including a stateful query's no-data batches; a query that died
+      * rethrows its failure here. */
+    def drain(): Unit = queries.foreach(_.processAllAvailable())
+
+    /** Stop every query this run started. */
+    def stop(): Unit = queries.foreach(_.stop())
+
+    def drainAndStop(): Unit = try drain() finally stop()
+
+    /** Wait for an AvailableNow query to serve what is available and
+      * terminate, then stop the run's queries. A timeout fails loudly
+      * naming `what`: the late query would otherwise keep committing to
+      * its sink while the caller goes on with a partial window. */
+    def drainAvailableNow(q: StreamingQuery, what: String): Unit =
+      try require(q.awaitTermination(DrainTimeoutMs),
+        s"$what: the AvailableNow drain did not finish within ${DrainTimeoutMs / 1000} s")
+      finally stop()
+  }
+
+  /** Run `body` over a fresh [[StreamRun]] under a state-partition cap
+    * of `statePartitions`: every query the body started is stopped in
+    * `finally`, then the run's directory is deleted. */
+  private[graft] def withRun[A](spark: SparkSession, label: String,
+                                statePartitions: Int = 8)(body: StreamRun => A): A = {
+    val dir = Files.createTempDirectory(s"graft-stream-$label")
+    try withStatePartitions(spark, statePartitions) {
+      val run = new StreamRun(spark, dir)
+      try body(run) finally run.stop()
+    } finally deleteRecursively(dir)
+  }
+
+  /** Swap in the next round of a probe-and-append state. `next` is
+    * already checkpointed (eagerly), so the round it replaces and the
+    * micro-batch's own staged frames in `spent` are read by nothing any
+    * more and are released. */
+  private def nextRound(next: DataFrame, spent: DataFrame*): DataFrame = {
+    spent.foreach(TxTable.release)
+    next
+  }
+
+  private def sentinel(lastMs: Long, offsetSec: Long): StreamOps.Ev =
+    StreamOps.Ev(-1L, new Timestamp(lastMs + offsetSec * 1000), SentinelUser, "view", 0.0)
+
+  /** The events table split AT THE TIME MIDPOINT (see
+    * [[runOverEventFiles]]), and the last event's epoch millis. */
+  private def eventHalves(spark: SparkSession,
+                          sfDir: String): (DataFrame, DataFrame, Long) = {
+    val evs = graft.Tables.load(spark, sfDir, "events")
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+    val bounds = evs.agg(min(col("ts")), max(col("ts"))).head()
+    val lastMs = bounds.getTimestamp(1).getTime
+    val mid = new Timestamp((bounds.getTimestamp(0).getTime + lastMs) / 2)
+    (evs.filter(col("ts") <= mid), evs.filter(col("ts") > mid), lastMs)
+  }
+
+  /** Stage the events table as a multi-file source (so
+    * maxFilesPerTrigger=1 yields real multi-batch execution), start the
+    * stream over it, optionally append a sentinel file, drain and stop.
     *
     * The halves are split AT THE TIME MIDPOINT, written in time
     * order — not an arbitrary row split: batch 1 advances the watermark
@@ -136,43 +278,21 @@ object StreamDrivers {
     * seconds past the last real event, advancing the watermark past
     * every seal point (watermark delay + window/gap + slack); None for
     * operators whose emission doesn't wait on the watermark. */
-  private def runOverEventFiles[T](spark: SparkSession, sfDir: String,
+  private def runOverEventFiles[B](run: StreamRun, sfDir: String,
                                    sentinelOffsetSec: Option[Long],
-                                   copiesPerHalf: Int = 1)(
-      start: (DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val dir = Files.createTempDirectory("graft-stream-drv")
-    val in = s"$dir/in"; val chk = s"$dir/chk"
-    try withStatePartitions(spark, 8) {
-      val evs = graft.Tables.load(spark, sfDir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      val bounds = evs.agg(min(col("ts")), max(col("ts"))).head()
-      val lastMs = bounds.getTimestamp(1).getTime
-      val mid = new Timestamp((bounds.getTimestamp(0).getTime + lastMs) / 2)
-      val halves = Seq(evs.filter(col("ts") <= mid), evs.filter(col("ts") > mid))
-      var first = true
-      val stamper = new MtimeStamper
-      halves.foreach { h =>
-        (1 to copiesPerHalf).foreach { _ =>
-          h.coalesce(1).write.mode(if (first) "overwrite" else "append").parquet(in)
-          first = false
-          stamper.stamp(in)
-        }
-      }
-      val src = spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = start(src, chk)
-      q.processAllAvailable()
-      sentinelOffsetSec.foreach { off =>
-        import spark.implicits._
-        // staged against the LIVE query → must go through the race-free
-        // temp-stamp-move path, never a direct write + after-the-fact stamp
-        stamper.stageLive(
-          Seq(StreamOps.Ev(-1L, new Timestamp(lastMs + off * 1000),
-            SentinelUser, "view", 0.0)).toDF(), in)
-        q.processAllAvailable()
-      }
-      q.stop()
-    } finally deleteRecursively(dir)
+                                   copiesPerHalf: Int = 1)(start: DataFrame => B): B = {
+    import run.spark.implicits._
+    val (first, second, lastMs) = eventHalves(run.spark, sfDir)
+    run.stage("in", Seq(first, second).flatMap(h => Seq.fill(copiesPerHalf)(h)): _*)
+    val out = start(run.source("in"))
+    sentinelOffsetSec.foreach { off =>
+      run.drain()
+      // staged against the LIVE query → must go through the race-free
+      // temp-stamp-move path, never a direct write + after-the-fact stamp
+      run.stageLive("in", Seq(sentinel(lastMs, off)).toDF())
+    }
+    run.drainAndStop()
+    out
   }
 
   /** [[runOverEventFiles]]'s source-agnostic twin: the same
@@ -182,58 +302,37 @@ object StreamDrivers {
     * stateful gate logic composes onto a non-file source unchanged: a
     * StreamOps transform only ever sees an unbounded Dataset, and the
     * micro-batch boundaries the file twin drew with maxFilesPerTrigger
-    * are drawn here with addData + processAllAvailable. The per-half
-    * driver-side collect is harness shape (the halves feed a local
-    * in-memory source by definition); a production deployment points
-    * readStream at the broker and never materializes anything. */
-  private def runOverEventMemory(spark: SparkSession, sfDir: String,
-                                 sentinelOffsetSec: Option[Long])(
-      start: (DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val dir = Files.createTempDirectory("graft-stream-mem")
-    try withStatePartitions(spark, 8) {
-      import spark.implicits._
-      val evs = graft.Tables.load(spark, sfDir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-        .as[StreamOps.Ev]
-      val bounds = evs.toDF().agg(min(col("ts")), max(col("ts"))).head()
-      val lastMs = bounds.getTimestamp(1).getTime
-      val mid = new Timestamp((bounds.getTimestamp(0).getTime + lastMs) / 2)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[StreamOps.Ev](spark.sqlContext.sparkSession)
-      val q = start(ms.toDF(), s"$dir/chk")
-      // same time-ordered arrival contract as the file twin: batch 2's
-      // rows all sit above the watermark batch 1 established
-      Seq(evs.filter(col("ts") <= mid), evs.filter(col("ts") > mid))
-        .foreach { h => ms.addData(h.collect().toSeq); q.processAllAvailable() }
-      sentinelOffsetSec.foreach { off =>
-        ms.addData(Seq(StreamOps.Ev(-1L, new Timestamp(lastMs + off * 1000),
-          SentinelUser, "view", 0.0)))
-        q.processAllAvailable()
-      }
-      q.stop()
-    } finally deleteRecursively(dir)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    // Files.walk holds directory handles open until the stream is closed
-    // — materialize the listing under try/finally or every driver run
-    // leaks a handle
-    val walk = Files.walk(p)
-    val files = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-    files.foreach(f => Files.deleteIfExists(f))
+    * are drawn here with addData + a drain. The per-half driver-side
+    * collect is harness shape (the halves feed a local in-memory source
+    * by definition); a production deployment points readStream at the
+    * broker and never materializes anything. */
+  private def runOverEventMemory[B](run: StreamRun, sfDir: String,
+                                    sentinelOffsetSec: Option[Long])(start: DataFrame => B): B = {
+    import run.spark.implicits._
+    val (first, second, lastMs) = eventHalves(run.spark, sfDir)
+    val ms = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[StreamOps.Ev](run.spark.sqlContext.sparkSession)
+    val out = start(ms.toDF())
+    // same time-ordered arrival contract as the file twin: batch 2's
+    // rows all sit above the watermark batch 1 established
+    ms.addData(first.as[StreamOps.Ev].collect().toSeq)
+    run.drain()
+    ms.addData(second.as[StreamOps.Ev].collect().toSeq)
+    sentinelOffsetSec.foreach { off => run.drain(); ms.addData(Seq(sentinel(lastMs, off))) }
+    run.drainAndStop()
+    out
   }
 
   /** Shared drive for the STATELESS document-gate streams (st13/st15/
-    * st16/st17): stage `docs` as two doc_id-half parquet files
+    * st16/st17 and kin): stage `docs` as two halves by `splitBy`
     * (maxFilesPerTrigger=1 ⇒ two genuine micro-batches, mtime-stamped so
     * arrival order is pinned), score each micro-batch independently, and
     * return the accumulated union. Each caller's scorer is per-document
     * pure with respect to STATIC state only (a persisted model artifact,
     * a reference slice, a rule algebra), so the union of doc-disjoint
     * batch results equals the batch run — the caller's batch oracle
-    * gates the streamed union verbatim, and no watermark is needed.
+    * gates the streamed union verbatim, and no watermark is needed. With
+    * no state store to size, the session's partition count stands.
     *
     * Two hook points, because the gates come in two shapes:
     * `onStream` applies to the streaming DataFrame itself (pure
@@ -250,52 +349,33 @@ object StreamDrivers {
       onBatch: DataFrame => DataFrame = identity,
       // two-half split; override when `docs` is single-parity (st21
       // streams only even ids, which the default would put in one half)
-      splitBy: org.apache.spark.sql.Column = pmod(col("doc_id"), lit(2))): DataFrame = {
-    val dir = Files.createTempDirectory(s"graft-stream-$prefix")
-    val in = s"$dir/in"; val chk = s"$dir/chk"
-    try {
-      val stamper = new MtimeStamper
-      var first = true
-      Seq(docs.filter(splitBy === 0), docs.filter(splitBy === 1)).foreach { h =>
-        h.coalesce(1).write.mode(if (first) "overwrite" else "append").parquet(in)
-        first = false
-        stamper.stamp(in)
-      }
-      val src = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+      splitBy: org.apache.spark.sql.Column = pmod(col("doc_id"), lit(2))): DataFrame =
+    withRun(spark, prefix, statePartitions = Int.MaxValue) { run =>
+      run.stage("in", docs.filter(splitBy === 0), docs.filter(splitBy === 1))
+      val buf = ArrayBuffer.empty[Row]
       var batches = 0
       var outSchema: StructType = null
-      val q = onStream(src).writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val scored = onBatch(b.toDF())
-          val rows = scored.collect()
-          buf.synchronized {
-            buf ++= rows
-            if (rows.nonEmpty) batches += 1
-            outSchema = scored.schema
-          }; ()
+      run.start(onStream(run.source("in"))) { (b, _) =>
+        val scored = onBatch(b.toDF())
+        val rows = scored.collect()
+        buf.synchronized {
+          buf ++= rows
+          if (rows.nonEmpty) batches += 1
+          outSchema = scored.schema
         }
-        .start()
-      // stop in finally: a failed micro-batch must not leave the query
-      // running while the outer finally deletes its dirs from under it
-      try q.processAllAvailable() finally q.stop()
+      }
+      run.drainAndStop()
       require(batches >= 2, s"expected >=2 data micro-batches, saw $batches")
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(buf.toList.asJava, outSchema)
-    } finally deleteRecursively(dir)
-  }
+      spark.createDataFrame(buf.asJava, outSchema)
+    }
 
   /** q15's result through the streaming path: file source →
     * StreamOps.sessionize (flatMapGroupsWithState) → foreachBatch
     * accumulation → per-user session_id numbering. Column contract ==
     * TimeJoins.sessionize == the q15 oracle. */
   def sessionizeFileStream(spark: SparkSession, sfDir: String): DataFrame =
-    sessionizeCollect(spark)(
-      runOverEventFiles(spark, sfDir,
-        sentinelOffsetSec = Some(7200L + 1800L + 60L))(_))
+    sessionsOf(spark, withRun(spark, "sessionize") { run =>
+      runOverEventFiles(run, sfDir, Some(SessionSealSec))(sessionize(run)) })
 
   /** The st3 sessionizer driven through the MEMORY (broker-shaped)
     * source instead of files — the source-agnosticism proof the st*
@@ -304,9 +384,30 @@ object StreamDrivers {
     * [[sessionizeFileStream]]'s; only the arrival harness differs.
     * Gated on the same q15 oracle (st31). */
   def sessionizeMemoryStream(spark: SparkSession, sfDir: String): DataFrame =
-    sessionizeCollect(spark)(
-      runOverEventMemory(spark, sfDir,
-        sentinelOffsetSec = Some(7200L + 1800L + 60L))(_))
+    sessionsOf(spark, withRun(spark, "mem") { run =>
+      runOverEventMemory(run, sfDir, Some(SessionSealSec))(sessionize(run)) })
+
+  /** The sessionize gate shape shared by the file and memory drivers:
+    * stateful transform → foreachBatch accumulation, then
+    * [[sessionsOf]]'s per-user session_id numbering. The source never
+    * appears here — the caller hands in an unbounded DataFrame of
+    * whatever arrival shape it implements. */
+  private def sessionize(run: StreamRun)(src: DataFrame): ArrayBuffer[StreamOps.SessionOut] = {
+    import run.spark.implicits._
+    run.collecting(StreamOps.sessionize(run.spark, src.as[StreamOps.Ev]))
+  }
+
+  /** Column contract == TimeJoins.sessionize == the q15 oracle. */
+  private def sessionsOf(spark: SparkSession,
+                         sessions: ArrayBuffer[StreamOps.SessionOut]): DataFrame = {
+    import spark.implicits._
+    val w = Window.partitionBy(col("user_id")).orderBy(col("session_start"))
+    sessions.toSeq.filter(_.user_id != SentinelUser).toDF()
+      .withColumn("session_id", row_number().over(w).cast("long"))
+      .select(col("user_id"), col("session_id"), col("session_start"),
+        col("n_events").cast("long").as("n_events"), col("sum_value"))
+      .orderBy(col("user_id"), col("session_id"))
+  }
 
   /** q78's NATIVE session_window aggregation driven through a
     * WATERMARKED stream (st39) — the transfer q78's scaladoc claims,
@@ -325,63 +426,23 @@ object StreamDrivers {
     * Gated on the q78 oracle verbatim (no session_id in the native
     * column contract). */
   def sessionNativeStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+    def tsec(events: DataFrame) = events.select(col("user_id"), col("value"),
+      date_trunc("second", col("ts")).as("tsec"))
     // the output schema comes from the BATCH form of the same operator
     // over a zero-row projection (session_window runs in batch too) —
     // never captured from the first non-empty micro-batch, which would
     // NPE the final createDataFrame if the stream emitted zero batches
     // (r15 ADVICE)
     val outSchema: StructType = graft.operators.TimeJoins.sessionWindowAgg(
-      graft.Tables.load(spark, sfDir, "events")
-        .select(col("user_id"), col("value"),
-          date_trunc("second", col("ts")).as("tsec"))
-        .limit(0)).schema
-    runOverEventFiles(spark, sfDir,
-        sentinelOffsetSec = Some(7200L + 1800L + 60L)) { (src, chk) =>
-      graft.operators.TimeJoins.sessionWindowAgg(
-          src.select(col("user_id"), col("value"),
-              date_trunc("second", col("ts")).as("tsec"))
-            .withWatermark("tsec", "2 hours"))
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val rows = b.collect()
-          buf.synchronized { buf ++= rows }; ()
-        }
-        .start()
+      tsec(graft.Tables.load(spark, sfDir, "events")).limit(0)).schema
+    val rows = withRun(spark, "sessionwin") { run =>
+      runOverEventFiles(run, sfDir, Some(SessionSealSec))(src => run.collecting(
+        graft.operators.TimeJoins.sessionWindowAgg(
+          tsec(src).withWatermark("tsec", "2 hours"))))
     }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(buf.toList.asJava, outSchema)
+    spark.createDataFrame(rows.asJava, outSchema)
       .filter(col("user_id") =!= SentinelUser)
       .orderBy(col("user_id"), col("session_start"))
-  }
-
-  /** The sessionize gate shape shared by the file and memory drivers:
-    * stateful transform → foreachBatch accumulation → per-user
-    * session_id numbering. Column contract == TimeJoins.sessionize ==
-    * the q15 oracle. The source never appears here — `runner` hands in
-    * an unbounded DataFrame of whatever arrival shape it implements. */
-  private def sessionizeCollect(spark: SparkSession)(
-      runner: ((DataFrame, String) =>
-        org.apache.spark.sql.streaming.StreamingQuery) => Unit): DataFrame = {
-    import spark.implicits._
-    val buf = scala.collection.mutable.ArrayBuffer.empty[StreamOps.SessionOut]
-    runner { (src, chk) =>
-      StreamOps.sessionize(spark, src.as[StreamOps.Ev]).writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[StreamOps.SessionOut], _: Long) =>
-          val rows = b.collect(); buf.synchronized { buf ++= rows }; ()
-        }
-        .start()
-    }
-    val w = Window.partitionBy(col("user_id")).orderBy(col("session_start"))
-    buf.toSeq.filter(_.user_id != SentinelUser).toDF()
-      .withColumn("session_id", row_number().over(w).cast("long"))
-      .select(col("user_id"), col("session_id"), col("session_start"),
-        col("n_events").cast("long").as("n_events"), col("sum_value"))
-      .orderBy(col("user_id"), col("session_id"))
   }
 
   /** The stream-stream interval join driven end-to-end: purchases and
@@ -404,7 +465,7 @@ object StreamDrivers {
     * drains that path: the global watermark is the minimum across
     * sources (so both need the row), and once a batch has read both,
     * the advance runs the flush batch that materializes the evicted
-    * null-padded rows. This is NOT a race with processAllAvailable:
+    * null-padded rows. This is NOT a race with the drain:
     * MicroBatchExecution only signals no-new-data when
     * `lastExecution.shouldRunAnotherBatch(watermark)` is false — a
     * stateful join whose watermark advanced REQUIRES the flush batch,
@@ -417,33 +478,22 @@ object StreamDrivers {
   def intervalJoinOuterFileStream(spark: SparkSession, sfDir: String): DataFrame =
     runIntervalJoin(spark, sfDir, outer = true)
 
+  // ONE state partition: a stream-stream join keeps FOUR state stores
+  // per partition (keyWithIndex + keyToNumValues per side), and each
+  // store pays a per-batch delta-commit regardless of rows — measured
+  // addBatch ~1.2 s/batch even for 0-row watermark batches at 8
+  // partitions, and the drain is 9 batches deep. Data volume is 20k
+  // rows/batch at harness scale, so one partition loses nothing; a
+  // production deployment sizes this to keyspace ÷ executor memory
+  // (see withStatePartitions doc).
   private def runIntervalJoin(spark: SparkSession, sfDir: String,
                               outer: Boolean): DataFrame = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-ssjoin")
-    // ONE state partition: a stream-stream join keeps FOUR state stores
-    // per partition (keyWithIndex + keyToNumValues per side), and each
-    // store pays a per-batch delta-commit regardless of rows — measured
-    // addBatch ~1.2 s/batch even for 0-row watermark batches at 8
-    // partitions, and the drain is 9 batches deep. Data volume is 20k
-    // rows/batch at harness scale, so one partition loses nothing; a
-    // production deployment sizes this to keyspace ÷ executor memory
-    // (see withStatePartitions doc).
-    try withStatePartitions(spark, 1) {
-      val evs = graft.Tables.load(spark, sfDir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      val bounds = evs.agg(min(col("ts")), max(col("ts"))).head()
-      val lastMs = bounds.getTimestamp(1).getTime
-      val mid = new Timestamp((bounds.getTimestamp(0).getTime + lastMs) / 2)
-      def stage(types: String, sentinelId: Long): (String, MtimeStamper) = {
-        val p = s"$dir/$types"
-        val side = evs.filter(col("event_type") === types)
-        val stamper = new MtimeStamper
-        side.filter(col("ts") <= mid).coalesce(1).write.mode("overwrite").parquet(p)
-        stamper.stamp(p)
-        side.filter(col("ts") > mid).coalesce(1).write.mode("append").parquet(p)
-        stamper.stamp(p)
-        if (outer) {
+    val rows = withRun(spark, "ssjoin", statePartitions = 1) { run =>
+      val (first, second, lastMs) = eventHalves(spark, sfDir)
+      def side(types: String, sentinelId: Long): DataFrame = {
+        run.stage(types, Seq(first, second).map(_.filter(col("event_type") === types)): _*)
+        if (outer)
           // the drain sentinel PRE-STAGED as the source's last file
           // (mtime-ordered after both data files, so maxFilesPerTrigger=1
           // still forces the data rows through separate batches first):
@@ -452,50 +502,24 @@ object StreamDrivers {
           // flushes the null-padded matches — no live-staged drain rounds
           // needed (measured: 9 batches → 5-6). 4 h clears every eviction
           // point: 1 h join interval + 2 h watermark delay + slack.
-          Seq(StreamOps.Ev(sentinelId,
-            new Timestamp(lastMs + 4L * 3600 * 1000), SentinelUser, "sentinel", 0.0))
-            .toDF().coalesce(1).write.mode("append").parquet(p)
-          stamper.stamp(p)
-        }
-        (p, stamper)
+          run.stage(types, Seq(StreamOps.Ev(sentinelId,
+            new Timestamp(lastMs + 4L * 3600 * 1000), SentinelUser, "sentinel", 0.0)).toDF())
+        run.source(types)
       }
-      val (pDir, _) = stage("purchase", -1L)
-      val (sDir, _) = stage("signup", -2L)
-      def src(p: String) = spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "1").parquet(p)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[Long], Long)]
-      val joinType = if (outer) "leftOuter" else "inner"
-      val q = StreamOps.intervalJoin(src(pDir), src(sDir), joinType = joinType).writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$dir/chk")
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val rows = b.collect().map(r => (r.getLong(0),
-            if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getLong(2)))
-          buf.synchronized { buf ++= rows }; ()
-        }
-        .start()
-      q.processAllAvailable()
-      // drain-cost audit hook: batch count + per-batch wall time
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-        q.recentProgress.foreach(p => System.err.println(
-          s"[st-join] batch=${p.batchId} rows=${p.numInputRows} ms=${p.durationMs}"))
-      q.stop()
-      buf.toSeq.filter(_._3 != SentinelUser).toDF("l_id", "r_id", "user_id")
-        // asc_nulls_first == the oracle's ORDER BY 1, 2 NULLS FIRST
-        .orderBy(col("l_id"), col("r_id"))
-    } finally deleteRecursively(dir)
+      val purchases = side("purchase", -1L)
+      val signups = side("signup", -2L)
+      val out = run.collecting(StreamOps.intervalJoin(purchases, signups,
+        joinType = if (outer) "leftOuter" else "inner"))
+      run.drainAndStop()
+      out
+    }
+    rows.toSeq.map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)),
+        r.getLong(2)))
+      .filter(_._3 != SentinelUser).toDF("l_id", "r_id", "user_id")
+      // asc_nulls_first == the oracle's ORDER BY 1, 2 NULLS FIRST
+      .orderBy(col("l_id"), col("r_id"))
   }
 
-  /** st1's result through the streaming path: file source →
-    * StreamOps.tumblingCounts (watermarked windowed agg, append mode) →
-    * foreachBatch accumulation. Append mode emits a window only once the
-    * watermark passes its END, so the far-future sentinel (3 h + slack
-    * past the last event: 2 h watermark delay + 1 h window length) seals
-    * every real window; the sentinel's own window is never sealed and
-    * never emitted, so no output filtering is needed. Windows straddling
-    * the file midpoint aggregate across micro-batches in state — the
-    * cross-batch case the gate exists to pin. Column contract ==
-    * TimeJoins.tumblingWindow == the st1 oracle. */
   /** st35: late-data ACCOUNTING — the observability contract every
     * production watermarked stream publishes: how many rows the stream
     * counted per window vs batch ground truth, and how many the
@@ -515,67 +539,53 @@ object StreamDrivers {
     * data-loss metric a production stream alerts on. */
   def lateAuditFileStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-late")
-    val in = s"$dir/in"; val chk = s"$dir/chk"
-    try withStatePartitions(spark, 8) {
-      val evs = graft.Tables.load(spark, sfDir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
+    val evs = graft.Tables.load(spark, sfDir, "events")
+      .select(col("event_id"), col("ts"), col("user_id"),
+        col("event_type"), col("value"))
+    val rows = withRun(spark, "late") { run =>
       val lastMs = evs.agg(max(col("ts"))).head().getTimestamp(0).getTime
-      val stamper = new MtimeStamper
-      evs.filter(pmod(col("event_id"), lit(2)) === 0)
-        .coalesce(1).write.mode("overwrite").parquet(in)
-      stamper.stamp(in)
-      val src = spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      val q = StreamOps.lateAuditCounts(src).writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val rows = b.collect().map(r => (r.getString(0), r.getLong(1)))
-          buf.synchronized { buf ++= rows }; ()
-        }
-        .start()
-      q.processAllAvailable()
+      run.stage("in", evs.filter(pmod(col("event_id"), lit(2)) === 0))
+      val out = run.collecting(StreamOps.lateAuditCounts(run.source("in")))
+      run.drain()
       // the sealing marker: 1 window + watermark delay + slack past the
       // last event — its commit finalizes every real window
-      stamper.stageLive(
-        Seq(StreamOps.Ev(-1L, new Timestamp(lastMs + (3600 + 1800 + 60) * 1000L),
-          SentinelUser, "view", 0.0)).toDF(), in)
-      q.processAllAvailable()
+      run.stageLive("in", Seq(sentinel(lastMs, 3600L + 1800 + 60)).toDF())
+      run.drain()
       // the late batch: every odd row's window is already evicted
-      stamper.stageLive(
-        evs.filter(pmod(col("event_id"), lit(2)) === 1), in)
-      q.processAllAvailable()
-      q.stop()
-      val streamed = buf.toSeq.toDF("window_start", "n_stream")
-      val totals = evs
-        .groupBy(date_format(window(col("ts"), "1 hour").getField("start"),
-          "yyyy-MM-dd HH:mm:ss").as("window_start"))
-        .agg(count(lit(1)).as("n_total"))
-      streamed.join(totals, "window_start")
-        .select(col("window_start"), col("n_stream"), col("n_total"),
-          (col("n_total") - col("n_stream")).as("n_dropped"))
-        .orderBy(col("window_start"))
-    } finally deleteRecursively(dir)
+      run.stageLive("in", evs.filter(pmod(col("event_id"), lit(2)) === 1))
+      run.drainAndStop()
+      out
+    }
+    val streamed = rows.toSeq.map(r => (r.getString(0), r.getLong(1)))
+      .toDF("window_start", "n_stream")
+    val totals = evs
+      .groupBy(date_format(window(col("ts"), "1 hour").getField("start"),
+        "yyyy-MM-dd HH:mm:ss").as("window_start"))
+      .agg(count(lit(1)).as("n_total"))
+    streamed.join(totals, "window_start")
+      .select(col("window_start"), col("n_stream"), col("n_total"),
+        (col("n_total") - col("n_stream")).as("n_dropped"))
+      .orderBy(col("window_start"))
   }
 
+  /** st1's result through the streaming path: file source →
+    * StreamOps.tumblingCounts (watermarked windowed agg, append mode) →
+    * foreachBatch accumulation. Append mode emits a window only once the
+    * watermark passes its END, so the far-future sentinel (3 h + slack
+    * past the last event: 2 h watermark delay + 1 h window length) seals
+    * every real window; the sentinel's own window is never sealed and
+    * never emitted, so no output filtering is needed. Windows straddling
+    * the file midpoint aggregate across micro-batches in state — the
+    * cross-batch case the gate exists to pin. Column contract ==
+    * TimeJoins.tumblingWindow == the st1 oracle. */
   def tumblingFileStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Double)]
-    runOverEventFiles(spark, sfDir, sentinelOffsetSec = Some(3L * 3600 + 60)) { (src, chk) =>
-      StreamOps.tumblingCounts(src).writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val rows = b.collect().map(r =>
-            (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-          buf.synchronized { buf ++= rows }; ()
-        }
-        .start()
+    val rows = withRun(spark, "tumbling") { run =>
+      runOverEventFiles(run, sfDir, Some(3L * 3600 + 60))(src =>
+        run.collecting(StreamOps.tumblingCounts(src)))
     }
-    buf.toSeq.toDF("window_start", "event_type", "n", "sum_value")
+    rows.toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+      .toDF("window_start", "event_type", "n", "sum_value")
       .orderBy(col("window_start"), col("event_type"))
   }
 
@@ -592,20 +602,12 @@ object StreamDrivers {
     * (sketch estimates are engine-specific). */
   def sketchRollupFileStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, java.sql.Date, Array[Byte])]
-    runOverEventFiles(spark, sfDir, sentinelOffsetSec = Some(24L * 3600 + 2 * 3600 + 60)) {
-      (src, chk) =>
-        StreamOps.dailyUserSketchStream(src).writeStream
-          .outputMode("append")
-          .option("checkpointLocation", chk)
-          .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val rows = b.collect().map(r =>
-              (r.getString(0), r.getDate(1), r.getAs[Array[Byte]](2)))
-            buf.synchronized { buf ++= rows }; ()
-          }
-          .start()
+    val rows = withRun(spark, "sketch") { run =>
+      runOverEventFiles(run, sfDir, Some(24L * 3600 + 2 * 3600 + 60))(src =>
+        run.collecting(StreamOps.dailyUserSketchStream(src)))
     }
-    buf.toSeq.toDF("event_type", "day", "sk")
+    rows.toSeq.map(r => (r.getString(0), r.getDate(1), r.getAs[Array[Byte]](2)))
+      .toDF("event_type", "day", "sk")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"),
         hll_sketch_estimate(hll_union_agg(col("sk"), lit(false))).as("est_users"))
@@ -638,111 +640,92 @@ object StreamDrivers {
     * or the new one (flip happened — the txn-style no-op is unnecessary
     * because re-merging identical hashes is a no-op by algebra). */
   def kmvStateStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val stateDir = Files.createTempDirectory("graft-stream-kmv")
-    val pointer = stateDir.resolve("_current")
-    def currentState(): Option[String] =
-      if (Files.exists(pointer))
-        Some(stateDir.resolve(new String(Files.readAllBytes(pointer),
-          java.nio.charset.StandardCharsets.UTF_8).trim).toString)
-      else None
-    try {
-      runOverEventFiles(spark, sfDir, sentinelOffsetSec = None) { (src, chk) =>
-        src.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", chk)
-          .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            val batchSk = graft.operators.Curation.kmvSketch(
-              b.toDF().select(col("event_type"), col("user_id")),
-              "event_type", "user_id")
-            val merged = currentState() match {
-              case Some(prev) => graft.operators.Curation.kmvMerge(
-                spark.read.parquet(prev), batchSk).localCheckpoint()
-              case None => batchSk.localCheckpoint()
-            }
-            val next = s"sk-v$bid"
-            merged.coalesce(1).write.mode("overwrite")
-              .parquet(stateDir.resolve(next).toString)
-            val tmp = Files.createTempFile(stateDir, "_current", ".tmp")
-            Files.write(tmp,
-              next.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            Files.move(tmp, pointer,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING); ()
+    val state = withRun(spark, "kmv") { run =>
+      val stateDir = java.nio.file.Paths.get(run.path("kmv"))
+      val pointer = stateDir.resolve("_current")
+      def currentState(): Option[String] =
+        if (Files.exists(pointer))
+          Some(stateDir.resolve(new String(Files.readAllBytes(pointer),
+            java.nio.charset.StandardCharsets.UTF_8).trim).toString)
+        else None
+      runOverEventFiles(run, sfDir, sentinelOffsetSec = None) { src =>
+        run.start(src) { (b, bid) =>
+          val batchSk = graft.operators.Curation.kmvSketch(
+            b.toDF().select(col("event_type"), col("user_id")),
+            "event_type", "user_id")
+          val merged = currentState() match {
+            case Some(prev) => graft.operators.Curation.kmvMerge(
+              spark.read.parquet(prev), batchSk).localCheckpoint()
+            case None => batchSk.localCheckpoint()
           }
-          .start()
+          val next = s"sk-v$bid"
+          merged.coalesce(1).write.mode("overwrite")
+            .parquet(stateDir.resolve(next).toString)
+          // the next batch merges against the written files
+          TxTable.release(merged)
+          val tmp = Files.createTempFile(stateDir, "_current", ".tmp")
+          Files.write(tmp,
+            next.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          Files.move(tmp, pointer,
+            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        }
       }
-      graft.operators.Curation.kmvOverlapEval(
-        spark.read.parquet(currentState().getOrElse(
-          sys.error("kmvStateStream: stream emitted no batches"))).localCheckpoint(),
-        graft.Tables.load(spark, sfDir, "events"), "event_type", "user_id")
-    } finally deleteRecursively(stateDir)
+      spark.read.parquet(currentState().getOrElse(
+        sys.error("kmvStateStream: stream emitted no batches"))).localCheckpoint()
+    }
+    graft.operators.Curation.kmvOverlapEval(state,
+      graft.Tables.load(spark, sfDir, "events"), "event_type", "user_id")
   }
 
-  /** The q44 CDC apply driven end-to-end: the changelog's three seq
-    * tiers staged as separate files IN SEQ ORDER (maxFilesPerTrigger=1
-    * ⇒ the delete-after-update and insert-after-delete collapses happen
-    * across MICRO-BATCH boundaries in [[StreamOps.cdcLatest]] state, not
-    * within one batch) → update-mode max-seq reduction → drained state
-    * applied to the snapshot by the same `Sources.applyCdc` join the
-    * batch path uses. Gated on the q44 oracle. No watermark/sentinel:
+  /** q44's snapshot, and the SAME derived changelog as the q44 gate with
+    * its three seq tiers staged as separate files IN SEQ ORDER
+    * (maxFilesPerTrigger=1 ⇒ the delete-after-update and
+    * insert-after-delete collapses happen across MICRO-BATCH boundaries
+    * in [[StreamOps.cdcLatest]] state, not within one batch) → the
+    * update-mode max-seq reduction over them. No watermark/sentinel:
     * update mode re-emits a key whenever its state advances, so the last
     * upsert per key IS the final change. */
+  private def cdcChanges(run: StreamRun,
+                         sfDir: String): (DataFrame, Dataset[StreamOps.CdcChg]) = {
+    import run.spark.implicits._
+    val o = graft.Tables.load(run.spark, sfDir, "orders")
+      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
+    run.stage("in",
+      o.filter(pmod(col("o_orderkey"), lit(2)) === 0)
+        .select(col("o_orderkey"), lit("U1").as("o_orderstatus"),
+          (col("o_totalprice") * 1.1).as("o_totalprice"),
+          lit("U").as("op"), lit(1L).as("seq")),
+      o.filter(pmod(col("o_orderkey"), lit(5)) === 0)
+        .select(col("o_orderkey"), lit(null).cast("string").as("o_orderstatus"),
+          lit(null).cast("double").as("o_totalprice"),
+          lit("D").as("op"), lit(2L).as("seq")),
+      o.filter(pmod(col("o_orderkey"), lit(3)) === 0 &&
+          pmod(col("o_orderkey"), lit(7)) === 0)
+        .select(col("o_orderkey"), lit("NEW").as("o_orderstatus"),
+          (col("o_totalprice") + 1000.0).as("o_totalprice"),
+          lit("I").as("op"), lit(3L).as("seq")))
+    (o.filter(pmod(col("o_orderkey"), lit(3)) =!= 0),
+      StreamOps.cdcLatest(run.spark, run.source("in").as[StreamOps.CdcChg]))
+  }
+
+  /** The q44 CDC apply driven end-to-end: [[cdcChanges]]' stream →
+    * drained latest change per key applied to the snapshot by the same
+    * `Sources.applyCdc` join the batch path uses. Gated on the q44
+    * oracle. */
   def cdcFileStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-cdc")
-    val in = s"$dir/in"; val chk = s"$dir/chk"
-    try withStatePartitions(spark, 8) {
-      val o = graft.Tables.load(spark, sfDir, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      val snap = o.filter(pmod(col("o_orderkey"), lit(3)) =!= 0)
-      // the SAME derived changelog as the q44 gate, one file per seq tier
-      val tiers = Seq(
-        o.filter(pmod(col("o_orderkey"), lit(2)) === 0)
-          .select(col("o_orderkey"), lit("U1").as("o_orderstatus"),
-            (col("o_totalprice") * 1.1).as("o_totalprice"),
-            lit("U").as("op"), lit(1L).as("seq")),
-        o.filter(pmod(col("o_orderkey"), lit(5)) === 0)
-          .select(col("o_orderkey"), lit(null).cast("string").as("o_orderstatus"),
-            lit(null).cast("double").as("o_totalprice"),
-            lit("D").as("op"), lit(2L).as("seq")),
-        o.filter(pmod(col("o_orderkey"), lit(3)) === 0 &&
-            pmod(col("o_orderkey"), lit(7)) === 0)
-          .select(col("o_orderkey"), lit("NEW").as("o_orderstatus"),
-            (col("o_totalprice") + 1000.0).as("o_totalprice"),
-            lit("I").as("op"), lit(3L).as("seq")))
-      val stamper = new MtimeStamper
-      var first = true
-      tiers.foreach { tier =>
-        tier.coalesce(1).write.mode(if (first) "overwrite" else "append").parquet(in)
-        first = false
-        stamper.stamp(in)
-      }
-      val chgSchema = StructType(Seq(
-        StructField("o_orderkey", LongType), StructField("o_orderstatus", StringType),
-        StructField("o_totalprice", DoubleType), StructField("op", StringType),
-        StructField("seq", LongType)))
-      val src = spark.readStream.schema(chgSchema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val state = scala.collection.mutable.Map.empty[Long, StreamOps.CdcChg]
-      val q = StreamOps.cdcLatest(spark, src.as[StreamOps.CdcChg]).writeStream
-        .outputMode("update")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[StreamOps.CdcChg], _: Long) =>
-          val rows = b.collect()
-          state.synchronized {
-            rows.foreach(c =>
-              if (!state.get(c.o_orderkey).exists(_.seq >= c.seq))
-                state(c.o_orderkey) = c)
-          }; ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val latest = state.values.toSeq.toDS()
+    withRun(spark, "cdc") { run =>
+      val (snap, changes) = cdcChanges(run, sfDir)
+      val emitted = run.collecting(changes, "update")
+      run.drainAndStop()
+      // per key the first emission carrying its highest seq
+      val latest = emitted.toSeq.groupBy(_.o_orderkey).values.map(_.maxBy(_.seq)).toSeq
+        .toDS()
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
           col("op"), col("seq"))
       graft.sources.Sources.applyCdc(snap, latest, "o_orderkey")
-    } finally deleteRecursively(dir)
+    }
   }
 
   /** st11's CDC pipeline with the PRODUCTION sink (st32): instead of
@@ -757,66 +740,29 @@ object StreamDrivers {
     * monotone in seq; intermediate emissions are overwritten by later
     * commits), so the final table equals the batch applyCdc — the q44
     * oracle verbatim. */
-  def cdcTxSinkStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-cdctx")
-    val in = s"$dir/in"; val chk = s"$dir/chk"; val root = s"$dir/tx"
-    try withStatePartitions(spark, 8) {
-      val o = graft.Tables.load(spark, sfDir, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      val snap = o.filter(pmod(col("o_orderkey"), lit(3)) =!= 0)
-      graft.sources.TxTable.create(spark, snap, root, "o_orderkey")
-      val tiers = Seq(
-        o.filter(pmod(col("o_orderkey"), lit(2)) === 0)
-          .select(col("o_orderkey"), lit("U1").as("o_orderstatus"),
-            (col("o_totalprice") * 1.1).as("o_totalprice"),
-            lit("U").as("op"), lit(1L).as("seq")),
-        o.filter(pmod(col("o_orderkey"), lit(5)) === 0)
-          .select(col("o_orderkey"), lit(null).cast("string").as("o_orderstatus"),
-            lit(null).cast("double").as("o_totalprice"),
-            lit("D").as("op"), lit(2L).as("seq")),
-        o.filter(pmod(col("o_orderkey"), lit(3)) === 0 &&
-            pmod(col("o_orderkey"), lit(7)) === 0)
-          .select(col("o_orderkey"), lit("NEW").as("o_orderstatus"),
-            (col("o_totalprice") + 1000.0).as("o_totalprice"),
-            lit("I").as("op"), lit(3L).as("seq")))
-      val stamper = new MtimeStamper
-      var first = true
-      tiers.foreach { tier =>
-        tier.coalesce(1).write.mode(if (first) "overwrite" else "append").parquet(in)
-        first = false
-        stamper.stamp(in)
+  def cdcTxSinkStream(spark: SparkSession, sfDir: String): DataFrame =
+    withRun(spark, "cdctx") { run =>
+      val root = run.path("tx")
+      val (snap, changes) = cdcChanges(run, sfDir)
+      TxTable.create(spark, snap, root, "o_orderkey")
+      run.start(changes, "update") { (b, _) =>
+        val batch = b.toDF().persist()
+        try {
+          val ups = batch.filter(col("op").isin("I", "U"))
+            .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
+          if (!ups.isEmpty)
+            TxTable.merge(spark, root, ups, "o_orderkey")
+          val dels = batch.filter(col("op") === "D").select(col("o_orderkey"))
+          if (!dels.isEmpty)
+            TxTable.deleteKeys(spark, root, dels, "o_orderkey")
+        } finally { batch.unpersist(); () }
       }
-      val chgSchema = StructType(Seq(
-        StructField("o_orderkey", LongType), StructField("o_orderstatus", StringType),
-        StructField("o_totalprice", DoubleType), StructField("op", StringType),
-        StructField("seq", LongType)))
-      val src = spark.readStream.schema(chgSchema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = StreamOps.cdcLatest(spark, src.as[StreamOps.CdcChg]).writeStream
-        .outputMode("update")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[StreamOps.CdcChg], _: Long) =>
-          val batch = b.toDF().persist()
-          try {
-            val ups = batch.filter(col("op").isin("I", "U"))
-              .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-            if (!ups.isEmpty)
-              graft.sources.TxTable.merge(spark, root, ups, "o_orderkey")
-            val dels = batch.filter(col("op") === "D").select(col("o_orderkey"))
-            if (!dels.isEmpty)
-              graft.sources.TxTable.deleteKeys(spark, root, dels, "o_orderkey")
-            ()
-          } finally { batch.unpersist(); () }
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      run.drainAndStop()
       // materialize off the table files before the temp dir is deleted
-      graft.sources.TxTable.read(spark, root)
+      TxTable.read(spark, root)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .localCheckpoint()
-    } finally deleteRecursively(dir)
-  }
+    }
 
   /** st34: streaming MATERIALIZED-VIEW maintenance with the
     * transactional sink — q70's additive-merge pattern per micro-batch:
@@ -828,58 +774,8 @@ object StreamDrivers {
     * integers, so the streamed MV equals the one-shot recompute over
     * ALL orders REGARDLESS of batch order — which is exactly q70's
     * oracle, re-used verbatim. */
-  def matviewFileStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft-stream-matview")
-    val in = s"$dir/in"; val chk = s"$dir/chk"; val root = s"$dir/mv"
-    try withStatePartitions(spark, 8) {
-      val o = graft.Tables.load(spark, sfDir, "orders")
-        .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
-      def aggOf(df: DataFrame) = df.groupBy(
-          (year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
-            .cast("long").as("ym"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rev_cents"),
-          count(lit(1)).as("n_orders"))
-      graft.sources.TxTable.create(spark,
-        aggOf(o.filter(pmod(col("o_orderkey"), lit(3)) === 0)), root, "ym")
-      val stamper = new MtimeStamper
-      var first = true
-      Seq(o.filter(pmod(col("o_orderkey"), lit(3)) === 1),
-          o.filter(pmod(col("o_orderkey"), lit(3)) === 2)).foreach { h =>
-        h.coalesce(1).write.mode(if (first) "overwrite" else "append").parquet(in)
-        first = false
-        stamper.stamp(in)
-      }
-      val oSchema = StructType(Seq(
-        StructField("o_orderkey", LongType),
-        StructField("o_orderdate", org.apache.spark.sql.types.TimestampType),
-        StructField("o_totalprice", DoubleType)))
-      val src = spark.readStream.schema(oSchema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          // additive combine INSIDE the SET-expression merge (r18):
-          // the merge reads only the files the delta's ym keys touch —
-          // the pre-r18 form read the ENTIRE sink per micro-batch to
-          // combine outside the merge (the r17 verdict's weak posture)
-          val delta = aggOf(b.toDF()).localCheckpoint()
-          graft.sources.TxTable.mergeConditional(spark, root, delta, "ym",
-            matchedUpdateSet = Some(Map(
-              "rev_cents" -> ((sc, tc) => tc("rev_cents") + sc("rev_cents")),
-              "n_orders" -> ((sc, tc) => tc("n_orders") + sc("n_orders")))))
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      // materialize off the table files before the temp dir is deleted
-      graft.sources.TxTable.read(spark, root)
-        .select(col("ym"),
-          (col("rev_cents").cast("double") / 100.0).as("revenue"),
-          col("n_orders"))
-        .localCheckpoint()
-    } finally deleteRecursively(dir)
-  }
+  def matviewFileStream(spark: SparkSession, sfDir: String): DataFrame =
+    matview(spark, sfDir, txnApp = None)
 
   /** st37: EXACTLY-ONCE table state from an at-least-once stream — the
     * production failure mode st34 doesn't exercise: Spark's foreachBatch
@@ -895,11 +791,14 @@ object StreamDrivers {
     * delta recomputed exactly as a recovering sink would). Only the txn
     * guard stands between those replays and a doubled MV — the q70
     * full-recompute oracle hash-fails on any double-apply. */
-  def matviewIdempotentFileStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft-stream-matview-idem")
-    val in = s"$dir/in"; val chk = s"$dir/chk"; val root = s"$dir/mv"
-    val appId = "st37-matview"
-    try withStatePartitions(spark, 8) {
+  def matviewIdempotentFileStream(spark: SparkSession, sfDir: String): DataFrame =
+    matview(spark, sfDir, txnApp = Some("st37-matview"))
+
+  /** st34, or with `txnApp` st37's txn-stamped, re-delivered form. */
+  private def matview(spark: SparkSession, sfDir: String,
+                      txnApp: Option[String]): DataFrame =
+    withRun(spark, "matview") { run =>
+      val root = run.path("mv")
       val o = graft.Tables.load(spark, sfDir, "orders")
         .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
       def aggOf(df: DataFrame) = df.groupBy(
@@ -907,58 +806,48 @@ object StreamDrivers {
             .cast("long").as("ym"))
         .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rev_cents"),
           count(lit(1)).as("n_orders"))
+      // additive combine INSIDE the SET-expression merge (r18): the merge
+      // reads only the files the delta's ym keys touch — the pre-r18 form
+      // read the ENTIRE sink per micro-batch to combine outside the merge
+      // (the r17 verdict's weak posture); under st37's txn guard the
+      // combine and the idempotence live in ONE pruned commit
       def applyDelta(delta: DataFrame, batchId: Long): Unit = {
-        // additive SET-expression merge (r18): touched-files-only read,
-        // and the txn guard makes the double-apply below a no-op — the
-        // combine and the idempotence now live in ONE pruned commit
-        graft.sources.TxTable.mergeConditional(spark, root, delta, "ym",
+        TxTable.mergeConditional(spark, root, delta, "ym",
           matchedUpdateSet = Some(Map(
             "rev_cents" -> ((sc, tc) => tc("rev_cents") + sc("rev_cents")),
             "n_orders" -> ((sc, tc) => tc("n_orders") + sc("n_orders")))),
-          txn = Some((appId, batchId)))
+          txn = txnApp.map(_ -> batchId))
         ()
       }
-      graft.sources.TxTable.create(spark,
+      TxTable.create(spark,
         aggOf(o.filter(pmod(col("o_orderkey"), lit(3)) === 0)), root, "ym")
-      val stamper = new MtimeStamper
-      var first = true
       val batch2 = o.filter(pmod(col("o_orderkey"), lit(3)) === 2)
-      Seq(o.filter(pmod(col("o_orderkey"), lit(3)) === 1), batch2).foreach { h =>
-        h.coalesce(1).write.mode(if (first) "overwrite" else "append").parquet(in)
-        first = false
-        stamper.stamp(in)
+      run.stage("in", o.filter(pmod(col("o_orderkey"), lit(3)) === 1), batch2)
+      run.start(run.source("in")) { (b, batchId) =>
+        val delta = aggOf(b.toDF()).localCheckpoint()
+        // the stamped batchId starts ABOVE the create (txn versions
+        // must be monotone per app; foreachBatch ids start at 0)
+        applyDelta(delta, batchId + 1)
+        // st37's in-flight re-delivery: same batch, same id — must no-op
+        if (txnApp.isDefined) applyDelta(delta, batchId + 1)
+        TxTable.release(delta)
       }
-      val oSchema = StructType(Seq(
-        StructField("o_orderkey", LongType),
-        StructField("o_orderdate", org.apache.spark.sql.types.TimestampType),
-        StructField("o_totalprice", DoubleType)))
-      val src = spark.readStream.schema(oSchema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          val delta = aggOf(b.toDF()).localCheckpoint()
-          // the stamped batchId starts ABOVE the create (txn versions
-          // must be monotone per app; foreachBatch ids start at 0)
-          applyDelta(delta, batchId + 1)
-          // in-flight re-delivery: same batch, same id — must no-op
-          applyDelta(delta, batchId + 1)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      // restart-after-lost-offsets: a recovering sink recomputes the
-      // last batch's delta from the source and re-applies under the
+      run.drainAndStop()
+      // st37's restart-after-lost-offsets: a recovering sink recomputes
+      // the last batch's delta from the source and re-applies under the
       // SAME txn id — the guard, not the checkpoint, must stop it
-      applyDelta(aggOf(batch2).localCheckpoint(), 2L)
-      graft.sources.TxTable.read(spark, root)
+      if (txnApp.isDefined) {
+        val replay = aggOf(batch2).localCheckpoint()
+        applyDelta(replay, 2L)
+        TxTable.release(replay)
+      }
+      // materialize off the table files before the temp dir is deleted
+      TxTable.read(spark, root)
         .select(col("ym"),
           (col("rev_cents").cast("double") / 100.0).as("revenue"),
           col("n_orders"))
         .localCheckpoint()
-    } finally deleteRecursively(dir)
-  }
+    }
 
   /** st38: CONTINUOUS-COMPLIANCE erasure — c66's right-to-be-forgotten
     * action at the streaming surface, where real deletion requests
@@ -971,48 +860,8 @@ object StreamDrivers {
     * (removing A then B == removing A ∪ B), so the two-batch stream
     * equals c66's one-shot delete and the same raw-recompute oracle
     * gates it — with `before` still read via time travel to v1. */
-  def erasureFileStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft-stream-erasure")
-    val in = s"$dir/in"; val chk = s"$dir/chk"; val root = s"$dir/corpus"
-    try withStatePartitions(spark, 8) {
-      val docs = graft.Tables.load(spark, sfDir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-      graft.sources.TxTable.create(spark, docs, root, "doc_id")
-      val revoked = docs.filter(pmod(col("doc_id"), lit(13)) === 5)
-        .select(col("doc_id"))
-      val stamper = new MtimeStamper
-      var first = true
-      Seq(revoked.filter(pmod(col("doc_id"), lit(2)) === 0),
-          revoked.filter(pmod(col("doc_id"), lit(2)) === 1)).foreach { h =>
-        h.coalesce(1).write.mode(if (first) "overwrite" else "append").parquet(in)
-        first = false
-        stamper.stamp(in)
-      }
-      val src = spark.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType))))
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.sources.TxTable.deleteKeys(spark, root, b.toDF(), "doc_id")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val before = graft.sources.TxTable.read(spark, root, asOf = Some(1L))
-        .groupBy(col("source")).agg(count(lit(1)).as("n_before"))
-      val after = graft.sources.TxTable.read(spark, root)
-        .groupBy(col("source")).agg(count(lit(1)).as("n_after"),
-          sum(col("n_chars")).as("chars_after"))
-      before.join(after, Seq("source"), "left")
-        .select(col("source"), col("n_before"),
-          (col("n_before") - coalesce(col("n_after"), lit(0L))).as("n_revoked"),
-          coalesce(col("n_after"), lit(0L)).as("n_after"),
-          coalesce(col("chars_after"), lit(0L)).as("chars_after"))
-        .localCheckpoint()
-    } finally deleteRecursively(dir)
-  }
+  def erasureFileStream(spark: SparkSession, sfDir: String): DataFrame =
+    erasure(spark, sfDir, dv = false)
 
   /** st44: st38's continuous-compliance erasure with MERGE-ON-READ
     * deletes (r17) — the exact cost case the r16 verdict's
@@ -1031,94 +880,82 @@ object StreamDrivers {
     * reclaimed, and the time-travel read that could resurrect the
     * revoked rows to fail loudly. Same output shape and oracle as
     * st38/c66 — the vectors are invisible to the algebra. */
-  def erasureDvFileStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.sources.TxTable
-    val dir = Files.createTempDirectory("graft-stream-erasure-dv")
-    val in = s"$dir/in"; val chk = s"$dir/chk"; val root = s"$dir/corpus"
-    def listData(): Map[String, java.nio.file.attribute.FileTime] = {
-      import scala.jdk.CollectionConverters._
-      val l = Files.list(java.nio.file.Paths.get(root, "data"))
-      try l.iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-          !p.getFileName.toString.startsWith("dv-"))
-        .map(p => p.getFileName.toString -> Files.getLastModifiedTime(p))
-        .toMap
-      finally l.close()
-    }
-    try withStatePartitions(spark, 8) {
+  def erasureDvFileStream(spark: SparkSession, sfDir: String): DataFrame =
+    erasure(spark, sfDir, dv = true)
+
+  /** st38, or with `dv` st44's merge-on-read form. */
+  private def erasure(spark: SparkSession, sfDir: String, dv: Boolean): DataFrame =
+    withRun(spark, "erasure") { run =>
+      val root = run.path("corpus")
+      type Listing = Map[String, java.nio.file.attribute.FileTime]
+      def dataFiles(): Listing = {
+        val l = Files.list(java.nio.file.Paths.get(root, "data"))
+        try l.iterator().asScala
+          .filter(Files.isRegularFile(_))
+          .map(p => p.getFileName.toString -> Files.getLastModifiedTime(p))
+          .toMap
+        finally l.close()
+      }
+      def listData(): Listing = dataFiles().filter(!_._1.startsWith("dv-"))
       val docs = graft.Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
       TxTable.create(spark, docs, root, "doc_id")
-      val physical0 = listData()
+      val physical0 = if (dv) listData() else Map.empty: Listing
       val revoked = docs.filter(pmod(col("doc_id"), lit(13)) === 5)
         .select(col("doc_id"))
-      val stamper = new MtimeStamper
-      var first = true
-      Seq(revoked.filter(pmod(col("doc_id"), lit(2)) === 0),
-          revoked.filter(pmod(col("doc_id"), lit(2)) === 1)).foreach { h =>
-        h.coalesce(1).write.mode(if (first) "overwrite" else "append").parquet(in)
-        first = false
-        stamper.stamp(in)
+      run.stage("in", revoked.filter(pmod(col("doc_id"), lit(2)) === 0),
+        revoked.filter(pmod(col("doc_id"), lit(2)) === 1))
+      run.start(run.source("in")) { (b, _) =>
+        if (dv) TxTable.deleteKeysDV(spark, root, b.toDF(), "doc_id")
+        else TxTable.deleteKeys(spark, root, b.toDF(), "doc_id")
       }
-      val src = spark.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType))))
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          TxTable.deleteKeysDV(spark, root, b.toDF(), "doc_id")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      // merge-on-read held for the whole stream: not one data file
-      // rewritten or added, and at least one vector exists
-      require(listData() == physical0,
-        "a DV erasure stream must never rewrite a data file")
-      require(TxTable.snapshot(root).exists(_.dv.isDefined),
-        "the stream committed no deletion vector")
-      // before/after aggregates materialize BEFORE physical erasure
-      // (vacuum below reclaims v1's bytes, after which time travel
-      // must refuse — resurrecting revoked rows is the bug)
-      val before = TxTable.read(spark, root, asOf = Some(1L))
+      run.drainAndStop()
+      def before = TxTable.read(spark, root, asOf = Some(1L))
         .groupBy(col("source")).agg(count(lit(1)).as("n_before"))
-        .localCheckpoint()
-      val after = TxTable.read(spark, root)
+      def after = TxTable.read(spark, root)
         .groupBy(col("source")).agg(count(lit(1)).as("n_after"),
           sum(col("n_chars")).as("chars_after"))
-        .localCheckpoint()
-      // the scheduled OPTIMIZE: materialize the vectors, then complete
-      // the PHYSICAL half of the erasure
-      TxTable.compactClustered(spark, root, "doc_id", 4)
-      require(TxTable.snapshot(root).forall(_.dv.isEmpty),
-        "compaction must materialize every vector")
-      TxTable.vacuum(root, keepVersions = 0, minAgeMillis = 0)
-      val survivors = {
-        import scala.jdk.CollectionConverters._
-        val l = Files.list(java.nio.file.Paths.get(root, "data"))
-        try l.iterator().asScala.map(_.getFileName.toString).toSet
-        finally l.close()
+      def report(before: DataFrame, after: DataFrame) =
+        before.join(after, Seq("source"), "left")
+          .select(col("source"), col("n_before"),
+            (col("n_before") - coalesce(col("n_after"), lit(0L))).as("n_revoked"),
+            coalesce(col("n_after"), lit(0L)).as("n_after"),
+            coalesce(col("chars_after"), lit(0L)).as("chars_after"))
+          .localCheckpoint()
+      if (!dv) report(before, after)
+      else {
+        // merge-on-read held for the whole stream: not one data file
+        // rewritten or added, and at least one vector exists
+        require(listData() == physical0,
+          "a DV erasure stream must never rewrite a data file")
+        require(TxTable.snapshot(root).exists(_.dv.isDefined),
+          "the stream committed no deletion vector")
+        // before/after aggregates materialize BEFORE physical erasure
+        // (vacuum below reclaims v1's bytes, after which time travel
+        // must refuse — resurrecting revoked rows is the bug)
+        val b = before.localCheckpoint()
+        val a = after.localCheckpoint()
+        // the scheduled OPTIMIZE: materialize the vectors, then complete
+        // the PHYSICAL half of the erasure
+        TxTable.compactClustered(spark, root, "doc_id", 4)
+        require(TxTable.snapshot(root).forall(_.dv.isEmpty),
+          "compaction must materialize every vector")
+        TxTable.vacuum(root, keepVersions = 0, minAgeMillis = 0)
+        val survivors = dataFiles().keySet
+        require(physical0.keySet.intersect(survivors).isEmpty &&
+            !survivors.exists(_.startsWith("dv-")),
+          "physical erasure incomplete: revoked bytes or sidecars survive")
+        require(scala.util.Try(
+            TxTable.read(spark, root, Some(1L)).count()).isFailure,
+          "a post-vacuum time travel to the revoked rows must fail loudly")
+        val out = report(b, a)
+        // the eager checkpoint above has copied the result's blocks:
+        // nothing reads the staged aggregates again
+        TxTable.release(b)
+        TxTable.release(a)
+        out
       }
-      require(physical0.keySet.intersect(survivors).isEmpty &&
-          !survivors.exists(_.startsWith("dv-")),
-        "physical erasure incomplete: revoked bytes or sidecars survive")
-      require(scala.util.Try(
-          TxTable.read(spark, root, Some(1L)).count()).isFailure,
-        "a post-vacuum time travel to the revoked rows must fail loudly")
-      val out = before.join(after, Seq("source"), "left")
-        .select(col("source"), col("n_before"),
-          (col("n_before") - coalesce(col("n_after"), lit(0L))).as("n_revoked"),
-          coalesce(col("n_after"), lit(0L)).as("n_after"),
-          coalesce(col("chars_after"), lit(0L)).as("chars_after"))
-        .localCheckpoint()
-      // the eager checkpoint above has copied the result's blocks:
-      // nothing reads the staged aggregates again
-      TxTable.release(before)
-      TxTable.release(after)
-      out
-    } finally deleteRecursively(dir)
-  }
+    }
 
   /** Streaming ingest dedup driven end-to-end against a STATIC corpus:
     * ALL documents staged as two doc_id-halves × 2 copies (four
@@ -1134,41 +971,22 @@ object StreamDrivers {
     * it changes, so the last upsert per key IS the final state. */
   def ingestDedupFileStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-ingest")
-    val in = s"$dir/in"; val chk = s"$dir/chk"
-    try withStatePartitions(spark, 8) {
+    val rows = withRun(spark, "ingest") { run =>
       val docs = graft.Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"), col("text"))
       // the static side of the stream-static join — localCheckpoint
       // models the persisted corpus key table (re-read per micro-batch)
       val corpus = docs.filter(pmod(col("doc_id"), lit(2)) === 1).localCheckpoint()
-      val stamper = new MtimeStamper
-      var first = true
-      Seq(docs.filter(pmod(col("doc_id"), lit(4)) < 2),
-          docs.filter(pmod(col("doc_id"), lit(4)) >= 2)).foreach { h =>
-        (1 to 2).foreach { _ =>
-          h.coalesce(1).write.mode(if (first) "overwrite" else "append").parquet(in)
-          first = false
-          stamper.stamp(in)
-        }
-      }
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)))
-      val src = spark.readStream.schema(docSchema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val state = scala.collection.mutable.Map.empty[String, (Long, Long)]
-      val q = StreamOps.ingestDedup(src, corpus).writeStream
-        .outputMode("update")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val rows = b.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-          state.synchronized { rows.foreach { case (t, id, c) => state(t) = (id, c) } }; ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      state.values.toSeq.toDF("doc_id", "dup_count")
-    } finally deleteRecursively(dir)
+      val first = docs.filter(pmod(col("doc_id"), lit(4)) < 2)
+      val second = docs.filter(pmod(col("doc_id"), lit(4)) >= 2)
+      run.stage("in", first, first, second, second)
+      val out = run.collecting(StreamOps.ingestDedup(run.source("in"), corpus), "update")
+      run.drainAndStop()
+      out
+    }
+    val state = scala.collection.mutable.Map.empty[String, (Long, Long)]
+    rows.foreach(r => state(r.getString(0)) = (r.getLong(1), r.getLong(2)))
+    state.values.toSeq.toDF("doc_id", "dup_count")
   }
 
   /** st15: benchmark decontamination as a streaming ingest gate — the
@@ -1194,14 +1012,6 @@ object StreamDrivers {
       onBatch = b => graft.operators.Curation.contamination(b, benchmark))
   }
 
-  /** st16: the c27 perplexity gate as a streaming ingest filter. The
-    * Laplace unigram LM is fit ONCE on the static reference slice (the
-    * persisted artifact a production pipeline ships to its ingest tier);
-    * each micro-batch is scored and gated against it independently via
-    * [[graft.operators.Curation.perplexityGateAgainst]]. Per-document
-    * scores depend only on the static LM, so the union of doc-disjoint
-    * batch results equals the batch c27 run — c27's oracle gates this
-    * driver verbatim. Stateless like st13/st15: no watermark needed. */
   /** st19: the c33 URL/domain gate as a streaming ingest filter — the
     * production split: the per-domain rate table (the gate's only
     * corpus-wide state) is built ONCE from the static crawl inventory,
@@ -1267,6 +1077,14 @@ object StreamDrivers {
       onBatch = b => graft.operators.Curation.mainContent(b))
   }
 
+  /** st16: the c27 perplexity gate as a streaming ingest filter. The
+    * Laplace unigram LM is fit ONCE on the static reference slice (the
+    * persisted artifact a production pipeline ships to its ingest tier);
+    * each micro-batch is scored and gated against it independently via
+    * [[graft.operators.Curation.perplexityGateAgainst]]. Per-document
+    * scores depend only on the static LM, so the union of doc-disjoint
+    * batch results equals the batch c27 run — c27's oracle gates this
+    * driver verbatim. Stateless like st13/st15: no watermark needed. */
   def perplexityFileStream(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = graft.Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
@@ -1340,6 +1158,95 @@ object StreamDrivers {
       onBatch = b => graft.operators.QualityModel.score(b, w))
   }
 
+  /** st33: streaming CHUNK ingest — the st14 probe-and-append posture
+    * at the content-defined-chunk layer: the corpus chunk-count
+    * artifact (odd ids, d34's state) is probed by each micro-batch's
+    * chunks (chunking work ∝ batch, the corpus never re-chunked), and
+    * the batch's counts append to the state before the next micro-batch
+    * fires. Flags are AS-OF ingest time (the honest dedup-at-ingest
+    * contract): a chunk's `in_corpus` reflects corpus ∪ EARLIER batches
+    * only, and `n_dup_batch` counts within its OWN micro-batch — so the
+    * oracle replays the deterministic batch split (%4 = 0 fires before
+    * %4 = 2) rather than pretending order away. */
+  def chunkIngestFileStream(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    val rows = withRun(spark, "chunk") { run =>
+      val docs = graft.Tables.load(spark, sfDir, "documents")
+        .select(col("doc_id"), col("text"))
+      var state = graft.operators.Dedup
+        .cdcChunkCounts(docs.filter(pmod(col("doc_id"), lit(2)) === 1))
+        .localCheckpoint()
+      run.stage("in", docs.filter(pmod(col("doc_id"), lit(4)) === 0),
+        docs.filter(pmod(col("doc_id"), lit(4)) === 2))
+      val rows = ArrayBuffer.empty[(Long, Int, Int, Int, Int, String, Int, Int)]
+      run.start(run.source("in")) { (b, _) =>
+        val batch = b.localCheckpoint()
+        val found = graft.operators.Dedup
+          .cdcChunksIncremental(batch, state).collect()
+          .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("chunk_idx"),
+            r.getAs[Int]("start_p"), r.getAs[Int]("end_p"),
+            r.getAs[Int]("n_tokens"), r.getAs[String]("chunk_text"),
+            r.getAs[Int]("n_dup_batch"), r.getAs[Int]("in_corpus")))
+        rows.synchronized { rows ++= found }
+        // append-before-next-batch: union of counts is a valid count
+        // table for the probe (membership is all the probe reads)
+        state = nextRound(state
+          .union(graft.operators.Dedup.cdcChunkCounts(batch))
+          .localCheckpoint(), state, batch)
+      }
+      run.drainAndStop()
+      TxTable.release(state)
+      rows
+    }
+    rows.toSeq.toDF("doc_id", "chunk_idx", "start_p", "end_p",
+      "n_tokens", "chunk_text", "n_dup_batch", "in_corpus")
+  }
+
+  /** st36: d36's EXACT prefix-filter dedup at the streaming ingest
+    * surface (the st14 probe-and-append posture for the d35 family):
+    * each micro-batch shingles in-stream, probes the growing shingle
+    * state (corpus ∪ earlier batches) under the ORIGINAL corpus-df
+    * global order — the stale-order-loses-zero-recall property is
+    * exactly what makes a frozen prefix index valid across a stream's
+    * lifetime — and appends its own shingles before the next batch.
+    * Pairs are symmetric and every batch-touching pair is emitted when
+    * its later member arrives, so the drained output SET equals d36's
+    * batch answer and d36's oracle gates it verbatim. */
+  def prefixIngestFileStream(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    import graft.operators.Dedup
+    val pairs = withRun(spark, "prefix") { run =>
+      val docs = graft.Tables.load(spark, sfDir, "documents")
+        .select(col("doc_id"), col("text"), col("source"))
+      val corpusSh = Dedup.shingleTable(docs.filter(pmod(col("doc_id"), lit(2)) === 1))
+      val corpusDf = Dedup.prefixDfTable(corpusSh).localCheckpoint()
+      // the persisted prefix-row index, grown INCREMENTALLY: each batch
+      // appends its own prefix rows (ranked under the frozen corpus-df
+      // order, so earlier rows never change) — per-batch work ∝ batch,
+      // never ∝ the growing state (the r14 review fix)
+      var state = corpusSh
+      var statePrefix = Dedup.prefixIndex(corpusSh, corpusDf).localCheckpoint()
+      run.stage("in", Seq(0, 2).map(r => docs.filter(pmod(col("doc_id"), lit(4)) === r)
+        .select(col("doc_id"), col("text"))): _*)
+      val pairs = ArrayBuffer.empty[(Long, Long, Double)]
+      run.start(run.source("in")) { (b, _) =>
+        val batch = b.localCheckpoint()
+        val batchSh = Dedup.shingleTable(batch)
+        val found = Dedup.prefixIncremental(batchSh, state, corpusDf, statePrefix)
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        pairs.synchronized { pairs ++= found }
+        state = nextRound(state.union(batchSh).localCheckpoint(), state)
+        statePrefix = nextRound(statePrefix.union(Dedup.prefixIndex(batchSh, corpusDf))
+          .localCheckpoint(), statePrefix, batchSh, batch)
+      }
+      run.drainAndStop()
+      Seq(state, statePrefix, corpusDf).foreach(TxTable.release)
+      pairs
+    }
+    pairs.toSeq.toDF("doc_a", "doc_b", "jacc")
+  }
+
   /** st14: streaming NEAR-dup ingest — the substring of the ingest
     * posture st9 covers exactly, at the MinHash layer: even-id docs
     * staged as two doc_id-halves (maxFilesPerTrigger=1 ⇒ two genuine
@@ -1361,197 +1268,40 @@ object StreamDrivers {
     * In production the driver state here is a bucketed signatures table
     * (Sources.writeBucketed) appended per batch; the collect is the
     * oracle-gate harness, bounded by the pair count. */
-  /** st33: streaming CHUNK ingest — the st14 probe-and-append posture
-    * at the content-defined-chunk layer: the corpus chunk-count
-    * artifact (odd ids, d34's state) is probed by each micro-batch's
-    * chunks (chunking work ∝ batch, the corpus never re-chunked), and
-    * the batch's counts append to the state before the next micro-batch
-    * fires. Flags are AS-OF ingest time (the honest dedup-at-ingest
-    * contract): a chunk's `in_corpus` reflects corpus ∪ EARLIER batches
-    * only, and `n_dup_batch` counts within its OWN micro-batch — so the
-    * oracle replays the deterministic batch split (%4 = 0 fires before
-    * %4 = 2) rather than pretending order away. */
-  def chunkIngestFileStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-chunk")
-    val in = s"$dir/in"; val chk = s"$dir/chk"
-    try withStatePartitions(spark, 8) {
-      val docs = graft.Tables.load(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text"))
-      var state = graft.operators.Dedup
-        .cdcChunkCounts(docs.filter(pmod(col("doc_id"), lit(2)) === 1))
-        .localCheckpoint()
-      val stamper = new MtimeStamper
-      var first = true
-      Seq(docs.filter(pmod(col("doc_id"), lit(4)) === 0),
-          docs.filter(pmod(col("doc_id"), lit(4)) === 2)).foreach { h =>
-        h.coalesce(1).write.mode(if (first) "overwrite" else "append").parquet(in)
-        first = false
-        stamper.stamp(in)
-      }
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)))
-      val src = spark.readStream.schema(docSchema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val rows = scala.collection.mutable
-        .ArrayBuffer.empty[(Long, Int, Int, Int, Int, String, Int, Int)]
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val batch = b.localCheckpoint()
-          val found = graft.operators.Dedup
-            .cdcChunksIncremental(batch, state).collect()
-            .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("chunk_idx"),
-              r.getAs[Int]("start_p"), r.getAs[Int]("end_p"),
-              r.getAs[Int]("n_tokens"), r.getAs[String]("chunk_text"),
-              r.getAs[Int]("n_dup_batch"), r.getAs[Int]("in_corpus")))
-          rows.synchronized { rows ++= found }
-          // append-before-next-batch: union of counts is a valid count
-          // table for the probe (membership is all the probe reads)
-          state = state
-            .union(graft.operators.Dedup.cdcChunkCounts(batch))
-            .localCheckpoint()
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      rows.toSeq.toDF("doc_id", "chunk_idx", "start_p", "end_p",
-        "n_tokens", "chunk_text", "n_dup_batch", "in_corpus")
-    } finally deleteRecursively(dir)
-  }
-
-  /** st36: d36's EXACT prefix-filter dedup at the streaming ingest
-    * surface (the st14 probe-and-append posture for the d35 family):
-    * each micro-batch shingles in-stream, probes the growing shingle
-    * state (corpus ∪ earlier batches) under the ORIGINAL corpus-df
-    * global order — the stale-order-loses-zero-recall property is
-    * exactly what makes a frozen prefix index valid across a stream's
-    * lifetime — and appends its own shingles before the next batch.
-    * Pairs are symmetric and every batch-touching pair is emitted when
-    * its later member arrives, so the drained output SET equals d36's
-    * batch answer and d36's oracle gates it verbatim. */
-  def prefixIngestFileStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-prefix")
-    val in = s"$dir/in"; val chk = s"$dir/chk"
-    try withStatePartitions(spark, 8) {
-      val docs = graft.Tables.load(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text"), col("source"))
-      val corpusSh = graft.operators.Dedup
-        .shingleTable(docs.filter(pmod(col("doc_id"), lit(2)) === 1))
-      val corpusDf = graft.operators.Dedup.prefixDfTable(corpusSh)
-        .localCheckpoint()
-      // the persisted prefix-row index, grown INCREMENTALLY: each batch
-      // appends its own prefix rows (ranked under the frozen corpus-df
-      // order, so earlier rows never change) — per-batch work ∝ batch,
-      // never ∝ the growing state (the r14 review fix)
-      var state = corpusSh
-      var statePrefix = graft.operators.Dedup
-        .prefixIndex(corpusSh, corpusDf).localCheckpoint()
-      val stamper = new MtimeStamper
-      var first = true
-      Seq(docs.filter(pmod(col("doc_id"), lit(4)) === 0),
-          docs.filter(pmod(col("doc_id"), lit(4)) === 2)).foreach { h =>
-        h.select(col("doc_id"), col("text"))
-          .coalesce(1).write.mode(if (first) "overwrite" else "append").parquet(in)
-        first = false
-        stamper.stamp(in)
-      }
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)))
-      val src = spark.readStream.schema(docSchema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val pairs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val batchSh = graft.operators.Dedup
-            .shingleTable(b.localCheckpoint().toDF())
-          val found = graft.operators.Dedup
-            .prefixIncremental(batchSh, state, corpusDf, statePrefix)
-            .collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-          pairs.synchronized { pairs ++= found }
-          state = state.union(batchSh).localCheckpoint()
-          statePrefix = statePrefix.union(graft.operators.Dedup
-            .prefixIndex(batchSh, corpusDf)).localCheckpoint()
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      pairs.toSeq.toDF("doc_a", "doc_b", "jacc")
-    } finally deleteRecursively(dir)
-  }
-
   def minhashIngestFileStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-neardup")
-    val in = s"$dir/in"; val chk = s"$dir/chk"
-    try withStatePartitions(spark, 8) {
+    import graft.operators.Dedup
+    val pairs = withRun(spark, "neardup") { run =>
       val docs = graft.Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"), col("text"))
       // the persisted corpus signature artifact (odd ids), as in d11
-      var corpusSigs = graft.operators.Dedup
+      var corpusSigs = Dedup
         .minhashSignatures(docs.filter(pmod(col("doc_id"), lit(2)) === 1))
         .localCheckpoint()
-      val stamper = new MtimeStamper
-      var first = true
-      Seq(docs.filter(pmod(col("doc_id"), lit(4)) === 0),
-          docs.filter(pmod(col("doc_id"), lit(4)) === 2)).foreach { h =>
-        h.coalesce(1).write.mode(if (first) "overwrite" else "append").parquet(in)
-        first = false
-        stamper.stamp(in)
+      run.stage("in", docs.filter(pmod(col("doc_id"), lit(4)) === 0),
+        docs.filter(pmod(col("doc_id"), lit(4)) === 2))
+      val pairs = ArrayBuffer.empty[(Long, Long, Double)]
+      run.start(run.source("in")) { (b, _) =>
+        val batch = b.localCheckpoint()
+        val sigs = Dedup.minhashSignatures(batch).localCheckpoint()
+        val found = Dedup.minhashIncrementalFromSigs(sigs, corpusSigs)
+          .collect()
+          .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
+            r.getAs[Double]("jacc")))
+        pairs.synchronized { pairs ++= found }
+        // ingest: the batch's signatures join the corpus before the
+        // next micro-batch probes (deterministic seeded hashing, so the
+        // probe's signatures equal what a persisted append would hold)
+        corpusSigs = nextRound(corpusSigs.union(sigs).localCheckpoint(),
+          corpusSigs, sigs, batch)
       }
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)))
-      val src = spark.readStream.schema(docSchema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val pairs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val batch = b.localCheckpoint()
-          val found = graft.operators.Dedup.minhashIncremental(batch, corpusSigs)
-            .collect()
-            .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
-              r.getAs[Double]("jacc")))
-          pairs.synchronized { pairs ++= found }
-          // ingest: the batch's signatures join the corpus before the
-          // next micro-batch probes (deterministic seeded hashing, so
-          // re-signing here equals what a persisted append would hold)
-          corpusSigs = corpusSigs
-            .union(graft.operators.Dedup.minhashSignatures(batch))
-            .localCheckpoint()
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      pairs.toSeq.toDF("doc_a", "doc_b", "jacc")
-    } finally deleteRecursively(dir)
+      run.drainAndStop()
+      TxTable.release(corpusSigs)
+      pairs
+    }
+    pairs.toSeq.toDF("doc_a", "doc_b", "jacc")
   }
 
-  /** st18: streaming VISUAL ingest — the st14 probe-then-append posture
-    * at the phash layer, closing the last asymmetric cell of the
-    * streaming×incremental matrix: the planted-image batch tier
-    * (doc_id % 32 = 0) staged as two doc-halves (maxFilesPerTrigger=1 ⇒
-    * two genuine micro-batches), each micro-batch's documents dHashed
-    * IN-STREAM ([[graft.operators.Multimodal.imagePhash]] on the batch
-    * frame — decode work proportional to the batch, the corpus is never
-    * re-decoded), probed against the persisted corpus phash table via
-    * [[graft.operators.Multimodal.phashIncremental]], then APPENDED to
-    * the state so cross-micro-batch visual pairs surface in the later
-    * batch's probe. Union over micro-batches = the d23 batch recompute
-    * (same disjointness argument as st14: the probe side is always the
-    * current micro-batch only), so d23's restricted brute-force oracle
-    * gates this driver verbatim — licensed by the Hamming-3 full-recall
-    * banding. In production the state is a chunk-bucketed phash table
-    * appended per batch; the collect is the oracle-gate harness. */
   /** st22: streaming EMBEDDING near-dup ingest — the st14/st18 probe-
     * and-append posture at the vector layer, closing the last
     * asymmetric cell of the streaming×incremental dedup matrix: each
@@ -1563,42 +1313,29 @@ object StreamDrivers {
     * driver verbatim. */
   def embedIngestFileStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-embed")
-    val in = s"$dir/in"; val chk = s"$dir/chk"
-    try withStatePartitions(spark, 8) {
+    import graft.operators.Dedup
+    val pairs = withRun(spark, "embed") { run =>
       val emb = graft.Tables.load(spark, sfDir, "embeddings")
-      var corpusCodes = graft.operators.Dedup
+      var corpusCodes = Dedup
         .embeddingSignCodes(emb.filter(pmod(col("vec_id"), lit(2)) === 1))
         .localCheckpoint()
-      val stamper = new MtimeStamper
-      var first = true
-      val batch = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
-      Seq(batch.filter(pmod(col("vec_id"), lit(4)) === 0),
-          batch.filter(pmod(col("vec_id"), lit(4)) === 2)).foreach { h =>
-        h.coalesce(1).write.mode(if (first) "overwrite" else "append").parquet(in)
-        first = false
-        stamper.stamp(in)
+      val stream = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
+      run.stage("in", stream.filter(pmod(col("vec_id"), lit(4)) === 0),
+        stream.filter(pmod(col("vec_id"), lit(4)) === 2))
+      val pairs = ArrayBuffer.empty[(Long, Long)]
+      run.start(run.source("in")) { (b, _) =>
+        val batch = b.localCheckpoint()
+        val found = Dedup.embeddingLshIncremental(batch, corpusCodes)
+          .collect().map(r => (r.getLong(0), r.getLong(1)))
+        pairs.synchronized { pairs ++= found }
+        corpusCodes = nextRound(corpusCodes.union(Dedup.embeddingSignCodes(batch))
+          .localCheckpoint(), corpusCodes, batch)
       }
-      val src = spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val pairs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val bdf = b.toDF().localCheckpoint()
-          val found = graft.operators.Dedup
-            .embeddingLshIncremental(bdf, corpusCodes)
-            .collect().map(r => (r.getLong(0), r.getLong(1)))
-          pairs.synchronized { pairs ++= found }
-          corpusCodes = corpusCodes.union(
-            graft.operators.Dedup.embeddingSignCodes(bdf)).localCheckpoint()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      pairs.toSeq.toDF("id_a", "id_b")
-    } finally deleteRecursively(dir)
+      run.drainAndStop()
+      TxTable.release(corpusCodes)
+      pairs
+    }
+    pairs.toSeq.toDF("id_a", "id_b")
   }
 
   /** st41 (r16): incremental IVF INDEX maintenance — the st14
@@ -1618,57 +1355,45 @@ object StreamDrivers {
     * corpus vs streamed occupancy with the s20 exact
     * cross-multiplication rate-shift rule at ±4‰ (the s23 mini-batch
     * update is the gated remediation once it fires). */
-  def ivfIngestFileStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft-stream-ivf")
-    val in = s"$dir/in"; val chk = s"$dir/chk"; val root = s"$dir/state"
-    try withStatePartitions(spark, 8) {
+  def ivfIngestFileStream(spark: SparkSession, sfDir: String): DataFrame =
+    withRun(spark, "ivf") { run =>
+      val root = run.path("state")
       val emb = graft.Tables.load(spark, sfDir, "embeddings")
       val corpus = emb.filter(pmod(col("vec_id"), lit(2)) === 1).localCheckpoint()
-      graft.sources.TxTable.create(spark,
+      TxTable.create(spark,
         graft.operators.Similarity.ivfAssign(corpus, corpus)
           .withColumn("streamed", lit(0)), root, "vec_id")
-      val stamper = new MtimeStamper
-      var first = true
-      val batch = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
-      Seq(batch.filter(pmod(col("vec_id"), lit(4)) === 0),
-          batch.filter(pmod(col("vec_id"), lit(4)) === 2)).foreach { h =>
-        h.coalesce(1).write.mode(if (first) "overwrite" else "append").parquet(in)
-        first = false
-        stamper.stamp(in)
+      val stream = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
+      run.stage("in", stream.filter(pmod(col("vec_id"), lit(4)) === 0),
+        stream.filter(pmod(col("vec_id"), lit(4)) === 2))
+      run.start(run.source("in")) { (b, bid) =>
+        val batch = b.toDF().localCheckpoint()
+        val assigned = graft.operators.Similarity.ivfAssign(batch, corpus)
+          .withColumn("streamed", lit(1))
+        TxTable.merge(spark, root, assigned, "vec_id", txn = Some(("st41", bid)))
+        TxTable.release(batch)
       }
-      val src = spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-          val assigned = graft.operators.Similarity
-            .ivfAssign(b.toDF().localCheckpoint(), corpus)
-            .withColumn("streamed", lit(1))
-          graft.sources.TxTable.merge(spark, root, assigned, "vec_id",
-            txn = Some(("st41", bid))); ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      run.drainAndStop()
       // the audit reads ONLY the maintained table — counts, the id-sum
       // assignment checksum, and the exact-integer drift rule
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-      val agg = graft.sources.TxTable.read(spark, root)
+      val agg = TxTable.read(spark, root)
         .groupBy(col("cell")).agg(
           sum(when(col("streamed") === 0, 1L).otherwise(0L)).as("n_corpus"),
           sum(when(col("streamed") === 1, 1L).otherwise(0L)).as("n_streamed"),
           sum(col("vec_id")).as("id_sum"))
       val totals = agg.agg(sum(col("n_corpus")).as("nc"),
         sum(col("n_streamed")).as("nb"))
-      agg.crossJoin(broadcast(totals))
+      val out = agg.crossJoin(broadcast(totals))
         .select(col("cell"), col("n_corpus"), col("n_streamed"), col("id_sum"),
           (abs(col("n_streamed").cast(dec) * col("nc") -
                col("n_corpus").cast(dec) * col("nb")) * 1000 >
             lit(4).cast(dec) * col("nc") * col("nb"))
             .cast("int").as("drifted"))
         .localCheckpoint()  // materialize BEFORE the temp table dir dies
-    } finally deleteRecursively(dir)
-  }
+      TxTable.release(corpus)
+      out
+    }
 
   /** st42 (r16): TWO CONCURRENT streaming sinks sharing ONE hot state
     * table — the fleet posture the r16 OCC rebase fast path exists
@@ -1684,17 +1409,14 @@ object StreamDrivers {
     * updates; the concurrency counters are reported to the log, never
     * gated (whether a race occurred is scheduler-dependent; the
     * deterministic rebase/re-derive semantics are TxTableSpec's job). */
-  def multiSinkFileStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft-stream-multisink")
-    val root = s"$dir/state"
-    try withStatePartitions(spark, 8) {
+  def multiSinkFileStream(spark: SparkSession, sfDir: String): DataFrame =
+    withRun(spark, "multisink") { run =>
+      val root = run.path("state")
       val o = graft.Tables.load(spark, sfDir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      graft.sources.TxTable.create(spark,
+      TxTable.create(spark,
         o.filter(pmod(col("o_orderkey"), lit(3)) === 0), root, "o_orderkey")
-      val schema = o.schema
-      val queries = Seq(0, 1).map { which =>
-        val in = s"$dir/in$which"
+      Seq(0, 1).foreach { which =>
         val tag = if (which == 0) "A" else "B"
         val upd = o.filter(pmod(col("o_orderkey"), lit(2)) === which &&
             pmod(col("o_orderkey"), lit(5)) < 2)
@@ -1702,81 +1424,67 @@ object StreamDrivers {
             concat(lit(tag), pmod(col("o_orderkey"), lit(10)).cast("string"))
               .as("o_orderstatus"),
             (col("o_totalprice") * 1.1).as("o_totalprice"))
-        val stamper = new MtimeStamper
-        var first = true
-        Seq(which, which + 2).foreach { r =>
-          upd.filter(pmod(col("o_orderkey"), lit(4)) === r)
-            .coalesce(1).write.mode(if (first) "overwrite" else "append")
-            .parquet(in)
-          first = false
-          stamper.stamp(in)
+        run.stage(s"in$which",
+          Seq(which, which + 2).map(r => upd.filter(pmod(col("o_orderkey"), lit(4)) === r)): _*)
+        run.start(run.source(s"in$which")) { (b, bid) =>
+          val batch = b.toDF().localCheckpoint()
+          TxTable.merge(spark, root, batch, "o_orderkey", txn = Some((s"sink$which", bid)))
+          TxTable.release(batch)
         }
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(in)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$dir/chk$which")
-          .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            graft.sources.TxTable.merge(spark, root,
-              b.toDF().localCheckpoint(), "o_orderkey",
-              txn = Some((s"sink$which", bid))); ()
-          }
-          .start()
       }
-      try queries.foreach(_.processAllAvailable())
-      finally queries.foreach(_.stop())
-      graft.sources.TxTable.read(spark, root).localCheckpoint()
-    } finally deleteRecursively(dir)
-  }
+      run.drainAndStop()
+      TxTable.read(spark, root).localCheckpoint()
+    }
 
+  /** st18: streaming VISUAL ingest — the st14 probe-then-append posture
+    * at the phash layer, closing the last asymmetric cell of the
+    * streaming×incremental matrix: the planted-image batch tier
+    * (doc_id % 32 = 0) staged as two doc-halves (maxFilesPerTrigger=1 ⇒
+    * two genuine micro-batches), each micro-batch's documents dHashed
+    * IN-STREAM ([[graft.operators.Multimodal.imagePhash]] on the batch
+    * frame — decode work proportional to the batch, the corpus is never
+    * re-decoded), probed against the persisted corpus phash table via
+    * [[graft.operators.Multimodal.phashIncremental]], then APPENDED to
+    * the state so cross-micro-batch visual pairs surface in the later
+    * batch's probe. Union over micro-batches = the d23 batch recompute
+    * (same disjointness argument as st14: the probe side is always the
+    * current micro-batch only), so d23's restricted brute-force oracle
+    * gates this driver verbatim — licensed by the Hamming-3 full-recall
+    * banding. In production the state is a chunk-bucketed phash table
+    * appended per batch; the collect is the oracle-gate harness. */
   def phashIngestFileStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-phash")
-    val in = s"$dir/in"; val chk = s"$dir/chk"
-    try withStatePartitions(spark, 8) {
+    import graft.operators.Multimodal
+    val pairs = withRun(spark, "phash") { run =>
       val docs = graft.Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"), col("text"))
       // the persisted corpus phash artifact (the d23 corpus half)
-      var corpusSigs = graft.operators.Multimodal
+      var corpusSigs = Multimodal
         .imagePhash(spark, docs.filter(pmod(col("doc_id"), lit(32)) === 16))
         .localCheckpoint()
-      val stamper = new MtimeStamper
-      var first = true
-      val batchDocs = docs.filter(pmod(col("doc_id"), lit(32)) === 0)
-      Seq(batchDocs.filter(pmod(col("doc_id"), lit(64)) === 0),
-          batchDocs.filter(pmod(col("doc_id"), lit(64)) === 32)).foreach { h =>
-        h.coalesce(1).write.mode(if (first) "overwrite" else "append").parquet(in)
-        first = false
-        stamper.stamp(in)
+      val stream = docs.filter(pmod(col("doc_id"), lit(32)) === 0)
+      run.stage("in", stream.filter(pmod(col("doc_id"), lit(64)) === 0),
+        stream.filter(pmod(col("doc_id"), lit(64)) === 32))
+      val pairs = ArrayBuffer.empty[(Long, Long, Int)]
+      run.start(run.source("in")) { (b, _) =>
+        val batch = b.localCheckpoint()
+        val batchSigs = Multimodal.imagePhash(spark, batch).localCheckpoint()
+        val found = Multimodal.phashIncremental(corpusSigs, batchSigs)
+          .collect()
+          .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
+            r.getAs[Int]("hamming")))
+        pairs.synchronized { pairs ++= found }
+        // ingest: the batch's signatures join the corpus before the
+        // next micro-batch probes (deterministic dHash, so re-hashing
+        // here equals what a persisted append would hold)
+        corpusSigs = nextRound(corpusSigs.union(batchSigs).localCheckpoint(),
+          corpusSigs, batchSigs, batch)
       }
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)))
-      val src = spark.readStream.schema(docSchema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val pairs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val batchSigs = graft.operators.Multimodal
-            .imagePhash(spark, b.localCheckpoint()).localCheckpoint()
-          val found = graft.operators.Multimodal
-            .phashIncremental(corpusSigs, batchSigs)
-            .collect()
-            .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
-              r.getAs[Int]("hamming")))
-          pairs.synchronized { pairs ++= found }
-          // ingest: the batch's signatures join the corpus before the
-          // next micro-batch probes (deterministic dHash, so re-hashing
-          // here equals what a persisted append would hold)
-          corpusSigs = corpusSigs.union(batchSigs).localCheckpoint()
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      pairs.toSeq.toDF("doc_a", "doc_b", "hamming")
-    } finally deleteRecursively(dir)
+      run.drainAndStop()
+      TxTable.release(corpusSigs)
+      pairs
+    }
+    pairs.toSeq.toDF("doc_a", "doc_b", "hamming")
   }
 
   /** st12: streaming BPE token-budget accounting driven end-to-end —
@@ -1791,38 +1499,19 @@ object StreamDrivers {
   def bpeBudgetFileStream(spark: SparkSession, sfDir: String,
                           merges: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-bpebudget")
-    val in = s"$dir/in"; val chk = s"$dir/chk"
-    try withStatePartitions(spark, 8) {
+    val rows = withRun(spark, "bpebudget") { run =>
       val docs = graft.Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"), col("text"), col("source"))
-      val stamper = new MtimeStamper
-      var first = true
-      Seq(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
-          docs.filter(pmod(col("doc_id"), lit(2)) === 1)).foreach { h =>
-        h.coalesce(1).write.mode(if (first) "overwrite" else "append").parquet(in)
-        first = false
-        stamper.stamp(in)
-      }
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("source", StringType)))
-      val src = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val state = scala.collection.mutable.Map.empty[String, (Long, Long)]
-      val q = StreamOps.tokenBudget(src, merges).writeStream
-        .outputMode("update")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val rows = b.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-          state.synchronized { rows.foreach { case (s, t, n) => state(s) = (t, n) } }; ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      state.toSeq.map { case (s, (t, n)) => (s, t, n) }
-        .toDF("source", "total_tokens", "n_docs")
-    } finally deleteRecursively(dir)
+      run.stage("in", docs.filter(pmod(col("doc_id"), lit(2)) === 0),
+        docs.filter(pmod(col("doc_id"), lit(2)) === 1))
+      val out = run.collecting(StreamOps.tokenBudget(run.source("in"), merges), "update")
+      run.drainAndStop()
+      out
+    }
+    val state = scala.collection.mutable.Map.empty[String, (Long, Long)]
+    rows.foreach(r => state(r.getString(0)) = (r.getLong(1), r.getLong(2)))
+    state.toSeq.map { case (s, (t, n)) => (s, t, n) }
+      .toDF("source", "total_tokens", "n_docs")
   }
 
   /** Watermarked streaming dedup driven end-to-end with REAL duplicates
@@ -1840,23 +1529,13 @@ object StreamDrivers {
     * dedup emits first-seen rows in their own batch. */
   def dedupFileStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, String, Double)]
-    // copiesPerHalf = 2: every event's duplicate arrives one micro-batch
-    // after its original; no sentinel — append-mode dedup emits
-    // first-seen rows in their own batch
-    runOverEventFiles(spark, sfDir, sentinelOffsetSec = None, copiesPerHalf = 2) {
-      (src, chk) =>
-        StreamOps.dedupStream(src).writeStream
-          .outputMode("append")
-          .option("checkpointLocation", chk)
-          .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val rows = b.collect().map(r => (r.getLong(0), r.getTimestamp(1).getTime / 1000,
-              r.getLong(2), r.getString(3), r.getDouble(4)))
-            buf.synchronized { buf ++= rows }; ()
-          }
-          .start()
+    val rows = withRun(spark, "dedup") { run =>
+      runOverEventFiles(run, sfDir, sentinelOffsetSec = None, copiesPerHalf = 2)(src =>
+        run.collecting(StreamOps.dedupStream(src)))
     }
-    buf.toSeq.toDF("event_id", "sec", "user_id", "event_type", "value")
+    rows.toSeq.map(r => (r.getLong(0), r.getTimestamp(1).getTime / 1000,
+        r.getLong(2), r.getString(3), r.getDouble(4)))
+      .toDF("event_id", "sec", "user_id", "event_type", "value")
       .orderBy(col("event_id"))
   }
 
@@ -1868,17 +1547,11 @@ object StreamDrivers {
     * q28 oracle. */
   def latestStateFileStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val buf = scala.collection.mutable.ArrayBuffer.empty[StreamOps.Latest]
-    runOverEventFiles(spark, sfDir, sentinelOffsetSec = Some(60L)) { (src, chk) =>
-      StreamOps.latestState(spark, src.as[StreamOps.Ev]).writeStream
-        .outputMode("update")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (b: Dataset[StreamOps.Latest], _: Long) =>
-          val rows = b.collect(); buf.synchronized { buf ++= rows }; ()
-        }
-        .start()
+    val rows = withRun(spark, "latest") { run =>
+      runOverEventFiles(run, sfDir, sentinelOffsetSec = Some(60L))(src =>
+        run.collecting(StreamOps.latestState(spark, src.as[StreamOps.Ev]), "update"))
     }
-    buf.toSeq.filter(_.user_id != SentinelUser)
+    rows.toSeq.filter(_.user_id != SentinelUser)
       .groupBy(_.user_id).values
       .map(_.maxBy(l => (l.last_sec, l.last_event_id))).toSeq
       .toDF()
@@ -1972,12 +1645,10 @@ object StreamDrivers {
     * Oracle = the from-scratch per-customer aggregate over the
     * upstream HEAD — any missed or double-applied change row
     * hash-fails. */
-  def changeFeedStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.sources.TxTable
-    val dir = Files.createTempDirectory("graft-stream-chfeed")
-    val src = s"$dir/src"; val snk = s"$dir/agg"; val chk = s"$dir/chk"
-    val appId = "st43-subscriber"
-    try withStatePartitions(spark, 8) {
+  def changeFeedStream(spark: SparkSession, sfDir: String): DataFrame =
+    withRun(spark, "chfeed") { run =>
+      val src = run.path("src"); val snk = run.path("agg")
+      val appId = "st43-subscriber"
       // checkpointed ONCE (r19): the create + three upstream commits
       // each slice this frame — materialized blocks, not four scans
       val o = graft.Tables.load(spark, sfDir, "orders")
@@ -2019,31 +1690,33 @@ object StreamDrivers {
       // one drained window: a fresh query over the SAME checkpoint —
       // the engine resumes from its offset log (restart-resume is part
       // of what st43 gates), serves everything newly available, stops
-      val served = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val served = ArrayBuffer.empty[Long]
       var lastBatch = -1L
+      var windows = 0
       def drain(): Seq[Long] = {
         val before = served.size
-        val q = spark.readStream.format("graft")
-          .option("startingVersion", "2").load(src)
-          .writeStream
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-            // materialize the window's change rows ONCE (r19, guide
-            // §1.2): the served-version probe and the delta aggregate
-            // both consumed `b`, so each drain executed the feed read
-            // twice — now both read the checkpointed blocks
-            val cb = b.toDF().localCheckpoint()
-            val vs = cb.select(col("_commit_version")).distinct()
-              .collect().map(_.getLong(0)).sorted.toSeq
-            if (vs.nonEmpty) {
-              applyDelta(deltaOf(cb).localCheckpoint(), id)
-              served.synchronized { served ++= vs; lastBatch = id }
-            }
-            ()
+        windows += 1
+        val q = run.start(spark.readStream.format("graft")
+            .option("startingVersion", "2").load(src),
+          checkpoint = "chk", trigger = Trigger.AvailableNow()) { (b, id) =>
+          // materialize the window's change rows ONCE (r19, guide
+          // §1.2): the served-version probe and the delta aggregate
+          // both consumed `b`, so each drain executed the feed read
+          // twice — now both read the checkpointed blocks
+          val cb = b.toDF().localCheckpoint()
+          val vs = cb.select(col("_commit_version")).distinct()
+            .collect().map(_.getLong(0)).sorted.toSeq
+          if (vs.nonEmpty) {
+            val delta = deltaOf(cb).localCheckpoint()
+            applyDelta(delta, id)
+            served.synchronized { served ++= vs; lastBatch = id }
+            TxTable.release(delta)
           }
-          .start()
-        q.awaitTermination(120000)
+          // the window's blocks are committed to the sink: nothing reads
+          // them again
+          TxTable.release(cb)
+        }
+        run.drainAvailableNow(q, s"st43 window $windows")
         served.synchronized(served.drop(before).toSeq)
       }
       // window 1: pure inserts, one commit
@@ -2081,16 +1754,19 @@ object StreamDrivers {
       // window (recomputed from the batch feed, as a recovering run
       // would) under the SAME batch id — only the sink's txn guard
       // stands between this and a doubled aggregate
-      applyDelta(deltaOf(TxTable.changes(spark, src, 4L, 5L))
-        .localCheckpoint(), lastBatch)
+      val replay = deltaOf(TxTable.changes(spark, src, 4L, 5L)).localCheckpoint()
+      applyDelta(replay, lastBatch)
       require(TxTable.currentVersion(snk) == vSnk,
         "a replayed batch must no-op on the idempotence guard")
-      TxTable.read(spark, snk)
+      val out = TxTable.read(spark, snk)
         .filter(col("n_rows") > 0)
         .select(col("o_custkey"), col("rev_cents"), col("n_rows"))
         .localCheckpoint()
-    } finally deleteRecursively(dir)
-  }
+      // the eager checkpoint above has copied the result's blocks: the
+      // result reads the sink's files, never the staged frames
+      Seq(o, upd2, replay).foreach(TxTable.release)
+      out
+    }
 
   /** st26: the c55 WARC→text front door AS THE STREAM SOURCE — the
     * production topology: crawl containers land as files, the ingest

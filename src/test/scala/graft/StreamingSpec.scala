@@ -1,13 +1,42 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.scalatest.{Failed, Outcome}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.StreamOps
+import graft.streaming.{StreamDrivers, StreamOps}
 import graft.operators.{Dedup, Relational, TimeJoins}
 import java.sql.Timestamp
 
 class StreamingSpec extends AnyFunSuite with SharedSpark {
+
+  /** After each test: no streaming query may still be running. A stuck
+    * query keeps committing over the next test's session and files, so
+    * it is stopped and the test that left it fails. */
+  override def withFixture(test: NoArgTest): Outcome = {
+    val outcome = super.withFixture(test)
+    val active = spark.streams.active
+    active.foreach(_.stop())
+    if (active.nonEmpty && outcome.isSucceeded)
+      Failed(s"${active.length} streaming queries left active")
+    else outcome
+  }
+
+  /** Drivers' results as row sets. */
+  private def rowSet(df: DataFrame, cols: String*): Set[List[Any]] =
+    df.select(cols.map(col): _*).collect().map(_.toSeq.toList).toSet
+
+  /** Run `body` and return the persistent RDDs it left, unpersisting
+    * them so the next test starts clean. */
+  private def persistedBy(body: => Unit): Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    body
+    val added = sc.getPersistentRDDs.keySet.toSet -- before
+    added.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
+    added
+  }
 
   private def eventData(): Seq[StreamOps.Ev] =
     table("events").select("event_id", "ts", "user_id", "event_type", "value")
@@ -348,6 +377,77 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     // non-vacuous: the stream dropped reserved/unknown/opt-out docs
     assert(batch.nonEmpty && streamed.size < graft.Tables
       .load(spark, SharedSpark.sfDir, "documents").count())
+  }
+
+  test("stream harness: a failing micro-batch propagates, stops its query and deletes the run dir") {
+    var dir: java.nio.file.Path = null
+    val err = intercept[Exception] {
+      StreamDrivers.withRun(spark, "boom") { run =>
+        dir = run.dir
+        run.stage("in", table("events").limit(10))
+        // the failing query dies on its own; the healthy one beside it
+        // keeps running until the harness stops it
+        run.start(run.source("in")) { (_, _) =>
+          throw new IllegalStateException("micro-batch boom")
+        }
+        run.collecting(run.source("in"))
+        run.drain()
+      }
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "micro-batch boom"), err)
+    assert(spark.streams.active.isEmpty, "the failed run left a query active")
+    assert(dir != null && !java.nio.file.Files.exists(dir), s"$dir survived the run")
+  }
+
+  test("st32's TxTable sink lands on st11's driver-side CDC apply") {
+    val cols = Seq("o_orderkey", "o_orderstatus", "o_totalprice")
+    val st11 = rowSet(StreamDrivers.cdcFileStream(spark, SharedSpark.sfDir), cols: _*)
+    var st32: Set[List[Any]] = null
+    persistedBy { st32 = rowSet(StreamDrivers.cdcTxSinkStream(spark, SharedSpark.sfDir), cols: _*) }
+    assert(st11.nonEmpty && st32 === st11)
+  }
+
+  test("st37's txn-guarded, re-delivered MV equals st34's") {
+    val cols = Seq("ym", "revenue", "n_orders")
+    var st34, st37: Set[List[Any]] = null
+    persistedBy {
+      st34 = rowSet(StreamDrivers.matviewFileStream(spark, SharedSpark.sfDir), cols: _*)
+      st37 = rowSet(StreamDrivers.matviewIdempotentFileStream(spark, SharedSpark.sfDir), cols: _*)
+    }
+    assert(st34.nonEmpty && st37 === st34)
+  }
+
+  test("st44's merge-on-read erasure report equals st38's") {
+    val cols = Seq("source", "n_before", "n_revoked", "n_after", "chars_after")
+    var st38, st44: Set[List[Any]] = null
+    persistedBy {
+      st38 = rowSet(StreamDrivers.erasureFileStream(spark, SharedSpark.sfDir), cols: _*)
+      st44 = rowSet(StreamDrivers.erasureDvFileStream(spark, SharedSpark.sfDir), cols: _*)
+    }
+    assert(st38.nonEmpty && st44 === st38)
+    // non-vacuous: the revocations removed rows
+    assert(st38.exists(_(2).asInstanceOf[Long] > 0L))
+  }
+
+  test("st43 driver: the change-feed subscriber runs all its windows and returns rows") {
+    var n = 0L
+    persistedBy { n = StreamDrivers.changeFeedStream(spark, SharedSpark.sfDir).count() }
+    assert(n > 0)
+  }
+
+  test("probe-and-append drivers release every round they stage") {
+    Seq[(String, (SparkSession, String) => DataFrame)](
+      "st14" -> StreamDrivers.minhashIngestFileStream,
+      "st18" -> StreamDrivers.phashIngestFileStream,
+      "st22" -> StreamDrivers.embedIngestFileStream,
+      "st33" -> StreamDrivers.chunkIngestFileStream,
+      "st36" -> StreamDrivers.prefixIngestFileStream).foreach { case (key, driver) =>
+      var n = 0L
+      val left = persistedBy { n = driver(spark, SharedSpark.sfDir).count() }
+      assert(left.isEmpty, s"$key left ${left.size} persisted RDDs")
+      assert(n > 0, s"$key returned no rows")
+    }
   }
 
   test("st44 driver releases the aggregates it staged: only its result stays persisted") {
