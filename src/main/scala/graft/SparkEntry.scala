@@ -1497,8 +1497,9 @@ object SparkEntry {
     // symmetric so the drained set equals d36's batch answer and the
     // same relational replay gates it (own staged copy of the table)
     "st36_prefix_stream" -> ((s, d) => {
-      Dedup.shingleTable(t(s, d, "documents"))
-        .coalesce(1).write.mode("overwrite").parquet(stageDir(d) + "/st36_sh")
+      val sh = Dedup.shingleTable(t(s, d, "documents"))
+      sh.coalesce(1).write.mode("overwrite").parquet(stageDir(d) + "/st36_sh")
+      graft.sources.TxTable.release(sh)
       graft.streaming.StreamDrivers.prefixIngestFileStream(Tables.tune(s), d)
     }),
     // st35 (r14): late-data ACCOUNTING — out-of-order arrival by
@@ -3539,6 +3540,7 @@ object SparkEntry {
         .coalesce(1).write.mode("overwrite").parquet(stageDir(d) + "/st14_sigs")
       Dedup.bandedSigs(sigsAll).coalesce(1).write.mode("overwrite")
         .parquet(stageDir(d) + "/st14_banded")
+      graft.sources.TxTable.release(sigsAll)
       graft.streaming.StreamDrivers.minhashIngestFileStream(ss, d)
     }),
     // streaming BPE token-budget ledger: merge table persisted and

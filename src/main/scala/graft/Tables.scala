@@ -6,6 +6,8 @@ import scala.util.Try
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.graftx.GraftDataset
 import org.apache.spark.sql.internal.StaticSQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -30,9 +32,15 @@ import org.apache.spark.sql.types.StructType
   * A directory (a Spark-written dataset) can change under any of its
   * files without changing its own status, so it is inferred on every
   * load. A miss infers outside any lock; two loads racing on
-  * one miss both infer the same schema. The memo holds the schema, not
-  * the `DataFrame`: every load builds a fresh relation with fresh
-  * attribute ids, so a table joined with itself still resolves.
+  * one miss both infer the same schema.
+  *
+  * Beside the schema, the memo keeps the resolved file relation of the
+  * last session that loaded the file under that stamp. Resolving it
+  * again costs a data-source lookup, a new file index and copies of
+  * the Hadoop conf on every load; a warm load of the same session
+  * instead hands out a new instance of the memoized relation. Every
+  * load gets fresh attribute ids, so a table joined with itself still
+  * resolves, and another session resolves a relation of its own.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -42,7 +50,11 @@ object Tables {
   /** What an inferred schema was read under: file length, modification
     * time and the two Parquet type-mapping confs. */
   private type Stamp = (Long, Long, Boolean, Boolean)
-  private val schemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
+
+  /** A file's inferred schema under `stamp`, and the relation the last
+    * session to load it resolved. */
+  private final case class Memo(stamp: Stamp, schema: StructType, rel: Option[LogicalRelation])
+  private val memos = new ConcurrentHashMap[String, Memo]()
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = read(spark, s"$sfDir/$name.parquet")
@@ -54,7 +66,8 @@ object Tables {
   }
 
   /** `spark.read.parquet(path)`, with the schema from the memo when the
-    * file and the confs are those it was inferred under. A path that is
+    * file and the confs are those it was inferred under, and with the
+    * memoized relation when `spark` also resolved it. A path that is
     * missing or not a plain file is read without a schema, so Spark
     * reports its errors. */
   private def read(spark: SparkSession, path: String): DataFrame = {
@@ -67,11 +80,13 @@ object Tables {
         val stamp: Stamp = (st.getLen, st.getModificationTime,
           conf.legacyParquetNanosAsLong, conf.parquetInferTimestampNTZEnabled)
         val key = st.getPath.toString
-        Option(schemas.get(key)).collect { case (`stamp`, schema) => schema } match {
-          case Some(schema) => spark.read.schema(schema).parquet(path)
-          case None =>
-            val df = spark.read.parquet(path)
-            schemas.put(key, (stamp, df.schema))
+        Option(memos.get(key)).filter(_.stamp == stamp) match {
+          case Some(Memo(_, _, Some(rel))) if rel.relation.sqlContext.sparkSession eq spark =>
+            GraftDataset.ofRows(spark, rel.newInstance())
+          case hit =>
+            val df = hit.fold(spark.read.parquet(path))(m => spark.read.schema(m.schema).parquet(path))
+            val rel = Some(df.queryExecution.analyzed).collect { case r: LogicalRelation => r }
+            memos.put(key, Memo(stamp, df.schema, rel))
             df
         }
     }

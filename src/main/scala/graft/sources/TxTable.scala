@@ -462,7 +462,7 @@ object TxTable {
     *    (degrade-never-miss). Every string-keyed table here (URL-,
     *    digest-, date-string-keyed state) casts to null → identical
     *    sentinels either way. */
-  private def footerEntries(conf: org.apache.hadoop.conf.Configuration,
+  private[graft] def footerEntries(conf: org.apache.hadoop.conf.Configuration,
                             moved: Seq[Path], schema: StructType, key: String,
                             secondary: Seq[(String, DataType)])
       : Option[Seq[FileEntry]] = {
@@ -530,11 +530,15 @@ object TxTable {
       case _ => None
     }
     try {
+      // the reader options over the caller's conf: a bare open(in)
+      // builds a fresh Hadoop Configuration per file, re-parsing the
+      // default resources and searching the classpath for site files
+      val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
       val out = Seq.newBuilder[FileEntry]
       moved.foreach { p =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(p.toString), conf)
-        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(in, opts)
         val footer = try rdr.getFooter finally rdr.close()
         val blocks = footer.getBlocks.asScala.toSeq
         val rows = blocks.map(_.getRowCount).sum
@@ -620,89 +624,16 @@ object TxTable {
       // r18 (optimization round): per-file stats come FROM THE FOOTERS
       // the parquet writer just produced — no Spark job, no re-read of
       // the data pages (guide §1.2: remove whole passes first). The
-      // old one-pass Spark stats job below remains as the exactness
-      // fallback for anything the footers can't prove (None).
-      val footerStats = if (!physDf.columns.contains(key)) None else {
-        val secondaryTyped = statsCols.distinct.filter(_ != key)
-          .map(c => colMap.getOrElse(c, c))
-          .filter(physDf.columns.contains)
-          .map(c => (c, physDf.schema(c).dataType))
-        footerEntries(spark.sessionState.newHadoopConf(), moved,
-          physDf.schema, key, secondaryTyped)
-      }
-      if (footerStats.isDefined) return footerStats.get
-      // one pass over the new files for per-file stats (the log never
-      // stores data, only names + ranges)
-      // integral keys record a BIGINT range; STRING keys additionally
-      // record their lexicographic min/max (r15) — the stats that keep
-      // merges on URL-/digest-keyed state tables proportional to the
-      // touched keys. Anything else (composites, doubles) casts to
-      // null: such a file records the FULL key range, so pruning
-      // degrades to touch-this-file-always instead of silently
-      // skipping it (the degrade-never-miss posture a MERGE must have)
-      val back = spark.read.parquet(moved.map(_.toString): _*)
-      val keyIsString =
-        back.schema(key).dataType == org.apache.spark.sql.types.StringType
-      // declared secondary statistics columns present in this frame,
-      // with their typed min/max projections (same single stats pass).
-      // `back` is the PHYSICAL frame, and ColStat keys are PHYSICAL
-      // names (r18): physical names never change, so a rename leaves
-      // every old entry's stats addressable — readers translate
-      // logical → physical before the lookup
-      val secondary = statsCols.distinct.filter(_ != key)
+      // old one-pass Spark stats job, [[statsPassEntries]], remains as
+      // the exactness fallback for anything the footers can't prove
+      // (None).
+      val physStatsCols = statsCols.distinct.filter(_ != key)
         .map(c => colMap.getOrElse(c, c))
-        .filter(c => back.columns.contains(c))
-        .flatMap(c => statProjections(back.schema(c).dataType, c)
-          .map { case (proj, numeric) => (c, proj, numeric) })
-      // null counts ride the same pass (r18): [[deleteWhere]]'s
-      // metadata-only drop is sound only for files PROVEN all-non-null
-      // in the predicate column (a NULL matches no range predicate and
-      // must survive the delete), so every new file logs them
-      val secondaryAggs = secondary.zipWithIndex.flatMap {
-        case ((c, proj, _), i) =>
-          Seq(min(proj).as(s"_c${i}lo"), max(proj).as(s"_c${i}hi"),
-            sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"_c${i}nn"))
-      }
-      val stats = back
-        .groupBy(input_file_name().as("f"))
-        .agg(count(lit(1)).as("rows"),
-          Seq(
-            min(expr(s"try_cast(`$key` AS BIGINT)")).as("kmin"),
-            max(expr(s"try_cast(`$key` AS BIGINT)")).as("kmax"),
-            min(if (keyIsString) col(key) else lit(null).cast("string")).as("smin"),
-            max(if (keyIsString) col(key) else lit(null).cast("string")).as("smax"),
-            sum(when(col(key).isNull, 1L).otherwise(0L)).as("knn")
-          ) ++ secondaryAggs: _*)
-        .collect()
-        .map { r =>
-          val kmin = if (r.isNullAt(2)) Long.MinValue else r.getLong(2)
-          val kmax = if (r.isNullAt(3)) Long.MaxValue else r.getLong(3)
-          val smin = if (r.isNullAt(4)) None else Some(r.getString(4))
-          val smax = if (r.isNullAt(5)) None else Some(r.getString(5))
-          val knn = if (r.isNullAt(6)) None else Some(r.getLong(6))
-          val colStats = secondary.zipWithIndex.flatMap {
-            case ((c, _, numeric), i) =>
-              val lo = 7 + 3 * i; val hi = lo + 1; val nn = lo + 2
-              val nnv = if (r.isNullAt(nn)) None else Some(r.getLong(nn))
-              if (r.isNullAt(lo) || r.isNullAt(hi)) None
-              else if (numeric)
-                Some(c -> ColStat(nlo = Some(r.getLong(lo)),
-                  nhi = Some(r.getLong(hi)), nn = nnv))
-              else
-                Some(c -> ColStat(lo = Some(r.getString(lo)),
-                  hi = Some(r.getString(hi)), nn = nnv))
-          }.toMap
-          (r.getString(0), (r.getLong(1), kmin, kmax, smin, smax,
-            if (colStats.isEmpty) None else Some(colStats), knn))
-        }
-        .toMap
-      moved.map { p =>
-        val (rows, kmin, kmax, smin, smax, cols, knn) = stats.collectFirst {
-          case (f, s) if f.endsWith(p.getFileName.toString) => s
-        }.getOrElse((0L, 0L, -1L, None, None, None, None))
-        FileEntry(p.getFileName.toString, rows, kmin, kmax, smin, smax, cols,
-          dv = None, knn = knn)
-      }.filter(_.rows > 0)
+      val footerStats = if (!physDf.columns.contains(key)) None else
+        footerEntries(spark.sessionState.newHadoopConf(), moved,
+          physDf.schema, key, physStatsCols.filter(physDf.columns.contains)
+            .map(c => (c, physDf.schema(c).dataType)))
+      footerStats.getOrElse(statsPassEntries(spark, moved, key, physStatsCols))
     } finally {
       // remove the now-empty staging dir (files were moved out)
       import scala.jdk.CollectionConverters._
@@ -711,6 +642,84 @@ object TxTable {
       rest.foreach(Files.deleteIfExists(_))
       Files.deleteIfExists(tmp)
     }
+  }
+
+  /** The one-pass Spark stats job over just-written files: the
+    * exactness fallback of [[footerEntries]]. `physStatsCols` are the
+    * declared secondary statistics columns by PHYSICAL name. */
+  private[graft] def statsPassEntries(spark: SparkSession, moved: Seq[Path],
+                                      key: String, physStatsCols: Seq[String])
+      : Seq[FileEntry] = {
+    // one pass over the new files for per-file stats (the log never
+    // stores data, only names + ranges)
+    // integral keys record a BIGINT range; STRING keys additionally
+    // record their lexicographic min/max (r15) — the stats that keep
+    // merges on URL-/digest-keyed state tables proportional to the
+    // touched keys. Anything else (composites, doubles) casts to
+    // null: such a file records the FULL key range, so pruning
+    // degrades to touch-this-file-always instead of silently
+    // skipping it (the degrade-never-miss posture a MERGE must have)
+    val back = spark.read.parquet(moved.map(_.toString): _*)
+    val keyIsString =
+      back.schema(key).dataType == org.apache.spark.sql.types.StringType
+    // declared secondary statistics columns present in this frame,
+    // with their typed min/max projections (same single stats pass).
+    // `back` is the PHYSICAL frame, and ColStat keys are PHYSICAL
+    // names (r18): physical names never change, so a rename leaves
+    // every old entry's stats addressable — readers translate
+    // logical → physical before the lookup
+    val secondary = physStatsCols.filter(c => back.columns.contains(c))
+      .flatMap(c => statProjections(back.schema(c).dataType, c)
+        .map { case (proj, numeric) => (c, proj, numeric) })
+    // null counts ride the same pass (r18): [[deleteWhere]]'s
+    // metadata-only drop is sound only for files PROVEN all-non-null
+    // in the predicate column (a NULL matches no range predicate and
+    // must survive the delete), so every new file logs them
+    val secondaryAggs = secondary.zipWithIndex.flatMap {
+      case ((c, proj, _), i) =>
+        Seq(min(proj).as(s"_c${i}lo"), max(proj).as(s"_c${i}hi"),
+          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"_c${i}nn"))
+    }
+    val stats = back
+      .groupBy(input_file_name().as("f"))
+      .agg(count(lit(1)).as("rows"),
+        Seq(
+          min(expr(s"try_cast(`$key` AS BIGINT)")).as("kmin"),
+          max(expr(s"try_cast(`$key` AS BIGINT)")).as("kmax"),
+          min(if (keyIsString) col(key) else lit(null).cast("string")).as("smin"),
+          max(if (keyIsString) col(key) else lit(null).cast("string")).as("smax"),
+          sum(when(col(key).isNull, 1L).otherwise(0L)).as("knn")
+        ) ++ secondaryAggs: _*)
+      .collect()
+      .map { r =>
+        val kmin = if (r.isNullAt(2)) Long.MinValue else r.getLong(2)
+        val kmax = if (r.isNullAt(3)) Long.MaxValue else r.getLong(3)
+        val smin = if (r.isNullAt(4)) None else Some(r.getString(4))
+        val smax = if (r.isNullAt(5)) None else Some(r.getString(5))
+        val knn = if (r.isNullAt(6)) None else Some(r.getLong(6))
+        val colStats = secondary.zipWithIndex.flatMap {
+          case ((c, _, numeric), i) =>
+            val lo = 7 + 3 * i; val hi = lo + 1; val nn = lo + 2
+            val nnv = if (r.isNullAt(nn)) None else Some(r.getLong(nn))
+            if (r.isNullAt(lo) || r.isNullAt(hi)) None
+            else if (numeric)
+              Some(c -> ColStat(nlo = Some(r.getLong(lo)),
+                nhi = Some(r.getLong(hi)), nn = nnv))
+            else
+              Some(c -> ColStat(lo = Some(r.getString(lo)),
+                hi = Some(r.getString(hi)), nn = nnv))
+        }.toMap
+        (r.getString(0), (r.getLong(1), kmin, kmax, smin, smax,
+          if (colStats.isEmpty) None else Some(colStats), knn))
+      }
+      .toMap
+    moved.map { p =>
+      val (rows, kmin, kmax, smin, smax, cols, knn) = stats.collectFirst {
+        case (f, s) if f.endsWith(p.getFileName.toString) => s
+      }.getOrElse((0L, 0L, -1L, None, None, None, None))
+      FileEntry(p.getFileName.toString, rows, kmin, kmax, smin, smax, cols,
+        dv = None, knn = knn)
+    }.filter(_.rows > 0)
   }
 
   /** Write change rows (table columns + `_change_type`) as CDC sidecar
@@ -1225,8 +1234,16 @@ object TxTable {
     * the caller's key frame `(_k, _c)`: a merge passes its per-key
     * source counts, a delete its distinct key set with `_c = 1` (no
     * extra groupBy). The frame feeds a broadcast range join over the
-    * (small) file-range table and one collect returns (any duplicated
-    * key, the cast-degrade flag, the touched names).
+    * (small) file-range table, and the observed metrics of the join's
+    * output (`Dataset.observe`) return (any duplicated key, the
+    * cast-degrade flag, the touched names) from the result stage that
+    * reads the key shuffle: no single-partition aggregate and collect
+    * follow it as a job of their own. The metrics are read from the
+    * probe's own query execution once its action returns. An
+    * [[org.apache.spark.sql.Observation]] would carry the same row, but
+    * it is completed by a listener on the asynchronous listener bus:
+    * it is not complete when the action returns, and a dropped event
+    * would leave the commit waiting forever.
     *
     * The uniqueness guard exists because the merge joins full_outer on
     * the key, so duplicate update keys would FAN OUT into duplicate
@@ -1256,14 +1273,17 @@ object TxTable {
       if (strPath) files.map(f => (f.name, f.smin.get, f.smax.get))
         .toDF("name", "lo", "hi")
       else files.map(f => (f.name, f.kmin, f.kmax)).toDF("name", "lo", "hi")
-    val r = withCast
+    val qe = withCast
       .join(broadcast(ranges), col("_kc").between(col("lo"), col("hi")), "left")
-      .agg(
+      .observe("probe",
         max(when(col("_c") > 1, lit(1)).otherwise(lit(0))).as("hasdup"),
         max(when(col("_c") > 1, col("_k").cast("string"))).as("dupk"),
         max(when(col("_kc").isNull, lit(1)).otherwise(lit(0))).as("nocast"),
         collect_set(col("name")).as("touched"))
-      .collect().head
+      .queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+      Some("TxTable file probe"))(qe.toRdd.foreach(_ => ()))
+    val r = qe.observedMetrics("probe")
     require(r.isNullAt(0) || r.getInt(0) == 0,
       s"TxTable merge: updates carry duplicate key " +
         s"'${if (r.isNullAt(1)) null else r.getString(1)}' — " +
@@ -1460,7 +1480,7 @@ object TxTable {
     * the schema the merged rows take, plus the commit's new schema JSON
     * when that schema evolved (None: unchanged). Everything else
     * happens here once: the source materializes once, the uniqueness
-    * guard and file pruning share one aggregate, the touched files are
+    * guard and file pruning share one action, the touched files are
     * read through the target schema (read-by-name, like read(): a bare
     * inferred read after a widening commit would take its schema from
     * whichever touched file it samples; DV-aware since r17, so the
@@ -2366,14 +2386,35 @@ object TxTable {
         None, None))
     }
 
-  /** Compaction as a commit: rewrite the current live set into
+  /** Compaction as a commit: rewrite the current live set into at most
     * `numFiles` files, remove the originals — readers before/after see
     * exactly the same rows (spec-asserted), and time travel to the
     * pre-compaction version still works because old files are only
-    * DE-REFERENCED, never deleted (vacuum is a separate policy). */
+    * DE-REFERENCED, never deleted (vacuum is a separate policy).
+    *
+    * The rows are laid out by a hash exchange over the whole row, key
+    * first. A round-robin exchange (`repartition(n)`) is not
+    * deterministic on a retried task, so Spark sorts every input row
+    * before it (`spark.sql.execution.sortBeforeRepartition`); a hash
+    * exchange needs no sort. Hashing the other columns too keeps the
+    * files balanced when one key value repeats. Every file spans the
+    * whole key range: [[compactClustered]] is the layout that keeps
+    * pruning. Map and variant columns cannot be hashed and are left
+    * out of the hash. */
   def compact(spark: SparkSession, root: String, key: String,
               numFiles: Int = 4): Long =
-    rewriteAll(spark, root, key, "COMPACT", "compact")(_.repartition(numFiles))
+    rewriteAll(spark, root, key, "COMPACT", "compact") { df =>
+      import org.apache.spark.sql.types._
+      def hashable(dt: DataType): Boolean = dt match {
+        case _: MapType | _: VariantType => false
+        case a: ArrayType => hashable(a.elementType)
+        case st: StructType => st.fields.forall(f => hashable(f.dataType))
+        case _ => true
+      }
+      val cols = (key +: df.columns.toSeq.filterNot(_ == key))
+        .filter(c => hashable(df.schema(c).dataType))
+      df.repartition(numFiles, cols.map(col): _*)
+    }
 
   /** The one body of the whole-table rewrites ([[compact]],
     * [[compactClustered]], [[compactZOrdered]]): read the attempt's
@@ -2393,8 +2434,8 @@ object TxTable {
     }
 
   /** CLUSTERED compaction — the pruning-preserving variant (Delta's
-    * OPTIMIZE ZORDER, one dimension): plain [[compact]]'s round-robin
-    * repartition makes EVERY output file span the full key range, so
+    * OPTIMIZE ZORDER, one dimension): plain [[compact]]'s whole-row
+    * hash layout makes EVERY output file span the full key range, so
     * the per-file min/max stats that MERGE/point reads prune on go
     * useless the moment a table is compacted — a merge after a plain
     * compaction rewrites everything. Range-partitioning by the key

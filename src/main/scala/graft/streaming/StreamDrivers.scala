@@ -981,7 +981,7 @@ object StreamDrivers {
       val second = docs.filter(pmod(col("doc_id"), lit(4)) >= 2)
       run.stage("in", first, first, second, second)
       val out = run.collecting(StreamOps.ingestDedup(run.source("in"), corpus), "update")
-      run.drainAndStop()
+      try run.drainAndStop() finally TxTable.release(corpus)
       out
     }
     val state = scala.collection.mutable.Map.empty[String, (Long, Long)]
@@ -1008,8 +1008,9 @@ object StreamDrivers {
       .select(col("doc_id"), col("text"))
     val benchmark = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
       .localCheckpoint()
-    statelessDocStream(spark, "contam", docs,
+    try statelessDocStream(spark, "contam", docs,
       onBatch = b => graft.operators.Curation.contamination(b, benchmark))
+    finally TxTable.release(benchmark)
   }
 
   /** st19: the c33 URL/domain gate as a streaming ingest filter — the
@@ -1024,8 +1025,9 @@ object StreamDrivers {
     val docs = graft.SparkEntry.plantUrls(
       graft.Tables.load(spark, sfDir, "documents"))
     val corpus = docs.localCheckpoint()
-    statelessDocStream(spark, "urlgate", docs,
+    try statelessDocStream(spark, "urlgate", docs,
       onBatch = b => graft.operators.Curation.urlDomainGateAgainst(b, corpus))
+    finally TxTable.release(corpus)
   }
 
   /** st20: the c32 paragraph gate as a streaming ingest filter — the
@@ -1038,8 +1040,9 @@ object StreamDrivers {
     val raw = graft.Tables.load(spark, sfDir, "documents")
     val docs = graft.SparkEntry.plantParagraphs(raw)
     val reference = raw.filter(col("source") === "src0").localCheckpoint()
-    statelessDocStream(spark, "pargate", docs,
+    try statelessDocStream(spark, "pargate", docs,
       onBatch = b => graft.operators.Curation.paragraphGate(b, reference))
+    finally TxTable.release(reference)
   }
 
   /** st21: the line-layer boilerplate gate as a streaming ingest filter
@@ -1058,10 +1061,11 @@ object StreamDrivers {
       graft.Tables.load(spark, sfDir, "documents"))
     val corpus = graft.operators.Curation.allLineCounts(
       aug.filter(pmod(col("doc_id"), lit(2)) === 1)).localCheckpoint()
-    statelessDocStream(spark, "linegate",
+    try statelessDocStream(spark, "linegate",
       aug.filter(pmod(col("doc_id"), lit(2)) === 0),
       onBatch = b => graft.operators.Curation.lineScrubAgainst(b, corpus),
       splitBy = pmod(expr("doc_id div 2"), lit(2)))
+    finally TxTable.release(corpus)
   }
 
   /** st27: the c53 main-content extractor as a streaming ingest step —
@@ -1089,8 +1093,9 @@ object StreamDrivers {
     val docs = graft.Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
     val reference = docs.filter(col("source") === "src0").localCheckpoint()
-    statelessDocStream(spark, "ppl", docs,
+    try statelessDocStream(spark, "ppl", docs,
       onBatch = b => graft.operators.Curation.perplexityGateAgainst(b, reference))
+    finally TxTable.release(reference)
   }
 
   /** st29: the c59 C4 badwords filter as a streaming ingest predicate

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions.{expr, lit}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `Tables.load` memoizes each file's inferred Parquet schema: a repeated
-  * load starts no schema-inference job, a file rewritten in place or read
+/** `Tables.load` memoizes each file's inferred Parquet schema and its
+  * session's resolved relation: a repeated load starts no schema-inference
+  * job and resolves no new file index, a file rewritten in place or read
   * under another type-mapping conf is inferred again, and the memoized
   * read equals an inferring one. */
 class TablesSpec extends AnyFunSuite with SharedSpark {
@@ -64,6 +65,25 @@ class TablesSpec extends AnyFunSuite with SharedSpark {
       assert(rows === inferred.toJSON.collect().sorted.toSeq, name)
     }
     assert(table("events").schema("ts").dataType === TimestampType)
+  }
+
+  test("a warm load reuses the resolved relation; another session resolves its own") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    def relation(df: DataFrame): LogicalRelation =
+      df.queryExecution.analyzed.collectFirst { case r: LogicalRelation => r }.get
+    def index(df: DataFrame) = relation(df).relation.asInstanceOf[HadoopFsRelation].location
+    val a = table("supplier")
+    val b = table("supplier")
+    assert(index(a) eq index(b), "a warm load resolved its file index again")
+    assert(relation(a).output.map(_.exprId).intersect(relation(b).output.map(_.exprId)).isEmpty)
+    assert(b.collect().toSeq === a.collect().toSeq)
+    val other = spark.newSession()
+    val c = Tables.load(other, SharedSpark.sfDir, "supplier")
+    val fs = relation(c).relation.asInstanceOf[HadoopFsRelation]
+    assert(fs.sparkSession eq other)
+    assert(!(fs.location eq index(a)))
+    assert(index(Tables.load(other, SharedSpark.sfDir, "supplier")) eq fs.location)
+    assert(c.count() === a.count())
   }
 
   test("two loads of one table have distinct attributes, so a self-join resolves") {

@@ -76,6 +76,88 @@ class TxTableSpec extends AnyFunSuite with SharedSpark {
     assert(rows(TxTable.read(spark, root)) === rows(base))
   }
 
+  test("compaction: exact rows, at most numFiles balanced files, a hash exchange with no sort") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = tempDir("txt-compact-hash").toString + "/tbl"
+    // one key value carries 600 of the 800 rows: a layout hashed on the
+    // key alone would put them all in one file. A map column cannot be
+    // hashed and stays out of the layout.
+    val base = ((0L until 600L).map(i => (7L, s"dup$i")) ++
+      (1000L until 1200L).map(k => (k, s"v$k"))).toDF("k", "v")
+      .withColumn("m", map(lit("k"), col("k"))).repartition(8)
+    TxTable.create(spark, base, root, "k")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try TxTable.compact(spark, root, "k", numFiles = 4)
+    finally {
+      org.apache.spark.graftx.ListenerBridge.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    assert(rows(TxTable.read(spark, root)) === rows(base))
+    val files = TxTable.snapshot(root)
+    assert(files.size <= 4 && files.size >= 2, s"${files.size} files")
+    assert(files.map(_.rows).sum === 800L)
+    assert(files.map(_.rows).max <= 2 * 800L / files.size,
+      s"unbalanced files: ${files.map(_.rows)}")
+    import scala.jdk.CollectionConverters._
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val exchanges = plans.asScala.toSeq.flatMap(p =>
+      aqe.collect(p) { case e: ShuffleExchangeExec => e })
+    assert(exchanges.size === 1, s"rewrite exchanges: $exchanges")
+    val ex = exchanges.head
+    ex.outputPartitioning match {
+      case HashPartitioning(exprs, n) =>
+        assert(n === 4)
+        assert(exprs.map(_.references.map(_.name).toSeq) === Seq(Seq("k"), Seq("v")))
+      case other => fail(s"the rewrite exchange is $other, not a hash exchange")
+    }
+    assert(aqe.collect(ex) { case s: SortExec => s }.isEmpty,
+      s"a Sort below the rewrite's exchange:\n$ex")
+  }
+
+  test("footer stats equal the Spark stats pass for integral, string and date columns") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{DateType, LongType, StringType}
+    val root = tempDir("txt-footer-stats").toString + "/tbl"
+    val base = (0L until 400L).map { k =>
+      (k, if (k % 7 == 0) null else s"s${(k * 37) % 101}",
+        if (k % 11 == 0) null else java.sql.Date.valueOf(
+          java.time.LocalDate.of(2020, 1, 1).plusDays((k * 13) % 500)),
+        (k * 3) % 50)
+    }.toDF("k", "s", "d", "n").repartitionByRange(4, col("k"))
+    TxTable.create(spark, base, root, "k", statsCols = Seq("s", "d", "n"))
+    val files = TxTable.snapshot(root).map(f =>
+      java.nio.file.Paths.get(root, "data", f.name))
+    assert(files.size === 4)
+    val secondary = Seq("s" -> StringType, "d" -> DateType, "n" -> LongType)
+    val fromFooters = TxTable.footerEntries(spark.sessionState.newHadoopConf(),
+      files, base.schema, "k", secondary)
+    val pass = TxTable.statsPassEntries(spark, files, "k", secondary.map(_._1))
+    assert(fromFooters === Some(pass))
+    assert(pass.forall(_.cols.exists(_.keySet === Set("s", "d", "n"))))
+    // a string key: both paths log the full-range sentinels and the
+    // lexicographic range
+    val sroot = tempDir("txt-footer-skey").toString + "/tbl"
+    val sbase = (0L until 200L).map(k => (s"u$k", k)).toDF("u", "n")
+      .repartitionByRange(2, col("u"))
+    TxTable.create(spark, sbase, sroot, "u", statsCols = Seq("n"))
+    val sfiles = TxTable.snapshot(sroot).map(f =>
+      java.nio.file.Paths.get(sroot, "data", f.name))
+    assert(TxTable.footerEntries(spark.sessionState.newHadoopConf(), sfiles,
+      sbase.schema, "u", Seq("n" -> LongType)) ===
+      Some(TxTable.statsPassEntries(spark, sfiles, "u", Seq("n"))))
+  }
+
   test("stats are metadata-only: exact at every version, alive after data/ is gone") {
     import spark.implicits._
     val (root, base) = mkTable("txt-stats")
@@ -117,8 +199,8 @@ class TxTableSpec extends AnyFunSuite with SharedSpark {
       root
     }
     val upd = (10L until 60L).map(k => (k, s"u$k")).toDF("k", "v")
-    // plain compaction: round-robin files all cover [0,999] — the
-    // narrow-key merge must rewrite everything
+    // plain compaction: the whole-row hash layout gives every file keys
+    // across [0,999] — the narrow-key merge must rewrite everything
     val plain = build("txt-cmp-plain", clustered = false)
     val beforeP = TxTable.snapshot(plain).map(_.name).toSet
     TxTable.merge(spark, plain, upd, "k")
@@ -1618,17 +1700,32 @@ class TxTableSpec extends AnyFunSuite with SharedSpark {
       TxTable.merge(spark, root, upd, "k")
       spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
     } finally spark.sparkContext.clearJobGroup()
-    // the r19 fold: source checkpoint + ONE guard/prune aggregate +
-    // the staged write (footer stats add no job), each fanned into a
-    // couple of AQE stage jobs — 8 observed. The r18 shape paid three
-    // more actions per commit (keyCnt checkpoint, dup-limit collect,
-    // cast-null probe): 11 observed on the same scenario, so the
-    // bound discriminates the fold while leaving AQE headroom.
-    assert(jobs <= 8,
+    // the source checkpoint, ONE guard/prune probe whose result rides
+    // the observed metrics of the stage after the key shuffle, and the
+    // staged write (footer stats add no job), each fanned into AQE
+    // stage jobs. A probe ending in a single-partition aggregate and a
+    // collect makes it 8; three more actions per commit (keyCnt
+    // checkpoint, dup-limit collect, cast-null probe) made it 11.
+    assert(jobs === 7,
       s"merge ran $jobs jobs — guard, pruning and write must stay a " +
         "constant few actions per commit")
     val got = TxTable.read(spark, root).filter(col("k") < 100).collect()
     assert(got.forall(_.getString(1) == "u"))
+  }
+
+  test("merge and deletes with an empty key frame touch nothing") {
+    import spark.implicits._
+    val (root, base) = mkTable("txt-empty-probe")
+    val v = TxTable.currentVersion(root)
+    val none = Seq.empty[(Long, String)].toDF("k", "v")
+    TxTable.merge(spark, root, none, "k")
+    TxTable.merge(spark, root, base.filter(col("k") < 0), "k")
+    TxTable.deleteKeys(spark, root, none.select("k"), "k")
+    TxTable.deleteKeysDV(spark, root, none.select("k"), "k")
+    assert(TxTable.currentVersion(root) === v)
+    TxTable.merge(spark, root, none, "k", txn = Some(("empty", 1L)))
+    assert(TxTable.lastTxn(root, "empty") === Some(1L))
+    assert(rows(TxTable.read(spark, root)) === rows(base))
   }
 
   // ---- r18: scattered DV deletes are O(1) Spark jobs ----------------
