@@ -734,7 +734,7 @@ object Dedup {
         .toDF("n", "cluster_id")
     }
     val bidir = e.union(e.select(col("b").as("a"), col("a").as("b")))
-    var lab = bidir.groupBy(col("a").as("n"))
+    val lab0 = bidir.groupBy(col("a").as("n"))
       .agg(min(col("b")).as("nb"))
       .select(col("n"), least(col("n"), col("nb")).as("lab"))
       .localCheckpoint()
@@ -745,10 +745,14 @@ object Dedup {
     def labSum(df: DataFrame): java.math.BigDecimal =
       Option(df.agg(sum(col("lab").cast(DecimalType(38, 0)))).head.getDecimal(0))
         .getOrElse(java.math.BigDecimal.ZERO) // empty edge set
-    var prevSum = labSum(lab)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
+    var prevSum = labSum(lab0)
+    def converged(next: DataFrame): Boolean = {
+      val s = labSum(next)
+      val same = s.compareTo(prevSum) == 0
+      prevSum = s
+      same
+    }
+    val lab = Similarity.iterate(lab0, maxIter, converged) { (lab, _) =>
       // candidate labels: my own, the best through one edge hop, and the
       // label of my label (pointer jump — doubles propagation distance);
       // one union + one shuffled min-aggregate per round
@@ -759,14 +763,8 @@ object Dedup {
         .join(lab.select(col("n").as("jkey2"), col("lab").as("jlab")),
           col("jkey") === col("jkey2"))
         .select(col("jn").as("n"), col("jlab").as("lab"))
-      val next = lab.union(viaEdge).union(viaJump)
+      lab.union(viaEdge).union(viaJump)
         .groupBy(col("n")).agg(min(col("lab")).as("lab"))
-        .localCheckpoint()
-      val s = labSum(next)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      lab = next
-      iter += 1
     }
     e.unpersist()
     // fixpoint ⇒ labels are constant across every edge ⇒ per-component

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.ColumnFns._
+import graft.sources.TxTable
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -592,8 +593,8 @@ object Similarity {
     val dangling = nodes.join(withDeg.select(col("src")).distinct(),
       nodes("id") === col("src"), "left_anti").localCheckpoint()
     val hasDangling = dangling.limit(1).count() > 0
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank")).localCheckpoint()
-    for (_ <- 1 to iters) {
+    val init = nodes.select(col("id"), lit(1.0 / n).as("rank")).localCheckpoint()
+    val ranks = iterate(init, iters) { (ranks, _) =>
       val dmass =
         if (!hasDangling) 0.0
         else dangling.join(ranks, "id")
@@ -603,13 +604,36 @@ object Similarity {
         .select(col("dst"), (col("rank") / col("deg")).as("c"))
         .groupBy(col("dst"))
         .agg(sum(col("c").cast(dec)).cast("double").as("inflow"))
-      ranks = nodes.join(contrib, nodes("id") === contrib("dst"), "left")
+      nodes.join(contrib, nodes("id") === contrib("dst"), "left")
         .select(col("id"),
           (lit((1 - damping) / n + damping * dmass / n) +
             lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank"))
-        .localCheckpoint()
     }
+    Seq(e, nodes, withDeg, dangling).foreach(TxTable.release)
     ranks.select(col("id").as("vec_id"), decRound(col("rank"), 12).as("rank"))
+  }
+
+  /** Up to `rounds` rounds of `step` from `init`, the house iterative
+    * rule with its staging bounded: each round's result is
+    * localCheckpoint'ed (O(1) lineage) and the round it replaces is
+    * released once nothing reads it, so a loop holds one round's blocks
+    * instead of every round's. `init` must be staged by the caller
+    * itself: it is released after the first round. The loop ends early
+    * after a round whose result satisfies `done`. */
+  private[operators] def iterate(init: DataFrame, rounds: Int,
+                                 done: DataFrame => Boolean = _ => false)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    var cur = init
+    var r = 1
+    var stop = false
+    while (!stop && r <= rounds) {
+      val next = step(cur, r).localCheckpoint()
+      TxTable.release(cur)
+      cur = next
+      stop = done(next)
+      r += 1
+    }
+    cur
   }
 
   /** BFS reachability levels from a seed set over a directed edge table
@@ -629,18 +653,19 @@ object Similarity {
     * jumping already covers in O(log n) rounds. */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int = 4): DataFrame = {
     val e = edges.select(col("src"), col("dst")).localCheckpoint()
-    var visited = seeds.select(col("vec_id")).distinct()
+    val seeded = seeds.select(col("vec_id")).distinct()
       .select(col("vec_id"), lit(0).as("hop")).localCheckpoint()
-    var frontier = visited.select(col("vec_id"))
-    for (h <- 1 to maxHops) {
-      val next = frontier.select(col("vec_id").as("src"))
+    // the frontier of hop h is exactly the nodes first reached at h − 1
+    val visited = iterate(seeded, maxHops) { (visited, h) =>
+      val next = visited.filter(col("hop") === h - 1)
+        .select(col("vec_id").as("src"))
         .join(e, Seq("src"))
         .select(col("dst").as("vec_id")).distinct()
         .join(visited, Seq("vec_id"), "left_anti")
-        .select(col("vec_id"), lit(h).as("hop")).localCheckpoint()
-      visited = visited.union(next).localCheckpoint()
-      frontier = next.select(col("vec_id"))
+        .select(col("vec_id"), lit(h).as("hop"))
+      visited.union(next)
     }
+    TxTable.release(e)
     visited
   }
 
@@ -670,15 +695,14 @@ object Similarity {
     * rounds × O(|E|). */
   def shortestPaths(edges: DataFrame, seeds: DataFrame, rounds: Int = 8): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("w")).localCheckpoint()
-    var dist = seeds.select(col("vec_id")).distinct()
+    val seeded = seeds.select(col("vec_id")).distinct()
       .select(col("vec_id"), lit(0L).as("dist")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val cand = dist.join(e, dist("vec_id") === e("src"))
+    val dist = iterate(seeded, rounds) { (d, _) =>
+      val cand = d.join(e, d("vec_id") === e("src"))
         .select(col("dst").as("vec_id"), (col("dist") + col("w")).as("dist"))
-      dist = dist.union(cand)
-        .groupBy(col("vec_id")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
+      d.union(cand).groupBy(col("vec_id")).agg(min(col("dist")).as("dist"))
     }
+    TxTable.release(e)
     dist
   }
 
@@ -704,20 +728,19 @@ object Similarity {
     * rounds × O(|E|), never node-quadratic; partitions by node/edge
     * keys only. */
   def kCore(edges: DataFrame, k: Int = 3, rounds: Int = 8): DataFrame = {
-    var und = edges
+    val init = edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b")).distinct().localCheckpoint()
-    for (_ <- 1 to rounds) {
+    val und = iterate(init, rounds) { (und, _) =>
       val deg = und.select(col("a").as("n"))
         .union(und.select(col("b").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("c"))
       val keep = deg.filter(col("c") >= k).select(col("n"))
-      und = und
+      und
         .join(keep.withColumnRenamed("n", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("n", "b"), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-        .localCheckpoint()
     }
     und.select(col("a").as("n")).union(und.select(col("b").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("core_degree"))
@@ -738,16 +761,16 @@ object Similarity {
     val e = edges.select(col("src"), col("dst"))
     val und = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().localCheckpoint()
-    val nodes = und.select(col("src").as("id")).distinct().localCheckpoint()
-    var labels = nodes.select(col("id"), col("id").as("label")).localCheckpoint()
-    for (_ <- 1 to iters) {
-      labels = und.join(labels, und("src") === labels("id"))
+    val init = und.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("label")).localCheckpoint()
+    val labels = iterate(init, iters) { (labels, _) =>
+      und.join(labels, und("src") === labels("id"))
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
         .groupBy(col("dst"))
         .agg(min(struct((-col("cnt")).as("negc"), col("label").as("l"))).as("m"))
         .select(col("dst").as("id"), col("m.l").as("label"))
-        .localCheckpoint()
     }
+    TxTable.release(und)
     labels.select(col("id").as("vec_id"), col("label"))
   }
 

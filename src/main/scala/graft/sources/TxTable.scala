@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
@@ -171,10 +171,11 @@ object TxTable {
                                 colMap: Option[Map[String, String]] = None,
                                 retired: Option[Seq[String]] = None,
                                 protocol: Option[Int] = None)
-  /** Replay result: live files in insertion order, schema in force,
-    * per-appId max recorded transaction version, the table's key
-    * column, and its declared secondary statistics columns. */
-  private case class State(live: Seq[FileEntry], schema: StructType,
+  /** Replay result: the version replayed to, live files in insertion
+    * order, schema in force, per-appId max recorded transaction
+    * version, the table's key column, and its declared secondary
+    * statistics columns. */
+  private case class State(version: Long, live: Seq[FileEntry], schema: StructType,
                            txns: Map[String, Long], key: String,
                            statsCols: Seq[String],
                            invariants: Map[String, String],
@@ -193,6 +194,9 @@ object TxTable {
       * reads of old files would otherwise resurrect the dropped
       * column's stale values, the r14 silent-corruption class). */
     def physOf(logical: String): String = colMap.getOrElse(logical, logical)
+    /** The name prefix of the files the commit after this state writes
+      * for `op`. */
+    def filePrefix(op: String): String = f"${version + 1}%010d-$op"
   }
 
   /** The log protocol this build writes and reads: a v1 record or
@@ -274,7 +278,8 @@ object TxTable {
           s"v${minLog.getOrElse(0L)} was cleaned past the retention horizon")
     }
     val from = ck.map(_.version).getOrElse(0L)
-    val records = versions.filter(v => v > from && v <= bound).map(v =>
+    val replayed = versions.filter(v => v > from && v <= bound)
+    val records = replayed.map(v =>
       JsonMethods.parse(new String(Files.readAllBytes(
         logDir(root).resolve(logName(v))), StandardCharsets.UTF_8)))
     // the protocol gate, on the replay base and before any other field
@@ -322,7 +327,7 @@ object TxTable {
       c.txn.foreach(t => txns.update(t.appId,
         math.max(t.version, txns.getOrElse(t.appId, Long.MinValue))))
     }
-    State(live.values.toSeq,
+    State(replayed.lastOption.getOrElse(from), live.values.toSeq,
       schema.fold(new StructType())(DataType.fromJson(_).asInstanceOf[StructType]),
       txns.toMap, key, statsCols, invariants, cdcOn, colMap, retired)
   }
@@ -376,21 +381,22 @@ object TxTable {
     } finally Files.deleteIfExists(tmp)
   }
 
+  /** `Some(c)` unless `c` is empty: the log leaves an empty metadata
+    * field out of its records and checkpoints. */
+  private def nonEmpty[C <: Iterable[_]](c: C): Option[C] =
+    if (c.isEmpty) None else Some(c)
+
   /** Best-effort checkpoint at `v` (called after the commit record for
     * `v` exists). [[publish]] makes concurrent checkpointers of the same
     * version harmless; the pointer flips via atomic rename; any failure
     * is swallowed — a checkpoint is an accelerator, never correctness. */
-  private def maybeCheckpoint(root: String, v: Long, key: String): Unit = {
+  private def maybeCheckpoint(root: String, v: Long): Unit = {
     if (v % CheckpointInterval != 0) return
     try {
       val st = replayState(root, Some(v))
-      val rec = Serialization.write(Checkpoint(v, key, st.schema.json, st.live,
-        if (st.txns.isEmpty) None else Some(st.txns),
-        if (st.statsCols.isEmpty) None else Some(st.statsCols),
-        if (st.invariants.isEmpty) None else Some(st.invariants),
-        if (st.cdcOn) Some(true) else None,
-        if (st.colMap.isEmpty) None else Some(st.colMap),
-        if (st.retired.isEmpty) None else Some(st.retired),
+      val rec = Serialization.write(Checkpoint(v, st.key, st.schema.json, st.live,
+        nonEmpty(st.txns), nonEmpty(st.statsCols), nonEmpty(st.invariants),
+        Option.when(st.cdcOn)(true), nonEmpty(st.colMap), nonEmpty(st.retired),
         Some(Protocol)))
       val d = logDir(root)
       val ckpt = d.resolve(ckptName(v))
@@ -584,64 +590,88 @@ object TxTable {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** Write `df` as data files under the table and return their log
-    * entries (with per-file key min/max — and, when `statsCols` names
-    * declared secondary columns, their per-file ranges too — read from
-    * the parquet footers, with the one-pass Spark stats job as the
-    * exactness fallback, see [[footerEntries]]). The files are
-    * INVISIBLE until a commit references them — the crash-safety
-    * property: an orphaned write is garbage, never a torn table. */
-  private def writeFiles(spark: SparkSession, df: DataFrame, root: String,
-                         key: String, tag: String,
-                         statsCols: Seq[String] = Seq.empty,
-                         colMap: Map[String, String] = Map.empty)
-      : Seq[FileEntry] = {
+  /** `df` with every column under its PHYSICAL name (column mapping,
+    * r18): data and change files store the names every era's files
+    * agree on, so a rename stays metadata-only. An empty map is the
+    * identity. */
+  private def toPhysical(df: DataFrame, colMap: Map[String, String]): DataFrame =
+    if (colMap.isEmpty) df
+    else df.select(df.columns.toSeq.map(c => col(c).as(colMap.getOrElse(c, c))): _*)
+
+  /** Scan `paths` through `declared` by PHYSICAL name and alias every
+    * column back to its logical name — the read half of
+    * [[toPhysical]]: a renamed column reads every era's files by its one
+    * physical name. `extra` fields (a change file's `_change_type`) are
+    * never mapped. An empty map scans exactly the declared schema. */
+  private def scanLogical(spark: SparkSession, paths: Seq[String],
+                          declared: StructType, colMap: Map[String, String],
+                          extra: Seq[StructField] = Seq.empty): DataFrame = {
+    def phys(c: String): String = colMap.getOrElse(c, c)
+    val raw = spark.read.schema(StructType(
+        declared.fields.map(f => f.copy(name = phys(f.name))) ++ extra))
+      .parquet(paths: _*)
+    if (colMap.isEmpty) raw
+    else raw.select((declared.fields.map(f => col(phys(f.name)).as(f.name)) ++
+      extra.map(f => col(f.name))).toSeq: _*)
+  }
+
+  /** Delete `p` and everything under it. */
+  private def deleteTree(p: Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(p)
+    val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
+    all.foreach(Files.deleteIfExists(_))
+  }
+
+  /** Run `body` over a fresh staging directory under the table root,
+    * then delete the directory with whatever `body` left in it. */
+  private def withStaging[A](root: String, tag: String)(body: Path => A): A = {
     val tmp = Files.createTempDirectory(Paths.get(root), s"stage-$tag-")
-    try {
-      // COLUMN MAPPING (r18): bytes land under PHYSICAL names — every
-      // era's files agree on them, so renames stay metadata-only
-      val physDf =
-        if (colMap.isEmpty) df
-        else df.select(df.columns.toSeq.map(c =>
-          col(c).as(colMap.getOrElse(c, c))): _*)
-      physDf.write.mode("overwrite").parquet(tmp.toString)
-      import scala.jdk.CollectionConverters._
-      val listing = Files.list(tmp)
-      val parts = try listing.iterator().asScala.toSeq finally listing.close()
-      // a random component makes names collision-free across CONCURRENT
-      // writers (two committers at the same guessed version must never
-      // rename onto each other's bytes — POSIX rename replaces silently);
-      // names are opaque, the log is the identity
+    try body(tmp) finally deleteTree(tmp)
+  }
+
+  /** Write `df` as parquet into a staging directory, then move its part
+    * files into data/ as `<prefix>-<nonce>-<i>.parquet`, in part order.
+    * The random nonce makes names collision-free across CONCURRENT
+    * writers (two committers at the same guessed version must never
+    * move onto each other's bytes — POSIX rename replaces silently);
+    * names are opaque, the log is the identity. */
+  private def stageFiles(df: DataFrame, root: String, prefix: String): Seq[Path] =
+    withStaging(root, prefix) { tmp =>
+      df.write.mode("overwrite").parquet(tmp.toString)
       val nonce = java.util.UUID.randomUUID().toString.take(8)
-      val moved = parts.filter(_.getFileName.toString.startsWith("part-"))
+      Files.createDirectories(dataDir(root))
+      listDir(tmp).filter(_.getFileName.toString.startsWith("part-"))
         .sortBy(_.getFileName.toString).zipWithIndex.map { case (p, i) =>
-          val dest = dataDir(root).resolve(s"$tag-$nonce-$i.parquet")
-          Files.createDirectories(dest.getParent)
+          val dest = dataDir(root).resolve(s"$prefix-$nonce-$i.parquet")
           Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
           dest
         }
-      if (moved.isEmpty) return Seq.empty
-      // r18 (optimization round): per-file stats come FROM THE FOOTERS
-      // the parquet writer just produced — no Spark job, no re-read of
-      // the data pages (guide §1.2: remove whole passes first). The
-      // old one-pass Spark stats job, [[statsPassEntries]], remains as
-      // the exactness fallback for anything the footers can't prove
-      // (None).
-      val physStatsCols = statsCols.distinct.filter(_ != key)
-        .map(c => colMap.getOrElse(c, c))
-      val footerStats = if (!physDf.columns.contains(key)) None else
-        footerEntries(spark.sessionState.newHadoopConf(), moved,
-          physDf.schema, key, physStatsCols.filter(physDf.columns.contains)
-            .map(c => (c, physDf.schema(c).dataType)))
-      footerStats.getOrElse(statsPassEntries(spark, moved, key, physStatsCols))
-    } finally {
-      // remove the now-empty staging dir (files were moved out)
-      import scala.jdk.CollectionConverters._
-      val l = Files.list(tmp)
-      val rest = try l.iterator().asScala.toSeq finally l.close()
-      rest.foreach(Files.deleteIfExists(_))
-      Files.deleteIfExists(tmp)
     }
+
+  /** Write `df` as data files named `<prefix>-…` and return their log
+    * entries, with per-file key min/max — and,
+    * for `st`'s declared secondary columns, their per-file ranges too —
+    * read from the parquet footers, with the one-pass Spark stats job
+    * as the exactness fallback, see [[footerEntries]]. The files are
+    * INVISIBLE until a commit references them — the crash-safety
+    * property: an orphaned write is garbage, never a torn table. */
+  private def writeFiles(spark: SparkSession, df: DataFrame, root: String,
+                         st: State, prefix: String): Seq[FileEntry] = {
+    val key = st.key
+    val physDf = toPhysical(df, st.colMap)
+    val moved = stageFiles(physDf, root, prefix)
+    if (moved.isEmpty) return Seq.empty
+    // per-file stats come FROM THE FOOTERS the parquet writer just
+    // produced — no Spark job, no re-read of the data pages; the Spark
+    // stats job [[statsPassEntries]] is the exactness fallback for
+    // anything the footers can't prove (None)
+    val physStatsCols = st.statsCols.distinct.filter(_ != key).map(st.physOf)
+    val footerStats = if (!physDf.columns.contains(key)) None else
+      footerEntries(spark.sessionState.newHadoopConf(), moved,
+        physDf.schema, key, physStatsCols.filter(physDf.columns.contains)
+          .map(c => (c, physDf.schema(c).dataType)))
+    footerStats.getOrElse(statsPassEntries(spark, moved, key, physStatsCols))
   }
 
   /** The one-pass Spark stats job over just-written files: the
@@ -723,61 +753,37 @@ object TxTable {
   }
 
   /** Write change rows (table columns + `_change_type`) as CDC sidecar
-    * files for commit `v` (r17 — Delta's `_change_data`, written only
-    * for tables created with `cdc = true`): the feed's rows are
-    * MATERIALIZED once at commit time, so every downstream consumer
-    * ([[changes]], the st43 subscribers, c71-style cascades) reads the
-    * tiny change files instead of re-reading the full pre/post data
-    * files and re-running the diff join — write-once-read-many, work
-    * ∝ changed rows. Empty change sets write nothing (a no-op commit
-    * stays metadata-only). */
-  private def writeCdcFiles(spark: SparkSession, df: DataFrame,
-                            root: String, v: Long,
-                            colMap: Map[String, String] = Map.empty)
-      : Option[Seq[String]] = {
-    // COLUMN MAPPING (r18): change files store PHYSICAL names like the
-    // data files, so a feed spanning a rename reads every era's change
-    // files through one stable schema (_change_type is never mapped)
-    val physDf =
-      if (colMap.isEmpty) df
-      else df.select(df.columns.toSeq.map(c =>
-        col(c).as(colMap.getOrElse(c, c))): _*)
+    * files for the commit after `st` (r17 — Delta's `_change_data`,
+    * written only for tables created with `cdc = true`): the feed's
+    * rows are MATERIALIZED once at commit time, so every downstream
+    * consumer ([[changes]], the st43 subscribers, c71-style cascades)
+    * reads the tiny change files instead of re-reading the full
+    * pre/post data files and re-running the diff join —
+    * write-once-read-many, work ∝ changed rows. Change files store
+    * PHYSICAL names like the data files, so a feed spanning a rename
+    * reads every era's change files through one stable schema. Empty
+    * change sets write nothing (a no-op commit stays metadata-only). */
+  private def writeCdcFiles(df: DataFrame, root: String,
+                            st: State): Option[Seq[String]] = {
     // materialize ONCE (r18, ADVICE): the emptiness probe used to run
     // the full CDC plan (for a merge, the full_outer pre/post diff
     // join) and the parquet write then ran it AGAIN — localCheckpoint
     // executes the plan a single time and both the probe and the write
     // read the checkpointed blocks (the blocks are ∝ changed rows,
     // never data)
-    val mat = physDf.localCheckpoint()
+    val mat = toPhysical(df, st.colMap).localCheckpoint()
     try {
-      if (mat.isEmpty) return None
-      val tmp = Files.createTempDirectory(Paths.get(root), "stage-cdc-")
-      try {
-        mat.write.mode("overwrite").parquet(tmp.toString)
-        val nonce = java.util.UUID.randomUUID().toString.take(8)
-        val moved = listDir(tmp)
-          .filter(_.getFileName.toString.startsWith("part-"))
-          .sortBy(_.getFileName.toString).zipWithIndex.map { case (p, i) =>
-            val dest = dataDir(root).resolve(f"cdc-$v%010d-$nonce-$i.parquet")
-            Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-            dest.getFileName.toString
-          }
-        if (moved.isEmpty) None else Some(moved)
-      } finally {
-        listDir(tmp).foreach(Files.deleteIfExists(_))
-        Files.deleteIfExists(tmp)
-      }
+      if (mat.isEmpty) None
+      else nonEmpty(stageFiles(mat, root, f"cdc-${st.version + 1}%010d")
+        .map(_.getFileName.toString))
     } finally release(mat)
   }
 
   /** Atomic create-if-absent commit AT a specific version; false when
-    * another committer won that version. The caller (the OCC loop in
-    * [[occRetry]]) must then RE-DERIVE its diff from the new snapshot —
-    * blindly re-stamping a stale diff at the next version would re-add
-    * rewritten files whose originals a concurrent commit already
-    * replaced (a lost-update/duplicate-row corruption, caught in the
-    * r13 self-review). Orphaned data files from the losing attempt stay
-    * unreferenced — garbage for vacuum, never visible.
+    * another committer won that version, and the caller (the OCC loop
+    * in [[occRetry]]) must then rebase or re-derive. Orphaned data
+    * files from the losing attempt stay unreferenced — garbage for
+    * vacuum, never visible.
     *
     * OBJECT-STORE CONTRACT (r17, documentation of the deployment
     * boundary): the table's entire atomicity and isolation story rests
@@ -814,11 +820,12 @@ object TxTable {
     new java.util.concurrent.atomic.AtomicReference[Runnable](null)
 
   /** True when the racing commit `r` provably cannot invalidate OUR
-    * derived diff, so the diff may be REBASED (re-stamped at a later
-    * version) instead of re-derived — the Delta conflict-detection
-    * posture (VLDB'20 §3.2: concurrent transactions commit without
-    * re-execution when their read/write sets are disjoint). Conditions,
-    * each conservative (any doubt → re-derive):
+    * record `ours` (derived from an older snapshot), so it may be
+    * REBASED (re-stamped at a later version) instead of re-derived —
+    * the Delta conflict-detection posture (VLDB'20 §3.2: concurrent
+    * transactions commit without re-execution when their read/write
+    * sets are disjoint). Conditions, each conservative (any doubt →
+    * re-derive):
     *  - `r` changes no schema (a re-derive would see the new schema
     *    and behave differently, so it must force one);
     *  - `r` carries no txn stamp for OUR appId (the idempotence
@@ -831,9 +838,7 @@ object TxTable {
     *    non-castable keys make overlap the default — degrade to
     *    re-derive, never to a silent duplicate key: if both commits
     *    upserted the same key, their add ranges necessarily overlap). */
-  private def rebaseSafe(r: Commit, adds: Seq[FileEntry],
-                         removes: Set[String],
-                         txn: Option[TxnAction]): Boolean = {
+  private def rebaseSafe(r: Commit, ours: Commit): Boolean = {
     def overlap(a: FileEntry, b: FileEntry): Boolean = {
       val strDisjoint = (for (a1 <- a.smin; a2 <- a.smax;
                               b1 <- b.smin; b2 <- b.smax)
@@ -841,69 +846,105 @@ object TxTable {
       val numDisjoint = a.kmax < b.kmin || b.kmax < a.kmin
       !(strDisjoint || numDisjoint)
     }
+    val removes = ours.removes.toSet
     r.schema.isEmpty &&
-      !txn.exists(t => r.txn.exists(_.appId == t.appId)) &&
+      !ours.txn.exists(t => r.txn.exists(_.appId == t.appId)) &&
       !r.removes.exists(removes.contains) &&
-      !r.adds.exists(ra => adds.exists(a => overlap(a, ra)))
+      !r.adds.exists(ra => ours.adds.exists(a => overlap(a, ra)))
   }
 
-  /** The optimistic-concurrency loop: snapshot → derive → attempt the
-    * next version; on collision, re-derive from the NEW snapshot. An
-    * attempt returning None signals "raced to a no-op" — the loop exits
-    * with the current version, committing nothing (the sentinel replaces
-    * the r13 non-local return, which broke under any try/catch wrapper
-    * and is unsupported on Scala 3).
+  /** A writer body's proposal to [[occRetry]]: the files to add and
+    * remove and the change files written. The body sets any metadata
+    * it changes (schema, dataChange, column mapping) on the draft;
+    * [[occRetry]] stamps the version, key, op, commit time and txn. */
+  private def draft(adds: Seq[FileEntry] = Seq.empty,
+                    removes: Seq[String] = Seq.empty,
+                    cdc: Option[Seq[String]] = None): Commit =
+    Commit(0L, "", adds, removes, "", 0L, cdc = cdc)
+
+  /** Commit attempts before [[occRetry]] gives up on a contended table. */
+  private val MaxAttempts = 20
+
+  /** The one commit path of every versioned writer: the optimistic-
+    * concurrency loop. Each attempt replays the head state ONCE and
+    * hands it to `body`; the body derives its [[draft]] from that
+    * snapshot and the attempt publishes at the version after it. The
+    * body decides what to read, write and remove; only this loop
+    * decides whether and how that becomes a log record:
     *
-    * Rebase fast path (r16, MERGE/DELETE only): on a lost race, the
-    * racing commits are checked with [[rebaseSafe]]; when EVERY racer
-    * is provably disjoint from our diff, the SAME adds/removes re-stamp
-    * at the next free version — no Spark re-run. This is what lets N
-    * streaming sinks with disjoint key ranges share one hot state table
-    * without serializing full-job retries (the st34/st37 fleet
-    * posture). Any doubt — schema change, overlapping files or key
-    * ranges, a same-app txn, an unreadable racer record — falls back to
-    * the full re-derive, which was always correct. */
-  private def occRetry(root: String, op: String, dataChange: Boolean = true,
-                       maxAttempts: Int = 20, allowRebase: Boolean = false)(
-      attempt: Long => Option[(Seq[FileEntry], Seq[String], String,
-        Option[String], Option[TxnAction], Option[Seq[String]])]): Long = {
+    *  - KEY CHECK: a caller `key` that is not the table's key column
+    *    is refused before `body` runs, naming both. Committing it would
+    *    re-key the table, and its probe would compare that column's
+    *    values to the files' key ranges: touched files could be missed
+    *    and rows duplicated.
+    *  - TXN WATERMARK (Delta's txn action): with `txn` = (appId,
+    *    version), the write applies ONLY IF `version` is strictly
+    *    greater than the last version recorded for that appId —
+    *    otherwise nothing commits and the head version returns. The
+    *    guard re-evaluates against each attempt's snapshot, so racing
+    *    re-deliveries of one micro-batch linearize to one application.
+    *  - NO-OP RULE: a draft with no adds, no removes and no schema
+    *    change commits nothing and returns the head version — unless
+    *    it carries a txn stamp: then a watermark-only record commits,
+    *    so a retried batch no-ops on the guard instead of
+    *    re-evaluating.
+    *  - On collision the attempt re-derives from the NEW snapshot —
+    *    blindly re-stamping a stale diff at the next version would
+    *    re-add rewritten files whose originals a concurrent commit
+    *    already replaced (a lost-update/duplicate-row corruption).
+    *
+    * Rebase fast path (r16, `allowRebase`: the merges, append and the
+    * deletes): on a lost race, the racing commits are checked with
+    * [[rebaseSafe]]; when EVERY racer is provably disjoint from our
+    * record, the SAME record re-stamps at the next free version — no
+    * Spark re-run. This is what lets N streaming sinks with disjoint
+    * key ranges share one hot state table without serializing full-job
+    * retries (the st34/st37 fleet posture). Any doubt — schema change,
+    * overlapping files or key ranges, a same-app txn, an unreadable
+    * racer record — falls back to the full re-derive, which was always
+    * correct. */
+  private def occRetry(root: String, op: String, key: Option[String],
+                       txn: Option[(String, Long)] = None,
+                       allowRebase: Boolean = false)(body: State => Commit): Long = {
     var tries = 0
-    while (tries < maxAttempts) {
-      val v = currentVersion(root) + 1
-      require(v > 1L, s"TxTable at $root: no table to $op — create it first")
+    while (tries < MaxAttempts) {
+      val st = replayState(root, None)
+      require(st.version > 0L, s"TxTable at $root: no table to $op — create it first")
+      key.foreach(k => require(k == st.key,
+        s"TxTable $op at $root: '$k' is not the table's key column '${st.key}'"))
       attemptInvocations.incrementAndGet()
-      attempt(v) match {
-        case None => return currentVersion(root)
-        case Some((adds, removes, key, schema, txn, cdc)) =>
-          Option(testRaceInjector.getAndSet(null)).foreach(_.run())
-          var tv = v
-          var rebases = 0
-          var rebasing = true
-          while (rebasing) {
-            if (tryCommit(root, Commit(tv, key, adds, removes, op,
-                System.currentTimeMillis(), schema, txn,
-                if (dataChange) None else Some(false), cdc = cdc))) {
-              maybeCheckpoint(root, tv, key)
-              return tv
-            }
-            val cur = currentVersion(root)
-            val racers = (tv to cur).map { rv =>
-              try Some(readJson[Commit](logDir(root).resolve(logName(rv))))
-              catch { case scala.util.control.NonFatal(_) => None }
-            }
-            val rset = removes.toSet
-            if (allowRebase && schema.isEmpty && rebases < maxAttempts &&
-                racers.forall(_.exists(rebaseSafe(_, adds, rset, txn)))) {
-              rebasedCommits.incrementAndGet()
-              rebases += 1
-              tv = cur + 1
-            } else rebasing = false
-          }
+      if (txn.exists { case (app, tv) => st.txns.get(app).exists(_ >= tv) })
+        return st.version   // already applied: idempotent no-op
+      val d = body(st).copy(key = st.key, op = op,
+        txn = txn.map { case (app, tv) => TxnAction(app, tv) })
+      if (d.adds.isEmpty && d.removes.isEmpty && d.schema.isEmpty && d.txn.isEmpty)
+        return st.version
+      Option(testRaceInjector.getAndSet(null)).foreach(_.run())
+      var tv = st.version + 1
+      var rebases = 0
+      var rebasing = true
+      while (rebasing) {
+        val c = d.copy(version = tv, ts = System.currentTimeMillis())
+        if (tryCommit(root, c)) {
+          maybeCheckpoint(root, tv)
+          return tv
+        }
+        val cur = currentVersion(root)
+        val racers = (tv to cur).map { rv =>
+          try Some(readJson[Commit](logDir(root).resolve(logName(rv))))
+          catch { case scala.util.control.NonFatal(_) => None }
+        }
+        if (allowRebase && d.schema.isEmpty && rebases < MaxAttempts &&
+            racers.forall(_.exists(rebaseSafe(_, c)))) {
+          rebasedCommits.incrementAndGet()
+          rebases += 1
+          tv = cur + 1
+        } else rebasing = false
       }
       tries += 1
     }
     throw new IllegalStateException(
-      s"TxTable at $root: lost the commit race $maxAttempts times")
+      s"TxTable at $root: lost the commit race $MaxAttempts times")
   }
 
   /** CHECK-constraint enforcement (r17, the r16 verdict's item 4 —
@@ -954,22 +995,24 @@ object TxTable {
              cdc: Boolean = false): Long = {
     enforceInvariants(df, invariants.toMap, "create")
     val r = Paths.get(root)
-    if (Files.exists(r)) { // full replace: drop log + data
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(r)
-      val files = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      files.foreach(Files.deleteIfExists(_))
-    }
+    if (Files.exists(r)) deleteTree(r) // full replace: drop log + data
     Files.createDirectories(dataDir(root))
-    val adds = writeFiles(spark, df, root, key, "base", statsCols)
-    require(tryCommit(root, Commit(1L, key, adds, Seq.empty, "CREATE",
-        System.currentTimeMillis(), Some(df.schema.json),
-        statsCols = if (statsCols.isEmpty) None else Some(statsCols),
-        invariants = if (invariants.isEmpty) None else Some(invariants.toMap),
-        cdcOn = if (cdc) Some(true) else None, protocol = Some(Protocol))),
+    val st = State(0L, Seq.empty, df.schema, Map.empty, key, statsCols,
+      invariants.toMap, cdc, Map.empty, Seq.empty)
+    val adds = writeFiles(spark, df, root, st, "base")
+    require(tryCommit(root, firstCommit(st.copy(live = adds), "CREATE")),
       s"TxTable at $root: concurrent create detected")
     1L
   }
+
+  /** The v1 record of a new table whose live files and metadata are
+    * `st`'s: what [[create]] and [[cloneShallow]] write. */
+  private def firstCommit(st: State, op: String): Commit =
+    Commit(1L, st.key, st.live, Seq.empty, op, System.currentTimeMillis(),
+      Some(st.schema.json), statsCols = nonEmpty(st.statsCols),
+      invariants = nonEmpty(st.invariants), cdcOn = Option.when(st.cdcOn)(true),
+      colMap = nonEmpty(st.colMap), retired = nonEmpty(st.retired),
+      protocol = Some(Protocol))
 
   /** The declared CHECK constraints in force (name → SQL predicate). */
   def invariantsOf(root: String): Map[String, String] =
@@ -1010,14 +1053,7 @@ object TxTable {
       name = srcData.resolve(f.name).toString,
       dv = f.dv.map(n => srcData.resolve(n).toString)))
     Files.createDirectories(dataDir(dest))
-    require(tryCommit(dest, Commit(1L, st.key, entries, Seq.empty, "CLONE",
-        System.currentTimeMillis(), Some(st.schema.json),
-        statsCols = if (st.statsCols.isEmpty) None else Some(st.statsCols),
-        invariants = if (st.invariants.isEmpty) None else Some(st.invariants),
-        cdcOn = if (st.cdcOn) Some(true) else None,
-        colMap = if (st.colMap.isEmpty) None else Some(st.colMap),
-        retired = if (st.retired.isEmpty) None else Some(st.retired),
-        protocol = Some(Protocol))),
+    require(tryCommit(dest, firstCommit(st.copy(live = entries), "CLONE")),
       s"TxTable cloneShallow: concurrent create at $dest")
     1L
   }
@@ -1059,54 +1095,50 @@ object TxTable {
                           colMap: Map[String, String] = Map.empty)
       : DataFrame = {
     require(entries.nonEmpty, "TxTable readEntries: no entries")
-    // COLUMN MAPPING (r18): parquet bytes store PHYSICAL names (stable
-    // since column birth); the scan schema is the declared one with
-    // names mapped, and the final select aliases back to logical — so
-    // a renamed column reads every era's files by its one physical
-    // name, and an empty map (no renames ever) is the identity
-    val physDeclared = StructType(declared.fields.map(f =>
-      f.copy(name = colMap.getOrElse(f.name, f.name))))
-    def rd(names: Seq[String]): DataFrame = spark.read.schema(physDeclared)
-      .parquet(names.map(n => dataDir(root).resolve(n).toString): _*)
+    def rd(es: Seq[FileEntry]): DataFrame =
+      scanLogical(spark, es.map(e => resolveData(root, e.name)), declared, colMap)
     val (dvd, plain) = entries.partition(_.dv.isDefined)
-    val plainDf = if (plain.isEmpty) None else Some(rd(plain.map(_.name)))
+    val plainDf = if (plain.isEmpty) None else Some(rd(plain))
     val dvdDf = if (dvd.isEmpty) None else {
-      import spark.implicits._
-      // entry names may be ABSOLUTE (a shallow clone references the
-      // source's files by absolute path) while input_file_name yields
-      // the scan path — normalize BOTH sides of the (file, key) pair
-      // join to basenames (collision-free: every writer embeds a UUID
-      // nonce, and the guard below makes the assumption loud)
-      def baseName(n: String): String =
-        Paths.get(n).getFileName.toString
-      require(dvd.map(e => baseName(e.name)).distinct.size == dvd.size,
-        "TxTable readEntries: DV'd entries with colliding file basenames")
-      val base = rd(dvd.map(_.name)).withColumn("_graft_file",
-        element_at(split(input_file_name(), "/"), -1))
-      val outCols = base.columns.filterNot(_ == "_graft_file").toSeq.map(col)
-      val dvPaths = dvd.map(e => dataDir(root).resolve(e.dv.get).toString)
-      val dvRaw =
-        spark.read.schema(StructType(Seq(declared(key)))).parquet(dvPaths: _*)
-      val sidecarToFile = dvd.map(e => (baseName(e.dv.get), baseName(e.name)))
-        .toDF("_graft_dv", "_graft_file")
-      val pairs = dvRaw
-        .withColumn("_graft_dv", element_at(split(input_file_name(), "/"), -1))
-        .join(broadcast(sidecarToFile), Seq("_graft_dv"))
-        .select(col("_graft_file"), col(key))
+      val base = withFileTag(rd(dvd))
+      val pairs = dvPairs(spark, root, dvd, declared(key))
       Some(base.join(broadcast(pairs),
-          base("_graft_file") === pairs("_graft_file") &&
-            base(key) === pairs(key), "left_anti")
-        .select(outCols: _*))
+          base(FileCol) === pairs(FileCol) && base(key) === pairs(key), "left_anti")
+        .drop(FileCol))
     }
-    val phys = (plainDf, dvdDf) match {
-      case (Some(a), Some(b)) => a.unionByName(b)
-      case (Some(a), None) => a
-      case (None, b) => b.get
-    }
-    // alias physical → logical (key never maps: rename/drop refuse it)
-    if (colMap.isEmpty) phys
-    else phys.select(declared.fields.map(f =>
-      col(colMap.getOrElse(f.name, f.name)).as(f.name)).toSeq: _*)
+    (plainDf ++ dvdDf).reduce(_.unionByName(_))
+  }
+
+  /** The column that tags a scanned row with its data file's BASENAME.
+    * Entry names may be ABSOLUTE (a shallow clone references the
+    * source's files by absolute path) while input_file_name yields the
+    * scan path, so both sides of a (file, key) pair join compare
+    * basenames — collision-free: every writer embeds a UUID nonce, and
+    * [[dvPairs]] makes the assumption loud. */
+  private val FileCol = "_graft_file"
+
+  private def baseName(n: String): String = Paths.get(n).getFileName.toString
+
+  /** `df` (a bare file scan) with the basename of each row's file as
+    * column `c`. */
+  private def withFileTag(df: DataFrame, c: String = FileCol): DataFrame =
+    df.withColumn(c, element_at(split(input_file_name(), "/"), -1))
+
+  /** The (file, key) pairs the deletion vectors of the entries `dvd`
+    * hold: each sidecar's keys, read through the declared `keyField`,
+    * tagged under [[FileCol]] with the data file the sidecar belongs
+    * to. */
+  private def dvPairs(spark: SparkSession, root: String, dvd: Seq[FileEntry],
+                      keyField: StructField): DataFrame = {
+    import spark.implicits._
+    require(dvd.map(e => baseName(e.name)).distinct.size == dvd.size,
+      "TxTable: DV'd entries with colliding file basenames")
+    val sidecarToFile = dvd.map(e => (baseName(e.dv.get), baseName(e.name)))
+      .toDF("_graft_dv", FileCol)
+    withFileTag(spark.read.schema(StructType(Seq(keyField)))
+        .parquet(dvd.map(e => resolveData(root, e.dv.get)): _*), "_graft_dv")
+      .join(broadcast(sidecarToFile), Seq("_graft_dv"))
+      .select(col(FileCol), col(keyField.name))
   }
 
   /** A query bound normalized to the two comparison domains the logged
@@ -1149,28 +1181,15 @@ object TxTable {
     * dimensions at once, which is the point of the z layout). */
   def liveFilesWhereAll(root: String, preds: Seq[(String, Any, Any)],
                         asOf: Option[Long] = None)
-      : (Seq[FileEntry], Seq[FileEntry]) = {
-    val st = replayState(root, asOf)
-    def mightMatchOne(f: FileEntry, column: String, lo: Any, hi: Any): Boolean = {
-      val (nlo, slo) = normBound(lo)
-      val (nhi, shi) = normBound(hi)
-      val statOf: Option[ColStat] =
-        if (column == st.key)
-          Some(ColStat(f.smin, f.smax, Some(f.kmin), Some(f.kmax)))
-        else f.cols.flatMap(_.get(st.physOf(column)))   // stats key physical
-      statOf match {
-        case None => true
-        case Some(cs) =>
-          val numDisjoint = (for (a <- cs.nlo; b <- cs.nhi; l <- nlo; h <- nhi)
-            yield b < l || h < a).getOrElse(false)
-          val strDisjoint = (for (a <- cs.lo; b <- cs.hi; l <- slo; h <- shi)
-            yield b < l || h < a).getOrElse(false)
-          !(numDisjoint || strDisjoint)
-      }
-    }
+      : (Seq[FileEntry], Seq[FileEntry]) =
+    mightMatch(replayState(root, asOf), preds)
+
+  /** `st`'s live files split into (kept, pruned): a file is pruned when
+    * some predicate is provably disjoint from its logged range. */
+  private def mightMatch(st: State, preds: Seq[(String, Any, Any)])
+      : (Seq[FileEntry], Seq[FileEntry]) =
     st.live.partition(f =>
-      preds.forall { case (c, lo, hi) => mightMatchOne(f, c, lo, hi) })
-  }
+      preds.forall { case (c, lo, hi) => predRelation(st, f, c, lo, hi) != 0 })
 
   /** Range read with READER-SIDE DATA SKIPPING (r16 — Delta's data
     * skipping, the reader half of the stats the log has carried since
@@ -1200,15 +1219,11 @@ object TxTable {
   def readWhereAll(spark: SparkSession, root: String,
                    preds: Seq[(String, Any, Any)],
                    asOf: Option[Long] = None): DataFrame = {
-    // Pin ONE snapshot version up front (r17, ADVICE): with asOf=None
-    // the state replay and the pruning decision used to replay
-    // independently — a commit landing between the two could mix
-    // snapshots (live/schema from v, kept-file set from v+1), breaking
-    // snapshot isolation for this read path.
-    val pinned = Some(asOf.getOrElse(currentVersion(root)))
-    val st = replayState(root, pinned)
+    // ONE replay serves the schema and the pruning decision, so a
+    // commit landing meanwhile cannot mix snapshots
+    val st = replayState(root, asOf)
     require(st.live.nonEmpty, s"TxTable at $root has no live files")
-    val (kept, _) = liveFilesWhereAll(root, preds, pinned)
+    val (kept, _) = mightMatch(st, preds)
     if (kept.isEmpty) spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st.schema)
     else {
@@ -1261,7 +1276,7 @@ object TxTable {
     * rebase re-runs the guard too — idempotent, and the contended-
     * writer path is never the bench shape. */
   private def touchedFiles(spark: SparkSession, files: Seq[FileEntry],
-                           keyCnt: DataFrame): Set[String] = {
+                           keyCnt: DataFrame): Seq[FileEntry] = {
     import spark.implicits._
     val strPath =
       keyCnt.schema("_k").dataType == org.apache.spark.sql.types.StringType &&
@@ -1288,8 +1303,11 @@ object TxTable {
       s"TxTable merge: updates carry duplicate key " +
         s"'${if (r.isNullAt(1)) null else r.getString(1)}' — " +
         "one row per key required (dedupe with an explicit latest-wins rule first)")
-    if (!strPath && !r.isNullAt(2) && r.getInt(2) == 1) files.map(_.name).toSet
-    else r.getSeq[String](3).toSet
+    if (!strPath && !r.isNullAt(2) && r.getInt(2) == 1) files
+    else {
+      val touched = r.getSeq[String](3).toSet
+      files.filter(f => touched.contains(f.name))
+    }
   }
 
   /** [[merge]]/[[mergeConditional]]'s source materialization (r18),
@@ -1487,9 +1505,9 @@ object TxTable {
     * rewrite MATERIALIZES a touched file's vector away), one full_outer
     * clause join yields both the rewrite and the change rows, invariants
     * are enforced on the rewrite, and one atomic commit swaps the
-    * touched files for the rewritten ones. A commit that changes
-    * nothing (no rows written, no file touched, no txn stamp, no schema
-    * change) is not made. `name` prefixes the entry point's errors. */
+    * touched files for the rewritten ones — or nothing, under
+    * [[occRetry]]'s no-op rule. `name` prefixes the entry point's
+    * errors. */
   private def mergeBody(spark: SparkSession, root: String, updates0: DataFrame,
                         key: String, txn: Option[(String, Long)], name: String,
                         matchedDelete: Option[MergeCond] = None,
@@ -1503,103 +1521,93 @@ object TxTable {
     // the checkpointed blocks (∝ the batch, never the table), and an
     // OCC re-derivation re-reads blocks instead of re-running the plan.
     val updates = materializedOnce(updates0)
-    try occRetry(root, "MERGE", allowRebase = true) { v =>
-      val st = replayState(root, None)
-      if (txn.exists { case (app, tv) => st.txns.get(app).exists(_ >= tv) })
-        None   // already applied: idempotent no-op (the occRetry sentinel)
-      else {
-        val (ts, newSchema) = target(st, updates)
-        val tblCols = ts.fieldNames.toSeq
-        val touchedSet = touchedFiles(spark, st.live,
-          updates.groupBy(col(key).as("_k")).agg(count(lit(1)).as("_c")))
-        val touched = st.live.filter(f => touchedSet.contains(f.name))
-        // an empty LOCAL relation, so the optimizer folds the join of a
-        // pure-insert merge into a projection of the source
-        val base =
-          if (touched.isEmpty) spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](), ts)
-          else readEntries(spark, root, touched, ts, key, st.colMap)
-        val src = updates.select(
-          (col(key).as("_mk") +: lit(true).as("_sp") +:
-            updates.columns.filterNot(_ == key).toSeq
-              .map(c => col(c).as(s"_s_$c"))): _*)
-        val tgt = base.select(
-          (col(key).as("_mk") +: lit(true).as("_tp") +:
-            tblCols.filterNot(_ == key).map(c => col(c).as(s"_t_$c"))): _*)
-        val j0 = tgt.join(src, Seq("_mk"), "full_outer")
-        // a CDC-enabled merge derives FIVE frames from this join (the
-        // rewrite + four change-row branches): checkpoint it so the
-        // full_outer executes once and every branch reads the blocks
-        // (r18 optimization round); without cdc the join runs once
-        // anyway — no checkpoint, no extra pass
-        val j = if (st.cdcOn) j0.localCheckpoint() else j0
-        try {
-          val srcAcc: String => org.apache.spark.sql.Column =
-            c => if (c == key) col("_mk") else col(s"_s_$c")
-          val tgtAcc: String => org.apache.spark.sql.Column =
-            c => if (c == key) col("_mk") else col(s"_t_$c")
-          val matched = col("_tp").isNotNull && col("_sp").isNotNull
-          val tgtOnly = col("_tp").isNotNull && col("_sp").isNull
-          val srcOnly = col("_tp").isNull && col("_sp").isNotNull
-          val delC = coalesce(
-            matchedDelete.map(_(srcAcc, tgtAcc)).getOrElse(lit(false)), lit(false))
-          val updC = coalesce(
-            matchedUpdate.map(_(srcAcc, tgtAcc)).getOrElse(lit(true)), lit(false))
-          val insC = coalesce(
-            notMatchedInsert.map(_(srcAcc, tgtAcc)).getOrElse(lit(true)), lit(false))
-          val keep = tgtOnly || (matched && !delC) || (srcOnly && insC)
-          val matchedUpd = matched && !delC && updC
-          // a matched-and-updated row's value per column: the SET
-          // expression when one is declared for the column, the TARGET's
-          // value for unnamed columns under a SET map (partial update),
-          // and the source's value in replace mode (no SET map)
-          val updAcc: String => org.apache.spark.sql.Column = c =>
-            matchedUpdateSet match {
-              case Some(m) => m.get(c)
-                .map(f => f(srcAcc, tgtAcc).cast(ts(c).dataType))
-                .getOrElse(tgtAcc(c))
-              case None => srcAcc(c)
-            }
-          val merged = j.filter(keep).select(tblCols.map { c =>
-            if (c == key) col("_mk").as(key)
-            else when(matchedUpd, updAcc(c))
-              .when(srcOnly, srcAcc(c))
-              .otherwise(tgtAcc(c)).as(c)
-          }: _*)
-          enforceInvariants(merged, st.invariants, name)
-          val cdc = if (!st.cdcOn) None else {
-            // change rows straight from the clause join: the same
-            // outcomes the rewrite materializes, emitted as the feed —
-            // deletes carry the target row, updates pre+post (no-op
-            // updates where the source equals the target stay silent),
-            // clause-admitted source-only keys insert
-            def side(acc: String => org.apache.spark.sql.Column) =
-              struct(tblCols.map(c =>
-                (if (c == key) col("_mk") else acc(c)).as(c)): _*)
-            def rows(cond: org.apache.spark.sql.Column,
-                     acc: String => org.apache.spark.sql.Column,
-                     tpe: String) =
-              j.filter(cond).select(tblCols.map(c =>
-                  (if (c == key) col("_mk") else acc(c)).as(c)): _*)
-                .withColumn("_change_type", lit(tpe))
-            // the post side is the SET result when a SET map is declared
-            // (the feed must carry what the rewrite WRITES, not the raw
-            // source); no-op detection compares the same value
-            val updDiff = matchedUpd && !(side(updAcc) <=> side(tgtAcc))
-            val cdcDf = rows(matched && delC, tgtAcc, "delete")
-              .unionByName(rows(updDiff, tgtAcc, "update_preimage"))
-              .unionByName(rows(updDiff, updAcc, "update_postimage"))
-              .unionByName(rows(srcOnly && insC, srcAcc, "insert"))
-            writeCdcFiles(spark, cdcDf, root, v, st.colMap)
+    try occRetry(root, "MERGE", Some(key), txn, allowRebase = true) { st =>
+      val (ts, newSchema) = target(st, updates)
+      val tblCols = ts.fieldNames.toSeq
+      val touched = touchedFiles(spark, st.live,
+        updates.groupBy(col(key).as("_k")).agg(count(lit(1)).as("_c")))
+      // an empty LOCAL relation, so the optimizer folds the join of a
+      // pure-insert merge into a projection of the source
+      val base =
+        if (touched.isEmpty) spark.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](), ts)
+        else readEntries(spark, root, touched, ts, key, st.colMap)
+      val src = updates.select(
+        (col(key).as("_mk") +: lit(true).as("_sp") +:
+          updates.columns.filterNot(_ == key).toSeq
+            .map(c => col(c).as(s"_s_$c"))): _*)
+      val tgt = base.select(
+        (col(key).as("_mk") +: lit(true).as("_tp") +:
+          tblCols.filterNot(_ == key).map(c => col(c).as(s"_t_$c"))): _*)
+      val j0 = tgt.join(src, Seq("_mk"), "full_outer")
+      // a CDC-enabled merge derives FIVE frames from this join (the
+      // rewrite + four change-row branches): checkpoint it so the
+      // full_outer executes once and every branch reads the blocks
+      // (r18 optimization round); without cdc the join runs once
+      // anyway — no checkpoint, no extra pass
+      val j = if (st.cdcOn) j0.localCheckpoint() else j0
+      try {
+        val srcAcc: String => org.apache.spark.sql.Column =
+          c => if (c == key) col("_mk") else col(s"_s_$c")
+        val tgtAcc: String => org.apache.spark.sql.Column =
+          c => if (c == key) col("_mk") else col(s"_t_$c")
+        val matched = col("_tp").isNotNull && col("_sp").isNotNull
+        val tgtOnly = col("_tp").isNotNull && col("_sp").isNull
+        val srcOnly = col("_tp").isNull && col("_sp").isNotNull
+        val delC = coalesce(
+          matchedDelete.map(_(srcAcc, tgtAcc)).getOrElse(lit(false)), lit(false))
+        val updC = coalesce(
+          matchedUpdate.map(_(srcAcc, tgtAcc)).getOrElse(lit(true)), lit(false))
+        val insC = coalesce(
+          notMatchedInsert.map(_(srcAcc, tgtAcc)).getOrElse(lit(true)), lit(false))
+        val keep = tgtOnly || (matched && !delC) || (srcOnly && insC)
+        val matchedUpd = matched && !delC && updC
+        // a matched-and-updated row's value per column: the SET
+        // expression when one is declared for the column, the TARGET's
+        // value for unnamed columns under a SET map (partial update),
+        // and the source's value in replace mode (no SET map)
+        val updAcc: String => org.apache.spark.sql.Column = c =>
+          matchedUpdateSet match {
+            case Some(m) => m.get(c)
+              .map(f => f(srcAcc, tgtAcc).cast(ts(c).dataType))
+              .getOrElse(tgtAcc(c))
+            case None => srcAcc(c)
           }
-          val adds = writeFiles(spark, merged, root, key,
-            f"$v%010d-merge", st.statsCols, st.colMap)
-          if (adds.isEmpty && touched.isEmpty && txn.isEmpty && newSchema.isEmpty)
-            None
-          else Some((adds, touched.map(_.name), key, newSchema,
-            txn.map { case (app, tv) => TxnAction(app, tv) }, cdc))
-        } finally if (j ne j0) release(j)
-      }
+        val merged = j.filter(keep).select(tblCols.map { c =>
+          if (c == key) col("_mk").as(key)
+          else when(matchedUpd, updAcc(c))
+            .when(srcOnly, srcAcc(c))
+            .otherwise(tgtAcc(c)).as(c)
+        }: _*)
+        enforceInvariants(merged, st.invariants, name)
+        val cdc = if (!st.cdcOn) None else {
+          // change rows straight from the clause join: the same
+          // outcomes the rewrite materializes, emitted as the feed —
+          // deletes carry the target row, updates pre+post (no-op
+          // updates where the source equals the target stay silent),
+          // clause-admitted source-only keys insert
+          def side(acc: String => org.apache.spark.sql.Column) =
+            struct(tblCols.map(c =>
+              (if (c == key) col("_mk") else acc(c)).as(c)): _*)
+          def rows(cond: org.apache.spark.sql.Column,
+                   acc: String => org.apache.spark.sql.Column,
+                   tpe: String) =
+            j.filter(cond).select(tblCols.map(c =>
+                (if (c == key) col("_mk") else acc(c)).as(c)): _*)
+              .withColumn("_change_type", lit(tpe))
+          // the post side is the SET result when a SET map is declared
+          // (the feed must carry what the rewrite WRITES, not the raw
+          // source); no-op detection compares the same value
+          val updDiff = matchedUpd && !(side(updAcc) <=> side(tgtAcc))
+          val cdcDf = rows(matched && delC, tgtAcc, "delete")
+            .unionByName(rows(updDiff, tgtAcc, "update_preimage"))
+            .unionByName(rows(updDiff, updAcc, "update_postimage"))
+            .unionByName(rows(srcOnly && insC, srcAcc, "insert"))
+          writeCdcFiles(cdcDf, root, st)
+        }
+        draft(writeFiles(spark, merged, root, st, st.filePrefix("merge")),
+          touched.map(_.name), cdc).copy(schema = newSchema)
+      } finally if (j ne j0) release(j)
     } finally if (updates ne updates0) release(updates)
   }
 
@@ -1625,45 +1633,35 @@ object TxTable {
     * as an `insert` change. */
   def append(spark: SparkSession, root: String, df: DataFrame,
              key: String, txn: Option[(String, Long)] = None): Long =
-    occRetry(root, "APPEND", allowRebase = true) { v =>
-      val st = replayState(root, None)
-      if (txn.exists { case (app, tv) => st.txns.get(app).exists(_ >= tv) })
-        None   // already applied: idempotent no-op
-      else {
-        val ts = st.schema
-        val missing = ts.fieldNames.filterNot(df.columns.contains)
-        require(missing.isEmpty,
-          s"TxTable append: frame missing table column(s) " +
-            s"${missing.mkString(", ")}")
-        // EXTRA columns are refused too (r18, ADVICE): writeFiles
-        // persists the frame verbatim, so an undeclared column would
-        // land in the parquet bytes invisibly — and if a later merge
-        // legitimately ADDS a column of that name via schema
-        // evolution, by-name reads of the appended files would
-        // surface the stale smuggled values instead of nulls (the
-        // r14 silent-corruption class; Delta rejects extra columns
-        // on append without mergeSchema for the same reason).
-        val extra = df.columns.filterNot(ts.fieldNames.contains)
-        require(extra.isEmpty,
-          s"TxTable append: frame carries undeclared column(s) " +
-            s"${extra.mkString(", ")} — append never evolves the " +
-            "schema; widen through merge first or drop them")
-        ts.fields.foreach { f =>
-          require(df.schema(f.name).dataType == f.dataType,
-            s"TxTable append: column '${f.name}' arrives as " +
-              s"${df.schema(f.name).dataType} but the table declares " +
-              s"${f.dataType} — no schema evolution on append")
-        }
-        enforceInvariants(df, st.invariants, "append")
-        val cdc = if (!st.cdcOn) None else
-          writeCdcFiles(spark,
-            df.withColumn("_change_type", lit("insert")), root, v, st.colMap)
-        val adds = writeFiles(spark, df, root, key,
-          f"$v%010d-append", st.statsCols, st.colMap)
-        if (adds.isEmpty && txn.isEmpty) None   // empty batch, no watermark
-        else Some((adds, Seq.empty, key, None,
-          txn.map { case (app, tv) => TxnAction(app, tv) }, cdc))
+    occRetry(root, "APPEND", Some(key), txn, allowRebase = true) { st =>
+      val ts = st.schema
+      val missing = ts.fieldNames.filterNot(df.columns.contains)
+      require(missing.isEmpty,
+        s"TxTable append: frame missing table column(s) " +
+          s"${missing.mkString(", ")}")
+      // EXTRA columns are refused too (r18): writeFiles
+      // persists the frame verbatim, so an undeclared column would
+      // land in the parquet bytes invisibly — and if a later merge
+      // legitimately ADDS a column of that name via schema
+      // evolution, by-name reads of the appended files would
+      // surface the stale smuggled values instead of nulls (the
+      // r14 silent-corruption class; Delta rejects extra columns
+      // on append without mergeSchema for the same reason).
+      val extra = df.columns.filterNot(ts.fieldNames.contains)
+      require(extra.isEmpty,
+        s"TxTable append: frame carries undeclared column(s) " +
+          s"${extra.mkString(", ")} — append never evolves the " +
+          "schema; widen through merge first or drop them")
+      ts.fields.foreach { f =>
+        require(df.schema(f.name).dataType == f.dataType,
+          s"TxTable append: column '${f.name}' arrives as " +
+            s"${df.schema(f.name).dataType} but the table declares " +
+            s"${f.dataType} — no schema evolution on append")
       }
+      enforceInvariants(df, st.invariants, "append")
+      val cdc = if (!st.cdcOn) None else
+        writeCdcFiles(df.withColumn("_change_type", lit("insert")), root, st)
+      draft(writeFiles(spark, df, root, st, st.filePrefix("append")), cdc = cdc)
     }
 
   /** Storage-level DELETE by key — the other half of a CDC sink: prune
@@ -1671,47 +1669,44 @@ object TxTable {
     * them without those keys, one atomic commit. Delete-of-absent is a
     * no-op (idempotent replay, the applyCdc contract). */
   def deleteKeys(spark: SparkSession, root: String, keys: DataFrame,
-                 key: String): Long = {
-    // no separate pre-check: the attempt's touched.isEmpty → None
-    // sentinel already makes delete-of-absent a no-op, and the old
-    // pre-check cost a full duplicate pruning pass (distinct +
-    // broadcast range join) per call — measurable at st38's
-    // per-micro-batch cadence (r14 judge finding #3)
-    //
-    // r18 (optimization round): the distinct key set materializes ONCE
-    // — pruning, the anti-join and the CDC semi-join used to each
-    // re-execute the caller's keys plan; now they read these blocks.
-    // (Null keys match no equality join and no file range — dropping
-    // them up front changes nothing downstream.)
+                 key: String): Long =
+    deleteByKeys(spark, root, keys, key, "DELETE", None) { (st, ks, touched) =>
+      // declared-schema read, same reason as merge: an inferred read
+      // over mixed pre-/post-widening touched files can sample the
+      // narrow file and silently erase the widened column from every
+      // surviving row the delete never mentioned; DV-aware (r17) so a
+      // rewrite-delete after a DV delete materializes both
+      val base0 = readEntries(spark, root, touched, st.schema, key, st.colMap)
+      // cdc consumes the touched-files read twice: one pass (r18)
+      val base = if (st.cdcOn) base0.localCheckpoint() else base0
+      try {
+        val cdc = if (!st.cdcOn) None else
+          writeCdcFiles(base.join(ks, Seq(key), "left_semi")
+            .withColumn("_change_type", lit("delete")), root, st)
+        draft(writeFiles(spark, base.join(ks, Seq(key), "left_anti"), root, st,
+          st.filePrefix("delete")), touched.map(_.name), cdc)
+      } finally if (base ne base0) release(base)
+    }
+
+  /** The skeleton [[deleteKeys]] and [[deleteKeysDV]] share. The
+    * distinct non-null keys of `keys` materialize ONCE (r18), so the
+    * pruning probe, the rewrite and the CDC rows all read these blocks
+    * instead of re-executing the caller's plan; null keys match no
+    * equality join and no file range, so dropping them up front changes
+    * nothing. Each attempt probes the live files the keys can touch
+    * (no separate pre-check: it cost a duplicate pruning pass per call,
+    * measurable at st38's per-micro-batch cadence) and hands them to
+    * `body`; when none is touched the draft is empty, so
+    * delete-of-absent is a no-op. */
+  private def deleteByKeys(spark: SparkSession, root: String, keys: DataFrame,
+                           key: String, op: String, txn: Option[(String, Long)])(
+      body: (State, DataFrame, Seq[FileEntry]) => Commit): Long = {
     val ks = keys.select(col(key)).filter(col(key).isNotNull)
       .distinct().localCheckpoint()
-    try occRetry(root, "DELETE", allowRebase = true) { v =>
-      val st = replayState(root, None)
-      val files = st.live
-      val touchedSet = touchedFiles(spark, files,
+    try occRetry(root, op, Some(key), txn, allowRebase = true) { st =>
+      val touched = touchedFiles(spark, st.live,
         ks.select(col(key).as("_k"), lit(1L).as("_c")))
-      val touched = files.filter(f => touchedSet.contains(f.name))
-      if (touched.isEmpty) None     // raced to a no-op: commit nothing
-      else {
-        // declared-schema read, same reason as merge: an inferred read
-        // over mixed pre-/post-widening touched files can sample the
-        // narrow file and silently erase the widened column from every
-        // surviving row the delete never mentioned; DV-aware (r17) so a
-        // rewrite-delete after a DV delete materializes both
-        val base0 = readEntries(spark, root, touched, st.schema, key,
-          st.colMap)
-        // cdc consumes the touched-files read twice: one pass (r18)
-        val base = if (st.cdcOn) base0.localCheckpoint() else base0
-        try {
-          val remaining = base.join(ks, Seq(key), "left_anti")
-          val cdc = if (!st.cdcOn) None else
-            writeCdcFiles(spark,
-              base.join(ks, Seq(key), "left_semi")
-                .withColumn("_change_type", lit("delete")), root, v, st.colMap)
-          Some((writeFiles(spark, remaining, root, key, f"$v%010d-delete",
-            st.statsCols, st.colMap), touched.map(_.name), key, None, None, cdc))
-        } finally if (base ne base0) release(base)
-      }
+      if (touched.isEmpty) draft() else body(st, ks, touched)
     } finally release(ks)
   }
 
@@ -1815,53 +1810,31 @@ object TxTable {
                   preds: Seq[(String, Any, Any)],
                   txn: Option[(String, Long)] = None): Long = {
     require(preds.nonEmpty, "TxTable deleteWhere: at least one predicate")
-    occRetry(root, "DELETE_WHERE", allowRebase = true) { v =>
-      val st = replayState(root, None)
-      if (txn.exists { case (app, tv) => st.txns.get(app).exists(_ >= tv) })
-        None   // already applied
-      else {
-        preds.foreach { case (c, _, _) =>
-          require(c == st.key || st.statsCols.contains(c),
-            s"TxTable deleteWhere: '$c' is neither the key nor a declared " +
-              "stats column — phrase the delete on logged-stats columns " +
-              "(or use deleteKeys for arbitrary key sets)")
-        }
-        val (covered, partial, _) = classifyDelete(st, preds)
-        if (covered.isEmpty && partial.isEmpty) {
-          if (txn.isEmpty) None   // raced to a no-op
-          else Some((Seq.empty, Seq.empty, st.key, None,
-            txn.map { case (app, tv) => TxnAction(app, tv) }, None))
-        } else {
-          val delCond = preds.map { case (c, lo, hi) =>
-            col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _)
-          val adds =
-            if (partial.isEmpty) Seq.empty
-            else {
-              val base = readEntries(spark, root, partial, st.schema, st.key,
-                st.colMap)
-              // NULL predicate results KEEP the row (SQL DELETE)
-              writeFiles(spark, base.filter(!coalesce(delCond, lit(false))),
-                root, st.key, f"$v%010d-delwhere", st.statsCols, st.colMap)
-            }
-          val cdc = if (!st.cdcOn) None else {
-            val doomedCovered =
-              if (covered.isEmpty) None
-              else Some(readEntries(spark, root, covered, st.schema, st.key,
-                st.colMap))
-            val doomedPartial =
-              if (partial.isEmpty) None
-              else Some(readEntries(spark, root, partial, st.schema, st.key,
-                st.colMap).filter(coalesce(delCond, lit(false))))
-            val doomed = (doomedCovered ++ doomedPartial)
-              .reduceOption(_.unionByName(_))
-            doomed.flatMap(d => writeCdcFiles(spark,
-              d.withColumn("_change_type", lit("delete")), root, v,
-              st.colMap))
-          }
-          Some((adds, (covered ++ partial).map(_.name), st.key, None,
-            txn.map { case (app, tv) => TxnAction(app, tv) }, cdc))
-        }
+    occRetry(root, "DELETE_WHERE", None, txn, allowRebase = true) { st =>
+      preds.foreach { case (c, _, _) =>
+        require(c == st.key || st.statsCols.contains(c),
+          s"TxTable deleteWhere: '$c' is neither the key nor a declared " +
+            "stats column — phrase the delete on logged-stats columns " +
+            "(or use deleteKeys for arbitrary key sets)")
       }
+      val (covered, partial, _) = classifyDelete(st, preds)
+      val delCond = preds.map { case (c, lo, hi) =>
+        col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _)
+      // NULL predicate results KEEP the row (SQL DELETE)
+      val doomedRow = coalesce(delCond, lit(false))
+      def rd(es: Seq[FileEntry]): Option[DataFrame] =
+        if (es.isEmpty) None
+        else Some(readEntries(spark, root, es, st.schema, st.key, st.colMap))
+      val partialDf = rd(partial)
+      val adds = partialDf.fold(Seq.empty[FileEntry])(base =>
+        writeFiles(spark, base.filter(!doomedRow), root, st,
+          st.filePrefix("delwhere")))
+      val cdc = if (!st.cdcOn) None else
+        (rd(covered) ++ partialDf.map(_.filter(doomedRow)))
+          .reduceOption(_.unionByName(_))
+          .flatMap(d =>
+            writeCdcFiles(d.withColumn("_change_type", lit("delete")), root, st))
+      draft(adds, (covered ++ partial).map(_.name), cdc)
     }
   }
 
@@ -1893,177 +1866,113 @@ object TxTable {
     * [[vacuum]] retention and [[restore]]'s existence validation cover
     * them by name like any other referenced file. */
   def deleteKeysDV(spark: SparkSession, root: String, keys: DataFrame,
-                   key: String, txn: Option[(String, Long)] = None): Long = {
-    // r18 (optimization round): one materialization of the delete-key
-    // set, shared by the pruning pass and the hit semi-join below (the
-    // raw keys plan used to execute for each)
-    val ks = keys.select(col(key)).filter(col(key).isNotNull)
-      .distinct().localCheckpoint()
-    try occRetry(root, "DELETE_DV", allowRebase = true) { v =>
-      val st = replayState(root, None)
-      if (txn.exists { case (app, tv) => st.txns.get(app).exists(_ >= tv) })
-        None   // already applied: idempotent no-op
-      else {
-        val files = st.live
-        val touchedSet = touchedFiles(spark, files,
-          ks.select(col(key).as("_k"), lit(1L).as("_c")))
-        val touched = files.filter(f => touchedSet.contains(f.name))
-        if (touched.isEmpty) {
-          if (txn.isEmpty) None // raced to a no-op
-          else Some((Seq.empty, Seq.empty, key, None, // empty watermark commit
-            txn.map { case (app, tv) => TxnAction(app, tv) }, None))
-        } else {
-        val keyOnly = StructType(Seq(st.schema(key)))
-        // ONE distributed pass over ALL touched files (r18, the r17
-        // verdict's item 2 — the old form looped per file on the
-        // driver, 2-4 blocking Spark jobs each; a SCATTERED delete
-        // (st44's %5==0 compliance batch touches every file) on a
-        // 100 TB table (~10⁵ files) degraded to ~4×10⁵ sequential
-        // jobs — hours of pure scheduling. Now: one multi-file
-        // key-column scan tagged with input_file_name, the per-file
-        // hit sets and exact live counts fall out of TWO tiny
-        // aggregates over it, and every new sidecar is written by a
-        // single partitioned job — O(1) Spark jobs for N files).
-        def baseName(n: String): String = Paths.get(n).getFileName.toString
-        val byBase = touched.map(f => baseName(f.name) -> f).toMap
-        require(byBase.size == touched.size,
-          "TxTable deleteKeysDV: touched entries with colliding basenames")
-        def tagged(df: DataFrame): DataFrame =
-          df.withColumn("_gf", element_at(split(input_file_name(), "/"), -1))
-        def keyScan(paths: Seq[String]): DataFrame =
-          tagged(spark.read.schema(keyOnly).parquet(paths: _*))
-        // (file, key) pairs physically present — the scan every count
-        // below derives from; column-pruned to the key (`ks`, the
-        // materialized delete-key set, is hoisted above occRetry — r18)
-        val phys = keyScan(touched.map(f =>
-          dataDir(root).resolve(f.name).toString))
-        // keys ALREADY vectored, per file (old sidecars mapped to
-        // their data files by name, as in readEntries)
-        val withDv = touched.filter(_.dv.isDefined)
-        val old =
-          if (withDv.isEmpty)
-            phys.select(col("_gf"), col(key)).limit(0)
-          else {
-            val sidecarToFile = {
-              import spark.implicits._
-              withDv.map(f => (baseName(f.dv.get), baseName(f.name)))
-                .toDF("_gdv", "_gf")
-            }
-            val raw = spark.read.schema(keyOnly).parquet(
-              withDv.map(f => dataDir(root).resolve(f.dv.get).toString): _*)
-            raw.withColumn("_gdv",
-                element_at(split(input_file_name(), "/"), -1))
-              .join(broadcast(sidecarToFile), Seq("_gdv"))
-              .select(col("_gf"), col(key))
+                   key: String, txn: Option[(String, Long)] = None): Long =
+    deleteByKeys(spark, root, keys, key, "DELETE_DV", txn) { (st, ks, touched) =>
+      val keyField = st.schema(key)
+      // ONE distributed pass over ALL touched files (r18 — the old
+      // form looped per file on the driver, 2-4 blocking Spark jobs
+      // each; a SCATTERED delete (st44's %5==0 compliance batch
+      // touches every file) on a
+      // 100 TB table (~10⁵ files) degraded to ~4×10⁵ sequential
+      // jobs — hours of pure scheduling. Now: one multi-file
+      // key-column scan tagged with its files, the per-file hit sets
+      // and exact live counts fall out of TWO tiny aggregates over it,
+      // and every new sidecar is written by a single partitioned job —
+      // O(1) Spark jobs for N files).
+      val byBase = touched.map(f => baseName(f.name) -> f).toMap
+      require(byBase.size == touched.size,
+        "TxTable deleteKeysDV: touched entries with colliding basenames")
+      // (file, key) pairs physically present — the scan every count
+      // below derives from; column-pruned to the key
+      val phys = withFileTag(spark.read.schema(StructType(Seq(keyField)))
+        .parquet(touched.map(f => resolveData(root, f.name)): _*))
+      // keys ALREADY vectored, per file
+      val withDv = touched.filter(_.dv.isDefined)
+      val old =
+        if (withDv.isEmpty) phys.select(col(FileCol), col(key)).limit(0)
+        else dvPairs(spark, root, withDv, keyField)
+      // newly-dead pairs: hits minus what the old vectors already
+      // cover — a file with NO fresh pair keeps its entry untouched
+      val hit = phys.join(broadcast(ks), Seq(key), "left_semi")
+        .select(col(FileCol), col(key)).distinct()
+      val fresh = hit.join(old, Seq(FileCol, key), "left_anti")
+        .localCheckpoint()
+      try {
+        val freshCnt = fresh.groupBy(col(FileCol)).count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        if (freshCnt.isEmpty) draft()
+        else {
+          // union sidecar contents for every CHANGED file (old keys +
+          // fresh keys — an entry always references exactly one
+          // sidecar), and exact live counts by anti-join (robust to
+          // duplicate keys inside a created-not-merged file, where
+          // per-key arithmetic would drift)
+          val changedBase = freshCnt.keySet.toSeq
+          val changedDf = {
+            import spark.implicits._
+            changedBase.toDF(FileCol)
           }
-        // newly-dead pairs: hits minus what the old vectors already
-        // cover — a file with NO fresh pair keeps its entry untouched
-        val hit = phys.join(broadcast(ks), Seq(key), "left_semi")
-          .select(col("_gf"), col(key)).distinct()
-        val fresh = hit.join(old, Seq("_gf", key), "left_anti")
-          .localCheckpoint()
-        try {
-          val freshCnt = fresh.groupBy(col("_gf")).count().collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap
-          if (freshCnt.isEmpty && txn.isEmpty) None // raced to a no-op
-          else if (freshCnt.isEmpty)
-            Some((Seq.empty, Seq.empty, key, None,
-              txn.map { case (app, tv) => TxnAction(app, tv) }, None))
-          else {
-            // union sidecar contents for every CHANGED file (old keys +
-            // fresh keys — an entry always references exactly one
-            // sidecar), and exact live counts by anti-join (robust to
-            // duplicate keys inside a created-not-merged file, where
-            // per-key arithmetic would drift)
-            val changedBase = freshCnt.keySet.toSeq
-            val changedDf = {
-              import spark.implicits._
-              changedBase.toDF("_gf")
+          val combined = old.unionByName(fresh)
+            .join(broadcast(changedDf), Seq(FileCol)).localCheckpoint()
+          try {
+            val liveCnt = phys.join(broadcast(changedDf), Seq(FileCol))
+              .join(broadcast(combined), Seq(FileCol, key), "left_anti")
+              .groupBy(col(FileCol)).count().collect()
+              .map(r => r.getString(0) -> r.getLong(1)).toMap
+            // all new sidecars in ONE partitioned write: integer indices
+            // as the partition column (no partition-value escaping
+            // concerns), one output file per index by construction
+            // (repartition on the partition column puts all of an
+            // index's rows in one task)
+            val needSidecar = changedBase
+              .filter(b => liveCnt.getOrElse(b, 0L) > 0L).zipWithIndex
+            val nonce = java.util.UUID.randomUUID().toString.take(8)
+            val dvNames = needSidecar.map { case (b, i) =>
+              b -> f"dv-${st.version + 1}%010d-$nonce-$i.parquet"
+            }.toMap
+            if (needSidecar.nonEmpty) withStaging(root, "dv") { tmp =>
+              val idxDf = {
+                import spark.implicits._
+                needSidecar.toDF(FileCol, "_gi")
+              }
+              combined.join(broadcast(idxDf), Seq(FileCol))
+                .select(col(key), col("_gi"))
+                .repartition(col("_gi"))
+                .write.partitionBy("_gi").mode("overwrite")
+                .parquet(tmp.toString)
+              needSidecar.foreach { case (b, i) =>
+                val part = listDir(tmp.resolve(s"_gi=$i"))
+                  .find(_.getFileName.toString.startsWith("part-"))
+                  .getOrElse(throw new IllegalStateException(
+                    s"TxTable deleteKeysDV: no sidecar part file for $b"))
+                Files.move(part, dataDir(root).resolve(dvNames(b)),
+                  StandardCopyOption.ATOMIC_MOVE)
+              }
             }
-            val combined = old.unionByName(fresh)
-              .join(broadcast(changedDf), Seq("_gf")).localCheckpoint()
-            try {
-              val liveCnt = phys.join(broadcast(changedDf), Seq("_gf"))
-                .join(broadcast(combined), Seq("_gf", key), "left_anti")
-                .groupBy(col("_gf")).count().collect()
-                .map(r => r.getString(0) -> r.getLong(1)).toMap
-              // all new sidecars in ONE partitioned write: integer indices
-              // as the partition column (no partition-value escaping
-              // concerns), one output file per index by construction
-              // (repartition on the partition column puts all of an
-              // index's rows in one task)
-              val needSidecar = changedBase
-                .filter(b => liveCnt.getOrElse(b, 0L) > 0L).zipWithIndex
-              val nonce = java.util.UUID.randomUUID().toString.take(8)
-              val dvNames = needSidecar.map { case (b, i) =>
-                b -> f"dv-$v%010d-$nonce-$i.parquet"
-              }.toMap
-              if (needSidecar.nonEmpty) {
-                val idxDf = {
-                  import spark.implicits._
-                  needSidecar.toDF("_gf", "_gi")
-                }
-                val tmp = Files.createTempDirectory(Paths.get(root), "stage-dv-")
-                try {
-                  combined.join(broadcast(idxDf), Seq("_gf"))
-                    .select(col(key), col("_gi"))
-                    .repartition(col("_gi"))
-                    .write.partitionBy("_gi").mode("overwrite")
-                    .parquet(tmp.toString)
-                  needSidecar.foreach { case (b, i) =>
-                    val dir = tmp.resolve(s"_gi=$i")
-                    val part = listDir(dir)
-                      .find(_.getFileName.toString.startsWith("part-"))
-                      .getOrElse(throw new IllegalStateException(
-                        s"TxTable deleteKeysDV: no sidecar part file for $b"))
-                    Files.move(part, dataDir(root).resolve(dvNames(b)),
-                      StandardCopyOption.ATOMIC_MOVE)
-                  }
-                } finally {
-                  import scala.jdk.CollectionConverters._
-                  val walk = Files.walk(tmp)
-                  val rest = try walk.iterator().asScala.toSeq.reverse
-                    finally walk.close()
-                  rest.foreach(Files.deleteIfExists(_))
-                }
-              }
-              // change-feed materialization (cdc-enabled tables only): the
-              // newly-dead FULL rows — the one case where a DV delete
-              // reads more than the key column, the documented CDF write
-              // cost (Delta pays the same); one multi-file read, one
-              // broadcast semi-join on the (file, key) pairs
-              val cdc = if (!st.cdcOn) None else {
-                val changedEntries = changedBase.map(byBase)
-                // files store PHYSICAL names (column mapping): scan through
-                // the mapped schema, alias back to logical for the feed
-                val fullPhys = tagged(spark.read.schema(StructType(
-                    st.schema.fields.map(f => f.copy(name = st.physOf(f.name)))))
-                  .parquet(changedEntries
-                    .map(f => dataDir(root).resolve(f.name).toString): _*))
-                val full =
-                  if (st.colMap.isEmpty) fullPhys
-                  else fullPhys.select((st.schema.fields.map(f =>
-                    col(st.physOf(f.name)).as(f.name)) :+ col("_gf")).toSeq: _*)
-                writeCdcFiles(spark,
-                  full.join(broadcast(fresh), Seq("_gf", key), "left_semi")
-                    .drop("_gf").withColumn("_change_type", lit("delete")),
-                  root, v, st.colMap)
-              }
-              val adds = changedBase.flatMap { b =>
-                val f = byBase(b)
-                val live = liveCnt.getOrElse(b, 0L)
-                if (live == 0L) None // whole file dead: pure remove
-                else Some(f.copy(rows = live, dv = Some(dvNames(b))))
-              }
-              Some((adds, changedBase.map(byBase(_).name), key, None,
-                txn.map { case (app, tv) => TxnAction(app, tv) }, cdc))
-            } finally release(combined)
-          }
-        } finally release(fresh)
+            // change-feed materialization (cdc-enabled tables only): the
+            // newly-dead FULL rows — the one case where a DV delete
+            // reads more than the key column, the documented CDF write
+            // cost (Delta pays the same); one multi-file read, one
+            // broadcast semi-join on the (file, key) pairs
+            val cdc = if (!st.cdcOn) None else {
+              val full = withFileTag(scanLogical(spark,
+                changedBase.map(b => resolveData(root, byBase(b).name)),
+                st.schema, st.colMap))
+              writeCdcFiles(
+                full.join(broadcast(fresh), Seq(FileCol, key), "left_semi")
+                  .drop(FileCol).withColumn("_change_type", lit("delete")),
+                root, st)
+            }
+            val adds = changedBase.flatMap { b =>
+              val live = liveCnt.getOrElse(b, 0L)
+              if (live == 0L) None // whole file dead: pure remove
+              else Some(byBase(b).copy(rows = live, dv = Some(dvNames(b))))
+            }
+            draft(adds, changedBase.map(byBase(_).name), cdc)
+          } finally release(combined)
         }
-      }
-    } finally release(ks)
-  }
+      } finally release(fresh)
+    }
 
   // ---- change-feed source seams (r18) --------------------------------
   // The DataSourceV2 streaming source (GraftChangeFeed) plans its
@@ -2197,12 +2106,17 @@ object TxTable {
     * unchanged and independent. */
   def vacuumOlderThan(root: String, olderThanMs: Long,
                       minAgeMillis: Long = DefaultVacuumRetentionMillis)
-      : Seq[String] = {
-    val head = currentVersion(root)
-    val horizon = versionAtOrBefore(root,
-      System.currentTimeMillis() - olderThanMs)
-    vacuum(root, keepVersions = (head - horizon).toInt, minAgeMillis)
-  }
+      : Seq[String] =
+    vacuum(root, versionsWithin(root, olderThanMs), minAgeMillis)
+
+  /** The time-based retention horizon as a version count: how many
+    * versions back from the head the version in force `olderThanMs` ago
+    * lies — the `keepVersions` under which [[vacuum]] and [[cleanupLog]]
+    * keep every version younger than that plus the one in force at the
+    * horizon instant. */
+  private def versionsWithin(root: String, olderThanMs: Long): Int =
+    (currentVersion(root) -
+      versionAtOrBefore(root, System.currentTimeMillis() - olderThanMs)).toInt
 
   /** TIME-based [[cleanupLog]] (r18): remove commit records and
     * checkpoints no replay within the last `olderThanMs` milliseconds
@@ -2211,12 +2125,8 @@ object TxTable {
     * safety as the version-count form: nothing below the newest
     * checkpoint at-or-below the horizon is ever needed, and nothing
     * above it is touched. */
-  def cleanupLogOlderThan(root: String, olderThanMs: Long): Seq[String] = {
-    val head = currentVersion(root)
-    val horizon = versionAtOrBefore(root,
-      System.currentTimeMillis() - olderThanMs)
-    cleanupLog(root, keepVersions = (head - horizon).toInt)
-  }
+  def cleanupLogOlderThan(root: String, olderThanMs: Long): Seq[String] =
+    cleanupLog(root, versionsWithin(root, olderThanMs))
 
   /** Refuse a metadata-only column operation when a CHECK invariant
     * mentions the column — the invariant string would silently dangle
@@ -2248,11 +2158,8 @@ object TxTable {
     * until the invariant is rewritten. Renaming onto a just-vacated
     * logical name is fine — the map keys are logical, the physical
     * slot never moves. */
-  def renameColumn(root: String, from: String, to: String): Long = {
-    var tries = 0
-    while (tries < 20) {
-      val v = currentVersion(root) + 1
-      val st = replayState(root, None)
+  def renameColumn(root: String, from: String, to: String): Long =
+    occRetry(root, "RENAME_COLUMN", None) { st =>
       val ts = st.schema
       require(from != st.key,
         s"TxTable renameColumn: '$from' is the key column — the merge " +
@@ -2272,18 +2179,9 @@ object TxTable {
       val newStats =
         if (!st.statsCols.contains(from)) None
         else Some(st.statsCols.map(c => if (c == from) to else c))
-      if (tryCommit(root, Commit(v, st.key, Seq.empty, Seq.empty,
-          "RENAME_COLUMN", System.currentTimeMillis(), Some(newTs.json),
-          dataChange = Some(false), statsCols = newStats,
-          colMap = Some(newMap)))) {
-        maybeCheckpoint(root, v, st.key)
-        return v
-      }
-      tries += 1
+      draft().copy(schema = Some(newTs.json),
+        dataChange = Some(false), statsCols = newStats, colMap = Some(newMap))
     }
-    throw new IllegalStateException(
-      s"TxTable at $root: lost the rename race 20 times")
-  }
 
   /** DROP a column as METADATA ONLY (r18 — the other half of column
     * mapping): the field leaves the declared schema; the bytes stay in
@@ -2297,11 +2195,8 @@ object TxTable {
     * equally loud). Time travel before the drop still reads the
     * column; the key column and invariant-referenced columns are
     * refused as in [[renameColumn]]. */
-  def dropColumn(root: String, name: String): Long = {
-    var tries = 0
-    while (tries < 20) {
-      val v = currentVersion(root) + 1
-      val st = replayState(root, None)
+  def dropColumn(root: String, name: String): Long =
+    occRetry(root, "DROP_COLUMN", None) { st =>
       val ts = st.schema
       require(name != st.key,
         s"TxTable dropColumn: '$name' is the key column")
@@ -2310,23 +2205,15 @@ object TxTable {
       require(ts.fields.length > 1,
         s"TxTable dropColumn: '$name' is the only column")
       requireNoInvariantRef(st, name, "dropColumn")
-      val newTs = StructType(ts.fields.filterNot(_.name == name))
       val newStats =
         if (!st.statsCols.contains(name)) None
         else Some(st.statsCols.filterNot(_ == name))
-      if (tryCommit(root, Commit(v, st.key, Seq.empty, Seq.empty,
-          "DROP_COLUMN", System.currentTimeMillis(), Some(newTs.json),
-          dataChange = Some(false), statsCols = newStats,
-          colMap = Some(st.colMap - name),
-          retired = Some(st.retired :+ st.physOf(name))))) {
-        maybeCheckpoint(root, v, st.key)
-        return v
-      }
-      tries += 1
+      draft().copy(
+        schema = Some(StructType(ts.fields.filterNot(_.name == name)).json),
+        dataChange = Some(false), statsCols = newStats,
+        colMap = Some(st.colMap - name),
+        retired = Some(st.retired :+ st.physOf(name)))
     }
-    throw new IllegalStateException(
-      s"TxTable at $root: lost the drop race 20 times")
-  }
 
   /** RESTORE the table to the state of version `asOf`, AS A NEW COMMIT
     * (the Delta RESTORE semantics): the head version's live set is
@@ -2338,9 +2225,13 @@ object TxTable {
     * an erasure must NOT be undone this way without noticing: restore
     * resurrects logically, subject to vacuum having kept the bytes; a
     * time-travel read past vacuumed files fails loudly, same contract
-    * as read). Restoring to the current state is a no-op. The target
-    * version's SCHEMA is re-committed when it differs, so a
-    * post-widening restore also narrows the declared schema back.
+    * as read). The target version's SCHEMA (and its declared stats
+    * columns) is re-committed when it differs, so a post-widening
+    * restore narrows the declared schema back and a restore past a
+    * [[dropColumn]] brings the column back with its values. Restoring
+    * to a version whose live set AND schema match the head's is a
+    * no-op: nothing commits and the head version returns (the
+    * [[occRetry]] no-op rule). `key` must be the table's key column.
     *
     * Restore VALIDATES that every target file still physically exists
     * (r15): after `vacuum` has reclaimed the target's bytes, a restore
@@ -2350,9 +2241,8 @@ object TxTable {
     * runs inside the OCC attempt so a concurrent vacuum between check
     * and commit is bounded by vacuum's own age guard. */
   def restore(root: String, key: String, asOf: Long): Long =
-    occRetry(root, "RESTORE") { v =>
+    occRetry(root, "RESTORE", Some(key)) { head =>
       val target = replayState(root, Some(asOf))
-      val head = replayState(root, None)
       require(target.live.nonEmpty,
         s"TxTable at $root has no live files at v$asOf")
       // COLUMN MAPPING (r18): a restore across a rename/drop would
@@ -2380,10 +2270,9 @@ object TxTable {
       val adds = target.live.filterNot(f => headByName.get(f.name).contains(f))
       val removes = head.live
         .filterNot(f => targetByName.get(f.name).contains(f)).map(_.name)
-      if (adds.isEmpty && removes.isEmpty) None
-      else Some((adds, removes, key,
-        if (target.schema != head.schema) Some(target.schema.json) else None,
-        None, None))
+      draft(adds, removes).copy(
+        schema = Option.when(target.schema != head.schema)(target.schema.json),
+        statsCols = Option.when(target.statsCols != head.statsCols)(target.statsCols))
     }
 
   /** Compaction as a commit: rewrite the current live set into at most
@@ -2424,13 +2313,12 @@ object TxTable {
   private def rewriteAll(spark: SparkSession, root: String, key: String,
                          op: String, tag: String)(
       layout: DataFrame => DataFrame): Long =
-    occRetry(root, op, dataChange = false) { v =>
-      val st = replayState(root, None)
+    occRetry(root, op, Some(key)) { st =>
       require(st.live.nonEmpty, s"TxTable at $root has no live files")
       val df = layout(readEntries(spark, root, st.live, st.schema, st.key,
         st.colMap))
-      Some((writeFiles(spark, df, root, key, f"$v%010d-$tag", st.statsCols,
-        st.colMap), st.live.map(_.name), key, None, None, None))
+      draft(writeFiles(spark, df, root, st, st.filePrefix(tag)), st.live.map(_.name))
+        .copy(dataChange = Some(false))
     }
 
   /** CLUSTERED compaction — the pruning-preserving variant (Delta's
@@ -2469,8 +2357,7 @@ object TxTable {
     * scheduled OPTIMIZE loop hits between ingest bursts. */
   def compactBinPack(spark: SparkSession, root: String, key: String,
                      smallRows: Long, targetRows: Long): Long =
-    occRetry(root, "OPTIMIZE", dataChange = false) { v =>
-      val st = replayState(root, None)
+    occRetry(root, "OPTIMIZE", Some(key)) { st =>
       val small = st.live.filter(_.rows < smallRows)
         .sortBy(f => (f.kmin, f.smin.getOrElse("")))
       val bins = scala.collection.mutable.ArrayBuffer
@@ -2483,15 +2370,12 @@ object TxTable {
       }
       if (bin.size >= 2) bins += bin  // the tail bin still packs
       val packable = bins.filter(_.size >= 2).toSeq
-      if (packable.isEmpty) None
-      else {
-        val adds = packable.zipWithIndex.flatMap { case (b, i) =>
-          writeFiles(spark,
-            readEntries(spark, root, b, st.schema, key, st.colMap).coalesce(1),
-            root, key, f"$v%010d-optimize$i", st.statsCols, st.colMap)
-        }
-        Some((adds, packable.flatten.map(_.name), key, None, None, None))
+      val adds = packable.zipWithIndex.flatMap { case (b, i) =>
+        writeFiles(spark,
+          readEntries(spark, root, b, st.schema, key, st.colMap).coalesce(1),
+          root, st, st.filePrefix(s"optimize$i"))
       }
+      draft(adds, packable.flatten.map(_.name)).copy(dataChange = Some(false))
     }
 
   /** LOG RETENTION (r17 — Delta's logRetentionDuration, the metadata
@@ -2655,20 +2539,12 @@ object TxTable {
       // whole tables) without them
       cdc match {
         case Some(names) =>
-          val paths = names.map(n => dataDir(root).resolve(n).toString)
-          // change files store PHYSICAL names (column mapping): scan
-          // mapped, alias back to the toVersion logical names
-          val physFields = outSchema.fields.map(f =>
-            f.copy(name = stTo.physOf(f.name)))
-          val raw = spark.read.schema(StructType(physFields :+
-              org.apache.spark.sql.types.StructField("_change_type",
-                org.apache.spark.sql.types.StringType))).parquet(paths: _*)
-          val df =
-            if (stTo.colMap.isEmpty) raw
-            else raw.select((outSchema.fields.map(f =>
-              col(stTo.physOf(f.name)).as(f.name)) :+
-              col("_change_type")).toSeq: _*)
-          Seq(df.withColumn("_commit_version", lit(v)))
+          // change files store PHYSICAL names (column mapping): read
+          // under the toVersion logical names
+          Seq(scanLogical(spark, names.map(resolveData(root, _)), outSchema,
+              stTo.colMap, Seq(StructField("_change_type",
+                org.apache.spark.sql.types.StringType)))
+            .withColumn("_commit_version", lit(v)))
         case None => (pre.nonEmpty, post.nonEmpty) match {
         case (false, false) => Seq.empty
         case (false, true) => Seq(tagged(rdE(post), "insert"))

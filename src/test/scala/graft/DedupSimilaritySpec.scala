@@ -1161,6 +1161,32 @@ class DedupSimilaritySpec extends AnyFunSuite with SharedSpark {
     assert(tinyRanks(2L) > tinyRanks(1L)) // the sink accumulates rank
   }
 
+  test("graph loops release each round they replace: one persistent RDD per result") {
+    val emb = table("embeddings")
+    val edges = Similarity.knnGraphLsh(emb)
+      .select(col("q_id").as("src"), col("neighbor_id").as("dst"),
+        col("rank").cast("long").as("w"))
+      .localCheckpoint()
+    val pairs = edges.select(col("src"), col("dst"))
+    val seeds = emb.filter(col("vec_id") < 3).select(col("vec_id"))
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRank" -> (() => Similarity.pageRank(pairs)),
+      "bfsHops" -> (() => Similarity.bfsHops(pairs, seeds)),
+      "shortestPaths" -> (() => Similarity.shortestPaths(edges, seeds)),
+      "kCore" -> (() => Similarity.kCore(pairs)),
+      "labelPropagation" -> (() => Similarity.labelPropagation(pairs)),
+      "connectedComponents" -> (() => Dedup.connectedComponents(
+        pairs.select(col("src").as("a"), col("dst").as("b")), maxDriverEdges = 0L)))
+    val sc = spark.sparkContext
+    try ops.foreach { case (name, op) =>
+      val before = sc.getPersistentRDDs.keySet.toSet
+      assert(op().count() > 0, name)
+      val added = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(added.size <= 1, s"$name left ${added.size} persistent RDDs")
+      added.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
+    } finally graft.sources.TxTable.release(edges)
+  }
+
   test("label propagation: exact parity with a driver-side synchronous reference") {
     val edges = Similarity.knnGraphLsh(table("embeddings"))
       .select(col("q_id").as("src"), col("neighbor_id").as("dst"))

@@ -1713,18 +1713,63 @@ class TxTableSpec extends AnyFunSuite with SharedSpark {
     assert(got.forall(_.getString(1) == "u"))
   }
 
-  test("merge and deletes with an empty key frame touch nothing") {
+  test("one commit path: no-op batches, replays and watermark-only records") {
     import spark.implicits._
+    val none = Seq.empty[(Long, String)].toDF("k", "v")
+    // each writer over a one-row batch (empty = false) or an empty one
+    def batch(empty: Boolean) = if (empty) none else Seq((2000L, "x")).toDF("k", "v")
+    def dead(empty: Boolean) = if (empty) none.select("k") else Seq(5L).toDF("k")
+    type Writer = (String, Boolean, Option[(String, Long)]) => Long
+    val writers: Seq[(String, Writer)] = Seq(
+      "merge" -> ((r, e, t) => TxTable.merge(spark, r, batch(e), "k", t)),
+      "mergeConditional" -> ((r, e, t) =>
+        TxTable.mergeConditional(spark, r, batch(e), "k", txn = t)),
+      "append" -> ((r, e, t) => TxTable.append(spark, r, batch(e), "k", t)),
+      "deleteWhere" -> ((r, e, t) => TxTable.deleteWhere(spark, r,
+        Seq(if (e) ("k", -2L, -1L) else ("k", 5L, 5L)), t)),
+      "deleteKeysDV" -> ((r, e, t) => TxTable.deleteKeysDV(spark, r, dead(e), "k", t)))
+    writers.foreach { case (name, write) =>
+      val (root, base) = mkTable(s"txt-one-path-$name")
+      val v1 = TxTable.currentVersion(root)
+      // an empty batch without a stamp commits nothing
+      assert(write(root, true, None) === v1, name)
+      // a stamped batch applies; replaying its stamp commits nothing
+      // and returns the head
+      val v2 = write(root, false, Some(("app", 1L)))
+      assert(v2 === v1 + 1, name)
+      val applied = rows(TxTable.read(spark, root))
+      assert(applied !== rows(base), name)
+      assert(write(root, false, Some(("app", 1L))) === v2, name)
+      assert(TxTable.currentVersion(root) === v2, name)
+      // a stamped empty batch commits a watermark-only record
+      val v3 = write(root, true, Some(("app", 2L)))
+      assert(v3 === v2 + 1, name)
+      assert(TxTable.lastTxn(root, "app") === Some(2L), name)
+      val rec = TxTable.history(spark, root).filter(col("version") === v3).head
+      assert(rec.getAs[Int]("n_added_files") === 0 &&
+        rec.getAs[Int]("n_removed_files") === 0, name)
+      assert(rows(TxTable.read(spark, root)) === applied, name)
+    }
+    // the same rule for deleteKeys, and for an empty frame with a plan
     val (root, base) = mkTable("txt-empty-probe")
     val v = TxTable.currentVersion(root)
-    val none = Seq.empty[(Long, String)].toDF("k", "v")
-    TxTable.merge(spark, root, none, "k")
     TxTable.merge(spark, root, base.filter(col("k") < 0), "k")
     TxTable.deleteKeys(spark, root, none.select("k"), "k")
-    TxTable.deleteKeysDV(spark, root, none.select("k"), "k")
     assert(TxTable.currentVersion(root) === v)
-    TxTable.merge(spark, root, none, "k", txn = Some(("empty", 1L)))
-    assert(TxTable.lastTxn(root, "empty") === Some(1L))
+    assert(rows(TxTable.read(spark, root)) === rows(base))
+  }
+
+  test("a caller key that is not the table's key is refused; nothing commits") {
+    import spark.implicits._
+    val (root, base) = mkTable("txt-wrong-key")
+    val v = TxTable.currentVersion(root)
+    val e = intercept[IllegalArgumentException] {
+      TxTable.merge(spark, root, Seq((1L, "v5")).toDF("k", "v"), "v")
+    }
+    assert(e.getMessage.contains("'v'") && e.getMessage.contains("'k'"),
+      e.getMessage)
+    intercept[IllegalArgumentException](TxTable.compact(spark, root, "v"))
+    assert(TxTable.currentVersion(root) === v)
     assert(rows(TxTable.read(spark, root)) === rows(base))
   }
 
@@ -1979,6 +2024,45 @@ class TxTableSpec extends AnyFunSuite with SharedSpark {
       TxTable.restore(root, "k", 1L)
     }
     assert(e2.getMessage.contains("column"))
+  }
+
+  test("restore past a dropColumn brings the column back with its values") {
+    import spark.implicits._
+    val root = tempDir("txt-cm-restore").toString + "/tbl"
+    val base = (0L until 50L).map(k => (k, k * 2, s"s$k")).toDF("k", "n", "s")
+    TxTable.create(spark, base, root, "k")                           // v1
+    TxTable.dropColumn(root, "s")                                    // v2
+    assert(TxTable.restore(root, "k", 1L) === 3L)
+    val got = TxTable.read(spark, root)
+    assert(got.columns.toSeq === Seq("k", "n", "s"))
+    assert(got.collect().toSet === base.collect().toSet)
+  }
+
+  test("renameColumn and dropColumn re-derive under a racing commit") {
+    import spark.implicits._
+    val root = tempDir("txt-cm-race").toString + "/tbl"
+    TxTable.create(spark,
+      (0L until 20L).map(k => (k, k, s"s$k")).toDF("k", "n", "s"), root, "k")
+    // a racer that takes version `v` between derivation and commit
+    def racer(v: Long): Runnable = new Runnable {
+      def run(): Unit = java.nio.file.Files.write(
+        java.nio.file.Paths.get(root, "_graft_log", f"v$v%010d.json"),
+        s"""{"version":$v,"key":"k","adds":[],"removes":[],"op":"MERGE","ts":0}"""
+          .getBytes("UTF-8"), java.nio.file.StandardOpenOption.CREATE_NEW)
+    }
+    try {
+      val a0 = TxTable.attemptInvocations.get()
+      TxTable.testRaceInjector.set(racer(2L))
+      assert(TxTable.renameColumn(root, "n", "m") === 3L)
+      assert(TxTable.attemptInvocations.get() - a0 === 2L)
+      val a1 = TxTable.attemptInvocations.get()
+      TxTable.testRaceInjector.set(racer(4L))
+      assert(TxTable.dropColumn(root, "s") === 5L)
+      assert(TxTable.attemptInvocations.get() - a1 === 2L)
+    } finally TxTable.testRaceInjector.set(null)
+    val got = TxTable.read(spark, root)
+    assert(got.columns.toSeq === Seq("k", "m"))
+    assert(got.filter(col("k") === 7L).head.getLong(1) === 7L)
   }
 
   test("logged stats survive a rename: pruning and deleteWhere answer under the new name") {
